@@ -3506,14 +3506,17 @@ def extract_statements_extended(
     extended block-level pattern engine.
 
     The alias dictionary is broadcast; the matcher builds once per Python
-    worker (same executor-local cache as detect_mentions). Mention scan and
-    pattern extraction run fused in a single pandas UDF, so the stage is a
-    map-only scan — no shuffle, broadcast-sized driver footprint.
+    worker (same executor-local cache as detect_mentions). Each paragraph
+    goes through the extraction kernel's block step
+    (``fused.block_statements``: normalise, ground, extract) inside a single
+    pandas UDF, so the stage is a map-only scan — no shuffle,
+    broadcast-sized driver footprint.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType
 
     from ..schemas import STATEMENT
+    from .fused import block_statements
     from .mentions import _get_matcher
 
     spark = paragraphs.sparkSession
@@ -3523,21 +3526,15 @@ def extract_statements_extended(
     @F.pandas_udf(ArrayType(STATEMENT))
     def _extract(txt: pd.Series) -> pd.Series:
         matcher = _get_matcher(bc, token)
-        out = []
-        for t in txt:
-            t = normalize_block_text(t)
-            ms = [
-                {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-                 "entry_name": n, "score": p}
-                for (s, e, a, db, i, n, p) in matcher.find(t)
-            ]
-            out.append(
+        return pd.Series(
+            [
                 [
                     {"bel_statement": stmt, "evidence": ev}
-                    for stmt, ev in extract_from_block(t, ms)
+                    for stmt, ev in block_statements(t, matcher)
                 ]
-            )
-        return pd.Series(out)
+                for t in txt
+            ]
+        )
 
     return (
         paragraphs.withColumn("results", _extract(F.col(text_col)))

@@ -328,6 +328,15 @@ def _get_matcher(bc, token: str, engine: str = "auto") -> AliasMatcher:
     return matcher
 
 
+def mention_structs(found: list[tuple]) -> list[dict]:
+    """``AliasMatcher.find`` tuples -> MENTION-shaped dicts."""
+    return [
+        {"begin": b, "end": e, "alias": a, "db": db, "id": i,
+         "entry_name": n, "score": p}
+        for (b, e, a, db, i, n, p) in found
+    ]
+
+
 def detect_mentions(
     sentences: DataFrame, alias_rows: list, engine: str = "auto"
 ) -> DataFrame:
@@ -344,23 +353,7 @@ def detect_mentions(
     @F.pandas_udf(ArrayType(MENTION))
     def _annotate(sent: pd.Series) -> pd.Series:
         matcher = _get_matcher(bc, token, engine)
-        return pd.Series(
-            [
-                [
-                    {
-                        "begin": b,
-                        "end": e,
-                        "alias": a,
-                        "db": db,
-                        "id": i,
-                        "entry_name": n,
-                        "score": p,
-                    }
-                    for (b, e, a, db, i, n, p) in matcher.find(s)
-                ]
-                for s in sent
-            ]
-        )
+        return pd.Series([mention_structs(matcher.find(s)) for s in sent])
 
     return sentences.withColumn("mentions", _annotate(F.col("sentence")))
 

@@ -3,39 +3,55 @@
 pages -> paragraphs -> sentences -> mentions -> statements -> triples
       -> nodes + edges
 
-Two modes:
-  * lazy (workdir=None): one Catalyst plan end to end — UDF stages fuse into
-    scan-side projections, no materialization.
-  * checkpointed (workdir set): each stage commits an atomic snapshot via
-    the TableStore shim with per-partition lineage + a metrics row; a rerun
-    with the same input fingerprint resumes past completed stages
-    (reference analog: per-stage JSON checkpoints, main.py:55-98).
+Extraction is one Python crossing: the per-paragraph kernel
+(``operators.fused.extract_fused``, ``shape="paragraphs"``); every
+extraction stage is a projection or explode of its rows. Two modes over
+the same views:
+  * lazy (workdir=None): one Catalyst plan end to end, no materialization.
+  * checkpointed (workdir set): the kernel output is persisted once and
+    each view commits an atomic snapshot via the TableStore shim with
+    per-partition lineage + a metrics row; a rerun with the same input
+    fingerprint resumes past completed stages (reference analog:
+    per-stage JSON checkpoints, main.py:55-98).
 """
 
 from __future__ import annotations
 
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.fused import extract_fused
 from ..operators.graph import annotation_map, build_edges, build_nodes
-from ..operators.mentions import detect_mentions, explode_mentions
-from ..operators.paragraphs import extract_paragraphs, split_into_sentences
-from ..operators.statements import extract_statements
-from ..operators.triples import parse_triples
+from ..operators.mentions import explode_mentions
 from .checkpoint import TableStore, make_table_store
 
-STAGES = (
-    "paragraphs",
-    "sentences",
-    "mentions",
-    "statements",
-    "triples",
-    "flat_mentions",
-    "nodes",
-    "edges",
-)
+# extraction stages in commit order per extractor: (output key, stage name,
+# fingerprint suffix). The block engine's statements are their own table,
+# and its statements/triples fingerprints carry ":block"; nodes and edges
+# follow either way.
+EXTRACT_STAGES = {
+    "sentence": (
+        ("paragraphs", "paragraphs", ""),
+        ("sentences", "sentences", ""),
+        ("mentions", "mentions", ""),
+        ("statements", "statements", ""),
+        ("triples", "triples", ""),
+        ("flat_mentions", "flat_mentions", ""),
+    ),
+    "block": (
+        ("paragraphs", "paragraphs", ""),
+        ("sentences", "sentences", ""),
+        ("mentions", "mentions", ""),
+        ("flat_mentions", "flat_mentions", ""),
+        ("statements", "statements_block", ":block"),
+        ("triples", "triples", ":block"),
+    ),
+}
+
+_KEYS = ("url", "warc_ts", "para_idx")
 
 
 def run_pipeline(
@@ -47,10 +63,8 @@ def run_pipeline(
     run_id: str = "run-0",
     lang: str | None = "en",
     parallelism: int | None = None,
-    broadcast_nodes: bool = False,
     persist: bool = False,
     id_strategy: str = "dense",
-    fuse: bool = True,
     extractor: str = "sentence",
 ) -> dict:
     """Run the full pipeline; returns dict of stage-name -> DataFrame plus
@@ -61,10 +75,10 @@ def run_pipeline(
     sentence-sliced mentions; ``"block"`` runs the extended paragraph-level
     pattern engine (``operators.extraction``) — coordination, displaced-agent
     passives, nominalizations, fold-continuations, cnc+pretreatment synergy —
-    as ONE fused C1+C2 Python crossing over whole paragraphs
-    (``extract_statements_extended``). Block statements carry ``sent_idx = 0``
+    over whole paragraphs. Block statements carry ``sent_idx = 0``
     (evidence is the whole paragraph). The sentences/mentions stages are
-    unchanged either way.
+    unchanged either way. Both engines run inside the same single kernel
+    crossing.
 
     Default decision (r3, evidence-based): ``"sentence"`` stays the
     throughput default — warm sf0.1 measures the fused block engine ~8%
@@ -74,30 +88,26 @@ def run_pipeline(
     (tests/test_real_gold.py); both engines are benched every round
     (``kg_extract_fused`` vs ``kg_extract_fused_block``).
 
-    ``persist=True`` caches the multiply-referenced stages MEMORY_AND_DISK
+    ``persist=True`` caches the kernel output and the nodes MEMORY_AND_DISK
     in lazy mode — without it the graph build re-executes the extraction
-    once per downstream reference. The checkpointed mode gets the same cut
-    for free from its parquet snapshots.
+    once per downstream reference. The checkpointed mode always persists
+    the kernel output while its stages commit (and unpersists it after),
+    and reads every later stage from the parquet snapshots.
 
-    ``fuse=True`` (lazy mode only): run extraction as ONE fused Python
-    crossing (``extract_sentence_level_fused``) and derive every stage
-    relationally — same outputs, ~5x fewer Arrow round-trips. ``fuse=False``
-    forces the modular five-UDF chain (each stage independently computed).
-    Checkpointed runs always use the modular chain: each stage is a table
-    with its own lineage.
+    ``parallelism`` (checkpointed mode): pages are hash-partitioned by url
+    into this many partitions (default: twice the default parallelism)
+    before the kernel, so extraction parallelism matches cores.
     """
-    from pyspark import StorageLevel
-
-    par = parallelism or spark.sparkContext.defaultParallelism * 2
+    if extractor not in EXTRACT_STAGES:
+        raise ValueError(f"unknown extractor {extractor!r}")
     # real Iceberg when a SparkCatalog is configured, parquet shim here
     store = make_table_store(spark, workdir) if workdir else None
     metrics: list[dict] = []
-    _multi_ref = {"mentions", "triples", "nodes"}
 
     def stage(name: str, thunk, token_extra: str = ""):
         if store is None:
             df = thunk()
-            if persist and name in _multi_ref:
+            if persist and name == "nodes":
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
             return df
         t0 = time.monotonic()
@@ -116,81 +126,38 @@ def run_pipeline(
         )
         return df
 
-    if store is None and fuse:
-        # Lazy mode: ONE Python crossing computes sentences + mentions +
-        # parsed statements (operators/fused.py); every stage below is a
-        # relational view of it. The modular five-UDF chain stacks five
-        # ArrowEvalPython/MapInPandas nodes in one physical stage — each
-        # chained node holds its own Python worker per task (measured 2-7x
-        # slowdown from worker oversubscription) — so it is reserved for
-        # checkpointed runs where stages materialize to tables anyway.
-        from ..operators.fused import extract_sentence_level_fused
+    if store is not None:
+        # explicit repartition before the heavy crossing (north_rule:
+        # explicit partitioning)
+        par = parallelism or spark.sparkContext.defaultParallelism * 2
+        pages = pages.repartition(par, "url")
+    base = extract_fused(
+        pages, alias_rows, engine=extractor, shape="paragraphs", lang=lang
+    )
+    if persist or store is not None:
+        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    sents = base.select(*_KEYS, F.explode("sentences").alias("s"))
+    results = base.select(*_KEYS, F.explode("results").alias("r"))
+    out: dict = {}
+    views = {
+        "paragraphs": lambda: base.select(*_KEYS, "text"),
+        "sentences": lambda: sents.select(*_KEYS, "s.sent_idx", "s.sentence"),
+        "mentions": lambda: sents.select(*_KEYS, "s.*"),
+        "flat_mentions": lambda: explode_mentions(out["mentions"]),
+        "statements": lambda: results.select(
+            *_KEYS, "r.sent_idx", "r.bel_statement", "r.evidence"
+        ),
+        "triples": lambda: results.select(*_KEYS, "r.*").filter(
+            F.col("subj").isNotNull()
+            & F.col("pred").isNotNull()
+            & F.col("obj").isNotNull()
+        ),
+    }
+    for key, name, token_extra in EXTRACT_STAGES[extractor]:
+        out[key] = stage(name, views[key], token_extra=token_extra)
 
-        base = extract_sentence_level_fused(pages, alias_rows, lang=lang)
-        if persist:
-            base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        paragraphs = extract_paragraphs(pages, lang=lang)  # lazy; free unless used
-        sentences = base.select("url", "warc_ts", "para_idx", "sent_idx", "sentence")
-        mentions = base.drop("results")
-        statements = (
-            base.filter(F.size("results") > 0)
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.explode("results").alias("r"),
-            )
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.col("r.bel_statement").alias("bel_statement"),
-                F.col("r.evidence").alias("evidence"),
-            )
-        )
-        triples = (
-            base.select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.explode("results").alias("r"),
-            )
-            .select(
-                "url", "warc_ts", "para_idx", "sent_idx",
-                F.col("r.subj").alias("subj"),
-                F.col("r.pred").alias("pred"),
-                F.col("r.obj").alias("obj"),
-                F.col("r.bel_statement").alias("bel_statement"),
-                F.col("r.evidence").alias("evidence"),
-            )
-            .filter(
-                F.col("subj").isNotNull()
-                & F.col("pred").isNotNull()
-                & F.col("obj").isNotNull()
-            )
-        )
-        flat_mentions = explode_mentions(mentions)
-    else:
-        paragraphs = stage("paragraphs", lambda: extract_paragraphs(pages, lang=lang))
-        sentences = stage(
-            "sentences",
-            # explicit repartition before the heavy UDF stages so extraction
-            # parallelism matches cores (north_rule: explicit partitioning)
-            lambda: split_into_sentences(paragraphs).repartition(par, "url"),
-        )
-        mentions = stage("mentions", lambda: detect_mentions(sentences, alias_rows))
-        if extractor == "sentence":
-            statements = stage("statements", lambda: extract_statements(mentions))
-            triples = stage("triples", lambda: parse_triples(statements))
-        flat_mentions = stage("flat_mentions", lambda: explode_mentions(mentions))
-    if extractor == "block":
-        from ..operators.extraction import extract_statements_extended
-
-        statements = stage(
-            "statements_block",
-            lambda: extract_statements_extended(paragraphs, alias_rows),
-            token_extra=":block",
-        )
-        triples = stage(
-            "triples", lambda: parse_triples(statements), token_extra=":block"
-        )
-    elif extractor != "sentence":
-        raise ValueError(f"unknown extractor {extractor!r}")
-    ann_map = annotation_map(flat_mentions)
+    triples = out["triples"]
+    ann_map = annotation_map(out["flat_mentions"])
     # id_strategy participates in the snapshot fingerprint: resuming a dense
     # run under --id-strategy hash (or vice versa) must recompute, not serve
     # the other scheme's snapshot
@@ -201,24 +168,12 @@ def run_pipeline(
     )
     edges = stage(
         "edges",
-        lambda: build_edges(
-            triples, nodes, broadcast_nodes=broadcast_nodes, id_strategy=id_strategy
-        ),
+        lambda: build_edges(triples, nodes, id_strategy=id_strategy),
         token_extra=f":{id_strategy}",
     )
-
-    out = {
-        "paragraphs": paragraphs,
-        "sentences": sentences,
-        "mentions": mentions,
-        "statements": statements,
-        "triples": triples,
-        "flat_mentions": flat_mentions,
-        "nodes": nodes,
-        "edges": edges,
-        "metrics": metrics,
-    }
+    out.update(nodes=nodes, edges=edges, metrics=metrics)
     if store is not None:
+        base.unpersist()
         _write_metrics(spark, store, metrics)
     return out
 

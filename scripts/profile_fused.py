@@ -1,10 +1,10 @@
-"""Profile the fused-extraction hot loop WITHOUT Spark.
+"""Profile the extraction kernel WITHOUT Spark.
 
-The fused operator's per-batch body (html -> paragraphs -> sentences ->
-mentions -> statements -> triples) is pure Python; Spark only schedules it.
-Profiling it driver-side over a synthetic page sample therefore shows the
-exact per-function cost structure the executors see, with zero scheduler
-noise. Run:
+The kernel's per-document body (``operators.fused.extract_document``:
+html -> paragraphs -> sentences | block -> mentions -> statements ->
+parts) is pure Python; Spark only schedules it. Profiling it driver-side
+over a synthetic page sample therefore shows the exact per-function cost
+structure the executors see, with zero scheduler noise. Run:
 
     python scripts/profile_fused.py [n_docs] [engine]
 
@@ -42,52 +42,21 @@ def main() -> None:
         if r["lang"] == "en"
     ]
 
-    from llm_text_to_knowledge_graph_spark.functions.bel import split_statement
+    from llm_text_to_knowledge_graph_spark.operators.fused import extract_document
     from llm_text_to_knowledge_graph_spark.operators.mentions import AliasMatcher
-    from llm_text_to_knowledge_graph_spark.operators.statements import (
-        extract_parts_from_sentence,
-    )
-    from llm_text_to_knowledge_graph_spark.sources.html_extract import (
-        extract_paragraphs_text,
-        split_sentences,
-    )
 
     matcher = AliasMatcher(alias_rows)
-    if engine == "block":
-        from llm_text_to_knowledge_graph_spark.operators.extraction import (
-            extract_from_block,
-            normalize_block_text,
-        )
-
     n_triples = 0
 
     def work() -> None:
+        # the triples shape of operators.fused.extract_fused, minus the
+        # pandas frame: the rows it would ship are the full-part results
         nonlocal n_triples
         for r in rows:
-            html, text = r["html"], r["text"]
-            for para in extract_paragraphs_text(html, text):
-                if engine == "block":
-                    para = normalize_block_text(para)
-                    mentions = [
-                        {"begin": b, "end": e, "alias": a, "db": db,
-                         "id": i, "entry_name": n, "score": p}
-                        for (b, e, a, db, i, n, p) in matcher.find(para)
-                    ]
-                    for stmt, _ev in extract_from_block(para, mentions):
-                        if all(split_statement(stmt)):
-                            n_triples += 1
-                else:
-                    for sentence in split_sentences(para):
-                        mentions = [
-                            {"begin": b, "end": e, "db": db, "entry_name": n}
-                            for (b, e, _a, db, _i, n, _p) in matcher.find(sentence)
-                        ]
-                        # mirrors fused.extract_triples_fused: parts come
-                        # pre-split, no split_statement re-parse
-                        for _parts in extract_parts_from_sentence(
-                            sentence, mentions
-                        ):
-                            n_triples += 1
+            for _pi, _para, _sents, results in extract_document(
+                r["html"], r["text"], matcher, engine, sentences=False
+            ):
+                n_triples += sum(1 for x in results if x[1] and x[2] and x[3])
 
     t0 = time.perf_counter()
     prof = cProfile.Profile()

@@ -258,7 +258,8 @@ def politeness_schedule(
     10^12 URLs compose AFTER ``curation.cap_per_domain`` so no host's
     partition exceeds the per-domain cap. Deterministic: same inputs →
     same schedule on any partitioning/engine (the SQL oracle replays
-    it row for row)."""
+    it row for row). Duplicate robots rows for a host are reduced to
+    one (the least body) first, so they cannot fan out the frontier."""
     from pyspark.sql import Window
     from pyspark.sql.types import DoubleType
 
@@ -276,6 +277,7 @@ def politeness_schedule(
         )
 
     w = Window.partitionBy(host_col).orderBy(path_col)
+    robots = robots.groupBy(host_col).agg(F.min(body_col).alias(body_col))
     return (
         urls.join(robots, host_col, "left")
         .withColumn("crawl_delay", _delay(F.col(body_col)))

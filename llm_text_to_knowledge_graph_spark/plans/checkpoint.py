@@ -12,6 +12,19 @@ A stage is "already done" iff its manifest exists and carries the same
 input fingerprint — that is the resume contract (north_rule: resumable from
 checkpoint with per-partition lineage + metrics).
 
+A commit is one Spark job: the write. The manifest's ``rows`` and its
+per-file lineage (``partitions``: rows, ``url_min``/``url_max``,
+``warc_ts_max``) come from the footers the parquet writer just produced,
+read on the driver — the analog of Iceberg's ``.files`` metadata table,
+which takes per-file row counts and column bounds from the same place.
+When a non-empty file lacks a bound the manifest needs (parquet-mr drops
+string statistics once a file's min+max reach 4 KB; INT96 timestamps, the
+Spark default that ``session.get_spark`` overrides, carry none) or the
+files are not readable through ``pyarrow.fs``, that table's lineage falls
+back to a ``groupBy(input_file_name())`` aggregate with identical output.
+A run's per-stage metrics rows go to ``<root>/metrics_log/`` as one parquet
+file written on the driver, so the metrics sink adds no Spark job either.
+
 ``IcebergTableStore`` below is the real-catalog implementation of the same
 contract (``df.writeTo(...)`` + table properties as the manifest;
 Iceberg's own ``.snapshots``/``.files`` metadata tables supply time travel
@@ -28,6 +41,9 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,6 +108,11 @@ class TableStore:
         Returns the read-back DataFrame (pipeline-breaker, like the
         reference's JSON checkpoints — downstream stages read columnar
         parquet instead of recomputing the UDF chain).
+
+        The write is the commit's only Spark job: the read-back takes
+        ``df``'s schema (no inference job) and lineage comes from the
+        written files' parquet footers (``_footer_lineage``), falling back
+        to the ``_lineage`` re-scan only when a footer lacks a bound.
         """
         spark = df.sparkSession
         tdir = self._tdir(name)
@@ -103,9 +124,11 @@ class TableStore:
         df.write.mode("overwrite").parquet(data_path)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        committed = spark.read.parquet(data_path)
-        lineage = self._lineage(committed)
-        rows = sum(p["rows"] for p in lineage) if lineage else committed.count()
+        committed = spark.read.schema(df.schema).parquet(data_path)
+        lineage = self._footer_lineage(committed)
+        if lineage is None:
+            lineage = self._lineage(committed)
+        rows = sum(p["rows"] for p in lineage)
 
         snapshot = {
             "snapshot_id": token,
@@ -152,8 +175,44 @@ class TableStore:
 
     # -- internals ------------------------------------------------------------
     @staticmethod
+    def _footer_lineage(committed: DataFrame) -> list[dict] | None:
+        """``_lineage``'s rows from the files' parquet footers, read on the
+        driver (no Spark job); None when a footer cannot supply them."""
+        cols = set(committed.columns)
+        out = []
+        for uri in sorted(committed.inputFiles()):
+            try:
+                fs, path = pafs.FileSystem.from_uri(uri)
+                with fs.open_input_file(path) as f:
+                    md = pq.ParquetFile(f).metadata
+            except (pa.ArrowException, OSError):
+                return None
+            if md.num_rows == 0:  # no group in the aggregate either
+                continue
+            d = {"partition_id": len(out), "rows": md.num_rows}
+            if "url" in cols:
+                b = _footer_bounds(md, "url", pa.types.is_string)
+                if b is None:
+                    return None
+                d["url_min"], d["url_max"] = (
+                    v if v is None else v.decode("utf-8") for v in b
+                )
+            if "warc_ts" in cols:
+                b = _footer_bounds(md, "warc_ts", _is_micros)
+                if b is None:
+                    return None
+                if b[1] is not None:
+                    ts = committed.schema["warc_ts"].dataType
+                    d["warc_ts_max"] = ts.fromInternal(b[1]).isoformat()
+            out.append(d)
+        return out
+
+    @staticmethod
     def _lineage(committed: DataFrame) -> list[dict]:
-        """Per-file lineage rows: url range, warc_ts watermark, row count."""
+        """Per-file lineage rows: url range, warc_ts watermark, row count.
+
+        The exact reference ``_footer_lineage`` reproduces; costs a
+        two-stage scan of the committed table."""
         cols = set(committed.columns)
         aggs = [F.count(F.lit(1)).alias("rows")]
         if "url" in cols:
@@ -175,17 +234,59 @@ class TableStore:
             out.append(d)
         return out
 
-    def write_metrics(self, df: DataFrame) -> None:
-        """Append a run's per-stage metrics rows to the store's metrics sink."""
-        df.coalesce(1).write.mode("append").parquet(
-            os.path.join(self.root, "metrics_log")
+    def write_metrics(self, metrics: list[dict]) -> None:
+        """Append a run's per-stage metrics rows to the store's metrics sink:
+        one parquet file written on the driver (no Spark job), published by
+        rename so readers never see a partial file."""
+        out = os.path.join(self.root, "metrics_log")
+        os.makedirs(out, exist_ok=True)
+        table = pa.Table.from_pylist(
+            [{k: m[k] for k in _METRICS.names} for m in metrics], schema=_METRICS
         )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(out, f".{name}")  # dot files are hidden from readers
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out, name))
 
     def _gc(self, name: str, keep: set[str]) -> None:
         tdir = self._tdir(name)
         for entry in os.listdir(tdir):
             if entry.startswith("data-") and entry not in keep:
                 shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
+
+
+# metrics_log rows: one per committed stage of a run
+_METRICS = pa.schema(
+    [("run_id", pa.string()), ("stage", pa.string()),
+     ("rows", pa.int64()), ("wall_ms", pa.int64())]
+)
+_METRICS_DDL = "run_id string, stage string, rows long, wall_ms long"
+
+
+def _is_micros(t: pa.DataType) -> bool:
+    # Spark's TIMESTAMP_MICROS; INT96 reads as timestamp[ns], with no stats
+    return pa.types.is_timestamp(t) and t.unit == "us"
+
+
+def _footer_bounds(md, name: str, is_type) -> tuple | None:
+    """(min, max) raw statistics of top-level column ``name`` over a file's
+    row groups; ``(None, None)`` when every value is null; None when the
+    column's arrow type fails ``is_type`` or a row group has no bound.
+    Raw values order as Spark's min/max do: unsigned bytes for strings,
+    int64 micros for timestamps."""
+    if not is_type(md.schema.to_arrow_schema().field(name).type):
+        return None
+    idx = next(i for i in range(md.num_columns) if md.schema.column(i).path == name)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        col = md.row_group(g).column(idx)
+        st = col.statistics
+        if st is not None and st.has_min_max:
+            lo = st.min_raw if lo is None else min(lo, st.min_raw)
+            hi = st.max_raw if hi is None else max(hi, st.max_raw)
+        elif st is None or not st.has_null_count or st.null_count != col.num_values:
+            return None
+    return lo, hi
 
 
 # ---------------------------------------------------------------------------
@@ -303,7 +404,10 @@ class IcebergTableStore:
             return self.read(spark, name), True
         return self.commit(compute(), name, fingerprint, run_id), False
 
-    def write_metrics(self, df: DataFrame) -> None:
+    def write_metrics(self, metrics: list[dict]) -> None:
+        df = self.spark.createDataFrame(
+            [tuple(m[k] for k in _METRICS.names) for m in metrics], schema=_METRICS_DDL
+        )
         t = self._t("metrics_log")
         if self.spark.catalog.tableExists(t):
             df.writeTo(t).append()

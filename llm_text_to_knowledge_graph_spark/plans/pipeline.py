@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..operators.fused import extract_fused
 from ..operators.graph import annotation_map, build_edges, build_nodes
 from ..operators.mentions import explode_mentions
-from .checkpoint import TableStore, make_table_store
+from .checkpoint import make_table_store
 
 # extraction stages in commit order per extractor: (output key, stage name,
 # fingerprint suffix). The block engine's statements are their own table,
@@ -174,23 +174,12 @@ def run_pipeline(
     out.update(nodes=nodes, edges=edges, metrics=metrics)
     if store is not None:
         base.unpersist()
-        _write_metrics(spark, store, metrics)
+        if metrics:
+            # each store knows its own metrics sink (a parquet file written
+            # on the driver for the shim, an Iceberg metrics_log table for
+            # the catalog store)
+            store.write_metrics(metrics)
     return out
-
-
-def _write_metrics(spark: SparkSession, store: TableStore, metrics: list[dict]) -> None:
-    if not metrics:
-        return
-    df = spark.createDataFrame(
-        [
-            (m["run_id"], m["stage"], int(m["rows"]), int(m["wall_ms"]))
-            for m in metrics
-        ],
-        schema="run_id string, stage string, rows long, wall_ms long",
-    )
-    # each store knows its own metrics sink (parquet dir for the shim, an
-    # Iceberg metrics_log table for the catalog store)
-    store.write_metrics(df)
 
 
 def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,6 +45,15 @@ def get_spark(
         # Keep scans splittable at 100TB: default 128m per input split.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Parquet timestamps as INT64 micros, not the INT96 default: INT96
+        # columns carry no footer min/max, and checkpoint commits read each
+        # file's warc_ts watermark from those footers (plans/checkpoint.py).
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # Generated-code cache: one checkpointed run_pipeline compiles about
+        # 100 classes, as many as Spark's default cache holds, so every
+        # later run in the same session recompiled about half of them (and
+        # the JIT re-warmed the new copies). Static: set before first use.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Managed-table home for bucketed stores (plans/bucketing.py);
         # kept out of the repo tree, overridable for real deployments.

@@ -57,9 +57,14 @@ def main() -> int:
         extractor=args.extractor,
     )
 
-    counts = {}
-    for name in ("paragraphs", "sentences", "statements", "triples", "nodes", "edges"):
-        counts[name] = result[name].count()
+    if result["metrics"]:
+        # checkpointed: every stage's manifest already carries its row count
+        counts = {m["stage"]: m["rows"] for m in result["metrics"]}
+    else:
+        counts = {
+            name: result[name].count()
+            for name in ("paragraphs", "sentences", "statements", "triples", "nodes", "edges")
+        }
     wall = time.monotonic() - t0
 
     print("== stage row counts ==")

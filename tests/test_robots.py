@@ -246,3 +246,31 @@ def test_politeness_schedule(spark):
     assert out[("h2", "/x")] == (1.5, 0, 0.0)   # no declared delay
     assert out[("h2", "/y")] == (1.5, 1, 1.5)
     assert out[("h3", "/z")] == (1.5, 0, 0.0)   # no robots row at all
+
+
+def test_politeness_schedule_duplicate_robots_rows(spark):
+    """Duplicate robots rows for a host reduce to one (the least body):
+    one output row per url, and fetch_seq stays 0..n-1 per host."""
+    from llm_text_to_knowledge_graph_spark.operators.robots import (
+        politeness_schedule,
+    )
+
+    urls = spark.createDataFrame(
+        [("h1", "/a"), ("h1", "/b"), ("h2", "/x")], "host string, path string"
+    )
+    robots = spark.createDataFrame(
+        [("h1", "User-agent: *\nCrawl-delay: 5"),
+         ("h1", "User-agent: *\nCrawl-delay: 2"),
+         ("h1", None),
+         ("h2", None)],
+        "host string, robots_body string",
+    )
+    out = sorted(
+        (r["host"], r["path"], r["crawl_delay"], r["fetch_seq"], r["fetch_at_s"])
+        for r in politeness_schedule(urls, robots, default_delay=1.5).collect()
+    )
+    assert out == [
+        ("h1", "/a", 2.0, 0, 0.0),
+        ("h1", "/b", 2.0, 1, 2.0),
+        ("h2", "/x", 1.5, 0, 0.0),
+    ]

@@ -98,7 +98,7 @@ def entry(spark: SparkSession) -> DataFrame:
     triples = parse_triples(statements)
     ann = annotation_map(explode_mentions(mentions))
     nodes = build_nodes(triples, ann)
-    return build_edges(triples, nodes, broadcast_nodes=True)
+    return build_edges(triples, nodes)
 
 
 # ---------------------------------------------------------------------------
@@ -987,7 +987,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         triples = parse_triples(statements)
         ann = annotation_map(explode_mentions(mentions))
         nodes = build_nodes(triples, ann)
-        edges = build_edges(triples, nodes, broadcast_nodes=True)
+        edges = build_edges(triples, nodes)
         sn = nodes.select(F.col("node_id").alias("s"), F.col("name").alias("subj_name"))
         tn = nodes.select(F.col("node_id").alias("t"), F.col("name").alias("obj_name"))
         return (
@@ -3190,7 +3190,7 @@ def entry_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = parse_triples(statements)
     ann = annotation_map(explode_mentions(mentions))
     nodes = build_nodes(triples, ann)
-    return build_edges(triples, nodes, broadcast_nodes=True)
+    return build_edges(triples, nodes)
 
 
 # ---------------------------------------------------------------------------

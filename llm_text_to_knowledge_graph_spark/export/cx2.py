@@ -9,8 +9,14 @@ main.py:84-98).
 
 The graph handed to an interactive viewer is bounded by definition, so the
 exporter collects the nodes/edges tables driver-side (toPandas over Arrow)
-and renders JSON; the heavy lifting (canonicalization, joins, ids) already
+and renders JSON; the heavy lifting (canonicalization, grounding) already
 happened distributed.
+
+The renderer owns the CX2 numbering, as the reference numbers nodes with a
+first-seen counter while it renders one document (convert_to_cx2.py:92-111):
+nodes get 0..n-1 in ``node_id`` order, edges 0..m-1 in row order, whatever
+ids the tables carry (content-addressed xxhash64 from ``run_pipeline``, or
+dense 0..n-1, which come out unchanged).
 """
 
 from __future__ import annotations
@@ -64,7 +70,9 @@ def to_cx2(
     visual_properties: list | None = None,
     max_elements: int = 5_000_000,
 ) -> list:
-    """Render canonical node/edge tables as a CX2 aspect list."""
+    """Render canonical node/edge tables as a CX2 aspect list. Node and edge
+    ids are renumbered 0..n-1 / 0..m-1 (see the module docstring); every
+    edge endpoint must be a ``node_id`` of ``nodes``."""
     n_nodes = nodes.count()
     n_edges = edges.count()
     if n_nodes + n_edges > max_elements:
@@ -74,23 +82,35 @@ def to_cx2(
             f"subgraphs or raise max_elements"
         )
 
-    node_pdf = nodes.select("node_id", "name", "label", "type", "url").toPandas()
-    edge_pdf = edges.select(
-        "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
-    ).toPandas()
+    node_pdf = (
+        nodes.select("node_id", "name", "label", "type", "url")
+        .toPandas()
+        .sort_values(["node_id", "name"])
+    )
+    # rows, not edge_id values, are numbered: a content edge id may repeat
+    # (``edge_id_col``), so the edge's content breaks ties
+    edge_pdf = (
+        edges.select(
+            "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
+        )
+        .toPandas()
+        .sort_values(["edge_id", "s", "t", "bel_expression", "evidence"])
+    )
 
+    cx_id = {}
     node_aspect = []
-    for r in node_pdf.itertuples(index=False):
+    for i, r in enumerate(node_pdf.itertuples(index=False)):
+        cx_id[r.node_id] = i
         v = {"name": r.name, "label": r.label, "type": r.type}
         if r.url:
             v["id"] = r.url
-        node_aspect.append({"id": int(r.node_id), "v": v})
+        node_aspect.append({"id": i, "v": v})
 
     edge_aspect = [
         {
-            "id": int(r.edge_id),
-            "s": int(r.s),
-            "t": int(r.t),
+            "id": i,
+            "s": cx_id[r.s],
+            "t": cx_id[r.t],
             "v": {
                 "interaction": r.interaction,
                 "bel_expression": r.bel_expression,
@@ -98,7 +118,7 @@ def to_cx2(
                 "evidence": r.evidence,
             },
         }
-        for r in edge_pdf.itertuples(index=False)
+        for i, r in enumerate(edge_pdf.itertuples(index=False))
     ]
 
     meta = [

@@ -5,12 +5,17 @@ string, label/type extraction, first-wins entry_name -> identifiers.org URL
 map, edge rows with source/target labels + bel_expression). The reference's
 in-memory dict counters become:
 
-  * node canonicalization  -> distinct + two-phase dense ids (plans/ids.py)
+  * node canonicalization  -> distinct + content-addressed ids
+                              (``node_id_col``: xxhash64 of the BEL term)
   * first-wins annotation  -> min_by over a deterministic occurrence key
-  * edge endpoint lookup   -> two hash joins (broadcast when the node table
-                              fits, sort-merge + AQE skew split otherwise;
-                              entity frequencies are Zipf so this IS the
-                              skew-sensitive join of the pipeline)
+  * edge endpoint lookup   -> none: endpoint ids are recomputed from the
+                              names, so edges are a join-free projection
+
+The reference's 0..n-1 counter is applied where it ran, per rendered CX2
+document (``export.cx2.to_cx2``). ``id_strategy="dense"`` (two-phase
+``dense_ids`` plus endpoint joins) stays for the callers that need 0..n-1
+ids in a table: ``entry`` / ``entry_for`` / ``cooccurrence_graph`` in
+``__spark_entry__.py`` and the id-scheme timing in ``perfbench``.
 """
 
 from __future__ import annotations
@@ -142,10 +147,10 @@ def audit_edge_id_collisions(edges: DataFrame) -> int:
     """Number of edge_id collisions: distinct identity keys sharing an
     edge_id. Requires the identity columns alongside edge_id (i.e. run on
     the pre-projection edge build, or a reader that kept url/para_idx/
-    sent_idx). Mirrors ``audit_id_collisions``."""
-    key = F.concat_ws(
-        "", "url", "para_idx", "sent_idx", "bel_expression"
-    )
+    sent_idx). Mirrors ``audit_id_collisions``. The key is a struct, not a
+    separator-joined string: ``concat_ws`` skips NULL fields and a field may
+    contain the separator, so two distinct keys could join to one string."""
+    key = F.struct("url", "para_idx", "sent_idx", "bel_expression")
     return (
         edges.groupBy("edge_id")
         .agg(F.countDistinct(key).alias("n"))
@@ -164,12 +169,13 @@ def build_nodes(
     URL via name-then-label lookup (convert_to_cx2.py:151-166).
 
     id_strategy:
-      * ``dense``  — reference-parity 0..n-1 ids via two-phase ``dense_ids``
-        (CX2 export shape); costs the bucket-window shuffle chain.
       * ``hash``   — content-addressed ``xxhash64(name)`` ids; the node
         table is one distinct away from the triples and edges need no join
-        at all (see ``build_edges``). This is the 100TB hot path; exports
-        can renumber per-document subgraphs with ``renumber_for_export``.
+        at all (see ``build_edges``). ``run_pipeline`` builds this; the CX2
+        renderer numbers an exported graph 0..n-1 itself.
+      * ``dense``  — 0..n-1 ids in the table via two-phase ``dense_ids``;
+        costs the bucket-window shuffle chain. Kept for the graph queries
+        of ``__spark_entry__.py`` and the id-scheme timing in ``perfbench``.
     """
     names = (
         triples.select(F.col("subj").alias("name"))
@@ -206,7 +212,6 @@ def build_nodes(
 def build_edges(
     triples: DataFrame,
     nodes: DataFrame | None = None,
-    broadcast_nodes: bool = False,
     id_strategy: str = "dense",
     hash_seed: int = 0,
     carry_names: bool = False,
@@ -215,12 +220,13 @@ def build_edges(
     """Edge materialization (convert_to_cx2.py:104-133): endpoint ids +
     bel_expression/text/evidence carry-through, edge ids.
 
-    ``dense`` strategy: endpoint-id lookup joins against the node table
-    (broadcast when it fits, sort-merge + AQE skew split otherwise) and a
-    two-phase dense edge id. ``hash`` strategy: endpoint ids are recomputed
+    ``hash`` strategy (``run_pipeline``'s): endpoint ids are recomputed
     from the names (``node_id_col``) and the edge id is a seed-fixed hash of
     the edge's identity key — ZERO joins and ZERO shuffles, so the whole
     edge build fuses into the extraction stage. ``nodes`` is unused there.
+    ``dense`` strategy: endpoint-id lookup joins against ``nodes`` (AQE
+    picks broadcast or sort-merge + skew split from the runtime size) and a
+    two-phase dense edge id.
     """
     edges = triples.withColumn(
         "bel_expression",
@@ -256,13 +262,8 @@ def build_edges(
             # an anti-join on url.
             cols += ["url"]
         return edges.select(*cols)
-    node_ids = nodes.select("node_id", "name")
-    if broadcast_nodes:
-        node_ids = F.broadcast(node_ids)
-    s_ids = node_ids.select(
-        F.col("name").alias("subj"), F.col("node_id").alias("s")
-    )
-    t_ids = node_ids.select(F.col("name").alias("obj"), F.col("node_id").alias("t"))
+    s_ids = nodes.select(F.col("name").alias("subj"), F.col("node_id").alias("s"))
+    t_ids = nodes.select(F.col("name").alias("obj"), F.col("node_id").alias("t"))
     edges = (
         edges.join(s_ids, "subj").join(t_ids, "obj")
         .select(
@@ -320,32 +321,6 @@ def nodes_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def renumber_for_export(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Map hash-strategy ids back to dense 0..n-1 for CX2 export parity
-    (the reference exports one small per-document network at a time —
-    convert_to_cx2.py:92-111 — so this runs over export-sized subgraphs,
-    not the full 10^12-doc graph)."""
-    dense_nodes = dense_ids(
-        nodes.withColumnRenamed("node_id", "_old"), ["name"], out_col="node_id"
-    )
-    idmap = F.broadcast(dense_nodes.select("_old", "node_id"))
-    dense_edges = (
-        edges.join(idmap.withColumnRenamed("_old", "s").withColumnRenamed("node_id", "_s2"), "s")
-        .join(idmap.withColumnRenamed("_old", "t").withColumnRenamed("node_id", "_t2"), "t")
-        .drop("s", "t")
-        .withColumnRenamed("_s2", "s")
-        .withColumnRenamed("_t2", "t")
-    )
-    dense_edges = dense_ids(
-        dense_edges.withColumnRenamed("edge_id", "_old_eid"),
-        ["bel_expression", "s", "t", "_old_eid"],
-        out_col="edge_id",
-    ).drop("_old_eid")
-    return dense_nodes.drop("_old"), dense_edges.select(
-        "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
-    )
-
-
 # keep the pure-Python version importable next to the column version
 __all__ = [
     "annotation_map",
@@ -358,7 +333,6 @@ __all__ = [
     "type_col",
     "audit_id_collisions",
     "audit_edge_id_collisions",
-    "renumber_for_export",
     "identifiers_url_col",
     "identifiers_url",
 ]

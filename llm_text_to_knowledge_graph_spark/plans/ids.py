@@ -1,7 +1,9 @@
 """Scalable dense-id assignment and skew-salted joins.
 
 The reference assigns node ids with an in-memory first-seen counter
-(convert_to_cx2.py:92-111) — impossible at 10^12 rows. Here:
+(convert_to_cx2.py:92-111) while it renders one CX2 document; the CX2
+renderer here does the same (``export.cx2.to_cx2``), and ``run_pipeline``
+builds content-addressed ids only. Where a table itself needs 0..n-1 ids:
 
 dense_ids: two-phase assignment with NO global single-partition sort —
   (1) bucket rows by murmur hash of the key, rank within each bucket
@@ -28,76 +30,36 @@ def dense_ids(
     key_cols: list[str],
     out_col: str = "id",
     buckets: int = 256,
-    dedup: bool = False,
-    materialize_once: bool = False,
 ) -> DataFrame:
-    """Assign dense ids 0..n-1 ordered by (bucket(key), key). Deterministic
-    across partitionings and runs (murmur3 hash is seed-fixed) — PROVIDED
-    the input plan is deterministic: under the stateless default the two
-    consumers (ranked window, offsets broadcast) each execute the input,
-    so a nondeterministic upstream (rand(), sample(), limit() over an
-    unordered set) can give them different row sets and break density
-    (gaps/duplicate ids). For such inputs pass ``materialize_once=True``
-    or materialize upstream first.
+    """Assign dense ids 0..n-1, one per row, ordered by (bucket(key), key).
+    Rows with equal keys get ids in no fixed order, so callers dedup first
+    (an upstream ``distinct`` gets map-side partial aggregation, so the
+    bucket shuffle moves ~unique keys per partition).
 
-    ``dedup=False`` (default) assumes unique keys — the caller's upstream
-    ``distinct`` gets map-side partial aggregation, so at scale the bucket
-    shuffle moves ~unique keys per partition. ``dedup=True`` folds the
-    dedup into the bucket window itself (dense_rank + first-occurrence
-    filter, one Window exec): one shuffle instead of two, but that shuffle
-    carries every input row — the right trade for latency-dominated
-    export-sized inputs, the wrong one for a Zipf-skewed 100TB key stream.
+    Callers: ``build_nodes`` / ``build_edges`` with ``id_strategy="dense"``
+    — ``entry`` / ``entry_for`` / ``cooccurrence_graph`` in
+    ``__spark_entry__.py`` and the id-scheme timing in ``perfbench``. ``operators/negatives.py`` needs
+    0..n-1 entity ids and points here for sparse graphs.
 
-    ``materialize_once=False`` (DEFAULT) keeps the plan pure and lazy:
-    the offsets broadcast-build job re-executes the bucketed subtree
-    once (the join-key not-null inference rewrites only the probe
-    side's pushed filters, so the two subtrees stop being structurally
-    identical and ReuseExchange misses). That double execution is the
-    deliberate, bounded cost of statelessness — callers on the dense
-    path (``run_pipeline(persist=True)``, the export jobs) already
-    cache the expensive upstream, so what re-runs is one
-    distinct/projection over cached input.
-
-    ``materialize_once=True`` caches the bucketed input (lazy
-    ``persist`` MEMORY_AND_DISK) so each consumer reads it computed
-    once. Use it ONLY for one-shot latency-sensitive exports, and know
-    the cost: CacheManager pins the entry FOREVER (no GC reclaims a
-    cached DataFrame the way it reclaims checkpoint blocks), so
-    repeated dense_ids calls in a long-lived driver accumulate
-    edge-sized cache entries — measured as a trial-2 driver-heap OOM in
-    the 1 GB spark-submit scaling job. History, for the record: round 4
-    used a "lazy" ``localCheckpoint`` here; under AQE that is NOT lazy
-    (``Dataset.checkpoint`` forces ``queryExecution.toRdd``, which
-    materializes every upstream query stage at PLAN-BUILD time), so
-    merely constructing nodes/edges ran the whole extraction and halved
-    the benched modular-pipeline throughput. At 10^12 rows the dense
-    strategy is the bounded CX2-export path anyway (hash ids are the
-    scale path).
+    Deterministic across partitionings and runs (murmur3 hash is
+    seed-fixed) PROVIDED the input plan is deterministic: the plan is pure
+    and lazy, and its two consumers (ranked window, offsets broadcast) each
+    execute the input — the join-key not-null inference rewrites only the
+    probe side's pushed filters, so the two subtrees stop being
+    structurally identical and ReuseExchange misses. A nondeterministic
+    upstream (rand(), sample(), limit() over an unordered set) can then
+    give them different row sets and break density; materialize such
+    inputs first. No cache inside: a ``persist`` here would pin a
+    CacheManager entry forever, and a ``localCheckpoint`` under AQE runs
+    every upstream stage at plan-BUILD time.
     """
     b = df.withColumn("_bkt", F.pmod(F.hash(*key_cols), F.lit(buckets)).cast("int"))
-    if materialize_once:
-        from pyspark import StorageLevel
-
-        b = b.persist(StorageLevel.MEMORY_AND_DISK)
     w = Window.partitionBy("_bkt").orderBy(*key_cols)
-    if dedup:
-        key_struct = F.struct(*key_cols)
-        # dense_rank + lag share one Window exec (same partition/order spec)
-        ranked = (
-            b.withColumn("_rnk", F.dense_rank().over(w))
-            .withColumn("_prev", F.lag(key_struct).over(w))
-            .filter(F.col("_prev").isNull() | (F.col("_prev") != key_struct))
-            .drop("_prev")
-        )
-        counts = b.groupBy("_bkt").agg(
-            F.countDistinct(*key_cols).alias("_cnt")
-        )
-    else:
-        ranked = b.withColumn("_rnk", F.row_number().over(w))
-        # bucket counts come from the pre-window projection (map-side
-        # combinable agg), NOT from `ranked` — otherwise the window executes
-        # twice
-        counts = b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
+    ranked = b.withColumn("_rnk", F.row_number().over(w))
+    # bucket counts come from the pre-window projection (map-side
+    # combinable agg), NOT from `ranked` — otherwise the window executes
+    # twice
+    counts = b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
     off_w = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("_cnt").over(off_w), F.lit(0))

@@ -3,6 +3,11 @@
 pages -> paragraphs -> sentences -> mentions -> statements -> triples
       -> nodes + edges
 
+The graph is content-addressed (``build_nodes``/``build_edges`` with
+``id_strategy="hash"``): node ids are ``node_id_col(name)``, edges are a
+join-free projection of the triples, and the CX2 renderer
+(``export.cx2.to_cx2``) numbers an exported graph 0..n-1 itself.
+
 Extraction is one Python crossing: the per-paragraph kernel
 (``operators.fused.extract_fused``, ``shape="paragraphs"``); every
 extraction stage is a projection or explode of its rows. Two modes over
@@ -31,7 +36,7 @@ from .checkpoint import make_table_store
 # extraction stages in commit order per extractor: (output key, stage name,
 # fingerprint suffix). The block engine's statements are their own table,
 # and its statements/triples fingerprints carry ":block"; nodes and edges
-# follow either way.
+# follow either way (with ``GRAPH_TOKEN``).
 EXTRACT_STAGES = {
     "sentence": (
         ("paragraphs", "paragraphs", ""),
@@ -53,6 +58,11 @@ EXTRACT_STAGES = {
 
 _KEYS = ("url", "warc_ts", "para_idx")
 
+# nodes/edges fingerprint suffix: names the id scheme of the committed
+# graph tables, so a snapshot committed under another scheme's suffix
+# (":dense" from dense-id runs) is recomputed on resume, never served
+GRAPH_TOKEN = ":hash"
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -64,7 +74,6 @@ def run_pipeline(
     lang: str | None = "en",
     parallelism: int | None = None,
     persist: bool = False,
-    id_strategy: str = "dense",
     extractor: str = "sentence",
 ) -> dict:
     """Run the full pipeline; returns dict of stage-name -> DataFrame plus
@@ -93,6 +102,9 @@ def run_pipeline(
     once per downstream reference. The checkpointed mode always persists
     the kernel output while its stages commit (and unpersists it after),
     and reads every later stage from the parquet snapshots.
+
+    Nodes and edges carry content-addressed ids (``node_id_col`` /
+    ``edge_id_col``); the edges are built from the triples alone.
 
     ``parallelism`` (checkpointed mode): pages are hash-partitioned by url
     into this many partitions (default: twice the default parallelism)
@@ -158,18 +170,15 @@ def run_pipeline(
 
     triples = out["triples"]
     ann_map = annotation_map(out["flat_mentions"])
-    # id_strategy participates in the snapshot fingerprint: resuming a dense
-    # run under --id-strategy hash (or vice versa) must recompute, not serve
-    # the other scheme's snapshot
     nodes = stage(
         "nodes",
-        lambda: build_nodes(triples, ann_map, id_strategy=id_strategy),
-        token_extra=f":{id_strategy}",
+        lambda: build_nodes(triples, ann_map, id_strategy="hash"),
+        token_extra=GRAPH_TOKEN,
     )
     edges = stage(
         "edges",
-        lambda: build_edges(triples, nodes, id_strategy=id_strategy),
-        token_extra=f":{id_strategy}",
+        lambda: build_edges(triples, id_strategy="hash"),
+        token_extra=GRAPH_TOKEN,
     )
     out.update(nodes=nodes, edges=edges, metrics=metrics)
     if store is not None:

@@ -25,14 +25,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--workdir", default=None)
     ap.add_argument(
-        "--id-strategy",
-        choices=["dense", "hash"],
-        default="dense",
-        help="graph id scheme: dense 0..n-1 (CX2 export parity; the default) "
-        "or content-addressed xxhash64 (join-free edge build — pass this "
-        "explicitly for at-scale runs)",
-    )
-    ap.add_argument(
         "--extractor",
         choices=["sentence", "block"],
         default="sentence",
@@ -53,7 +45,6 @@ def main() -> int:
         workdir=args.workdir,
         input_token=f"synthetic-{args.seed}-{args.n_docs}",
         run_id=f"run-{int(t0)}",
-        id_strategy=args.id_strategy,
         extractor=args.extractor,
     )
 

@@ -152,9 +152,9 @@ def write_report(lo, hi, n_docs, lo_runs, hi_runs) -> int:
     import statistics
 
     # PER-SECTION validity (purely load-based, never outcome-based). Each
-    # trial times three independent sections (fused / full / dense) and the
+    # trial times two independent sections (fused / full) and the
     # job records the exact neighbor-CPU attribution of EACH section's
-    # chosen instance. A burst during the dense section says nothing about
+    # chosen instance. A burst during the full section says nothing about
     # the fused measurement taken a minute earlier in the same trial, so
     # the gate drops SECTION measurements whose own window was dirty — not
     # whole trials. (Two all-day-noisy runs on 2026-08-17 showed why: the
@@ -166,7 +166,6 @@ def write_report(lo, hi, n_docs, lo_runs, hi_runs) -> int:
     sections = {
         "fused": "fused_triples_per_sec",
         "full": "full_triples_per_sec",
-        "dense": "full_dense_triples_per_sec",
     }
 
     def clean_vals(runs, sec, key):
@@ -242,10 +241,8 @@ def write_report(lo, hi, n_docs, lo_runs, hi_runs) -> int:
 
     eff_fused, eff_fused_b = effs("fused")
     eff_full, eff_full_b = effs("full")
-    eff_dense, eff_dense_b = effs("dense")
     m_lo_f, m_hi_f = statistics.median(cv[("lo", "fused")]), statistics.median(cv[("hi", "fused")])
     m_lo_u, m_hi_u = statistics.median(cv[("lo", "full")]), statistics.median(cv[("hi", "full")])
-    m_lo_d, m_hi_d = statistics.median(cv[("lo", "dense")]), statistics.median(cv[("hi", "dense")])
 
     with open("/proc/loadavg") as f:
         load = f.read().split()[0]
@@ -289,7 +286,6 @@ measurements per section per level (clean lo/hi counts this run:
 |---|---|---|---|---|
 | fused extraction (pages->triples, 1 Arrow crossing) | {m_lo_f:.1f} triples/s | {m_hi_f:.1f} triples/s | **{eff_fused:.2f}** | {eff_fused_b:.2f} |
 | FULL JOB, scale path (extraction -> hash-id nodes+edges) | {m_lo_u:.1f} triples/s | {m_hi_u:.1f} triples/s | **{eff_full:.2f}** | {eff_full_b:.2f} |
-| full job, dense-id CX2-export path | {m_lo_d:.1f} triples/s | {m_hi_d:.1f} triples/s | **{eff_dense:.2f}** | {eff_dense_b:.2f} |
 
 Method notes:
 - Levels are 2-vs-8 (not 4-vs-16): above ~16 active cores this shared
@@ -307,11 +303,8 @@ The scale path uses content-addressed node/edge ids (xxhash64 of the
 canonical BEL term): edges become a join-free projection fused into the
 extraction stage and nodes one distinct — no endpoint join exists, so the
 pipeline's only Zipf-skew-sensitive shuffle is gone (operators/graph.py
-``node_id_col``, collision bound documented there). The dense-id path
-(reference-parity 0..n-1 ids, used at CX2 export time over per-document
-subgraphs) keeps the two-phase id-assignment shuffle chain whose per-stage
-sync latency is corpus-size-invariant; its lower measured efficiency is
-that latency floor, not algorithmic serialism — see PLANS.md.
+``node_id_col``, collision bound documented there). Reference-shaped
+0..n-1 ids are assigned by the CX2 renderer, per exported document.
 
 Raw runs (ALL trials, including any dropped for load):
 - local[{lo}]: {json.dumps(all_lo)}

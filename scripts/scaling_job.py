@@ -109,14 +109,11 @@ class LoadSampler:
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark import StorageLevel  # noqa: E402
-
 from llm_text_to_knowledge_graph_spark import get_spark  # noqa: E402
 from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows  # noqa: E402
 from llm_text_to_knowledge_graph_spark.operators.fused import extract_triples_fused  # noqa: E402
 from llm_text_to_knowledge_graph_spark.operators.graph import (  # noqa: E402
     build_edges,
-    build_nodes,
     nodes_from_edges,
 )
 
@@ -161,7 +158,7 @@ def main() -> int:
     meter = SectionMeter(args.cores)
     # per section: (best wall, CPU attribution of that best instance)
     _z = {"steal": 0.0, "own_excess": 0.0, "neighbor": 0.0}
-    best = {"fused": (1e18, _z), "full": (1e18, _z), "dense": (1e18, _z)}
+    best = {"fused": (1e18, _z), "full": (1e18, _z)}
 
     def record(name: str, wall: float, nb: dict) -> None:
         if wall < best[name][0]:
@@ -217,25 +214,8 @@ def main() -> int:
         _, wall, nb = meter.run(_full_job)
         record("full", wall, nb)
 
-        # full job, dense-id path (reference CX2 export shape) — kept
-        # measured for honesty about the stage-latency floor it carries.
-        def _dense_job():
-            triples = extract_triples_fused(pages, alias_rows).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            triples.count()
-            nodes = build_nodes(triples).persist(StorageLevel.MEMORY_AND_DISK)
-            build_edges(triples, nodes).count()
-            triples.unpersist()
-            nodes.unpersist()
-
-        _, wall, nb = meter.run(_dense_job)
-        record("dense", wall, nb)
-
     sampler.__exit__()
-    best_fused, best_full, best_dense = (
-        best["fused"][0], best["full"][0], best["dense"][0],
-    )
+    best_fused, best_full = best["fused"][0], best["full"][0]
     peak = max(sampler.samples, default=0.0)
     print(
         json.dumps(
@@ -246,8 +226,6 @@ def main() -> int:
                 "fused_triples_per_sec": round(n_triples / best_fused, 1),
                 "full_sec": round(best_full, 3),
                 "full_triples_per_sec": round(n_triples / best_full, 1),
-                "full_dense_sec": round(best_dense, 3),
-                "full_dense_triples_per_sec": round(n_triples / best_dense, 1),
                 # worst background pressure observed DURING the trials
                 "peak_load": round(peak, 2),
                 "peak_neighbor_load": round(max(0.0, peak - args.cores), 2),

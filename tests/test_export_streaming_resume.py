@@ -41,6 +41,68 @@ def test_cx2_export_aspects(spark, small_result, tmp_path):
     assert by_key["status"][0]["success"] is True
 
 
+_NODE_SCHEMA = "node_id long, name string, label string, type string, url string"
+_EDGE_SCHEMA = (
+    "edge_id long, s long, t long, interaction string, bel_expression string, "
+    "text string, evidence string"
+)
+
+
+def _render(spark, nodes, edges):
+    from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
+
+    cx = to_cx2(
+        spark.createDataFrame(nodes, _NODE_SCHEMA),
+        spark.createDataFrame(edges, _EDGE_SCHEMA),
+    )
+    return {k: v for a in cx for k, v in a.items()}
+
+
+def _node(i, name):
+    return (i, name, name, "p", None)
+
+
+def _edge(i, s, t, bel, ev="ev"):
+    return (i, s, t, "increases", bel, ev, ev)
+
+
+def test_cx2_dense_input_ids_unchanged(spark):
+    """Dense 0..n-1 input ids come out as they went in."""
+    nodes = [_node(i, f"p(HGNC:G{i})") for i in (2, 0, 3, 1)]
+    edges = [_edge(1, 3, 0, "b"), _edge(0, 0, 1, "a"), _edge(2, 2, 3, "c")]
+    cx = _render(spark, nodes, edges)
+    assert {n["id"]: n["v"]["name"] for n in cx["nodes"]} == {
+        i: f"p(HGNC:G{i})" for i in range(4)
+    }
+    assert sorted((e["id"], e["s"], e["t"], e["v"]["bel_expression"]) for e in cx["edges"]) == [
+        (0, 0, 1, "a"), (1, 3, 0, "b"), (2, 2, 3, "c")
+    ]
+
+
+def test_cx2_repeated_edge_id_gets_distinct_ids(spark):
+    """Two edge rows sharing one content edge_id are two CX2 edges."""
+    nodes = [_node(10, "p(HGNC:A)"), _node(20, "p(HGNC:B)")]
+    edges = [_edge(99, 10, 20, "x", "ev1"), _edge(99, 10, 20, "x", "ev2")]
+    cx = _render(spark, nodes, edges)
+    assert sorted(e["id"] for e in cx["edges"]) == [0, 1]
+    assert sorted(e["v"]["evidence"] for e in cx["edges"]) == ["ev1", "ev2"]
+
+
+def test_cx2_negative_hash_ids_render_dense(spark):
+    """Negative (xxhash64) ids render as 0..n-1 and every endpoint resolves
+    to the node of the same name."""
+    nodes = [_node(-(2**62), "p(HGNC:A)"), _node(-5, "p(HGNC:B)"), _node(2**61, "p(HGNC:C)")]
+    edges = [_edge(-7, -5, -(2**62), "B-A"), _edge(-(2**63), 2**61, -5, "C-B")]
+    cx = _render(spark, nodes, edges)
+    idn = {n["id"]: n["v"]["name"] for n in cx["nodes"]}
+    assert sorted(idn) == [0, 1, 2]
+    assert sorted(e["id"] for e in cx["edges"]) == [0, 1]
+    named = sorted(
+        (idn[e["s"]], idn[e["t"]], e["v"]["bel_expression"]) for e in cx["edges"]
+    )
+    assert named == [("p(HGNC:B)", "p(HGNC:A)", "B-A"), ("p(HGNC:C)", "p(HGNC:B)", "C-B")]
+
+
 def test_streaming_incremental_exactly_once(spark, tmp_path):
     from llm_text_to_knowledge_graph_spark.operators.fused import extract_triples_fused
     from llm_text_to_knowledge_graph_spark.streaming.incremental import (

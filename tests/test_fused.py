@@ -127,10 +127,12 @@ def test_fused_lazy_pipeline_stages_equal_modular(spark, pages, reference):
             assert rows(fast[name], cols) == ref[name], (extractor, name)
         assert fast["metrics"] == []
 
-        # graph tables built on top agree too (dense ids are deterministic)
+        # graph tables built on top agree too (content-addressed ids)
         slow = modular(pages, ALIAS_ROWS, extractor)
-        nodes = build_nodes(slow["triples"], annotation_map(slow["flat_mentions"]))
-        edges = build_edges(slow["triples"], nodes)
+        nodes = build_nodes(
+            slow["triples"], annotation_map(slow["flat_mentions"]), id_strategy="hash"
+        )
+        edges = build_edges(slow["triples"], id_strategy="hash")
         node_cols = ["node_id", "name", "label", "type", "url"]
         assert rows(fast["nodes"], node_cols) == rows(nodes, node_cols)
         edge_cols = ["edge_id", "s", "t", "interaction", "bel_expression"]

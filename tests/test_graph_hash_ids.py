@@ -11,12 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_text_to_knowledge_graph_spark.functions.bel import extract_label, extract_type
+from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
 from llm_text_to_knowledge_graph_spark.operators.graph import (
+    audit_edge_id_collisions,
     audit_id_collisions,
     build_edges,
     build_nodes,
     label_col,
-    renumber_for_export,
     type_col,
 )
 
@@ -75,7 +76,7 @@ def test_native_label_type_parity(spark):
 
 def test_hash_graph_isomorphic_to_dense(spark, triples):
     dn = build_nodes(triples)
-    de = build_edges(triples, dn, broadcast_nodes=True)
+    de = build_edges(triples, dn)
     hn = build_nodes(triples, id_strategy="hash")
     he = build_edges(triples, id_strategy="hash")
     assert _name_level_edges(dn, de) == _name_level_edges(hn, he)
@@ -102,37 +103,72 @@ def test_hash_edges_plan_has_no_shuffle(spark, triples):
 
 
 def test_renumber_for_export_dense_and_consistent(spark, triples):
+    """The CX2 renderer numbers hash-id tables 0..n-1 / 0..m-1 and keeps the
+    name-level graph."""
     hn = build_nodes(triples, id_strategy="hash")
     he = build_edges(triples, id_strategy="hash")
-    dn, de = renumber_for_export(hn, he)
-    n = dn.count()
-    ids = sorted(r.node_id for r in dn.collect())
-    assert ids == list(range(n))
-    eids = sorted(r.edge_id for r in de.collect())
-    assert eids == list(range(de.count()))
-    assert _name_level_edges(dn, de) == _name_level_edges(hn, he)
+    cx = {k: v for a in to_cx2(hn, he) for k, v in a.items()}
+    assert sorted(n["id"] for n in cx["nodes"]) == list(range(hn.count()))
+    assert sorted(e["id"] for e in cx["edges"]) == list(range(he.count()))
+    idn = {n["id"]: n["v"]["name"] for n in cx["nodes"]}
+    rendered = sorted(
+        (idn[e["s"]], e["v"]["interaction"], idn[e["t"]],
+         e["v"]["bel_expression"], e["v"]["evidence"])
+        for e in cx["edges"]
+    )
+    assert rendered == _name_level_edges(hn, he)
 
 
 def test_checkpoint_fingerprint_includes_id_strategy(spark, tmp_path):
-    """Switching --id-strategy on a checkpointed workdir must recompute the
-    graph tables instead of serving the other scheme's snapshots."""
+    """A workdir whose nodes/edges snapshots were committed under the
+    ":dense" fingerprint (dense-id graph tables) resumes the extraction
+    stages and recomputes nodes/edges as hash-addressed tables instead of
+    serving the dense snapshots."""
     from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows, pages_df
+    from llm_text_to_knowledge_graph_spark.operators.graph import annotation_map
+    from llm_text_to_knowledge_graph_spark.plans.checkpoint import make_table_store
     from llm_text_to_knowledge_graph_spark.plans.pipeline import run_pipeline
 
     pages = pages_df(spark, 20, seed=3)
     alias = build_alias_rows(3)
     wd = str(tmp_path / "ckpt")
-    run_pipeline(spark, pages, alias, workdir=wd, id_strategy="dense")
-    r2 = run_pipeline(spark, pages, alias, workdir=wd, id_strategy="dense")
-    assert all(m["resumed"] for m in r2["metrics"])
-    r3 = run_pipeline(spark, pages, alias, workdir=wd, id_strategy="hash")
-    res = {m["stage"]: m["resumed"] for m in r3["metrics"]}
+    run_pipeline(spark, pages, alias, workdir=wd)
+    # recommit the graph tables as a dense-id run wrote them
+    store = make_table_store(spark, wd)
+    t = store.read(spark, "triples")
+    dn = store.commit(
+        build_nodes(t, annotation_map(store.read(spark, "flat_mentions"))),
+        "nodes", "adhoc:nodes:dense", "dense-run",
+    )
+    store.commit(build_edges(t, dn), "edges", "adhoc:edges:dense", "dense-run")
+    assert sorted(r.node_id for r in dn.collect()) == list(range(dn.count()))
+
+    r2 = run_pipeline(spark, pages, alias, workdir=wd)
+    res = {m["stage"]: m["resumed"] for m in r2["metrics"]}
     assert res["triples"] and not res["nodes"] and not res["edges"]
     # and the recomputed tables really are hash-addressed
-    nodes = {r.name: r.node_id for r in r3["nodes"].collect()}
-    for r in r3["edges"].limit(20).collect():
+    nodes = {r.name: r.node_id for r in r2["nodes"].collect()}
+    hashed = {r.name: r.node_id for r in build_nodes(t, id_strategy="hash").collect()}
+    assert nodes == hashed
+    for r in r2["edges"].limit(20).collect():
         assert r.s in nodes.values() and r.t in nodes.values()
     assert any(v < 0 or v >= len(nodes) for v in nodes.values())  # not dense
+    r3 = run_pipeline(spark, pages, alias, workdir=wd)
+    assert all(m["resumed"] for m in r3["metrics"])
+
+
+def test_audit_edge_id_collisions_keeps_concatenation_twins_apart(spark):
+    """Distinct identity keys that a separator-joined string would merge:
+    NULLs in different fields (concat_ws skips NULLs), and a url holding the
+    separator. Each pair shares an edge_id, so each is one collision."""
+    edges = spark.createDataFrame(
+        [
+            (7, "u1", None, 3, "x"), (7, "u1", 3, None, "x"),
+            (8, "u\x011", 2, 3, "x"), (8, "u", 1, 2, "3\x01x"),
+        ],
+        "edge_id long, url string, para_idx int, sent_idx int, bel_expression string",
+    )
+    assert audit_edge_id_collisions(edges) == 2
 
 
 def test_hash_seed_bump_changes_ids_preserves_topology(spark, triples):

@@ -79,7 +79,7 @@ def test_on_pipeline_output(spark):
 
 def test_graph_query_layer_is_id_scheme_agnostic(spark):
     """k-hop / hubs / evidence work identically over hash-id tables, and the
-    CX2 exporter round-trips them through renumber_for_export."""
+    CX2 exporter renders them directly."""
     import json
 
     from pyspark.sql import functions as F
@@ -89,14 +89,13 @@ def test_graph_query_layer_is_id_scheme_agnostic(spark):
     from llm_text_to_knowledge_graph_spark.operators.graph import (
         build_edges,
         build_nodes,
-        renumber_for_export,
     )
 
     t = extract_triples_fused(pages_df(spark, 30, seed=4), build_alias_rows(4)).persist()
     hn = build_nodes(t, id_strategy="hash").persist()
     he = build_edges(t, id_strategy="hash").persist()
     dn = build_nodes(t).persist()
-    de = build_edges(t, dn, broadcast_nodes=True).persist()
+    de = build_edges(t, dn).persist()
 
     # hub degrees must agree name-level between schemes
     def hub_names(nodes, edges):
@@ -114,14 +113,13 @@ def test_graph_query_layer_is_id_scheme_agnostic(spark):
     d_hops = k_hop_neighborhood(de, did, k=2).groupBy("hop").count().collect()
     assert sorted(map(tuple, h_hops)) == sorted(map(tuple, d_hops))
 
-    # CX2 export of the hash graph via export-time renumber: valid aspects
+    # CX2 export of the hash graph: the renderer numbers it, valid aspects
     import tempfile, os
-    rn, re_ = renumber_for_export(hn, he)
     with tempfile.TemporaryDirectory() as td:
         path = os.path.join(td, "g.cx2")
         from llm_text_to_knowledge_graph_spark.export.cx2 import write_cx2
 
-        write_cx2(rn, re_, path)
+        write_cx2(hn, he, path)
         doc = json.load(open(path))
     aspects = {k for a in doc for k in (a if isinstance(a, dict) else {})}
     assert "nodes" in aspects and "edges" in aspects

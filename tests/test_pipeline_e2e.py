@@ -15,6 +15,13 @@ def result(spark):
     return run_pipeline(spark, pages, build_alias_rows(), workdir=None)
 
 
+@pytest.fixture(scope="module")
+def cx2(result):
+    from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
+
+    return {k: v for a in to_cx2(result["nodes"], result["edges"]) for k, v in a.items()}
+
+
 def _triple_key_rows(df):
     return {
         (r["url"], r["para_idx"], r["sent_idx"], r["subj"], r["pred"], r["obj"])
@@ -32,15 +39,19 @@ def test_triples_match_gold_exactly(spark, result):
     assert len(gold) > 100
 
 
-def test_nodes_dense_and_unique(result):
-    nodes = result["nodes"].collect()
-    ids = sorted(n["node_id"] for n in nodes)
-    assert ids == list(range(len(nodes)))
-    names = {n["name"] for n in nodes}
-    assert len(names) == len(nodes)
+def test_nodes_dense_and_unique(result, cx2):
+    """Pipeline node ids are content-addressed (``node_id_col(name)``) and
+    unique; the CX2 renderer numbers them 0..n-1."""
+    from llm_text_to_knowledge_graph_spark.operators.graph import node_id_col
+
+    nodes = result["nodes"].withColumn("_h", node_id_col("name")).collect()
+    assert len({n["node_id"] for n in nodes}) == len(nodes)
+    assert len({n["name"] for n in nodes}) == len(nodes)
+    assert all(n["node_id"] == n["_h"] for n in nodes)
+    assert sorted(n["id"] for n in cx2["nodes"]) == list(range(len(nodes)))
 
 
-def test_edges_reference_valid_nodes(result):
+def test_edges_reference_valid_nodes(result, cx2):
     nodes = result["nodes"].select("node_id").collect()
     node_ids = {n["node_id"] for n in nodes}
     edges = result["edges"].collect()
@@ -48,8 +59,11 @@ def test_edges_reference_valid_nodes(result):
     for e in edges:
         assert e["s"] in node_ids and e["t"] in node_ids
         assert e["bel_expression"]
-    ids = sorted(e["edge_id"] for e in edges)
-    assert ids == list(range(len(edges)))
+    # rendered: edge ids 0..m-1, every endpoint a rendered node id
+    cx_nodes = {n["id"] for n in cx2["nodes"]}
+    assert sorted(e["id"] for e in cx2["edges"]) == list(range(len(edges)))
+    for e in cx2["edges"]:
+        assert e["s"] in cx_nodes and e["t"] in cx_nodes
 
 
 def test_node_urls_resolved(result):

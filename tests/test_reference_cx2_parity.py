@@ -61,7 +61,7 @@ def _our_graph(spark, rows):
     )
     t = parse_triples(df)
     nodes = build_nodes(t)
-    edges = build_edges(t, nodes, broadcast_nodes=True)
+    edges = build_edges(t, nodes)
     node_rows = nodes.collect()
     idn = {r.node_id: r.name for r in node_rows}
     named_edges = sorted(

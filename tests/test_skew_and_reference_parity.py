@@ -60,55 +60,27 @@ def test_eval_parser_on_reference_gold_statements():
 
 
 def test_dense_ids_dedup_fold_matches_distinct_path(spark):
-    """dense_ids(dedup=True) over duplicated keys == dense_ids over distinct
-    keys, with one fewer exchange in the plan."""
+    """dense_ids over distinct keys gives the same dense ids whatever the
+    input partitioning (1 or 7 partitions)."""
     from llm_text_to_knowledge_graph_spark.plans.ids import dense_ids
-    from pyspark.sql import functions as F
 
     rows = [(f"k{i % 37}", i % 5) for i in range(500)]
-    df = spark.createDataFrame(rows, "a string, b int")
-    via_distinct = dense_ids(df.distinct(), ["a", "b"], out_col="id", buckets=8)
-    via_fold = dense_ids(df, ["a", "b"], out_col="id", buckets=8, dedup=True)
-    assert sorted(map(tuple, via_distinct.collect())) == sorted(
-        map(tuple, via_fold.collect())
-    )
-    n = via_fold.count()
-    assert sorted(r.id for r in via_fold.collect()) == list(range(n))
-    # the fold saves the distinct's exchange: strictly fewer shuffles overall.
-    # Compare with materialize_once=False — the cached path reads an
-    # InMemoryTableScan, hiding the upstream exchanges this assertion is
-    # about.
-    lazy_fold = dense_ids(
-        df, ["a", "b"], out_col="id", buckets=8, dedup=True,
-        materialize_once=False,
-    )
-    lazy_dist = dense_ids(
-        df.distinct(), ["a", "b"], out_col="id", buckets=8,
-        materialize_once=False,
-    )
-    lazy_fold.collect()
-    lazy_dist.collect()
-    plan_fold = lazy_fold._jdf.queryExecution().executedPlan().toString()
-    plan_dist = lazy_dist._jdf.queryExecution().executedPlan().toString()
-    assert plan_fold.count("Exchange") < plan_dist.count("Exchange")
+    keys = spark.createDataFrame(rows, "a string, b int").distinct()
+    one = dense_ids(keys.repartition(1), ["a", "b"], out_col="id", buckets=8)
+    seven = dense_ids(keys.repartition(7, "b"), ["a", "b"], out_col="id", buckets=8)
+    got = sorted(map(tuple, one.collect()))
+    assert got == sorted(map(tuple, seven.collect()))
+    assert sorted(r[2] for r in got) == list(range(len(got)))
+    assert len(got) == keys.count()
 
 
 def test_dense_ids_laziness_and_materialize_modes(spark):
-    """dense_ids construction must run ZERO jobs, in both modes — the
-    round-4 localCheckpoint variant violated this under AQE (checkpoint
-    forces queryExecution.toRdd, which materializes every upstream query
-    stage at plan-BUILD time), which made merely composing nodes/edges
-    execute the whole extraction and halved the benched modular-pipeline
-    throughput.
-
-    Execution counts are mode-dependent and DELIBERATE: the default
-    (materialize_once=False, pure/stateless — no CacheManager entry
-    pinned forever, the leak that OOM'd the 1 GB scaling-job driver at
-    trial 2) lets the offsets broadcast job re-execute the bucketed
-    subtree once (ReuseExchange misses after not-null inference);
-    materialize_once=True pins exactly-once via a lazy persist."""
-    import pandas as pd
-
+    """dense_ids construction must run ZERO jobs — a localCheckpoint inside
+    would run every upstream stage at plan-BUILD time under AQE, so merely
+    composing nodes/edges would execute the whole extraction. The plan is
+    pure and stateless: the offsets broadcast job may re-execute the
+    bucketed subtree (ReuseExchange misses after not-null inference), so
+    exactly-once upstream execution is not promised."""
     from llm_text_to_knowledge_graph_spark.plans.ids import dense_ids
 
     def make(acc_):
@@ -122,8 +94,6 @@ def test_dense_ids_laziness_and_materialize_modes(spark):
         [(f"key-{i}",) for i in range(400)], "name string"
     ).repartition(4)
 
-    # default: lazy construction, stateless, upstream runs once per
-    # consumer (ranked window + offsets broadcast = 2x)
     acc = spark.sparkContext.accumulator(0)
     out = dense_ids(
         df.mapInPandas(make(acc), schema="name string"),
@@ -133,18 +103,3 @@ def test_dense_ids_laziness_and_materialize_modes(spark):
     assert out.count() == 400
     assert sorted(r.id for r in out.collect()) == list(range(400))
     assert acc.value >= 400  # ran; exactly-once NOT promised here
-
-    # materialize_once=True: still lazy at build, exactly-once at run
-    acc2 = spark.sparkContext.accumulator(0)
-    out2 = dense_ids(
-        df.mapInPandas(make(acc2), schema="name string"),
-        ["name"], out_col="id", buckets=8, materialize_once=True,
-    )
-    assert acc2.value == 0
-    n = out2.count()
-    assert n == 400
-    assert sorted(r.id for r in out2.collect()) == list(range(400))
-    # every downstream action re-reads the cached blocks, never the
-    # Python stage: the accumulator saw each row exactly once
-    assert acc2.value == 400
-    spark.catalog.clearCache()  # drop the pinned b-cache entry

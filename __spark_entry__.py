@@ -2,8 +2,9 @@
 
 ``entry(spark)`` — flagship KG-construction run over the sf0.001 documents
 corpus (adapted to the pages input schema): mention detection against a
-vocabulary dictionary, co-occurrence association statements, full graph
-canonicalization; returns the edges table.
+vocabulary dictionary, co-occurrence association statements, and the
+content-addressed edge build (``node_id_col``/``edge_id_col`` ids, no node
+table or join); returns the edges table.
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
 SURVEY.md §2 (+ the training-data ops), each checked against DuckDB at
@@ -39,6 +40,10 @@ DOC_RELATIONS = [
     ("fast", "association"),
     ("slow", "association"),
 ]
+
+
+# the corpus ``entry`` builds its graph from
+ENTRY_SF = "/root/testdata/sf0.001"
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -77,28 +82,24 @@ def _docs_as_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def entry(spark: SparkSession) -> DataFrame:
-    from llm_text_to_knowledge_graph_spark.operators.graph import (
-        annotation_map,
-        build_edges,
-        build_nodes,
-    )
-    from llm_text_to_knowledge_graph_spark.operators.mentions import (
-        detect_mentions,
-        explode_mentions,
-    )
+def _vocab_edges(spark: SparkSession, sf: str, carry_names: bool = False) -> DataFrame:
+    """C1 vocab mentions -> C2 co-occurrence statements -> P7 content-addressed
+    edges over the sf documents. The edge table needs no node table, so no
+    annotation map, node build or endpoint join is planned."""
+    from llm_text_to_knowledge_graph_spark.operators.graph import build_edges
+    from llm_text_to_knowledge_graph_spark.operators.mentions import detect_mentions
     from llm_text_to_knowledge_graph_spark.operators.statements import (
         extract_cooccurrence,
     )
     from llm_text_to_knowledge_graph_spark.operators.triples import parse_triples
 
-    sentences = _docs_as_sentences(spark, "/root/testdata/sf0.001")
-    mentions = detect_mentions(sentences, VOCAB_ALIAS_ROWS)
-    statements = extract_cooccurrence(mentions)
-    triples = parse_triples(statements)
-    ann = annotation_map(explode_mentions(mentions))
-    nodes = build_nodes(triples, ann)
-    return build_edges(triples, nodes)
+    mentions = detect_mentions(_docs_as_sentences(spark, sf), VOCAB_ALIAS_ROWS)
+    triples = parse_triples(extract_cooccurrence(mentions))
+    return build_edges(triples, carry_names=carry_names)
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    return _vocab_edges(spark, ENTRY_SF)
 
 
 # ---------------------------------------------------------------------------
@@ -213,8 +214,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.lit("").alias("evidence"),
             )
         )
-        nodes = build_nodes(triples, id_strategy="hash")
-        edges = build_edges(triples, id_strategy="hash")
+        nodes = build_nodes(triples)
+        edges = build_edges(triples)
         sn = nodes.select(F.col("node_id").alias("s"), F.col("name").alias("subj_name"))
         tn = nodes.select(F.col("node_id").alias("t"), F.col("name").alias("obj_name"))
         return (
@@ -963,37 +964,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["real_gold_selventa_heldout_pr"] = real_gold_selventa_heldout_pr
 
-    # C1 (vocab matcher) + C2-cooccurrence + P6/P7 graph build, resolved
-    # back to entity names so the single-token VOCAB makes the whole chain
-    # DuckDB-checkable (round-2: was rows-only).
+    # C1 (vocab matcher) + C2-cooccurrence + P7 edge build, grouped on the
+    # edges' own endpoint names so the single-token VOCAB makes the whole
+    # chain DuckDB-checkable.
     def cooccurrence_graph(spark, sf):
-        from llm_text_to_knowledge_graph_spark.operators.graph import (
-            annotation_map,
-            build_edges,
-            build_nodes,
-        )
-        from llm_text_to_knowledge_graph_spark.operators.mentions import (
-            detect_mentions,
-            explode_mentions,
-        )
-        from llm_text_to_knowledge_graph_spark.operators.statements import (
-            extract_cooccurrence,
-        )
-        from llm_text_to_knowledge_graph_spark.operators.triples import parse_triples
-
-        sentences = _docs_as_sentences(spark, sf)
-        mentions = detect_mentions(sentences, VOCAB_ALIAS_ROWS)
-        statements = extract_cooccurrence(mentions)
-        triples = parse_triples(statements)
-        ann = annotation_map(explode_mentions(mentions))
-        nodes = build_nodes(triples, ann)
-        edges = build_edges(triples, nodes)
-        sn = nodes.select(F.col("node_id").alias("s"), F.col("name").alias("subj_name"))
-        tn = nodes.select(F.col("node_id").alias("t"), F.col("name").alias("obj_name"))
         return (
-            edges.join(F.broadcast(sn), "s")
-            .join(F.broadcast(tn), "t")
-            .groupBy("subj_name", "interaction", "obj_name", "bel_expression")
+            _vocab_edges(spark, sf, carry_names=True)
+            .groupBy(
+                F.col("s_name").alias("subj_name"),
+                "interaction",
+                F.col("t_name").alias("obj_name"),
+                "bel_expression",
+            )
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
         )
 
@@ -2237,7 +2219,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         alias_rows = build_alias_rows()
         old_edges = build_edges(
             extract_triples_fused(old, alias_rows),
-            id_strategy="hash",
             carry_names=True,
             carry_url=True,
         )
@@ -3168,29 +3149,6 @@ _DRIVER_CERTIFIED = frozenset([
     "host_link_graph", "hits_graph", "anchor_alias_counts",
     "pagerank_hosts_weighted", "session_windows", "pmi_token_pairs",
 ])
-
-
-def entry_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """entry() parameterized by sf_dir (used by the cooccurrence_graph query)."""
-    from llm_text_to_knowledge_graph_spark.operators.graph import (
-        annotation_map,
-        build_edges,
-        build_nodes,
-    )
-    from llm_text_to_knowledge_graph_spark.operators.mentions import (
-        detect_mentions,
-        explode_mentions,
-    )
-    from llm_text_to_knowledge_graph_spark.operators.statements import extract_cooccurrence
-    from llm_text_to_knowledge_graph_spark.operators.triples import parse_triples
-
-    sentences = _docs_as_sentences(spark, sf_dir)
-    mentions = detect_mentions(sentences, VOCAB_ALIAS_ROWS)
-    statements = extract_cooccurrence(mentions)
-    triples = parse_triples(statements)
-    ann = annotation_map(explode_mentions(mentions))
-    nodes = build_nodes(triples, ann)
-    return build_edges(triples, nodes)
 
 
 # ---------------------------------------------------------------------------

@@ -185,7 +185,7 @@ def main() -> int:
     # JVM and amortizes to zero at scale; the bench measures steady state.
     alias_rows = build_alias_rows()
     wpages = pages_df(spark, 40, seed=1, partitions=8)
-    run_pipeline(spark, wpages, alias_rows, parallelism=8)["edges"].count()
+    run_pipeline(spark, wpages, alias_rows)["edges"].count()
     extract_triples_fused(wpages, alias_rows).count()
     extract_triples_fused_block(wpages, alias_rows).count()
 
@@ -212,7 +212,7 @@ def main() -> int:
 
         # --- headline 1b: modular five-stage pipeline ----------------------------
         def _pipeline():
-            res = run_pipeline(spark, pages, alias_rows, parallelism=CPUS * 2, persist=True)
+            res = run_pipeline(spark, pages, alias_rows, persist=True)
             return res, res["triples"].count()
 
         (res, n_triples), dt = timed("kg_pipeline", _pipeline)
@@ -232,8 +232,8 @@ def main() -> int:
         )
 
         def _hash_graph():
-            n = build_edges(res["triples"], id_strategy="hash").count()
-            build_nodes(res["triples"], id_strategy="hash").count()
+            n = build_edges(res["triples"]).count()
+            build_nodes(res["triples"]).count()
             return n
 
         n_edges_h, _ = timed("kg_graph_hash", _hash_graph)

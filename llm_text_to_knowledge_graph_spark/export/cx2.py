@@ -61,6 +61,15 @@ def _network_attributes(
     return attrs
 
 
+def _check_size(n_elements: int, max_elements: int) -> None:
+    if n_elements > max_elements:
+        raise ValueError(
+            f"graph too large for a single CX2 document (more than "
+            f"{max_elements} nodes + edges); export per-partition subgraphs "
+            f"or raise max_elements"
+        )
+
+
 def to_cx2(
     nodes: DataFrame,
     edges: DataFrame,
@@ -73,29 +82,26 @@ def to_cx2(
     """Render canonical node/edge tables as a CX2 aspect list. Node and edge
     ids are renumbered 0..n-1 / 0..m-1 (see the module docstring); every
     edge endpoint must be a ``node_id`` of ``nodes``."""
-    n_nodes = nodes.count()
-    n_edges = edges.count()
-    if n_nodes + n_edges > max_elements:
-        raise ValueError(
-            f"graph too large for a single CX2 document "
-            f"({n_nodes}+{n_edges} > {max_elements}); export per-partition "
-            f"subgraphs or raise max_elements"
-        )
-
+    # bounded collects, not counts: at most max_elements + 1 rows reach the
+    # driver, and a graph within the bound costs no extra job
     node_pdf = (
         nodes.select("node_id", "name", "label", "type", "url")
+        .limit(max_elements + 1)
         .toPandas()
-        .sort_values(["node_id", "name"])
     )
-    # rows, not edge_id values, are numbered: a content edge id may repeat
-    # (``edge_id_col``), so the edge's content breaks ties
+    _check_size(len(node_pdf), max_elements)
     edge_pdf = (
         edges.select(
             "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
         )
+        .limit(max_elements + 1 - len(node_pdf))
         .toPandas()
-        .sort_values(["edge_id", "s", "t", "bel_expression", "evidence"])
     )
+    _check_size(len(node_pdf) + len(edge_pdf), max_elements)
+    node_pdf = node_pdf.sort_values(["node_id", "name"])
+    # rows, not edge_id values, are numbered: a content edge id may repeat
+    # (``edge_id_col``), so the edge's content breaks ties
+    edge_pdf = edge_pdf.sort_values(["edge_id", "s", "t", "bel_expression", "evidence"])
 
     cx_id = {}
     node_aspect = []

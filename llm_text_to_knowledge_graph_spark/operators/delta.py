@@ -136,7 +136,6 @@ def snapshot_delta(
     todo_pages = new_pages.join(urlset("added", "changed"), "url", "left_semi")
     delta_edges = build_edges(
         extractor(todo_pages, alias_rows),
-        id_strategy="hash",
         hash_seed=hash_seed,
         carry_names=True,
         carry_url=True,

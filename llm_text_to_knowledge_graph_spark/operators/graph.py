@@ -12,31 +12,19 @@ in-memory dict counters become:
                               names, so edges are a join-free projection
 
 The reference's 0..n-1 counter is applied where it ran, per rendered CX2
-document (``export.cx2.to_cx2``). ``id_strategy="dense"`` (two-phase
-``dense_ids`` plus endpoint joins) stays for the callers that need 0..n-1
-ids in a table: ``entry`` / ``entry_for`` / ``cooccurrence_graph`` in
-``__spark_entry__.py`` and the id-scheme timing in ``perfbench``.
+document (``export.cx2.to_cx2``). Hash ids are the default of every build;
+``id_strategy="dense"`` (two-phase ``dense_ids`` plus endpoint joins) is
+chosen only where a caller writes it: the benchmark's id-scheme timing in
+``perfbench`` and the tests that pin the dense path.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
-from ..functions.bel import extract_label, extract_type, identifiers_url
+from ..functions.bel import identifiers_url
 from ..plans.ids import dense_ids
-
-
-@F.pandas_udf(StringType())
-def _label_udf(name: pd.Series) -> pd.Series:
-    return name.map(extract_label)
-
-
-@F.pandas_udf(StringType())
-def _type_udf(name: pd.Series) -> pd.Series:
-    return name.map(extract_type)
 
 
 # --- native (JVM-side, codegen'd) forms of the label/type extraction -------
@@ -162,20 +150,20 @@ def audit_edge_id_collisions(edges: DataFrame) -> int:
 def build_nodes(
     triples: DataFrame,
     ann_map: DataFrame | None = None,
-    id_strategy: str = "dense",
+    id_strategy: str = "hash",
     hash_seed: int = 0,
 ) -> DataFrame:
     """Canonical nodes: dedup by exact BEL-term string, ids, label/type,
     URL via name-then-label lookup (convert_to_cx2.py:151-166).
 
     id_strategy:
-      * ``hash``   — content-addressed ``xxhash64(name)`` ids; the node
-        table is one distinct away from the triples and edges need no join
-        at all (see ``build_edges``). ``run_pipeline`` builds this; the CX2
-        renderer numbers an exported graph 0..n-1 itself.
+      * ``hash`` (default) — content-addressed ``xxhash64(name)`` ids;
+        the node table is one distinct away from the triples and edges
+        need no join at all (see ``build_edges``). The CX2 renderer numbers
+        an exported graph 0..n-1 itself.
       * ``dense``  — 0..n-1 ids in the table via two-phase ``dense_ids``;
-        costs the bucket-window shuffle chain. Kept for the graph queries
-        of ``__spark_entry__.py`` and the id-scheme timing in ``perfbench``.
+        costs the bucket-window shuffle chain. Only the benchmark's
+        id-scheme timing and the tests that pin it ask for it.
     """
     names = (
         triples.select(F.col("subj").alias("name"))
@@ -212,7 +200,7 @@ def build_nodes(
 def build_edges(
     triples: DataFrame,
     nodes: DataFrame | None = None,
-    id_strategy: str = "dense",
+    id_strategy: str = "hash",
     hash_seed: int = 0,
     carry_names: bool = False,
     carry_url: bool = False,
@@ -220,13 +208,14 @@ def build_edges(
     """Edge materialization (convert_to_cx2.py:104-133): endpoint ids +
     bel_expression/text/evidence carry-through, edge ids.
 
-    ``hash`` strategy (``run_pipeline``'s): endpoint ids are recomputed
-    from the names (``node_id_col``) and the edge id is a seed-fixed hash of
-    the edge's identity key — ZERO joins and ZERO shuffles, so the whole
-    edge build fuses into the extraction stage. ``nodes`` is unused there.
-    ``dense`` strategy: endpoint-id lookup joins against ``nodes`` (AQE
-    picks broadcast or sort-merge + skew split from the runtime size) and a
-    two-phase dense edge id.
+    ``hash`` strategy (default): endpoint ids are recomputed from the
+    names (``node_id_col``) and the edge id is a seed-fixed hash of the
+    edge's identity key — ZERO joins and ZERO shuffles, so the whole edge
+    build fuses into the extraction stage. ``nodes`` is unused there.
+    ``dense`` strategy (the benchmark's id-scheme timing and tests only):
+    endpoint-id lookup joins against ``nodes`` (AQE picks broadcast or
+    sort-merge + skew split from the runtime size) and a two-phase dense
+    edge id.
     """
     edges = triples.withColumn(
         "bel_expression",
@@ -299,13 +288,13 @@ def identifiers_url_col(db, the_id):
 
 def nodes_from_edges(edges: DataFrame) -> DataFrame:
     """Node table derived from a name-carrying hash-id edge table
-    (``build_edges(..., id_strategy="hash", carry_names=True)``).
+    (``build_edges(..., carry_names=True)``).
 
     This is the single-pass full-job shape: extraction writes edges once,
     and the (much smaller) node table is a distinct over the written edges'
     endpoints — no triples cache, no second extraction pass. Output matches
-    ``build_nodes(triples, id_strategy="hash")`` row-for-row (ann_map-less
-    form; pinned by test)."""
+    ``build_nodes(triples)`` row-for-row (ann_map-less form; pinned by
+    test)."""
     endpoints = edges.select(
         F.explode(
             F.array(

@@ -10,8 +10,9 @@ harness can regenerate it exactly.
 
 Contract: entities are densely numbered ``0..n_entities-1`` — which is the
 embedding-matrix row space every trainer already maintains (compose with
-``plans/ids.py::dense_ids`` or ``build_nodes(id_strategy='dense')`` when
-the graph's ids are sparse). The draw is then pure column math:
+``plans/ids.py::dense_ids`` when the graph's ids are sparse, as the
+content-addressed ``build_nodes`` ids are). The draw is then pure column
+math:
 
   h            = int(md5(s:t:copy:seed)[0:15], 16)      (60 bits)
   corrupt head = (h % 2 == 0)

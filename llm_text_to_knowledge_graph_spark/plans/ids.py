@@ -37,9 +37,9 @@ def dense_ids(
     bucket shuffle moves ~unique keys per partition).
 
     Callers: ``build_nodes`` / ``build_edges`` with ``id_strategy="dense"``
-    — ``entry`` / ``entry_for`` / ``cooccurrence_graph`` in
-    ``__spark_entry__.py`` and the id-scheme timing in ``perfbench``. ``operators/negatives.py`` needs
-    0..n-1 entity ids and points here for sparse graphs.
+    — the benchmark's id-scheme timing in ``perfbench`` and tests only.
+    ``operators/negatives.py`` needs 0..n-1 entity ids and points here for
+    sparse graphs.
 
     Deterministic across partitionings and runs (murmur3 hash is
     seed-fixed) PROVIDED the input plan is deterministic: the plan is pure

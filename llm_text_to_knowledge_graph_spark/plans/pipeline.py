@@ -3,8 +3,8 @@
 pages -> paragraphs -> sentences -> mentions -> statements -> triples
       -> nodes + edges
 
-The graph is content-addressed (``build_nodes``/``build_edges`` with
-``id_strategy="hash"``): node ids are ``node_id_col(name)``, edges are a
+The graph is content-addressed (``build_nodes``/``build_edges`` with their
+default hash ids): node ids are ``node_id_col(name)``, edges are a
 join-free projection of the triples, and the CX2 renderer
 (``export.cx2.to_cx2``) numbers an exported graph 0..n-1 itself.
 
@@ -72,7 +72,6 @@ def run_pipeline(
     input_token: str = "adhoc",
     run_id: str = "run-0",
     lang: str | None = "en",
-    parallelism: int | None = None,
     persist: bool = False,
     extractor: str = "sentence",
 ) -> dict:
@@ -106,9 +105,9 @@ def run_pipeline(
     Nodes and edges carry content-addressed ids (``node_id_col`` /
     ``edge_id_col``); the edges are built from the triples alone.
 
-    ``parallelism`` (checkpointed mode): pages are hash-partitioned by url
-    into this many partitions (default: twice the default parallelism)
-    before the kernel, so extraction parallelism matches cores.
+    Checkpointed mode hash-partitions the pages by url into twice the
+    default parallelism before the kernel, so extraction parallelism
+    matches cores.
     """
     if extractor not in EXTRACT_STAGES:
         raise ValueError(f"unknown extractor {extractor!r}")
@@ -141,8 +140,7 @@ def run_pipeline(
     if store is not None:
         # explicit repartition before the heavy crossing (north_rule:
         # explicit partitioning)
-        par = parallelism or spark.sparkContext.defaultParallelism * 2
-        pages = pages.repartition(par, "url")
+        pages = pages.repartition(spark.sparkContext.defaultParallelism * 2, "url")
     base = extract_fused(
         pages, alias_rows, engine=extractor, shape="paragraphs", lang=lang
     )
@@ -172,12 +170,12 @@ def run_pipeline(
     ann_map = annotation_map(out["flat_mentions"])
     nodes = stage(
         "nodes",
-        lambda: build_nodes(triples, ann_map, id_strategy="hash"),
+        lambda: build_nodes(triples, ann_map),
         token_extra=GRAPH_TOKEN,
     )
     edges = stage(
         "edges",
-        lambda: build_edges(triples, id_strategy="hash"),
+        lambda: build_edges(triples),
         token_extra=GRAPH_TOKEN,
     )
     out.update(nodes=nodes, edges=edges, metrics=metrics)

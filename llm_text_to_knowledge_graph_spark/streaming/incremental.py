@@ -130,12 +130,8 @@ def incremental_graph(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = extract_triples_fused(batch_df, alias_rows)
-        _write_batch_idempotent(
-            build_edges(t, id_strategy="hash"), f"{out_root}/edges", batch_id
-        )
-        _write_batch_idempotent(
-            build_nodes(t, id_strategy="hash"), f"{out_root}/nodes", batch_id
-        )
+        _write_batch_idempotent(build_edges(t), f"{out_root}/edges", batch_id)
+        _write_batch_idempotent(build_nodes(t), f"{out_root}/nodes", batch_id)
 
     writer = (
         stream_pages(spark, pages_dir)

@@ -178,7 +178,7 @@ def main() -> int:
         # checkpoint the north_rule requires anyway.
         def _full_job():
             triples = extract_triples_fused(pages, alias_rows)
-            edges = build_edges(triples, id_strategy="hash", carry_names=True)
+            edges = build_edges(triples, carry_names=True)
         # Output files are sized to the DATA, not the core count: without
         # the coalesce, the map-only edge projection inherits one output
         # file per 1MB input split (hundreds of tiny files), so the write

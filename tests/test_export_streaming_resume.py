@@ -48,12 +48,13 @@ _EDGE_SCHEMA = (
 )
 
 
-def _render(spark, nodes, edges):
+def _render(spark, nodes, edges, **kwargs):
     from llm_text_to_knowledge_graph_spark.export.cx2 import to_cx2
 
     cx = to_cx2(
         spark.createDataFrame(nodes, _NODE_SCHEMA),
         spark.createDataFrame(edges, _EDGE_SCHEMA),
+        **kwargs,
     )
     return {k: v for a in cx for k, v in a.items()}
 
@@ -77,6 +78,19 @@ def test_cx2_dense_input_ids_unchanged(spark):
     assert sorted((e["id"], e["s"], e["t"], e["v"]["bel_expression"]) for e in cx["edges"]) == [
         (0, 0, 1, "a"), (1, 3, 0, "b"), (2, 2, 3, "c")
     ]
+
+
+def test_cx2_max_elements_guard(spark):
+    """A graph of more than max_elements nodes + edges is refused, whether
+    the nodes alone or nodes plus edges cross the bound; one of exactly
+    max_elements renders."""
+    nodes = [_node(i, f"p(HGNC:G{i})") for i in range(4)]
+    edges = [_edge(0, 0, 1, "a"), _edge(1, 1, 2, "b"), _edge(2, 2, 3, "c")]
+    for bound in (3, 6):
+        with pytest.raises(ValueError, match="too large"):
+            _render(spark, nodes, edges, max_elements=bound)
+    cx = _render(spark, nodes, edges, max_elements=7)
+    assert len(cx["nodes"]) == 4 and len(cx["edges"]) == 3
 
 
 def test_cx2_repeated_edge_id_gets_distinct_ids(spark):

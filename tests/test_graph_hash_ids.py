@@ -75,8 +75,8 @@ def test_native_label_type_parity(spark):
 
 
 def test_hash_graph_isomorphic_to_dense(spark, triples):
-    dn = build_nodes(triples)
-    de = build_edges(triples, dn)
+    dn = build_nodes(triples, id_strategy="dense")
+    de = build_edges(triples, dn, id_strategy="dense")
     hn = build_nodes(triples, id_strategy="hash")
     he = build_edges(triples, id_strategy="hash")
     assert _name_level_edges(dn, de) == _name_level_edges(hn, he)
@@ -137,10 +137,14 @@ def test_checkpoint_fingerprint_includes_id_strategy(spark, tmp_path):
     store = make_table_store(spark, wd)
     t = store.read(spark, "triples")
     dn = store.commit(
-        build_nodes(t, annotation_map(store.read(spark, "flat_mentions"))),
+        build_nodes(
+            t, annotation_map(store.read(spark, "flat_mentions")), id_strategy="dense"
+        ),
         "nodes", "adhoc:nodes:dense", "dense-run",
     )
-    store.commit(build_edges(t, dn), "edges", "adhoc:edges:dense", "dense-run")
+    store.commit(
+        build_edges(t, dn, id_strategy="dense"), "edges", "adhoc:edges:dense", "dense-run"
+    )
     assert sorted(r.node_id for r in dn.collect()) == list(range(dn.count()))
 
     r2 = run_pipeline(spark, pages, alias, workdir=wd)
@@ -199,3 +203,49 @@ def test_nodes_from_edges_matches_build_nodes(spark, triples):
     assert he.columns[-2:] == ["s_name", "t_name"]
     base = build_edges(triples, id_strategy="hash")
     assert base.columns == he.columns[:-2]
+
+
+def test_driver_entry_is_content_addressed(spark):
+    """The driver's flagship ``entry`` keeps its columns and rows, and its
+    endpoint ids are ``node_id_col`` of the endpoint terms: the same edges
+    as the dense-id modular chain, relabelled by name."""
+    import os
+
+    import __spark_entry__ as drv
+    from llm_text_to_knowledge_graph_spark.operators.graph import (
+        annotation_map,
+        node_id_col,
+    )
+    from llm_text_to_knowledge_graph_spark.operators.mentions import (
+        detect_mentions,
+        explode_mentions,
+    )
+    from llm_text_to_knowledge_graph_spark.operators.statements import (
+        extract_cooccurrence,
+    )
+    from llm_text_to_knowledge_graph_spark.operators.triples import parse_triples
+
+    if not os.path.isdir(drv.ENTRY_SF):
+        pytest.skip("driver corpus not present")
+    got = drv.entry(spark)
+    assert got.columns == [
+        "edge_id", "s", "t", "interaction", "bel_expression", "text", "evidence"
+    ]
+
+    mentions = detect_mentions(
+        drv._docs_as_sentences(spark, drv.ENTRY_SF), drv.VOCAB_ALIAS_ROWS
+    )
+    triples = parse_triples(extract_cooccurrence(mentions))
+    dn = build_nodes(
+        triples, annotation_map(explode_mentions(mentions)), id_strategy="dense"
+    )
+    de = build_edges(triples, dn, id_strategy="dense")
+    hid = {
+        r.node_id: r.h
+        for r in dn.select("node_id", node_id_col("name").alias("h")).collect()
+    }
+    cols = ["s", "t", "interaction", "bel_expression", "text", "evidence"]
+    want = sorted((hid[r.s], hid[r.t], *r[2:]) for r in de.select(*cols).collect())
+    rows = sorted(tuple(r) for r in got.select(*cols).collect())
+    assert len(rows) == len(want) > 0
+    assert rows == want

@@ -94,8 +94,8 @@ def test_graph_query_layer_is_id_scheme_agnostic(spark):
     t = extract_triples_fused(pages_df(spark, 30, seed=4), build_alias_rows(4)).persist()
     hn = build_nodes(t, id_strategy="hash").persist()
     he = build_edges(t, id_strategy="hash").persist()
-    dn = build_nodes(t).persist()
-    de = build_edges(t, dn).persist()
+    dn = build_nodes(t, id_strategy="dense").persist()
+    de = build_edges(t, dn, id_strategy="dense").persist()
 
     # hub degrees must agree name-level between schemes
     def hub_names(nodes, edges):

@@ -60,8 +60,8 @@ def _our_graph(spark, rows):
         "bel_statement string, evidence string",
     )
     t = parse_triples(df)
-    nodes = build_nodes(t)
-    edges = build_edges(t, nodes)
+    nodes = build_nodes(t, id_strategy="dense")
+    edges = build_edges(t, nodes, id_strategy="dense")
     node_rows = nodes.collect()
     idn = {r.node_id: r.name for r in node_rows}
     named_edges = sorted(

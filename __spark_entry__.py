@@ -2710,15 +2710,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # context-selection / seed-expansion scorer. Oracle: unrolled
     # 5-iteration CTE with the seeded teleport vector.
     def ppr_graph(spark, sf):
-        from llm_text_to_knowledge_graph_spark.operators.graph_query import (
-            personalized_pagerank,
-        )
+        from llm_text_to_knowledge_graph_spark.operators.graph_query import pagerank
 
         c = _read(spark, sf, "customer").select(
             F.col("c_custkey").cast("long").alias("s"),
             (F.col("c_nationkey").cast("long") + 2_000_000).alias("t"),
         )
-        pr = personalized_pagerank(c, seeds=[1, 2_000_003], iterations=5)
+        pr = pagerank(c, seeds=[1, 2_000_003], iterations=5)
         return pr.select(
             F.col("node_id").cast("long").alias("node_id"),
             F.round("rank", 6).alias("rank"),

@@ -20,7 +20,6 @@ are the generalizable part and live in operators/extraction.py.
 from __future__ import annotations
 
 import json
-import os
 
 GOLD_JSON = "/root/reference/results/pmid9813040/sentences_with_extractions.json"
 
@@ -82,21 +81,14 @@ def extract_predictions(blocks: list[dict], lexicon: list | None = None) -> list
     """Run C1 (AliasMatcher over ``lexicon``, default REAL_LEXICON) + C2
     extended patterns over each block. Pure Python — the same functions the
     Spark UDFs wrap."""
-    from ..operators.extraction import extract_from_block, normalize_block_text
+    from ..operators.fused import block_statements
     from ..operators.mentions import AliasMatcher
 
     matcher = AliasMatcher(lexicon if lexicon is not None else REAL_LEXICON)
-    out = []
-    for b in blocks:
-        text = normalize_block_text(b["text"])
-        mentions = [
-            {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-             "entry_name": n, "score": p}
-            for (s, e, a, db, i, n, p) in matcher.find(text)
-        ]
-        preds = [stmt for stmt, _ev in extract_from_block(text, mentions)]
-        out.append({**b, "pred": preds})
-    return out
+    return [
+        {**b, "pred": [stmt for stmt, _ev in block_statements(b["text"], matcher)]}
+        for b in blocks
+    ]
 
 
 def score_blocks(blocks: list[dict], threshold: float = 0.5) -> dict:
@@ -127,8 +119,3 @@ def score_blocks(blocks: list[dict], threshold: float = 0.5) -> dict:
         "recall": matched / gold_total if gold_total else 0.0,
     }
 
-
-def run_real_gold_eval(path: str = GOLD_JSON) -> dict:
-    if not os.path.exists(path):
-        raise FileNotFoundError(path)
-    return score_blocks(extract_predictions(load_gold(path)))

@@ -224,7 +224,7 @@ PAPER_LEXICONS: dict[str, list] = {
 def run_bel_paper_eval(
     pmid: str = "16962653", lexicon: list | None = None
 ) -> dict:
-    from ..operators.extraction import extract_from_block, normalize_block_text
+    from ..operators.fused import block_statements
     from ..operators.mentions import AliasMatcher
     from .real_gold import score_blocks
 
@@ -236,13 +236,7 @@ def run_bel_paper_eval(
     matcher = AliasMatcher(lexicon)
     blocks = parse_bel_file(path)
     for b in blocks:
-        text = normalize_block_text(b["text"])
-        mentions = [
-            {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-             "entry_name": n, "score": p}
-            for (s, e, a, db, i, n, p) in matcher.find(text)
-        ]
-        b["pred"] = [stmt for stmt, _ in extract_from_block(text, mentions)]
+        b["pred"] = [stmt for stmt, _ in block_statements(b["text"], matcher)]
     return score_blocks(blocks)
 
 
@@ -396,8 +390,8 @@ def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
     criterion) — pinned in tests/test_real_gold.py so a regression that
     turns an inference-bound miss into a pattern_gap (or vice versa) is
     visible."""
-    from ..operators.extraction import normalize_block_text
-    from ..operators.mentions import AliasMatcher
+    from ..operators.extraction import extract_from_block, normalize_block_text
+    from ..operators.mentions import AliasMatcher, mention_structs
     from .real_gold import score_blocks
 
     if lexicon is None:
@@ -407,21 +401,11 @@ def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
     blocks = parse_bel_file(path)
     text_by_key: dict[str, str] = {}
     mentions_by_key: dict[str, set[str]] = {}
-    from ..operators.extraction import extract_from_block
-
     for b in blocks:
         text = normalize_block_text(b["text"])
         ms = matcher.find(text)
         b["pred"] = [
-            stmt
-            for stmt, _ in extract_from_block(
-                text,
-                [
-                    {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-                     "entry_name": n, "score": p}
-                    for (s, e, a, db, i, n, p) in ms
-                ],
-            )
+            stmt for stmt, _ in extract_from_block(text, mention_structs(ms))
         ]
         text_by_key[b["key"]] = text
         mentions_by_key[b["key"]] = {m[5] for m in ms} | {m[2] for m in ms}
@@ -634,7 +618,7 @@ def run_selventa_corpus_eval(subset: str = "dev") -> dict:
     withheld from its result); ``"all"`` is the full corpus (round-4
     backward comparison only)."""
     from ..operators.extraction import extract_from_block, normalize_block_text
-    from ..operators.mentions import AliasMatcher
+    from ..operators.mentions import AliasMatcher, mention_structs
     from .real_gold import score_blocks
 
     if subset not in ("dev", "heldout", "all"):
@@ -654,15 +638,7 @@ def run_selventa_corpus_eval(subset: str = "dev") -> dict:
         text = normalize_block_text(b["text"])
         ms = matcher.find(text)
         b["pred"] = [
-            stmt
-            for stmt, _ in extract_from_block(
-                text,
-                [
-                    {"begin": s, "end": e, "alias": a, "db": db, "id": i,
-                     "entry_name": n, "score": p}
-                    for (s, e, a, db, i, n, p) in ms
-                ],
-            )
+            stmt for stmt, _ in extract_from_block(text, mention_structs(ms))
         ]
         text_by_key[b["key"]] = text
         mentions_by_key[b["key"]] = {m[5] for m in ms} | {m[2] for m in ms}

@@ -83,12 +83,10 @@ def extract_fused(
     alias_rows: list,
     engine: str = "sentence",
     shape: str = "triples",
-    lang: str | None = "en",
 ) -> DataFrame:
-    """pages -> ``shape`` rows (``triples`` | ``paragraphs``) with the
-    ``engine`` extractor (``sentence`` | ``block``), one Python crossing.
-
-    ``lang`` filters pages before the crossing (``None`` keeps all)."""
+    """English pages -> ``shape`` rows (``triples`` | ``paragraphs``) with
+    the ``engine`` extractor (``sentence`` | ``block``), one Python
+    crossing; the ``lang = 'en'`` filter runs before the crossing."""
     if engine not in ("sentence", "block"):
         raise ValueError(f"unknown extractor engine {engine!r}")
     schema = _SHAPES[shape]
@@ -123,8 +121,7 @@ def extract_fused(
             # every declared type (a dict of empty lists would be float64)
             yield pd.DataFrame.from_records(rows, columns=cols)
 
-    src = pages.filter(F.col("lang") == lang) if lang is not None else pages
-    return src.mapInPandas(run, schema=schema)
+    return pages.filter(F.col("lang") == "en").mapInPandas(run, schema=schema)
 
 
 def extract_triples_fused(pages: DataFrame, alias_rows: list) -> DataFrame:

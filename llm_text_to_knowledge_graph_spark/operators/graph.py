@@ -72,13 +72,7 @@ def annotation_map(flat_mentions: DataFrame) -> DataFrame:
     (convert_to_cx2.py:77-82; determinism via min_by over the occurrence key
     instead of scan order)."""
     with_url = flat_mentions.withColumn(
-        "ann_url",
-        F.concat(
-            F.lit("https://identifiers.org/"),
-            F.when(F.col("id").contains(":"), F.col("id")).otherwise(
-                F.concat_ws(":", F.col("db"), F.col("id"))
-            ),
-        ),
+        "ann_url", identifiers_url_col(F.col("db"), F.col("id"))
     )
     return with_url.groupBy("entry_name").agg(
         F.expr(

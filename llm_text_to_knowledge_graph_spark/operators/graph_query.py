@@ -308,27 +308,15 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     return labels
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    undirected: bool = True,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """PageRank over the edge table (fixed iteration count — deterministic
-    output for a given input). Returns (node_id, rank); ranks sum to ~1.
-
-    Per iteration: one join of ranks to edges + one sum aggregation —
-    the canonical Pregel-as-DataFrame shape. Dangling mass (nodes with no
-    out-edges; impossible in undirected mode) is redistributed uniformly
-    so the distribution stays normalized.
-
-    ``weight_col`` (e.g. ``n_links`` from linkgraph.host_graph): each
-    out-edge carries rank proportional to its weight instead of 1/deg —
-    the host-authority weighting for the web graph. Parallel (s, t)
-    duplicates are weight-summed; the unweighted path is left exactly as
-    before (its contribution math is pinned by the SQL oracle).
-    """
+def _rank_graph(
+    edges: DataFrame, undirected: bool, weight_col: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The rank loops' inputs ``(g_deg, nodes)``: the distinct (s, t)
+    edges (symmetrised when ``undirected``; ``weight_col`` weight-sums
+    parallel edges into ``_w``) joined to the source's out-degree or
+    out-weight ``deg``, and the distinct endpoints. Both are checkpointed
+    eagerly: every iteration joins them, so lineage truncation per round
+    (see connected_components) must not re-run the edge dedup."""
     if weight_col is None:
         g = (
             undirected_edges(edges).distinct()
@@ -359,10 +347,54 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    # lineage truncation per round (see connected_components docstring)
     g_deg = g.join(out_deg, "s").localCheckpoint(eager=True)
+    return g_deg, nodes
+
+
+def pagerank(
+    edges: DataFrame,
+    iterations: int = 10,
+    damping: float = 0.85,
+    undirected: bool = True,
+    weight_col: str | None = None,
+    seeds: list[int] | None = None,
+) -> DataFrame:
+    """PageRank over the edge table (fixed iteration count — deterministic
+    output for a given input). Returns (node_id, rank); ranks sum to ~1.
+
+    ``seeds``: personalized (topic-sensitive) PageRank — start and teleport
+    vector uniform over the seeds (a literal CASE: seeds are query-sized)
+    instead of all nodes, so rank concentrates in the seeds' neighborhood:
+    the RAG context-selection / seed-expansion scorer over the KG.
+
+    Per iteration: one join of ranks to edges + one sum aggregation —
+    the canonical Pregel-as-DataFrame shape, lineage truncated per round.
+    Dangling mass (nodes with no out-edges; impossible in undirected mode)
+    re-teleports (uniformly, or to the seeds) so the distribution stays
+    normalized.
+
+    ``weight_col`` (e.g. ``n_links`` from linkgraph.host_graph): each
+    out-edge carries rank proportional to its weight instead of 1/deg —
+    the host-authority weighting for the web graph. Parallel (s, t)
+    duplicates are weight-summed; the unweighted path is left exactly as
+    before (its contribution math is pinned by the SQL oracle).
+    """
+    if seeds is not None and not seeds:
+        raise ValueError("pagerank with seeds needs at least one seed")
+    g_deg, nodes = _rank_graph(edges, undirected, weight_col)
+    if seeds is None:
+        n = nodes.count()
+        start = F.lit(1.0 / n)
+        teleport = F.lit((1.0 - damping) / n)
+        dangling = (F.lit(1.0) - F.col("_total")) / F.lit(float(n))
+    else:
+        seeds = [int(s) for s in seeds]
+        start = F.when(
+            F.col("node_id").isin(seeds), F.lit(1.0 / len(seeds))
+        ).otherwise(F.lit(0.0))
+        teleport = F.lit(1.0 - damping) * start
+        dangling = (F.lit(1.0) - F.col("_total")) * start
+    ranks = nodes.withColumn("rank", start)
     contrib_expr = (
         (F.col("rank") / F.col("deg"))
         if weight_col is None
@@ -382,13 +414,13 @@ def pagerank(
             .select(
                 "node_id",
                 (
-                    F.lit((1.0 - damping) / n)
+                    teleport
                     + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
                 ).alias("rank"),
             )
         )
         if not undirected:
-            # redistribute dangling mass uniformly to keep sum(rank) = 1 —
+            # redistribute dangling mass to keep sum(rank) = 1 —
             # as a 1-row DataFrame crossJoined into the update, NOT a
             # per-iteration driver action: the loop body stays one lazy
             # plan per iteration, no mid-loop job/serialization point.
@@ -399,10 +431,7 @@ def pagerank(
             new_ranks = new_ranks.localCheckpoint(eager=False)
             total = new_ranks.agg(F.sum("rank").alias("_total"))
             new_ranks = new_ranks.crossJoin(F.broadcast(total)).select(
-                "node_id",
-                (F.col("rank") + (F.lit(1.0) - F.col("_total")) / F.lit(float(n))).alias(
-                    "rank"
-                ),
+                "node_id", (F.col("rank") + dangling).alias("rank")
             )
         ranks = new_ranks.localCheckpoint(eager=True)
     return ranks
@@ -560,82 +589,6 @@ def link_prediction_scores(
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list[int],
-    iterations: int = 5,
-    damping: float = 0.85,
-    undirected: bool = True,
-) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank: the teleport vector is
-    uniform over ``seeds`` instead of all nodes, so rank mass concentrates
-    in the seeds' neighborhood — the RAG context-selection primitive over
-    the knowledge graph ("which entities/evidence matter from THESE query
-    entities outward"), and the standard seed-expansion scorer for
-    entity-set completion.
-
-    Same fixed-iteration join+agg shape as :func:`pagerank` (deterministic
-    for a given input; one join + one aggregation per iteration, lineage
-    truncated per round); the teleport column is a literal CASE over the
-    seed list (seeds are query-sized, not data-sized). In directed mode
-    dangling mass re-teleports to the seeds via the same 1-row crossJoin —
-    no mid-loop driver actions.
-    """
-    if not seeds:
-        raise ValueError("personalized_pagerank needs at least one seed")
-    seeds = [int(s) for s in seeds]
-    g = (
-        undirected_edges(edges).distinct()
-        if undirected
-        else edges.select("s", "t").distinct()
-    )
-    g = g.localCheckpoint(eager=True)
-    out_deg = g.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (
-        g.select(F.col("s").alias("node_id"))
-        .unionByName(g.select(F.col("t").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    p0 = F.when(
-        F.col("node_id").isin(seeds), F.lit(1.0 / len(seeds))
-    ).otherwise(F.lit(0.0))
-    ranks = nodes.withColumn("rank", p0)
-    g_deg = g.join(out_deg, "s").localCheckpoint(eager=True)
-    for _ in range(iterations):
-        contribs = (
-            g_deg.join(ranks.withColumnRenamed("node_id", "s"), "s")
-            .select(
-                F.col("t").alias("node_id"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node_id")
-            .agg(F.sum("c").alias("in_rank"))
-        )
-        new_ranks = nodes.join(contribs, "node_id", "left").select(
-            "node_id",
-            (
-                F.lit(1.0 - damping) * p0
-                + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
-            ).alias("rank"),
-        )
-        if not undirected:
-            # dangling mass re-teleports to the seeds (1-row crossJoin,
-            # no driver action — same discipline as pagerank, including
-            # the compute-once lazy checkpoint before the 1-row agg)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            total = new_ranks.agg(F.sum("rank").alias("_total"))
-            new_ranks = new_ranks.crossJoin(F.broadcast(total)).select(
-                "node_id",
-                (
-                    F.col("rank")
-                    + (F.lit(1.0) - F.col("_total")) * p0
-                ).alias("rank"),
-            )
-        ranks = new_ranks.localCheckpoint(eager=True)
-    return ranks
-
-
 def personalized_pagerank_scaled(
     edges: DataFrame,
     seeds: list[int],
@@ -657,30 +610,16 @@ def personalized_pagerank_scaled(
     HALF_UP, DuckDB rounds the ``x*1e6`` double) — the one observed
     parity break in round 3 (``rag_context_docs``, 0.3708125 boundary).
 
-    Semantics match :func:`personalized_pagerank` up to ≤ ``iterations``
+    Semantics match :func:`pagerank` with ``seeds`` up to ≤ ``iterations``
     floor-division units (1e-12) per node — far below any consumer's 6dp
     lattice — and the floor is applied identically on both engines.
-    Returns (node_id, rank_s) with ``rank_s`` a long; ``rank_s/scale``
-    is the rank. Same plan shape as the double variant: one join + one
-    partial-agg groupBy per iteration, lineage truncated per round, no
-    mid-loop driver actions.
+    Returns (node_id, rank_s), a long; ``rank_s/scale`` is the rank. Same
+    input tables and plan shape as :func:`pagerank`.
     """
     if not seeds:
         raise ValueError("personalized_pagerank_scaled needs >= 1 seed")
     seeds = [int(s) for s in seeds]
-    g = (
-        undirected_edges(edges).distinct()
-        if undirected
-        else edges.select("s", "t").distinct()
-    )
-    g = g.localCheckpoint(eager=True)
-    out_deg = g.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (
-        g.select(F.col("s").alias("node_id"))
-        .unionByName(g.select(F.col("t").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    g_deg, nodes = _rank_graph(edges, undirected)
     p0_s = int(scale) // len(seeds)  # exact integer teleport share
     teleport = F.when(
         F.col("node_id").isin(seeds),
@@ -692,7 +631,6 @@ def personalized_pagerank_scaled(
         .otherwise(F.lit(0))
         .cast("long"),
     )
-    g_deg = g.join(out_deg, "s").localCheckpoint(eager=True)
     for _ in range(iterations):
         contribs = (
             g_deg.join(ranks.withColumnRenamed("node_id", "s"), "s")

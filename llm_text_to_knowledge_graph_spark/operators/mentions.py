@@ -318,12 +318,12 @@ class AliasMatcher:
         return out
 
 
-def _get_matcher(bc, token: str, engine: str = "auto") -> AliasMatcher:
+def _get_matcher(bc, token: str) -> AliasMatcher:
     matcher = _MATCHER_CACHE.get(token)
     if matcher is None:
         if len(_MATCHER_CACHE) >= 8:  # bound worker memory across many runs
             _MATCHER_CACHE.clear()
-        matcher = AliasMatcher(bc.value, engine=engine)
+        matcher = AliasMatcher(bc.value)
         _MATCHER_CACHE[token] = matcher
     return matcher
 
@@ -337,14 +337,12 @@ def mention_structs(found: list[tuple]) -> list[dict]:
     ]
 
 
-def detect_mentions(
-    sentences: DataFrame, alias_rows: list, engine: str = "auto"
-) -> DataFrame:
+def detect_mentions(sentences: DataFrame, alias_rows: list) -> DataFrame:
     """sentences -> MENTIONS schema (sentence + array<mention struct>).
 
     ``alias_rows``: list of (alias, db, id, entry_name, prior) broadcast to
-    every executor. ``engine`` selects the matcher implementation (see
-    ``AliasMatcher``); ``auto`` switches to Aho-Corasick for big dicts.
+    every executor; ``AliasMatcher``'s ``auto`` engine picks the matcher
+    implementation by dictionary size.
     """
     spark = sentences.sparkSession
     bc = spark.sparkContext.broadcast(list(alias_rows))
@@ -352,7 +350,7 @@ def detect_mentions(
 
     @F.pandas_udf(ArrayType(MENTION))
     def _annotate(sent: pd.Series) -> pd.Series:
-        matcher = _get_matcher(bc, token, engine)
+        matcher = _get_matcher(bc, token)
         return pd.Series([mention_structs(matcher.find(s)) for s in sent])
 
     return sentences.withColumn("mentions", _annotate(F.col("sentence")))

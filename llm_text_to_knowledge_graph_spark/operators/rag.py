@@ -7,9 +7,11 @@ an LLM prompt. This operator is that retrieval step as ONE Spark plan
 over the KG store + document corpus, composing two operators this engine
 already pins independently:
 
-  1. :func:`~..operators.graph_query.personalized_pagerank` from the
-     query's seed entities — graph relevance ("which entities matter
-     from THESE seeds outward");
+  1. personalized PageRank from the query's seed entities
+     (:func:`~..operators.graph_query.personalized_pagerank_scaled`, the
+     integer form of :func:`~..operators.graph_query.pagerank` with
+     ``seeds``) — graph relevance ("which entities matter from THESE
+     seeds outward");
   2. keep the top-``m`` entities by rank (query-sized → broadcast);
   3. pull the documents mentioning them and fold each document's
      mentioned-entity PPR mass — ONE partial-agg groupBy over the

@@ -71,7 +71,6 @@ def run_pipeline(
     workdir: str | None = None,
     input_token: str = "adhoc",
     run_id: str = "run-0",
-    lang: str | None = "en",
     persist: bool = False,
     extractor: str = "sentence",
 ) -> dict:
@@ -141,9 +140,7 @@ def run_pipeline(
         # explicit repartition before the heavy crossing (north_rule:
         # explicit partitioning)
         pages = pages.repartition(spark.sparkContext.defaultParallelism * 2, "url")
-    base = extract_fused(
-        pages, alias_rows, engine=extractor, shape="paragraphs", lang=lang
-    )
+    base = extract_fused(pages, alias_rows, engine=extractor, shape="paragraphs")
     if persist or store is not None:
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
     sents = base.select(*_KEYS, F.explode("sentences").alias("s"))
@@ -188,15 +185,3 @@ def run_pipeline(
             store.write_metrics(metrics)
     return out
 
-
-def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adapt the driver's ``documents`` table to the pages input schema —
-    lets the same pipeline run over /root/testdata corpora."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )

@@ -6,8 +6,7 @@ the natural incremental shape is: new page files land in the corpus
 directory -> a file-source stream picks them up -> the SAME extraction
 logic (fused operator) runs per micro-batch -> triples append to the
 triples table; Spark's streaming checkpoint gives exactly-once file
-processing, and the warc_ts watermark bounds the stateful aggregation
-example (per-hour page counts with late-data tolerance).
+processing.
 
 foreachBatch reuses the batch operators verbatim — one code path for both
 modes (SURVEY.md §7 M5).
@@ -15,6 +14,7 @@ modes (SURVEY.md §7 M5).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,27 +84,6 @@ def incremental_triples(
     return writer.start()
 
 
-def hourly_page_counts(
-    spark: SparkSession,
-    pages_dir: str,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked windowed aggregation: pages per (lang, 1h warc_ts window)
-    tolerating late arrivals up to the watermark."""
-    return (
-        stream_pages(spark, pages_dir)
-        .withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"), F.col("lang"))
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "n_pages",
-        )
-    )
-
-
 def incremental_graph(
     spark: SparkSession,
     pages_dir: str,
@@ -129,9 +108,16 @@ def incremental_graph(
     from ..operators.graph import build_edges, build_nodes
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t = extract_triples_fused(batch_df, alias_rows)
-        _write_batch_idempotent(build_edges(t), f"{out_root}/edges", batch_id)
-        _write_batch_idempotent(build_nodes(t), f"{out_root}/nodes", batch_id)
+        # persisted: the edge write and the node build (which scans the
+        # triples twice, subj and obj) would each re-run the extraction
+        t = extract_triples_fused(batch_df, alias_rows).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        try:
+            _write_batch_idempotent(build_edges(t), f"{out_root}/edges", batch_id)
+            _write_batch_idempotent(build_nodes(t), f"{out_root}/nodes", batch_id)
+        finally:
+            t.unpersist()
 
     writer = (
         stream_pages(spark, pages_dir)

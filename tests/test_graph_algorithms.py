@@ -98,3 +98,23 @@ def test_pagerank_deterministic_across_partitionings(spark):
     a = sorted((r.node_id, round(r.rank, 12)) for r in pagerank(e.repartition(1)).collect())
     b = sorted((r.node_id, round(r.rank, 12)) for r in pagerank(e.repartition(7)).collect())
     assert a == b
+
+
+def test_pagerank_seeded_with_every_node_equals_global(spark):
+    # seeding every node makes the teleport vector uniform, so the seeded
+    # mode must reproduce the global ranks; directed, nodes 4, 12 and 21
+    # dangle, which exercises the re-teleport of dangling mass
+    e = _edges(spark, PAIRS)
+    every = sorted({x for p in PAIRS for x in p})
+    for undirected in (True, False):
+        glob = {
+            r.node_id: r.rank
+            for r in pagerank(e, 8, undirected=undirected).collect()
+        }
+        seeded = {
+            r.node_id: r.rank
+            for r in pagerank(e, 8, undirected=undirected, seeds=every).collect()
+        }
+        assert set(seeded) == set(glob) == set(every)
+        for node, rank in glob.items():
+            assert abs(seeded[node] - rank) < 1e-12, (undirected, node)

@@ -128,9 +128,7 @@ def test_graph_query_layer_is_id_scheme_agnostic(spark):
 
 
 def test_personalized_pagerank_concentrates_on_seeds(spark):
-    from llm_text_to_knowledge_graph_spark.operators.graph_query import (
-        personalized_pagerank,
-    )
+    from llm_text_to_knowledge_graph_spark.operators.graph_query import pagerank
 
     # two communities bridged by one edge; seed in community A
     a = [(i, j) for i in range(5) for j in range(i + 1, 5)]
@@ -139,7 +137,7 @@ def test_personalized_pagerank_concentrates_on_seeds(spark):
     df = spark.createDataFrame(edges, "s long, t long")
     pr = {
         r["node_id"]: r["rank"]
-        for r in personalized_pagerank(df, seeds=[0], iterations=8).collect()
+        for r in pagerank(df, seeds=[0], iterations=8).collect()
     }
     # every community-A node outranks every community-B node
     assert min(pr[i] for i in range(5)) > max(pr[i] for i in range(10, 15))
@@ -150,9 +148,7 @@ def test_personalized_pagerank_concentrates_on_seeds(spark):
 def test_personalized_pagerank_matches_numpy_power_iteration(spark):
     import numpy as np
 
-    from llm_text_to_knowledge_graph_spark.operators.graph_query import (
-        personalized_pagerank,
-    )
+    from llm_text_to_knowledge_graph_spark.operators.graph_query import pagerank
 
     import random as _r
 
@@ -176,7 +172,7 @@ def test_personalized_pagerank_matches_numpy_power_iteration(spark):
         r = 0.15 * p0 + 0.85 * (P.T @ r)
     got = {
         row["node_id"]: row["rank"]
-        for row in personalized_pagerank(
+        for row in pagerank(
             df, seeds=[nodes[0], nodes[3]], iterations=6
         ).collect()
     }
@@ -191,7 +187,7 @@ def test_personalized_pagerank_scaled_directed_matches_double(spark):
     test for the scaled path silently dropping that step — on this
     graph the un-reteleported ranks diverge by O(0.1)."""
     from llm_text_to_knowledge_graph_spark.operators.graph_query import (
-        personalized_pagerank,
+        pagerank,
         personalized_pagerank_scaled,
     )
 
@@ -202,7 +198,7 @@ def test_personalized_pagerank_scaled_directed_matches_double(spark):
     kwargs = dict(seeds=[1, 2], iterations=6, undirected=False)
     want = {
         r["node_id"]: r["rank"]
-        for r in personalized_pagerank(df, **kwargs).collect()
+        for r in pagerank(df, **kwargs).collect()
     }
     got = {
         r["node_id"]: r["rank_s"] / 1e12

@@ -86,3 +86,30 @@ def test_replayed_batch_does_not_duplicate(spark, tmp_path):
     # replay of batch 0 after batch 1 landed still only rewrites batch 0
     _write_batch_idempotent(df.limit(60), out, batch_id=0)
     assert spark.read.parquet(out).count() == 160
+
+
+def test_incremental_graph_extracts_each_page_once(spark, tmp_path, monkeypatch):
+    """The micro-batch's triples feed the edge write and the node build
+    (which reads them twice, subj and obj); without persisting them each
+    read re-runs the extraction over the batch's pages."""
+    from llm_text_to_knowledge_graph_spark.streaming import incremental
+
+    pages_dir = str(tmp_path / "pages")
+    pages_df(spark, 30, seed=5).write.parquet(pages_dir)
+    reads = spark.sparkContext.accumulator(0)
+
+    def count_pages(batches):
+        for pdf in batches:
+            reads.add(len(pdf))
+            yield pdf
+
+    def counting_extract(batch_df, alias_rows):
+        counted = batch_df.mapInPandas(count_pages, schema=batch_df.schema)
+        return extract_triples_fused(counted, alias_rows)
+
+    monkeypatch.setattr(incremental, "extract_triples_fused", counting_extract)
+    incremental_graph(
+        spark, pages_dir, str(tmp_path / "graph"), str(tmp_path / "ckpt"),
+        build_alias_rows(5),
+    ).awaitTermination(120)
+    assert reads.value == 30

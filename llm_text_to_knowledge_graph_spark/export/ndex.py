@@ -119,8 +119,9 @@ def upload_partition(
 ) -> Iterator[tuple]:
     """Executor-side body for ``df.rdd.mapPartitions``/``foreachPartition``.
 
-    ``rows`` carry a ``cx2_json`` string column (one serialized network per
-    row, as written by ``export/cx2.py``).  One client (one auth header
+    ``rows`` carry a ``name`` column and a ``cx2_json`` string column: one
+    network per row, which the caller serialises by ``json.dumps`` of
+    ``export.cx2.to_cx2(...)``'s aspect list.  One client (one auth header
     construction) per partition; yields (network_name, uuid) so the upload
     manifest is itself a DataFrame and failures surface as task errors, not
     silent skips.

@@ -329,14 +329,18 @@ def strip_host_boilerplate(
     host-sized aggregate joined on host (AQE picks broadcast while it
     fits; at web scale host cardinality ~10^8 makes this a normal
     shuffle join over two already-host-keyed sides); the boilerplate
-    set (tiny — template lines per host) LEFT-ANTI joins the exploded lines on
-    (host, line); one groupBy(doc) reassembles order via array_sort (no
-    window, no global sort). Hot template lines ARE the skew and are
-    absorbed by the partial aggs. Deterministic; the SQL oracle replays
-    the thresholds exactly."""
+    set (tiny — template lines per host) LEFT-joins the exploded lines on
+    (host, line) to mark them; one groupBy(doc) reassembles the unmarked
+    lines' order via array_sort (no window, no global sort). Hot template
+    lines ARE the skew and are absorbed by the partial aggs.
+    Deterministic; the SQL oracle replays the thresholds exactly.
+
+    Every document with text comes back, keyed by its raw ``id_col``
+    value: one whose every line is boilerplate as ``text = ''`` with
+    ``n_lines_kept = 0``."""
     lines = docs.select(
         F.col(host_col).alias("host"),
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(id_col).alias("doc_id"),
         F.size(F.split(F.col(text_col), sep, -1)).cast("long").alias(
             "n_lines"
         ),
@@ -359,15 +363,17 @@ def strip_host_boilerplate(
             (F.col("_df") >= min_docs)
             & (F.col("_df") > F.lit(max_doc_frac) * F.col("_nd"))
         )
-        .select("host", "line")
+        .select("host", "line", F.lit(True).alias("_boiler"))
     )
-    kept = lines.join(boiler, ["host", "line"], "left_anti")
+    marked = lines.join(boiler, ["host", "line"], "left")
     return (
-        kept.groupBy("host", "doc_id")
+        marked.groupBy("host", "doc_id")
         .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "line"))).alias(
-                "ls"
-            ),
+            # collect_list skips the NULLs of boilerplate lines, so a doc
+            # whose every line is boilerplate keeps its row with ls = []
+            F.array_sort(F.collect_list(
+                F.when(F.col("_boiler").isNull(), F.struct("pos", "line"))
+            )).alias("ls"),
             F.max("n_lines").alias("n_lines"),
         )
         .select(

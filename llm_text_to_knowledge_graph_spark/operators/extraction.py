@@ -32,8 +32,10 @@ Pattern families
   known-to-be-regulated  "genes known to be X regulated, A or B"
   group association   "A and B are associated"
 
-All functions are pure (no Spark imports in the hot path) so the engine runs
-inside Arrow-batched pandas UDFs on any partitioning. Statements are deduped
+All functions are pure (no Spark imports in the hot path): the extraction
+kernel (``operators.fused``) runs the block step inside its one crossing,
+and the module's one Spark operator, ``extract_statements_extended``, runs
+it as a ``statements._statement_stage``. Statements are deduped
 per block by semantic signature (subject entity, relation, object entity,
 object-localization wrapper, pmods) so surface-variant patterns that express
 the same fact emit once.
@@ -42,13 +44,10 @@ the same fact emit once.
 from __future__ import annotations
 
 import re
-import uuid
 from functools import lru_cache
 
-import pandas as pd
-
 from ..functions.bel import NS_FUNC, make_term
-from .statements import extract_from_sentence
+from .statements import _statement_stage, extract_from_sentence
 
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
 # tokens whose trailing period is an abbreviation, not a sentence end
@@ -3494,64 +3493,20 @@ def _active_flags(trail: list[str], after_right: str):
 
 
 # ---------------------------------------------------------------------------
-# Spark operator: fused mention-detection + block extraction (one Arrow
-# crossing per partition, zero shuffle — same plan shape as operators/fused.py)
+# Spark operator: the block step as one STATEMENTS stage
 # ---------------------------------------------------------------------------
 
 
-def extract_statements_extended(
-    paragraphs, alias_rows: list, text_col: str = "text"
-):
+def extract_statements_extended(paragraphs, alias_rows: list):
     """PARAGRAPHS(url, warc_ts, para_idx, text) -> STATEMENTS with the
-    extended block-level pattern engine.
-
-    The alias dictionary is broadcast; the matcher builds once per Python
-    worker (same executor-local cache as detect_mentions). Each paragraph
-    goes through the extraction kernel's block step
-    (``fused.block_statements``: normalise, ground, extract) inside a single
-    pandas UDF, so the stage is a map-only scan — no shuffle,
-    broadcast-sized driver footprint.
-    """
+    extraction kernel's block step (``fused.block_statements``: normalise,
+    ground with ``alias_rows``, extract) as one ``_statement_stage``. Block
+    statements carry ``sent_idx = 0`` (evidence spans the paragraph)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType
 
-    from ..schemas import STATEMENT
     from .fused import block_statements
-    from .mentions import _get_matcher
 
-    spark = paragraphs.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
-
-    @F.pandas_udf(ArrayType(STATEMENT))
-    def _extract(txt: pd.Series) -> pd.Series:
-        matcher = _get_matcher(bc, token)
-        return pd.Series(
-            [
-                [
-                    {"bel_statement": stmt, "evidence": ev}
-                    for stmt, ev in block_statements(t, matcher)
-                ]
-                for t in txt
-            ]
-        )
-
-    return (
-        paragraphs.withColumn("results", _extract(F.col(text_col)))
-        .filter(F.size("results") > 0)
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            F.lit(0).alias("sent_idx"),
-            F.explode("results").alias("r"),
-        )
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
+    return _statement_stage(
+        paragraphs, block_statements, ["text"], alias_rows,
+        sent_idx=F.lit(0).alias("sent_idx"),
     )

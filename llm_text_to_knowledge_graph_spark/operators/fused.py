@@ -11,7 +11,6 @@ modular one-UDF-per-stage operators.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -23,7 +22,7 @@ from ..functions.bel import split_statement
 from ..schemas import MENTIONS, PARAGRAPHS, TRIPLES
 from ..sources.html_extract import extract_paragraphs_text, split_sentences
 from .extraction import extract_from_block, normalize_block_text
-from .mentions import _get_matcher, mention_structs
+from .mentions import WorkerMatcher, mention_structs
 from .statements import extract_parts_from_sentence
 
 # a paragraph row nests the per-sentence fields of MENTIONS (sent_idx,
@@ -92,11 +91,10 @@ def extract_fused(
     schema = _SHAPES[shape]
     flat = shape == "triples"
     cols = schema.fieldNames()
-    bc = pages.sparkSession.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
+    get_matcher = WorkerMatcher(pages.sparkSession, alias_rows)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _get_matcher(bc, token)
+        matcher = get_matcher()
         for pdf in batches:
             rows = []
             for url, warc_ts, html, text in zip(

@@ -23,10 +23,7 @@ from pyspark.sql.types import ArrayType
 
 from ..schemas import MENTION
 
-# per-executor-process matcher cache, keyed by a per-call uuid token (lazy
-# init once per Python worker — the reference's lru_cache analog, SURVEY.md
-# §4). NOT keyed by id(broadcast): memory addresses are reused after GC,
-# which silently served a stale dictionary to later runs in one session.
+# per-Python-worker matcher cache of ``WorkerMatcher``, keyed by its token
 _MATCHER_CACHE: dict[str, "AliasMatcher"] = {}
 
 
@@ -318,14 +315,26 @@ class AliasMatcher:
         return out
 
 
-def _get_matcher(bc, token: str) -> AliasMatcher:
-    matcher = _MATCHER_CACHE.get(token)
-    if matcher is None:
-        if len(_MATCHER_CACHE) >= 8:  # bound worker memory across many runs
-            _MATCHER_CACHE.clear()
-        matcher = AliasMatcher(bc.value)
-        _MATCHER_CACHE[token] = matcher
-    return matcher
+class WorkerMatcher:
+    """``alias_rows`` broadcast once; calling the instance in a Python worker
+    returns that worker's ``AliasMatcher``, built on first use (the
+    reference's lru_cache analog, SURVEY.md §4). Cached per instance token,
+    NOT per id(broadcast): memory addresses are reused after GC, which once
+    served a stale dictionary to a later run in one session. A module-level
+    class, so workers share ``_MATCHER_CACHE`` instead of unpickling a copy
+    with each task."""
+
+    def __init__(self, spark, alias_rows):
+        self._bc = spark.sparkContext.broadcast(list(alias_rows))
+        self._token = uuid.uuid4().hex
+
+    def __call__(self) -> AliasMatcher:
+        matcher = _MATCHER_CACHE.get(self._token)
+        if matcher is None:
+            if len(_MATCHER_CACHE) >= 8:  # bound worker memory across many runs
+                _MATCHER_CACHE.clear()
+            matcher = _MATCHER_CACHE[self._token] = AliasMatcher(self._bc.value)
+        return matcher
 
 
 def mention_structs(found: list[tuple]) -> list[dict]:
@@ -340,17 +349,15 @@ def mention_structs(found: list[tuple]) -> list[dict]:
 def detect_mentions(sentences: DataFrame, alias_rows: list) -> DataFrame:
     """sentences -> MENTIONS schema (sentence + array<mention struct>).
 
-    ``alias_rows``: list of (alias, db, id, entry_name, prior) broadcast to
-    every executor; ``AliasMatcher``'s ``auto`` engine picks the matcher
+    ``alias_rows``: list of (alias, db, id, entry_name, prior), shipped by
+    ``WorkerMatcher``; ``AliasMatcher``'s ``auto`` engine picks the matcher
     implementation by dictionary size.
     """
-    spark = sentences.sparkSession
-    bc = spark.sparkContext.broadcast(list(alias_rows))
-    token = uuid.uuid4().hex
+    get_matcher = WorkerMatcher(sentences.sparkSession, alias_rows)
 
     @F.pandas_udf(ArrayType(MENTION))
     def _annotate(sent: pd.Series) -> pd.Series:
-        matcher = _get_matcher(bc, token)
+        matcher = get_matcher()
         return pd.Series([mention_structs(matcher.find(s)) for s in sent])
 
     return sentences.withColumn("mentions", _annotate(F.col("sentence")))

@@ -14,14 +14,17 @@ prompt_file_v7.txt. The prompt's hard constraints become code:
 
 The pattern matcher reads the inter-mention text of each adjacent grounded
 mention pair; an exact (longest-first) hit in the relation-phrase lexicon or
-a pmod verb emits one BEL statement with the sentence as evidence. Runs as
-an Arrow-batched pandas UDF — no per-row Python, no shuffle.
+a pmod verb emits one BEL statement with the sentence as evidence.
+
+Each DataFrame operator over a pure per-row extractor (here and
+``extraction.extract_statements_extended``) is one ``_statement_stage``:
+one Arrow-batched pandas UDF exploded into STATEMENTS rows, no shuffle.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
@@ -33,6 +36,7 @@ from ..functions.bel import (
     make_term,
 )
 from ..schemas import STATEMENT
+from .mentions import WorkerMatcher
 
 import re
 
@@ -217,94 +221,74 @@ def extract_from_sentence(
     ]
 
 
+def cooccurrence_from_sentence(sentence: str, mentions: list) -> list[tuple[str, str]]:
+    """Pure per-sentence association extraction -> [(bel_statement,
+    evidence)]: one ``association`` statement per adjacent (by ``begin``)
+    pair of mentions of different entities, dedup'd per sentence."""
+    if mentions is None or len(mentions) < 2:
+        return []
+    ms = sorted(mentions, key=lambda m: m["begin"])
+    out: list[tuple[str, str]] = []
+    seen: set[str] = set()
+    for left, right in zip(ms, ms[1:]):
+        if left["entry_name"] == right["entry_name"]:
+            continue
+        subj = make_term(left["db"], left["entry_name"])
+        obj = make_term(right["db"], right["entry_name"])
+        stmt = f"{subj} association {obj}"
+        if stmt not in seen:
+            seen.add(stmt)
+            out.append((stmt, sentence))
+    return out
+
+
+def _statement_stage(
+    frame: DataFrame, row_fn, cols: list[str], alias_rows: list | None = None,
+    sent_idx: Column | str = "sent_idx",
+) -> DataFrame:
+    """``frame`` -> STATEMENTS in one Arrow crossing: ``row_fn`` maps each
+    row's ``cols`` values (plus the worker's ``AliasMatcher`` when
+    ``alias_rows`` is given) to [(bel_statement, evidence)]."""
+    matcher = None if alias_rows is None else WorkerMatcher(frame.sparkSession, alias_rows)
+
+    @F.pandas_udf(ArrayType(STATEMENT))
+    def _statements(*series: pd.Series) -> pd.Series:
+        extra = () if matcher is None else (matcher(),)
+        return pd.Series([
+            [{"bel_statement": s, "evidence": e} for s, e in row_fn(*row, *extra)]
+            for row in zip(*series)
+        ])
+
+    return frame.select(
+        "url", "warc_ts", "para_idx", sent_idx,
+        # F9 empty-result filter (grounding_genes.py:65-68): explode emits
+        # no row for an empty (or NULL) result array
+        F.explode(_statements(*cols)).alias("r"),
+    ).select("url", "warc_ts", "para_idx", "sent_idx", "r.bel_statement", "r.evidence")
+
+
 def extract_cooccurrence(mentions_df: DataFrame) -> DataFrame:
-    """Baseline association extraction: one ``association`` statement per
-    adjacent grounded-mention pair in a sentence (dedup'd per sentence).
+    """MENTIONS -> STATEMENTS with ``cooccurrence_from_sentence``: the
+    baseline association extraction.
 
     This is the weakest-evidence fallback of the relation vocabulary — the
     reference prompt calls ``association`` the "least informative
     relationship" (prompt_file_v7.txt relation table). Kept separate from
     the pattern extractor so precision-sensitive runs can exclude it.
     """
-
-    @F.pandas_udf(ArrayType(STATEMENT))
-    def _cooc(sent: pd.Series, ments: pd.Series) -> pd.Series:
-        out = []
-        for txt, mlist in zip(sent, ments):
-            stmts = []
-            seen = set()
-            if mlist is not None and len(mlist) >= 2:
-                ms = sorted(mlist, key=lambda m: m["begin"])
-                for left, right in zip(ms, ms[1:]):
-                    if left["entry_name"] == right["entry_name"]:
-                        continue
-                    subj = make_term(left["db"], left["entry_name"])
-                    obj = make_term(right["db"], right["entry_name"])
-                    stmt = f"{subj} association {obj}"
-                    if stmt not in seen:
-                        seen.add(stmt)
-                        stmts.append({"bel_statement": stmt, "evidence": txt})
-            out.append(stmts)
-        return pd.Series(out)
-
-    return (
-        mentions_df.withColumn("results", _cooc(F.col("sentence"), F.col("mentions")))
-        .filter(F.size("results") > 0)
-        .select("url", "warc_ts", "para_idx", "sent_idx", F.explode("results").alias("r"))
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
-    )
+    return _statement_stage(mentions_df, cooccurrence_from_sentence, ["sentence", "mentions"])
 
 
 def extract_statements(
     mentions_df: DataFrame,
     relation_phrases: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """MENTIONS -> STATEMENTS (url, warc_ts, para_idx, sent_idx,
-    bel_statement, evidence).
+    """MENTIONS -> STATEMENTS with ``extract_from_sentence``.
 
     ``relation_phrases``: optional custom (phrase, relation) lexicon — see
     ``extract_from_sentence``. The lexicon rides the serialized UDF closure
     (relation tables are O(100) entries; broadcast would buy nothing)."""
     lex = list(relation_phrases) if relation_phrases is not None else None
-
-    @F.pandas_udf(ArrayType(STATEMENT))
-    def _extract(sent: pd.Series, ments: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                [
-                    {"bel_statement": s, "evidence": e}
-                    for s, e in extract_from_sentence(txt, mlist, lex)
-                ]
-                for txt, mlist in zip(sent, ments)
-            ]
-        )
-
-    return (
-        mentions_df.withColumn(
-            "results", _extract(F.col("sentence"), F.col("mentions"))
-        )
-        # F9 empty-result filter (grounding_genes.py:65-68)
-        .filter(F.size("results") > 0)
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.explode("results").alias("r"),
-        )
-        .select(
-            "url",
-            "warc_ts",
-            "para_idx",
-            "sent_idx",
-            F.col("r.bel_statement").alias("bel_statement"),
-            F.col("r.evidence").alias("evidence"),
-        )
+    return _statement_stage(
+        mentions_df, lambda s, m: extract_from_sentence(s, m, lex), ["sentence", "mentions"]
     )

@@ -22,6 +22,8 @@ string statistics once a file's min+max reach 4 KB; INT96 timestamps, the
 Spark default that ``session.get_spark`` overrides, carry none) or the
 files are not readable through ``pyarrow.fs``, that table's lineage falls
 back to a ``groupBy(input_file_name())`` aggregate with identical output.
+A resumed stage runs no Spark job: the manifest records the committed
+schema, and ``read`` hands it to the reader instead of inferring it.
 A run's per-stage metrics rows go to ``<root>/metrics_log/`` as one parquet
 file written on the driver, so the metrics sink adds no Spark job either.
 
@@ -46,6 +48,7 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class TableStore:
@@ -76,20 +79,27 @@ class TableStore:
     def read(
         self, spark: SparkSession, name: str, snapshot_id: str | None = None
     ) -> DataFrame:
-        """Read the current snapshot, or time-travel to a retained one."""
+        """Read the current snapshot, or time-travel to a retained one.
+
+        An entry that records its committed ``schema`` is read with it, as
+        ``commit`` reads back, so a resumed stage runs no schema-inference
+        job; older entries fall back to inference."""
         m = self.manifest(name)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot for table {name!r}")
-        if snapshot_id is None:
-            return spark.read.parquet(os.path.join(self._tdir(name), m["data_dir"]))
-        for snap in m.get("snapshots", []):
-            if snap["snapshot_id"] == snapshot_id:
-                return spark.read.parquet(
-                    os.path.join(self._tdir(name), snap["data_dir"])
+        if snapshot_id is not None:
+            m = next(
+                (s for s in m.get("snapshots", []) if s["snapshot_id"] == snapshot_id),
+                None,
+            )
+            if m is None:
+                raise FileNotFoundError(
+                    f"snapshot {snapshot_id!r} of table {name!r} not retained"
                 )
-        raise FileNotFoundError(
-            f"snapshot {snapshot_id!r} of table {name!r} not retained"
-        )
+        reader = spark.read
+        if "schema" in m:
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(os.path.join(self._tdir(name), m["data_dir"]))
 
     def snapshots(self, name: str) -> list[dict]:
         m = self.manifest(name)
@@ -136,6 +146,7 @@ class TableStore:
             "fingerprint": fingerprint,
             "run_id": run_id,
             "rows": rows,
+            "schema": df.schema.jsonValue(),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         prev = self.manifest(name)
@@ -146,6 +157,7 @@ class TableStore:
             "run_id": run_id,
             "data_dir": data_dir,
             "rows": rows,
+            "schema": snapshot["schema"],
             "wall_ms": wall_ms,
             "committed_at": snapshot["committed_at"],
             "partitions": lineage,

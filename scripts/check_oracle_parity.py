@@ -40,9 +40,8 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    ran = {name: fn for name, fn in qs.items() if not only or name in only}
+    for name, fn in ran.items():
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf).toPandas()
@@ -88,7 +87,7 @@ def main() -> int:
         else:
             print(f"OK    {name}: {len(sdf)} rows  [{time.monotonic()-t0:.1f}s]")
 
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(ran)} queries")
     spark.stop()
     return 1 if failures else 0
 

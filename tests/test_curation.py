@@ -320,3 +320,34 @@ def test_strip_host_boilerplate(spark):
     assert out[3] == ("body a3", 1, 2)
     assert out[10] == ("NAV\nbody b0", 2, 0)  # per-HOST statistics
     assert out[11] == ("body b1", 1, 0)
+
+
+def test_strip_host_boilerplate_keeps_fully_stripped_docs(spark):
+    """A doc whose every line is boilerplate comes back empty, with all of
+    its lines counted as dropped, instead of vanishing."""
+    from llm_text_to_knowledge_graph_spark.operators.curation import (
+        strip_host_boilerplate,
+    )
+
+    rows = [("a.org", i, f"NAV\nbody a{i}\nFOOT") for i in range(3)]
+    rows.append(("a.org", 3, "NAV\nFOOT"))
+    docs = spark.createDataFrame(rows, "host string, doc_id long, text string")
+    out = {
+        r["doc_id"]: (r["text"], r["n_lines_kept"], r["n_lines_dropped"])
+        for r in strip_host_boilerplate(docs).collect()
+    }
+    assert out == {0: ("body a0", 1, 2), 1: ("body a1", 1, 2),
+                   2: ("body a2", 1, 2), 3: ("", 0, 2)}
+
+
+def test_strip_host_boilerplate_keeps_non_numeric_ids_apart(spark):
+    """Documents are grouped by their raw id: string ids stay one row each
+    (a cast to long turned them all into one NULL group)."""
+    from llm_text_to_knowledge_graph_spark.operators.curation import (
+        strip_host_boilerplate,
+    )
+
+    rows = [("a.org", f"doc-{c}", f"NAV\nbody {c}") for c in "xyz"]
+    docs = spark.createDataFrame(rows, "host string, doc_id string, text string")
+    out = sorted(tuple(r) for r in strip_host_boilerplate(docs).collect())
+    assert out == [("a.org", f"doc-{c}", f"body {c}", 1, 1) for c in "xyz"]

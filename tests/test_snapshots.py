@@ -1,8 +1,10 @@
-"""TableStore snapshot history (time travel to retained snapshots) and
-commit lineage (manifest rows from parquet footers, one job per commit)."""
+"""TableStore snapshot history (time travel to retained snapshots), commit
+lineage (manifest rows from parquet footers, one job per commit) and
+resume (no job)."""
 
 import datetime as dt
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -220,7 +222,8 @@ _VIEW_STAGES = {"sentences", "mentions", "flat_mentions", "statements",
 @pytest.fixture(scope="module", params=sorted(EXTRACT_STAGES))
 def checkpointed_run(spark, tmp_path_factory, request):
     """One checkpointed run_pipeline per extractor, with each commit in its
-    own job group and every re-scan fallback recorded."""
+    own job group and every re-scan fallback recorded, plus ``run`` to
+    repeat it with the same input."""
     extractor = request.param
     sc = spark.sparkContext
     commit, rescans = TableStore.commit, []
@@ -242,28 +245,33 @@ def checkpointed_run(spark, tmp_path_factory, request):
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     wd = str(tmp_path_factory.mktemp(f"ckpt-{extractor}"))
+
+    def run(run_id, workdir=wd):
+        return run_pipeline(
+            spark, pages_df(spark, 20, seed=8), build_alias_rows(8),
+            workdir=workdir, input_token=f"lin-{extractor}", run_id=run_id,
+            extractor=extractor,
+        )
+
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(TableStore, "commit", grouped)
         mp.setattr(TableStore, "write_metrics", grouped_metrics)
         mp.setattr(TableStore, "_lineage", _recording_rescan(rescans))
-        out = run_pipeline(
-            spark, pages_df(spark, 20, seed=8), build_alias_rows(8),
-            workdir=wd, input_token=f"lin-{extractor}", run_id="r",
-            extractor=extractor,
-        )
+        out = run("r")
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = {
         m["stage"]: len(sc.statusTracker().getJobIdsForGroup(
             f"commit:{extractor}:{m['stage']}"))
         for m in out["metrics"] + [{"stage": "metrics_log"}]
     }
-    return wd, out["metrics"], jobs, rescans
+    return wd, out, jobs, rescans, run
 
 
 def test_pipeline_manifests_equal_rescan(spark, checkpointed_run):
     """Every stage's manifest rows/partitions equal the re-scan aggregate,
     and every commit took the footer path to get them."""
-    wd, metrics, _jobs, rescans = checkpointed_run
+    wd, out, _jobs, rescans, _run = checkpointed_run
+    metrics = out["metrics"]
     assert not rescans
     store = TableStore(wd)
     for m in metrics:
@@ -277,7 +285,7 @@ def test_pipeline_manifests_equal_rescan(spark, checkpointed_run):
 def test_view_stage_commits_run_one_job(checkpointed_run):
     """A view over the persisted kernel output commits in one Spark job:
     the write (no schema inference, no lineage re-scan)."""
-    _wd, _metrics, jobs, _rescans = checkpointed_run
+    _wd, _out, jobs, _rescans, _run = checkpointed_run
     views = {s: n for s, n in jobs.items() if s in _VIEW_STAGES}
     assert len(views) == 5
     assert views == {s: 1 for s in views}
@@ -286,7 +294,8 @@ def test_view_stage_commits_run_one_job(checkpointed_run):
 def test_metrics_log_written_without_a_job(spark, checkpointed_run):
     """The run's metrics rows land in metrics_log as one driver-written
     parquet file that Spark reads back with the declared types."""
-    wd, metrics, jobs, _rescans = checkpointed_run
+    wd, out, jobs, _rescans, _run = checkpointed_run
+    metrics = out["metrics"]
     assert jobs["metrics_log"] == 0
     log = spark.read.parquet(os.path.join(wd, "metrics_log"))
     assert log.schema.simpleString() == (
@@ -295,6 +304,37 @@ def test_metrics_log_written_without_a_job(spark, checkpointed_run):
     assert sorted(tuple(r) for r in log.collect()) == sorted(
         (m["run_id"], m["stage"], m["rows"], m["wall_ms"]) for m in metrics
     )
+
+
+def _sorted_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_resumed_run_runs_no_job(spark, checkpointed_run, tmp_path):
+    """A fully resumed run reads each stage with the schema its manifest
+    recorded: no Spark job (inferring the schemas ran one per stage), and
+    the same tables and schemas as the fresh run."""
+    wd, fresh, _jobs, _rescans, run = checkpointed_run
+    copy = str(tmp_path / "wd")  # the resumed run's metrics_log file lands here
+    shutil.copytree(wd, copy)
+    sc = spark.sparkContext
+    group = f"resume:{copy}"
+    sc.setJobGroup(group, "resume")
+    try:
+        again = run("resume", workdir=copy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert [m["stage"] for m in again["metrics"]] == [
+        m["stage"] for m in fresh["metrics"]
+    ]
+    assert all(m["resumed"] for m in again["metrics"])
+    tables = [k for k in fresh if k != "metrics"]
+    assert len(tables) == 8
+    for key in tables:
+        assert again[key].schema == fresh[key].schema, key
+        assert _sorted_rows(again[key]) == _sorted_rows(fresh[key]), key
 
 
 def test_metrics_log_appends(spark, tmp_path):

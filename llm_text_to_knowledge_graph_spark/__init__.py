@@ -10,7 +10,7 @@ behavior only) as an idiomatic Spark pipeline:
       -> mentions        (broadcast alias-dictionary NER, top-1 per span)
       -> statements      (deterministic pattern-based BEL triple extraction)
       -> triples         (balanced-paren BEL statement parse)
-      -> nodes / edges   (canonicalized property graph, dense ids)
+      -> nodes / edges   (canonical property graph, content-addressed xxhash64 ids)
       -> CX2 export      (Cytoscape CX2 JSON)
 
 Everything is DataFrame-first; Python only runs inside Arrow-batched pandas

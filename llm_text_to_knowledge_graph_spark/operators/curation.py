@@ -58,7 +58,7 @@ def decontaminate(
         .agg(F.count("*").alias("n_hit_grams"))
     )
     return (
-        docs.select(F.col(id_col).cast("long").alias("doc_id"))
+        docs.select(F.col(id_col).alias("doc_id"))
         .join(hits, "doc_id", "left")
         .select(
             "doc_id",
@@ -110,7 +110,7 @@ def blocklist_filter(
         else F.lit(False)
     )
     return docs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col(id_col),
         F.coalesce(key_blocked, F.lit(False)).alias("key_blocked"),
         n_terms.cast("long").alias("n_blocked_terms"),
         (
@@ -197,7 +197,7 @@ def chunk_docs(
         lambda k: F.concat_ws(" ", F.slice(toks, k * stride + 1, size)),
     )
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(id_col).alias("doc_id"),
         n_tok.cast("long").alias("n_tokens"),
         F.posexplode(windows).alias("chunk_id", "chunk_text"),
     ).select(
@@ -224,6 +224,9 @@ def pack_greedy(
     each shard (a doc that would overflow closes the bin; docs longer than
     the budget get a bin alone). ``seq_id = shard * 1_000_000 + bin`` is
     globally unique and a pure function of the input — rerunnable.
+    ``id_col`` must be integral: it is the ``pmod`` shard key and the
+    ``long`` doc_id of the output, so a non-numeric string id fails the
+    job under ANSI mode (``CAST_INVALID_INPUT``).
 
     Packing is inherently sequential (bin state), so it is the one Python
     step here: ONE applyInPandas per shard, receiving only (doc_id,
@@ -268,8 +271,9 @@ def line_dedup(
     exactly ONE occurrence across the whole corpus — the lexicographically
     first (min doc_id, then min position), a deterministic rule — and all
     other occurrences are removed. Returns the re-assembled cleaned text
-    plus kept/dropped line counts; docs whose every line was dropped
-    disappear (callers union them back as empties if required).
+    plus kept/dropped line counts, keyed by the raw ``id_col`` value; docs
+    whose every line was dropped disappear (callers union them back as
+    empties if required).
 
     Two shuffles total at any scale: groupBy(line) picks the keeper via a
     single min(struct(doc_id, pos)) partial agg (map-side combine — the
@@ -280,7 +284,7 @@ def line_dedup(
     removed) and is absorbed by the partial agg, not a salted join.
     """
     lines = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(id_col).alias("doc_id"),
         F.size(F.split(F.col(text_col), sep, -1)).cast("long").alias("n_lines"),
         F.posexplode(F.split(F.col(text_col), sep, -1)).alias("pos", "line"),
     )

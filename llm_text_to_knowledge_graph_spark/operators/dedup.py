@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -38,16 +38,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             F.min(id_col).alias("canonical_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
-    )
-
-
-def drop_exact_dupes(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep only the canonical row of each exact-duplicate group."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 

@@ -87,18 +87,6 @@ def classify_delta(
     )
 
 
-def delta_counts(old_pages: DataFrame, new_pages: DataFrame, **kw) -> DataFrame:
-    """Aggregate form of classify_delta — the snapshot-health metrics row
-    a crawl-ingest job logs per run (re-extract fraction = (changed+added)
-    / total new)."""
-    return (
-        classify_delta(old_pages, new_pages, **kw)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n_urls"))
-        .orderBy("status")
-    )
-
-
 def snapshot_delta(
     old_pages: DataFrame,
     new_pages: DataFrame,

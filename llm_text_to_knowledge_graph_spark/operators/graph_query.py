@@ -6,8 +6,6 @@ to relational graph queries over the two tables:
 
   * neighbors / k-hop expansion — iterative self-joins (breadth-first
     frontier, dedup per hop; k is small and fixed, so no Pregel needed)
-  * hubs — degree aggregation (the Zipf heads that drive join skew)
-  * edge evidence lookup — the provenance a RAG prompt wants
 
 All pure DataFrame ops; at scale the edges table is bucketed by ``s`` so
 the frontier join co-locates.
@@ -97,46 +95,6 @@ def k_hop_neighborhood(
         visited = visited.unionByName(nxt)
         frontier = nxt.select("node_id")
     return visited
-
-
-def subgraph(edges: DataFrame, node_ids_df: DataFrame) -> DataFrame:
-    """Edges with BOTH endpoints inside the given node set (two semi-joins)."""
-    ids = node_ids_df.select(F.col("node_id"))
-    return (
-        edges.join(ids.withColumnRenamed("node_id", "s"), "s", "left_semi")
-        .join(ids.withColumnRenamed("node_id", "t"), "t", "left_semi")
-    )
-
-
-def top_hubs(edges: DataFrame, nodes: DataFrame, k: int = 20) -> DataFrame:
-    """Highest-degree entities (undirected degree), with names."""
-    deg = (
-        undirected_edges(edges)
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .withColumnRenamed("s", "node_id")
-    )
-    return (
-        deg.join(nodes.select("node_id", "name", "label"), "node_id")
-        .orderBy(F.desc("degree"), F.asc("node_id"))
-        .limit(k)
-    )
-
-
-def evidence_for_pair(
-    edges: DataFrame, nodes: DataFrame, name_a: str, name_b: str
-) -> DataFrame:
-    """All statements + evidence sentences connecting two entities by name
-    (either direction) — the RAG provenance lookup."""
-    ids = nodes.filter(F.col("name").isin([name_a, name_b])).select("node_id", "name")
-    a = ids.filter(F.col("name") == name_a).select(F.col("node_id").alias("id_a"))
-    b = ids.filter(F.col("name") == name_b).select(F.col("node_id").alias("id_b"))
-    pair = a.crossJoin(b)
-    return edges.join(
-        F.broadcast(pair),
-        ((edges.s == pair.id_a) & (edges.t == pair.id_b))
-        | ((edges.s == pair.id_b) & (edges.t == pair.id_a)),
-    ).select("interaction", "bel_expression", "evidence")
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:

@@ -107,30 +107,3 @@ def transe_energy(
     )
 
 
-def margin_ranking_loss(
-    pos_scored: DataFrame,
-    neg_scored: DataFrame,
-    join_cols: list[str],
-    margin: float = 1.0,
-    energy_col: str = "energy",
-) -> DataFrame:
-    """1-row (loss, n_pairs): mean over paired pos/neg of
-    ``max(0, margin + E_pos - E_neg)`` — the TransE objective. Pairs are
-    matched on ``join_cols`` (e.g. the positive triple identity that
-    ``negatives.py`` threads through its corruptions)."""
-    p = pos_scored.select(
-        *join_cols, F.col(energy_col).alias("_ep")
-    )
-    n = neg_scored.select(*join_cols, F.col(energy_col).alias("_en"))
-    paired = p.join(n, join_cols)
-    return paired.agg(
-        F.round(
-            F.avg(
-                F.greatest(
-                    F.lit(0.0), F.lit(float(margin)) + F.col("_ep") - F.col("_en")
-                )
-            ),
-            6,
-        ).alias("loss"),
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-    )

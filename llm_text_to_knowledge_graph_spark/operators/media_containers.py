@@ -32,9 +32,6 @@ import numpy as np
 # MP4 / ISO BMFF
 # ---------------------------------------------------------------------------
 
-_CONTAINER_BOXES = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
-
 @dataclass
 class Mp4Track:
     kind: str  # "video" | "audio" | other handler fourcc
@@ -270,38 +267,6 @@ def parse_mp4(payload: bytes) -> Mp4Info:
     if not brand and not tracks:
         raise ValueError("not an ISO BMFF file (no ftyp/moov)")
     return Mp4Info(brand=brand, duration_ms=duration_ms, tracks=tracks)
-
-
-def mp4_frames_at(
-    payload: bytes, every_ms: int, sync_only: bool = True
-) -> list[tuple[int, bytes]]:
-    """Container-accurate frame sampling: for each ``every_ms`` tick pick
-    the nearest preceding sync sample of the video track and slice its REAL
-    bytes out of the payload. Returns [(ts_ms, frame_bytes)] with
-    consecutive duplicate samples collapsed (a tick between two keyframes
-    resolves to the earlier one)."""
-    info = parse_mp4(payload)
-    track = info.video_track()
-    if track is None or track.n_samples == 0:
-        return []
-    ts = track.ts_ms
-    candidates = np.arange(track.n_samples)
-    if sync_only and not track.sync.all():
-        candidates = candidates[track.sync]
-    out: list[tuple[int, bytes]] = []
-    last_idx = -1
-    end = track.duration_ms or int(ts[-1]) + 1
-    for tick in range(0, end, every_ms):
-        pos = np.searchsorted(ts[candidates], tick, side="right") - 1
-        if pos < 0:
-            continue
-        idx = int(candidates[pos])
-        if idx == last_idx:
-            continue
-        last_idx = idx
-        off, size = int(track.offsets[idx]), int(track.sizes[idx])
-        out.append((int(ts[idx]), payload[off: off + size]))
-    return out
 
 
 # ---------------------------------------------------------------------------

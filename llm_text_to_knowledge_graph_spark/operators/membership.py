@@ -113,20 +113,3 @@ def bloom_probe(
     )
 
 
-def filter_unseen(
-    new_df: DataFrame,
-    seen_df: DataFrame,
-    key_col: str = "url",
-    k: int = 3,
-    nibbles: int = 4,
-) -> DataFrame:
-    """The frontier gate: rows of ``new_df`` whose key is GUARANTEED not
-    in ``seen_df`` (Bloom false positives are dropped too — acceptable
-    for a frontier, where a false positive merely skips a re-fetch; use
-    an exact anti-join afterwards when exactness matters, with this as
-    the cheap pre-filter that shrinks its input)."""
-    bloom = bloom_build(seen_df, key_col=key_col, k=k, nibbles=nibbles)
-    flags = bloom_probe(new_df, bloom, key_col=key_col, k=k, nibbles=nibbles)
-    return new_df.join(
-        flags.filter(~F.col("maybe_seen")).select(key_col), key_col, "left_semi"
-    )

@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media are opaque ``binary`` columns with typed metadata; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas UDFs
-over mapInPandas.
+feature-extract / container probe run as Arrow-batched pandas UDFs over
+mapInPandas.
 
 Codec status (round 3): PNG (8-bit gray/RGB/RGBA, all five scanline
 filters), JPEG — baseline AND progressive SOF2 (DCT, Huffman, gray + YCbCr with
@@ -716,65 +716,6 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(run, schema=FEATURES)
-
-
-def _feature_from_bytes(frame: bytes) -> np.ndarray:
-    """Unit-norm 16-bin byte histogram of a frame's raw payload bytes —
-    deterministic and computed over the REAL sampled frame (the container
-    seek is exact); replace with a codec decode + pixel feature when a
-    decoder library is present (the UDF signature does not change)."""
-    if not frame:
-        return np.zeros(FEATURE_DIM, dtype=np.float32)
-    counts = np.bincount(
-        np.frombuffer(frame, dtype=np.uint8) >> 4, minlength=FEATURE_DIM
-    ).astype(np.float32)
-    norm = float(np.linalg.norm(counts)) or 1.0
-    return counts / norm
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
-    """video rows -> one row per sampled frame timestamp.
-
-    Real mode (``fake=False``): MP4 payloads are frame-sampled via the
-    container's own sample tables (``media_containers.mp4_frames_at`` —
-    nearest preceding sync sample per tick, exact byte ranges), and each
-    frame's feature is computed over its real bytes. Non-MP4 payloads in
-    real mode raise NotImplementedError from the parser, same policy as
-    ``decode_media``. Fake mode keeps the digest stub driven by the
-    ``duration_ms`` metadata column for plumbing tests."""
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_ms", IntegerType(), False),
-            StructField("feature", ArrayType(FloatType()), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .media_containers import mp4_frames_at
-
-        for pdf in batches:
-            ids, stamps, feats = [], [], []
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                if not fake:
-                    for ts, frame in mp4_frames_at(payload or b"", every_ms):
-                        ids.append(mid)
-                        stamps.append(ts)
-                        feats.append(_feature_from_bytes(frame).tolist())
-                    continue
-                for ts in range(0, int(dur or 0), every_ms):
-                    ids.append(mid)
-                    stamps.append(ts)
-                    feats.append(
-                        decode_media(
-                            (payload or b"") + ts.to_bytes(4, "little"), "video", fake=True
-                        ).tolist()
-                    )
-            yield pd.DataFrame({"media_id": ids, "frame_ms": stamps, "feature": feats})
-
-    return media.filter(media.media_type == "video").mapInPandas(run, schema=schema)
 
 
 PROBE = StructType(

@@ -158,16 +158,3 @@ def rrf_fuse(
     return fused
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Top-k by BM25 — ordered take over the scored frame (TakeOrdered,
-    no global sort materialization)."""
-    scored = bm25_scores(docs, query_terms, id_col, text_col, k1, b)
-    return scored.orderBy(F.desc("score"), id_col).limit(k)

@@ -134,32 +134,6 @@ def lsh_topk(
     )
 
 
-def embedding_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    bits: int = 8,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within LSH buckets.
-
-    Pass ``dim`` explicitly in pipelines (see ``lsh_topk``)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, bits)
-    bucketed = embeddings.withColumn("bucket", lsh_bucket_col(F.col(vec_col), planes))
-    a = bucketed.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket")
-    b = bucketed.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine_col(F.col("va"), F.col("vb")), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — coarse-quantizer cells + probe-limited search
 # ---------------------------------------------------------------------------
@@ -1088,11 +1062,11 @@ def semantic_dedup(
     round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate removal via
-    cluster-bounded pairwise cosine. Complements ``embedding_dup_pairs``
-    (LSH buckets): this is the published kmeans-cluster variant whose
-    keep-policy preserves DIVERSITY — within each duplicate neighborhood
-    the survivor is the item FARTHEST from the cluster centroid, which the
-    paper shows beats random/nearest keeps for downstream training.
+    cluster-bounded pairwise cosine. This is the published kmeans-cluster
+    variant whose keep-policy preserves DIVERSITY — within each duplicate
+    neighborhood the survivor is the item FARTHEST from the cluster
+    centroid, which the paper shows beats random/nearest keeps for
+    downstream training.
 
     Semantics (matches the reference implementation's pairwise rule):
     order each cluster's items by centroid-similarity ASC (id ASC ties),

@@ -229,27 +229,6 @@ def cms_estimate(
     )
 
 
-def cms_heavy_hitters(
-    df: DataFrame,
-    key_col: str,
-    threshold: int,
-    depth: int = 4,
-    nibbles: int = 3,
-) -> DataFrame:
-    """Keys whose estimated count >= threshold, with their estimates.
-
-    CMS never underestimates, so this NEVER misses a true heavy hitter
-    (recall 1.0 by construction); collisions can promote a light key,
-    which downstream exact counting of the (small) candidate set removes.
-    That two-phase shape — sketch pass to shrink trillions of keys to a
-    candidate list, exact pass over candidates only — is the 100-TB plan
-    for "top tokens / hottest domains"."""
-    sketch = cms_build(df, key_col, depth, nibbles)
-    cand = df.select(key_col).distinct()
-    est = cms_estimate(cand, sketch, key_col, depth, nibbles)
-    return est.filter(F.col("est_n") >= threshold)
-
-
 # ---------------------------------------------------------------------------
 # histogram quantiles
 # ---------------------------------------------------------------------------

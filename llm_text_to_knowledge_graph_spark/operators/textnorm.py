@@ -204,7 +204,7 @@ def _decode_w1252(raw: bytes) -> str:
     return raw.decode("latin-1").translate(_W1252_TRANS)
 
 
-def _sniff_and_decode(raw: bytes) -> tuple[str, str]:
+def decode_page_bytes(raw: bytes) -> tuple[str, str]:
     """(text, charset) in one pass — every decode result is reused, so
     the dominant valid-UTF-8 page pays exactly ONE strict decode.
 
@@ -271,19 +271,6 @@ def _sniff_and_decode(raw: bytes) -> tuple[str, str]:
     if n_bad <= 4 and n_good_mb >= 2 * n_bad:
         return text, "utf-8"
     return _decode_w1252(raw), "cp1252"
-
-
-def sniff_charset(raw: bytes) -> str:
-    """Charset label only — see :func:`_sniff_and_decode` for the
-    evidence order. Returns one of utf-8-sig / utf-16-le / utf-16-be /
-    utf-8 / cp1252."""
-    return _sniff_and_decode(raw)[1]
-
-
-def decode_page_bytes(raw: bytes) -> tuple[str, str]:
-    """(text, charset): single-pass sniff + decode (no byte is decoded
-    twice on the valid-UTF-8 hot path)."""
-    return _sniff_and_decode(raw)
 
 
 def decode_pages(

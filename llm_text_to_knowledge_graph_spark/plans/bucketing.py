@@ -22,7 +22,7 @@ signature buckets (streaming/dedup.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -47,36 +47,6 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def store_graph_bucketed(
-    nodes: DataFrame,
-    edges: DataFrame,
-    buckets: int = 64,
-    prefix: str = "kg",
-    base_path: str | None = None,
-) -> None:
-    """Write the KG store bucketed for traversal: edges bucketed by source
-    node ``s``, nodes by ``node_id``, SAME bucket count — the hop join
-    (edges.s = nodes.node_id) then runs with zero Exchange on both sides,
-    and chained hops only shuffle to re-key on the next hop's source."""
-    write_bucketed(
-        nodes, f"{prefix}_nodes", "node_id", buckets,
-        path=f"{base_path}/{prefix}_nodes" if base_path else None,
-    )
-    write_bucketed(
-        edges, f"{prefix}_edges", "s", buckets,
-        path=f"{base_path}/{prefix}_edges" if base_path else None,
-    )
-
-
-def hop_join(spark: SparkSession, prefix: str = "kg") -> DataFrame:
-    """One traversal hop over the bucketed store: each edge enriched with
-    its source node's attributes. Exchange-free when the store was written
-    by store_graph_bucketed (equal bucket counts on the join key)."""
-    edges = spark.table(f"{prefix}_edges")
-    nodes = spark.table(f"{prefix}_nodes")
-    return edges.join(nodes, edges["s"] == nodes["node_id"]).drop("node_id")
 
 
 def exchange_count(df: DataFrame) -> int:

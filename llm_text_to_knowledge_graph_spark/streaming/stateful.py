@@ -6,7 +6,7 @@ arbitrary state API covers. Implemented with applyInPandasWithState keyed
 by md5(text): state = first-seen marker; only a key's first row is emitted,
 ever. State survives restarts via the streaming checkpoint.
 
-(The batch analog is operators/dedup.py::drop_exact_dupes; this is the
+(The batch analog is operators/dedup.py::dedup_exact; this is the
 incremental form.)
 """
 

@@ -5,8 +5,6 @@ from pyspark.sql import functions as F
 
 from llm_text_to_knowledge_graph_spark.plans.bucketing import (
     exchange_count,
-    hop_join,
-    store_graph_bucketed,
     write_bucketed,
 )
 
@@ -35,9 +33,12 @@ def _toy_graph(spark):
 def test_bucketed_hop_join_is_exchange_free(no_broadcast, tmp_path):
     spark = no_broadcast
     nodes, edges = _toy_graph(spark)
-    store_graph_bucketed(nodes, edges, buckets=8, prefix="tb_kg", base_path=str(tmp_path))
+    # nodes bucketed by node_id and edges by s, same bucket count
+    write_bucketed(nodes, "tb_kg_nodes", "node_id", 8, path=str(tmp_path / "tb_kg_nodes"))
+    write_bucketed(edges, "tb_kg_edges", "s", 8, path=str(tmp_path / "tb_kg_edges"))
 
-    hop = hop_join(spark, prefix="tb_kg")
+    be, bn = spark.table("tb_kg_edges"), spark.table("tb_kg_nodes")
+    hop = be.join(bn, be["s"] == bn["node_id"]).drop("node_id")
     assert exchange_count(hop) == 0, hop._jdf.queryExecution().sparkPlan().toString()
 
     # control: the same join over plain (non-bucketed) parquet shuffles

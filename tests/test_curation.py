@@ -176,6 +176,37 @@ def test_line_dedup_within_doc_repeats(spark):
     assert got["n_lines_kept"] == 2 and got["n_lines_dropped"] == 2
 
 
+def test_line_dedup_keeps_non_numeric_ids(spark):
+    """String ids are grouped raw (a cast to long fails under ANSI mode)."""
+    docs = spark.createDataFrame(
+        [("d-a", "keep me\nshared line"), ("d-b", "shared line\nanother keeper")],
+        "doc_id string, text string",
+    )
+    got = sorted(tuple(r) for r in line_dedup(docs).collect())
+    assert got == [("d-a", "keep me\nshared line", 2, 0), ("d-b", "another keeper", 1, 1)]
+
+
+def test_decontaminate_keeps_non_numeric_ids(spark):
+    docs = spark.createDataFrame(
+        [("d-a", "alpha beta gamma delta"), ("d-b", "zeta eta theta")],
+        "doc_id string, text string",
+    )
+    bench = spark.createDataFrame([("b-1", "alpha beta gamma")], "doc_id string, text string")
+    got = sorted(tuple(r) for r in decontaminate(docs, bench, n=3).collect())
+    assert got == [("d-a", 1, True), ("d-b", 0, False)]
+
+
+def test_chunk_docs_and_blocklist_keep_non_numeric_ids(spark):
+    docs = spark.createDataFrame(
+        [("d-a", "a b c", "s"), ("d-b", "bad d", "s")],
+        "doc_id string, text string, source string",
+    )
+    chunks = sorted((r["doc_id"], r["chunk_text"]) for r in chunk_docs(docs, 2, 1).collect())
+    assert chunks == [("d-a", "a b"), ("d-a", "b c"), ("d-b", "bad d")]
+    blocked = {r["doc_id"]: r["blocked"] for r in blocklist_filter(docs, [], ["bad"]).collect()}
+    assert blocked == {"d-a": False, "d-b": True}
+
+
 def test_stratified_hash_sample(spark):
     docs = spark.createDataFrame(
         [(i, "en" if i % 2 == 0 else "xx") for i in range(2000)],

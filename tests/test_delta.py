@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows, pages_df
 from llm_text_to_knowledge_graph_spark.operators.delta import (
     classify_delta,
-    delta_counts,
     snapshot_delta,
 )
 from llm_text_to_knowledge_graph_spark.operators.fused import extract_triples_fused
@@ -30,7 +29,10 @@ def test_classify_delta_all_statuses(spark):
         "u3": "removed",
         "u4": "added",
     }
-    counts = {r["status"]: r["n_urls"] for r in delta_counts(old, new).collect()}
+    counts = {
+        r["status"]: r["count"]
+        for r in classify_delta(old, new).groupBy("status").count().collect()
+    }
     assert counts == {"unchanged": 1, "changed": 1, "removed": 1, "added": 1}
 
 

@@ -5,10 +5,8 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from llm_text_to_knowledge_graph_spark.operators.kge import (
-    margin_ranking_loss,
     pseudo_embeddings,
     transe_energy,
 )
@@ -65,25 +63,6 @@ def test_transe_energy_replay(frames, norm):
     assert len(got) == len(TRIPLES)
     for s, p, t in TRIPLES:
         assert got[(s, p, t)] == pytest.approx(_energy(s, p, t, norm), abs=1e-6)
-
-
-def test_margin_ranking_loss(frames):
-    tri, ent, rel = frames
-    pos = transe_energy(tri, ent, rel)
-    # corrupt every tail to node 40 (except the one already 40 -> 1)
-    neg_rows = [(s, p, 40 if t != 40 else 1) for s, p, t in TRIPLES]
-    neg = transe_energy(
-        pos.sparkSession.createDataFrame(neg_rows, ["s", "p", "t"]), ent, rel
-    ).select(
-        F.col("s"), F.col("p"), F.lit(None).alias("t_neg"), F.col("energy")
-    )
-    # pair on (s, p): each positive has exactly one corruption here
-    got = margin_ranking_loss(pos, neg, ["s", "p"], margin=1.0).collect()[0]
-    exp_terms = []
-    for (s, p, t), (_, _, tn) in zip(TRIPLES, neg_rows):
-        exp_terms.append(max(0.0, 1.0 + _energy(s, p, t) - _energy(s, p, tn)))
-    assert got["n_pairs"] == 3
-    assert got["loss"] == pytest.approx(round(sum(exp_terms) / 3, 6), abs=1e-5)
 
 
 def test_bad_norm(frames):

@@ -15,7 +15,6 @@ import numpy as np
 import pytest
 
 from llm_text_to_knowledge_graph_spark.operators.media_containers import (
-    mp4_frames_at,
     parse_mp3,
     parse_mp4,
     probe_container,
@@ -153,18 +152,6 @@ def test_mp4_sample_index_roundtrip():
     assert track.sync.tolist() == [i % 5 == 0 for i in range(11)]
 
 
-def test_mp4_frames_at_picks_sync_samples():
-    frames = _frames(20)
-    payload = _make_mp4(frames, fps=10, sync_every=5)  # sync at 0,5,10,15
-    got = mp4_frames_at(payload, every_ms=500)
-    # ticks 0,500,1000,1500 -> sync samples 0,5,10,15
-    assert [ts for ts, _ in got] == [0, 500, 1000, 1500]
-    assert [fb for _, fb in got] == [frames[i] for i in (0, 5, 10, 15)]
-    # denser ticks collapse duplicates instead of re-emitting a keyframe
-    got2 = mp4_frames_at(payload, every_ms=200)
-    assert [ts for ts, _ in got2] == [0, 500, 1000, 1500]
-
-
 def test_mp4_rejects_garbage():
     with pytest.raises(ValueError):
         parse_mp4(b"\x00\x00\x00\x08abcd")
@@ -242,14 +229,13 @@ def test_probe_png_wav_jpeg():
 
 
 def _media_rows():
-    frames = _frames(10)
-    mp4 = _make_mp4(frames, fps=10, sync_every=5)
+    mp4 = _make_mp4(_frames(10), fps=10, sync_every=5)
     mp3, _ = _make_mp3(4)
     return [
         (1, "video", bytearray(mp4), None, None, 1000),
         (2, "audio", bytearray(mp3), None, None, None),
         (3, "image", bytearray(b"not a container"), None, None, None),
-    ], frames
+    ]
 
 
 def test_probe_media_spark(spark):
@@ -258,8 +244,7 @@ def test_probe_media_spark(spark):
         probe_media,
     )
 
-    rows, _ = _media_rows()
-    df = spark.createDataFrame(rows, schema=MEDIA)
+    df = spark.createDataFrame(_media_rows(), schema=MEDIA)
     got = {r["media_id"]: r.asDict() for r in probe_media(df).collect()}
     assert got[1]["container"] == "mp4"
     assert got[1]["codec"] == "avc1"
@@ -267,22 +252,3 @@ def test_probe_media_spark(spark):
     assert got[2]["container"] == "mp3"
     assert got[2]["sample_rate"] == 44100
     assert got[3]["container"] is None  # unrecognized -> NULL, not a crash
-
-
-def test_sample_frames_real_mp4(spark):
-    from llm_text_to_knowledge_graph_spark.operators.multimodal import (
-        MEDIA,
-        _feature_from_bytes,
-        sample_frames,
-    )
-
-    rows, frames = _media_rows()
-    df = spark.createDataFrame(rows, schema=MEDIA)
-    got = sorted(
-        (r["frame_ms"], r["feature"]) for r in
-        sample_frames(df, every_ms=500, fake=False).collect()
-    )
-    # sync samples at 0/5 of a 10-frame 10fps track -> ticks 0 and 500
-    assert [ts for ts, _ in got] == [0, 500]
-    expect0 = _feature_from_bytes(frames[0]).tolist()
-    assert got[0][1] == pytest.approx(expect0)

@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 from llm_text_to_knowledge_graph_spark.operators.membership import (
     bloom_build,
     bloom_probe,
-    filter_unseen,
 )
 
 
@@ -48,17 +47,6 @@ def test_no_false_negatives_and_bounded_fp(spark):
     fp = sum(flags[u] for u in new) / len(new)
     # m=65536 bits, n=500 keys, k=3 -> theoretical fp ~ 0.00035; allow 50x
     assert fp < 0.02
-
-
-def test_filter_unseen_frontier(spark):
-    old = spark.createDataFrame([(f"u{i}", i) for i in range(300)], ["url", "x"])
-    new = spark.createDataFrame(
-        [(f"u{i}", i) for i in range(250, 600)], ["url", "x"]
-    )
-    out = filter_unseen(new, old)
-    urls = {r["url"] for r in out.collect()}
-    assert not urls & {f"u{i}" for i in range(300)}  # no seen url survives
-    assert len(urls) > 250  # most genuinely-new urls survive (FPs may drop a few)
 
 
 def test_union_across_snapshots_is_incremental(spark):

@@ -6,10 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from llm_text_to_knowledge_graph_spark.operators.retrieval import (
-    bm25_scores,
-    bm25_topk,
-)
+from llm_text_to_knowledge_graph_spark.operators.retrieval import bm25_scores
 from llm_text_to_knowledge_graph_spark.operators.sketches import (
     histogram_quantiles,
     quantile_histogram,
@@ -65,8 +62,8 @@ def test_bm25_topk_ranks_relevance(spark):
         (3, "spark shuffle"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    top = bm25_topk(df, ["spark"], k=2).collect()
-    assert [r["doc_id"] for r in top] == [0, 3]
+    top = bm25_scores(df, ["spark"]).orderBy(F.desc("score"), "doc_id").limit(2)
+    assert [r["doc_id"] for r in top.collect()] == [0, 3]
     # doc 2 never matches: BM25 output is sparse (matching docs only)
     assert {r["doc_id"] for r in bm25_scores(df, ["spark"]).collect()} == {0, 1, 3}
 

@@ -5,6 +5,7 @@ import unicodedata
 import pytest
 
 from llm_text_to_knowledge_graph_spark.operators.textnorm import (
+    decode_page_bytes,
     fix_mojibake,
     normalize_unicode,
     repair_mojibake_str,
@@ -97,46 +98,46 @@ def test_fix_mojibake_dataframe(spark):
     assert got["3"] == (None, None)
 
 
-def test_sniff_charset_paths():
-    from llm_text_to_knowledge_graph_spark.operators.textnorm import (
-        sniff_charset,
-    )
+def _charset(raw: bytes) -> str:
+    return decode_page_bytes(raw)[1]
 
-    assert sniff_charset("plain".encode("utf-8")) == "utf-8"
-    assert sniff_charset("Café".encode("utf-8")) == "utf-8"
-    assert sniff_charset("Café".encode("latin-1")) == "cp1252"
-    assert sniff_charset(b"\xef\xbb\xbfhello") == "utf-8-sig"
-    assert sniff_charset("hi".encode("utf-16")) == "utf-16-le"  # BOM
+
+def test_sniff_charset_paths():
+    assert _charset("plain".encode("utf-8")) == "utf-8"
+    assert _charset("Café".encode("utf-8")) == "utf-8"
+    assert _charset("Café".encode("latin-1")) == "cp1252"
+    assert _charset(b"\xef\xbb\xbfhello") == "utf-8-sig"
+    assert _charset("hi".encode("utf-16")) == "utf-16-le"  # BOM
     # content-first: a legacy declaration NEVER overrides valid UTF-8
     # (pure ASCII decodes identically either way, and mislabeled
     # iso-8859-1 over real UTF-8 is endemic on the legacy web)
-    assert sniff_charset(
+    assert _charset(
         b'<meta charset="iso-8859-1"><p>plain</p>'
     ) == "utf-8"
-    assert sniff_charset(
+    assert _charset(
         b'<meta charset="iso-8859-1">' + "Caf\u00e9".encode("utf-8")
     ) == "utf-8"
     # the declaration decides only once strict UTF-8 has failed
-    assert sniff_charset(
+    assert _charset(
         b'<meta charset="iso-8859-1">' + "Caf\u00e9".encode("latin-1")
     ) == "cp1252"
     # a LYING utf-8 declaration over invalid utf-8 falls to the sniff
-    assert sniff_charset(
+    assert _charset(
         b'<meta charset="utf-8">' + "Caf\u00e9".encode("latin-1")
     ) == "cp1252"
     # stray charset= in a URL is NOT a declaration
-    assert sniff_charset(
+    assert _charset(
         b'<script src="/l.js?charset=utf-16be"></script>'
         + "Caf\u00e9".encode("utf-8")
     ) == "utf-8"
     # crawl noise: real UTF-8 structure + a stray byte stays utf-8
-    assert sniff_charset(
+    assert _charset(
         "<p>Caf\u00e9 r\u00e9sum\u00e9 and much more</p>".encode("utf-8")
         + b"\x80"
     ) == "utf-8"
     # BOM-less UTF-16 via the NUL-parity heuristic
-    assert sniff_charset("hello world page".encode("utf-16-le")) == "utf-16-le"
-    assert sniff_charset("hello world page".encode("utf-16-be")) == "utf-16-be"
+    assert _charset("hello world page".encode("utf-16-le")) == "utf-16-le"
+    assert _charset("hello world page".encode("utf-16-be")) == "utf-16-be"
 
 
 def test_stray_nul_does_not_flip_to_utf16():
@@ -146,7 +147,6 @@ def test_stray_nul_does_not_flip_to_utf16():
     one-sided parity. Sparse NULs are stripped, charset stays utf-8."""
     from llm_text_to_knowledge_graph_spark.operators.textnorm import (
         decode_page_bytes,
-        sniff_charset,
     )
 
     body = "<p>Café résumé and plenty more text</p>".encode(
@@ -160,9 +160,9 @@ def test_stray_nul_does_not_flip_to_utf16():
     # NULs scattered on BOTH parities (binary blob, not UTF-16) stay
     # utf-8 even when dense-ish
     noisy = b"ab\x00\x00\x00c" * 20
-    assert sniff_charset(noisy) == "utf-8"
+    assert _charset(noisy) == "utf-8"
     # ...while genuine BOM-less UTF-16 (dense, one-sided) still wins
-    assert sniff_charset(
+    assert _charset(
         "a perfectly ordinary web page title".encode("utf-16-le")
     ) == "utf-16-le"
 

@@ -19,18 +19,12 @@ def docs(spark):
 
 
 def test_dedup_exact(docs):
-    from llm_text_to_knowledge_graph_spark.operators.dedup import (
-        dedup_exact,
-        drop_exact_dupes,
-    )
+    from llm_text_to_knowledge_graph_spark.operators.dedup import dedup_exact
 
     groups = dedup_exact(docs).collect()
     assert len(groups) == 5  # 6 docs, one exact pair
     dup = [g for g in groups if g["dup_count"] == 2]
     assert len(dup) == 1 and dup[0]["canonical_id"] == 0
-    kept = drop_exact_dupes(docs)
-    assert kept.count() == 5
-    assert {r["doc_id"] for r in kept.collect()} == {0, 2, 3, 4, 5}
 
 
 def test_ngram_jaccard_pairs(docs):
@@ -171,13 +165,6 @@ def test_lsh_topk_contains_near_dup(embeddings):
     assert any(r["neighbor_id"] == 1 for r in res)
 
 
-def test_embedding_dup_pairs(embeddings):
-    from llm_text_to_knowledge_graph_spark.operators.similarity import embedding_dup_pairs
-
-    pairs = embedding_dup_pairs(embeddings, threshold=0.999, bits=4).collect()
-    assert {(p["id_a"], p["id_b"]) for p in pairs} == {(0, 1)}
-
-
 def test_token_count_and_quality(docs):
     from llm_text_to_knowledge_graph_spark.operators.textstats import (
         quality_score,
@@ -213,7 +200,6 @@ def test_multimodal_features(spark):
         MEDIA,
         decode_media,
         extract_features,
-        sample_frames,
     )
 
     rows = [
@@ -233,8 +219,6 @@ def test_multimodal_features(spark):
     assert {f["media_id"]: f["feature"] for f in feats} == {
         f["media_id"]: f["feature"] for f in feats2
     }
-    frames = sample_frames(media, every_ms=1000).collect()
-    assert len(frames) == 4  # 3500ms -> t=0,1000,2000,3000
     with pytest.raises(NotImplementedError):
         decode_media(b"x", "image", fake=False)
 

@@ -81,12 +81,12 @@ def extract_predictions(blocks: list[dict], lexicon: list | None = None) -> list
     """Run C1 (AliasMatcher over ``lexicon``, default REAL_LEXICON) + C2
     extended patterns over each block. Pure Python — the same functions the
     Spark UDFs wrap."""
-    from ..operators.fused import block_statements
+    from ..operators.fused import ground_block
     from ..operators.mentions import AliasMatcher
 
     matcher = AliasMatcher(lexicon if lexicon is not None else REAL_LEXICON)
     return [
-        {**b, "pred": [stmt for stmt, _ev in block_statements(b["text"], matcher)]}
+        {**b, "pred": [stmt for stmt, _ev in ground_block(b["text"], matcher)[2]]}
         for b in blocks
     ]
 

@@ -224,7 +224,7 @@ PAPER_LEXICONS: dict[str, list] = {
 def run_bel_paper_eval(
     pmid: str = "16962653", lexicon: list | None = None
 ) -> dict:
-    from ..operators.fused import block_statements
+    from ..operators.fused import ground_block
     from ..operators.mentions import AliasMatcher
     from .real_gold import score_blocks
 
@@ -236,7 +236,7 @@ def run_bel_paper_eval(
     matcher = AliasMatcher(lexicon)
     blocks = parse_bel_file(path)
     for b in blocks:
-        b["pred"] = [stmt for stmt, _ in block_statements(b["text"], matcher)]
+        b["pred"] = [stmt for stmt, _ in ground_block(b["text"], matcher)[2]]
     return score_blocks(blocks)
 
 
@@ -390,8 +390,8 @@ def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
     criterion) — pinned in tests/test_real_gold.py so a regression that
     turns an inference-bound miss into a pattern_gap (or vice versa) is
     visible."""
-    from ..operators.extraction import extract_from_block, normalize_block_text
-    from ..operators.mentions import AliasMatcher, mention_structs
+    from ..operators.fused import ground_block
+    from ..operators.mentions import AliasMatcher
     from .real_gold import score_blocks
 
     if lexicon is None:
@@ -402,11 +402,8 @@ def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
     text_by_key: dict[str, str] = {}
     mentions_by_key: dict[str, set[str]] = {}
     for b in blocks:
-        text = normalize_block_text(b["text"])
-        ms = matcher.find(text)
-        b["pred"] = [
-            stmt for stmt, _ in extract_from_block(text, mention_structs(ms))
-        ]
+        text, ms, stmts = ground_block(b["text"], matcher)
+        b["pred"] = [stmt for stmt, _ in stmts]
         text_by_key[b["key"]] = text
         mentions_by_key[b["key"]] = {m[5] for m in ms} | {m[2] for m in ms}
     preds_by_key = {
@@ -617,8 +614,8 @@ def run_selventa_corpus_eval(subset: str = "dev") -> dict:
     must never be inspected during development (the audit dicts are
     withheld from its result); ``"all"`` is the full corpus (round-4
     backward comparison only)."""
-    from ..operators.extraction import extract_from_block, normalize_block_text
-    from ..operators.mentions import AliasMatcher, mention_structs
+    from ..operators.fused import ground_block
+    from ..operators.mentions import AliasMatcher
     from .real_gold import score_blocks
 
     if subset not in ("dev", "heldout", "all"):
@@ -635,11 +632,8 @@ def run_selventa_corpus_eval(subset: str = "dev") -> dict:
     text_by_key: dict[str, str] = {}
     mentions_by_key: dict[str, set[str]] = {}
     for b in blocks:
-        text = normalize_block_text(b["text"])
-        ms = matcher.find(text)
-        b["pred"] = [
-            stmt for stmt, _ in extract_from_block(text, mention_structs(ms))
-        ]
+        text, ms, stmts = ground_block(b["text"], matcher)
+        b["pred"] = [stmt for stmt, _ in stmts]
         text_by_key[b["key"]] = text
         mentions_by_key[b["key"]] = {m[5] for m in ms} | {m[2] for m in ms}
     result = score_blocks(blocks)

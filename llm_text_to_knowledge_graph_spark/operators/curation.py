@@ -339,18 +339,19 @@ def strip_host_boilerplate(
     lines ARE the skew and are absorbed by the partial aggs.
     Deterministic; the SQL oracle replays the thresholds exactly.
 
-    Every document with text comes back, keyed by its raw ``id_col``
-    value: one whose every line is boilerplate as ``text = ''`` with
-    ``n_lines_kept = 0``."""
+    Every document comes back, keyed by its raw ``id_col`` value: one
+    whose every line is boilerplate as ``text = ''`` with
+    ``n_lines_kept = 0``, and one whose text is NULL with NULL text and 0
+    lines kept or dropped."""
+    split = F.split(F.col(text_col), sep, -1)
     lines = docs.select(
         F.col(host_col).alias("host"),
         F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), sep, -1)).cast("long").alias(
+        F.when(split.isNull(), 0).otherwise(F.size(split)).cast("long").alias(
             "n_lines"
         ),
-        F.posexplode(F.split(F.col(text_col), sep, -1)).alias(
-            "pos", "line"
-        ),
+        # a NULL text explodes to one (NULL, NULL) row, so its doc keeps a group
+        F.posexplode_outer(split).alias("pos", "line"),
     )
     df_line = (
         lines.select("host", "line", "doc_id")
@@ -373,18 +374,23 @@ def strip_host_boilerplate(
     return (
         marked.groupBy("host", "doc_id")
         .agg(
-            # collect_list skips the NULLs of boilerplate lines, so a doc
-            # whose every line is boilerplate keeps its row with ls = []
+            # collect_list skips the NULLs of boilerplate lines (and of a
+            # NULL text's placeholder row), so such a doc keeps its row with
+            # ls = []
             F.array_sort(F.collect_list(
-                F.when(F.col("_boiler").isNull(), F.struct("pos", "line"))
+                F.when(
+                    F.col("_boiler").isNull() & F.col("pos").isNotNull(),
+                    F.struct("pos", "line"),
+                )
             )).alias("ls"),
             F.max("n_lines").alias("n_lines"),
         )
         .select(
             "host",
             "doc_id",
-            F.concat_ws(
-                sep, F.transform("ls", lambda s: s["line"])
+            F.when(
+                F.col("n_lines") > 0,
+                F.concat_ws(sep, F.transform("ls", lambda s: s["line"])),
             ).alias("text"),
             F.size("ls").cast("long").alias("n_lines_kept"),
             (F.col("n_lines") - F.size("ls")).cast("long").alias(

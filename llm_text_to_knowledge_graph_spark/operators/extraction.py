@@ -44,6 +44,7 @@ the same fact emit once.
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from functools import lru_cache
 
 from ..functions.bel import NS_FUNC, make_term
@@ -319,8 +320,12 @@ _PHOSPHO_OF_RE = re.compile(r"(?:^|[^a-z])phosphorylation\s+of\b")
 # "IGF-I-mediated invasion") hide the inner mention from the word-boundary
 # alias matcher: the char after the alias is "-", which is IN the boundary
 # class. Normalizing a space in front of the hyphen exposes the mention and
-# leaves the "-induced" inter text for the compound rule. Callers run this
-# BEFORE matcher.find so mention offsets and pattern text agree.
+# leaves the "-induced" inter text for the compound rule. The block engine
+# grounds the normalised text once (``fused.ground_block``), so mention
+# offsets and pattern text agree. Every alternative sits inside the one
+# lookahead, so each match is zero-width and the substitution INSERTS one
+# space (also before "-/-" and "-GFP"); ``original_spans`` relies on that to
+# map mention offsets back to the unnormalised text.
 _COMPOUND_SPLIT_RE = re.compile(
     # \s? : source formatting sometimes puts the space AFTER the hyphen
     # ("CXCR4- induced"), which equally hides the mention from the
@@ -340,6 +345,25 @@ _COMPOUND_SPLIT_RE = re.compile(
 
 def normalize_block_text(text: str) -> str:
     return _COMPOUND_SPLIT_RE.sub(" ", text)
+
+
+def original_spans(text: str, normalized: str, found: list) -> list[tuple]:
+    """``AliasMatcher.find`` tuples over ``normalized`` (which is
+    ``normalize_block_text(text)``) -> the same tuples with begin/end over
+    ``text``. A tuple that covers an inserted space has no span in ``text``
+    and is dropped."""
+    if normalized == text:
+        return found
+    # normalised position of each inserted space
+    spaces = [m.start() + i for i, m in enumerate(_COMPOUND_SPLIT_RE.finditer(text))]
+    out = []
+    for f in found:
+        begin, end = f[0], f[1]
+        before = bisect_left(spaces, begin)
+        if before < len(spaces) and spaces[before] < end:
+            continue
+        out.append((begin - before, end - before, *f[2:]))
+    return out
 
 
 def _parse_site_list(span: str) -> list[tuple[str, int]]:
@@ -3499,14 +3523,14 @@ def _active_flags(trail: list[str], after_right: str):
 
 def extract_statements_extended(paragraphs, alias_rows: list):
     """PARAGRAPHS(url, warc_ts, para_idx, text) -> STATEMENTS with the
-    extraction kernel's block step (``fused.block_statements``: normalise,
+    extraction kernel's block step (``fused.ground_block``: normalise,
     ground with ``alias_rows``, extract) as one ``_statement_stage``. Block
     statements carry ``sent_idx = 0`` (evidence spans the paragraph)."""
     from pyspark.sql import functions as F
 
-    from .fused import block_statements
+    from .fused import ground_block
 
     return _statement_stage(
-        paragraphs, block_statements, ["text"], alias_rows,
-        sent_idx=F.lit(0).alias("sent_idx"),
+        paragraphs, lambda text, matcher: ground_block(text, matcher)[2],
+        ["text"], alias_rows, sent_idx=F.lit(0).alias("sent_idx"),
     )

@@ -21,7 +21,7 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 from ..functions.bel import split_statement
 from ..schemas import MENTIONS, PARAGRAPHS, TRIPLES
 from ..sources.html_extract import extract_paragraphs_text, split_sentences
-from .extraction import extract_from_block, normalize_block_text
+from .extraction import extract_from_block, normalize_block_text, original_spans
 from .mentions import WorkerMatcher, mention_structs
 from .statements import extract_parts_from_sentence
 
@@ -43,11 +43,34 @@ PARA_EXTRACT = StructType(
 _SHAPES = {"triples": TRIPLES, "paragraphs": PARA_EXTRACT}
 
 
-def block_statements(para: str, matcher) -> list[tuple[str, str]]:
-    """The block engine's per-paragraph step: normalise, ground, extract
-    -> [(bel_statement, evidence)]."""
-    para = normalize_block_text(para)
-    return extract_from_block(para, mention_structs(matcher.find(para)))
+def ground_block(para: str, matcher) -> tuple[str, list, list[tuple[str, str]]]:
+    """The block engine's per-paragraph step, one grounding pass: normalise,
+    ``matcher.find`` once, extract -> (normalised text, find tuples over it,
+    [(bel_statement, evidence)])."""
+    text = normalize_block_text(para)
+    found = matcher.find(text)
+    return text, found, extract_from_block(text, mention_structs(found))
+
+
+def _block_sentences(para: str, found: list) -> list[tuple[int, str, list]]:
+    """[(sent_idx, sentence, mentions)] of a block paragraph: each sentence of
+    ``para`` gets the ``found`` spans (over ``para``, in begin order) that lie
+    inside it, re-based to the sentence. A span that crosses a sentence
+    boundary belongs to no sentence."""
+    out, pos, i = [], 0, 0
+    for sent_idx, sentence in enumerate(split_sentences(para)):
+        # sentences are non-empty stripped pieces of para, in order, and
+        # only whitespace lies between them
+        start = para.index(sentence, pos)
+        pos = start + len(sentence)
+        inside = []
+        while i < len(found) and found[i][0] < pos:
+            begin, end = found[i][0], found[i][1]
+            if begin >= start and end <= pos:
+                inside.append((begin - start, end - start, *found[i][2:]))
+            i += 1
+        out.append((sent_idx, sentence, mention_structs(inside)))
+    return out
 
 
 def extract_document(
@@ -57,23 +80,31 @@ def extract_document(
     ``sentences`` = [(sent_idx, sentence, mentions)] (left empty by the block
     engine unless ``sentences``), ``results`` = [(sent_idx, subj, pred, obj,
     bel_statement, evidence)]. Sentence-engine parts come pre-split
-    (property-tested equal to ``split_statement``); block statements carry
-    ``sent_idx = 0`` (evidence spans the paragraph)."""
-    block = engine == "block"
+    (property-tested equal to ``split_statement``).
+
+    The sentence engine grounds each sentence. The block engine grounds each
+    paragraph once (``ground_block``) and its statements carry
+    ``sent_idx = 0`` (evidence spans the paragraph); the block mentions come
+    from that same pass, mapped back to the paragraph's own text
+    (``original_spans``) and split over its sentences. A block mention that
+    covers a space ``normalize_block_text`` inserted, or that crosses a
+    sentence boundary, feeds the statements but no sentence."""
     for para_idx, para in enumerate(extract_paragraphs_text(html, text)):
         sents, results = [], []
-        if sentences or not block:
+        if engine == "block":
+            norm, found, stmts = ground_block(para, matcher)
+            if sentences:
+                sents = _block_sentences(para, original_spans(para, norm, found))
+            results = [
+                (0, *split_statement(stmt), stmt, evidence)
+                for stmt, evidence in stmts
+            ]
+        else:
             for sent_idx, sentence in enumerate(split_sentences(para)):
                 mentions = mention_structs(matcher.find(sentence))
                 sents.append((sent_idx, sentence, mentions))
-                if not block:
-                    for parts in extract_parts_from_sentence(sentence, mentions):
-                        results.append((sent_idx, *parts))
-        if block:
-            results = [
-                (0, *split_statement(stmt), stmt, evidence)
-                for stmt, evidence in block_statements(para, matcher)
-            ]
+                for parts in extract_parts_from_sentence(sentence, mentions):
+                    results.append((sent_idx, *parts))
         yield para_idx, para, sents, results
 
 

@@ -8,17 +8,17 @@ the MP3 frame index. Both are implemented here from the public specs
 struct + numpy only.
 
 What is REAL: box walking, track metadata (codec fourcc, timescale,
-width/height, duration), and the exact per-sample byte ranges,
-timestamps and sync flags reconstructed from stts/stsz/stsc/stco/stss —
-verified by round-tripping files built by an independent in-test writer.
+width/height, duration), and the per-sample sizes and timestamps read from
+stsz/stts — verified by round-tripping files built by an independent
+in-test writer.
 What stays STUBBED (honestly): the entropy decode of the codec payloads
 (H.264/AAC/MP3 Huffman) — those need external libraries this container
 lacks. Frame features over the real sampled bytes use a normalized byte
 histogram, which is deterministic and engine-portable.
 
 Scale note: these parsers run inside Arrow-batched ``mapInPandas`` over
-the opaque ``binary`` column (see ``multimodal.py``); the sample index is
-O(#samples) integers per row and never leaves the executor.
+the opaque ``binary`` column (see ``multimodal.py``); the per-sample arrays
+are O(#samples) integers per row and never leave the executor.
 """
 
 from __future__ import annotations
@@ -41,10 +41,8 @@ class Mp4Track:
     width: int
     height: int
     # per-sample arrays (same length):
-    offsets: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
     sizes: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
     ts_ms: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
-    sync: np.ndarray = field(default_factory=lambda: np.empty(0, np.bool_))
 
     @property
     def n_samples(self) -> int:
@@ -112,67 +110,12 @@ def _parse_stsz(buf: bytes, s: int) -> np.ndarray:
     return np.frombuffer(buf, dtype=">u4", count=n, offset=p + 8).astype(np.int64)
 
 
-def _parse_stsc(buf: bytes, s: int) -> np.ndarray:
-    """(first_chunk, samples_per_chunk, sample_description_index) rows."""
-    _, p = _fullbox(buf, s)
-    n = struct.unpack_from(">I", buf, p)[0]
-    return (
-        np.frombuffer(buf, dtype=">u4", count=3 * n, offset=p + 4)
-        .reshape(n, 3)
-        .astype(np.int64)
-    )
-
-
-def _parse_stco(buf: bytes, s: int, co64: bool) -> np.ndarray:
-    _, p = _fullbox(buf, s)
-    n = struct.unpack_from(">I", buf, p)[0]
-    dt = ">u8" if co64 else ">u4"
-    return np.frombuffer(buf, dtype=dt, count=n, offset=p + 4).astype(np.int64)
-
-
-def _parse_stss(buf: bytes, s: int) -> np.ndarray:
-    """1-based sync sample numbers."""
-    _, p = _fullbox(buf, s)
-    n = struct.unpack_from(">I", buf, p)[0]
-    return np.frombuffer(buf, dtype=">u4", count=n, offset=p + 4).astype(np.int64)
-
-
-def _sample_offsets(
-    sizes: np.ndarray, stsc: np.ndarray, chunk_offsets: np.ndarray
-) -> np.ndarray:
-    """Reconstruct each sample's absolute file offset from the
-    sample-to-chunk map and the chunk offset table."""
-    n_chunks = chunk_offsets.shape[0]
-    # samples-per-chunk, expanded over chunks: each stsc run applies from
-    # first_chunk (1-based) until the next run's first_chunk.
-    spc = np.empty(n_chunks, dtype=np.int64)
-    for i in range(stsc.shape[0]):
-        first = int(stsc[i, 0]) - 1
-        last = int(stsc[i + 1, 0]) - 1 if i + 1 < stsc.shape[0] else n_chunks
-        spc[first:last] = stsc[i, 1]
-    offsets = np.empty(sizes.shape[0], dtype=np.int64)
-    si = 0
-    for ci in range(n_chunks):
-        pos = int(chunk_offsets[ci])
-        for _ in range(int(spc[ci])):
-            if si >= sizes.shape[0]:
-                break
-            offsets[si] = pos
-            pos += int(sizes[si])
-            si += 1
-    if si != sizes.shape[0]:
-        raise ValueError(
-            f"stsc/stco cover {si} samples but stsz declares {sizes.shape[0]}"
-        )
-    return offsets
-
-
 def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
     kind = codec = ""
     timescale = 1
     duration = 0
     width = height = 0
-    stts = stsz = stsc = stco = stss = None
+    stts = stsz = None
     for fourcc, bs, be in _iter_boxes(buf, s, e):
         if fourcc == b"tkhd":
             ver, p = _fullbox(buf, bs)
@@ -208,14 +151,6 @@ def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
                                 stts = _parse_stts(buf, b4s)
                             elif f4 == b"stsz":
                                 stsz = _parse_stsz(buf, b4s)
-                            elif f4 == b"stsc":
-                                stsc = _parse_stsc(buf, b4s)
-                            elif f4 == b"stco":
-                                stco = _parse_stco(buf, b4s, co64=False)
-                            elif f4 == b"co64":
-                                stco = _parse_stco(buf, b4s, co64=True)
-                            elif f4 == b"stss":
-                                stss = _parse_stss(buf, b4s)
     timescale = max(int(timescale), 1)
     track = Mp4Track(
         kind=kind,
@@ -225,24 +160,18 @@ def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
         width=int(width),
         height=int(height),
     )
-    if stsz is not None and stsc is not None and stco is not None:
+    if stsz is not None:
         track.sizes = stsz
-        track.offsets = _sample_offsets(stsz, stsc, stco)
         if stts is not None:
             track.ts_ms = stts * 1000 // timescale
         else:
             track.ts_ms = np.zeros_like(stsz)
-        sync = np.ones(stsz.shape[0], dtype=bool)
-        if stss is not None:  # absent stss => every sample is sync
-            sync[:] = False
-            sync[stss - 1] = True
-        track.sync = sync
     return track
 
 
 def parse_mp4(payload: bytes) -> Mp4Info:
-    """Parse an ISO BMFF (MP4/MOV) byte string into track metadata plus the
-    exact per-sample (offset, size, timestamp, sync) index.
+    """Parse an ISO BMFF (MP4/MOV) byte string into track metadata plus
+    each track's per-sample sizes (stsz) and timestamps (stts).
 
     Raises ValueError on malformed boxes; fragmented files (moof) are not
     indexed (their samples live in per-fragment trun tables)."""

@@ -83,9 +83,9 @@ def run_pipeline(
     pattern engine (``operators.extraction``) — coordination, displaced-agent
     passives, nominalizations, fold-continuations, cnc+pretreatment synergy —
     over whole paragraphs. Block statements carry ``sent_idx = 0``
-    (evidence is the whole paragraph). The sentences/mentions stages are
-    unchanged either way. Both engines run inside the same single kernel
-    crossing.
+    (evidence is the whole paragraph); block mentions come from the one
+    paragraph pass (``fused.extract_document``). Both engines run inside the
+    same single kernel crossing.
 
     Default decision (r3, evidence-based): ``"sentence"`` stays the
     throughput default — warm sf0.1 measures the fused block engine ~8%

@@ -371,6 +371,23 @@ def test_strip_host_boilerplate_keeps_fully_stripped_docs(spark):
                    2: ("body a2", 1, 2), 3: ("", 0, 2)}
 
 
+def test_strip_host_boilerplate_keeps_null_text_docs(spark):
+    """A doc whose text is NULL comes back with NULL text and no lines kept
+    or dropped; its host's other docs are stripped as before."""
+    from llm_text_to_knowledge_graph_spark.operators.curation import (
+        strip_host_boilerplate,
+    )
+
+    rows = [("a.org", i, f"NAV\nbody a{i}") for i in range(2)]
+    rows.append(("a.org", 2, None))
+    docs = spark.createDataFrame(rows, "host string, doc_id long, text string")
+    out = {
+        r["doc_id"]: (r["text"], r["n_lines_kept"], r["n_lines_dropped"])
+        for r in strip_host_boilerplate(docs).collect()
+    }
+    assert out == {0: ("body a0", 1, 1), 1: ("body a1", 1, 1), 2: (None, 0, 0)}
+
+
 def test_strip_host_boilerplate_keeps_non_numeric_ids_apart(spark):
     """Documents are grouped by their raw id: string ids stay one row each
     (a cast to long turned them all into one NULL group)."""

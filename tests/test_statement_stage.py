@@ -9,7 +9,7 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 from llm_text_to_knowledge_graph_spark.operators.extraction import (
     extract_statements_extended,
 )
-from llm_text_to_knowledge_graph_spark.operators.fused import block_statements
+from llm_text_to_knowledge_graph_spark.operators.fused import ground_block
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
     AliasMatcher,
     detect_mentions,
@@ -124,7 +124,7 @@ def test_block_operator_equals_its_row_function(spark):
     want = sorted(
         (url, ts, p, 0, st, ev)
         for url, ts, p, text in rows
-        for st, ev in block_statements(text, matcher)
+        for st, ev in ground_block(text, matcher)[2]
     )
     assert want and len({r[:3] for r in want}) < len(rows)
     assert _collected(extract_statements_extended(paras, LEX)) == want

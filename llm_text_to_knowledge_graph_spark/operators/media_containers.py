@@ -8,16 +8,15 @@ the MP3 frame index. Both are implemented here from the public specs
 struct + numpy only.
 
 What is REAL: box walking, track metadata (codec fourcc, timescale,
-width/height, duration), and the per-sample sizes and timestamps read from
-stsz/stts — verified by round-tripping files built by an independent
-in-test writer.
+width/height, duration), and the per-sample sizes read from stsz —
+verified by round-tripping files built by an independent in-test writer.
 What stays STUBBED (honestly): the entropy decode of the codec payloads
 (H.264/AAC/MP3 Huffman) — those need external libraries this container
 lacks. Frame features over the real sampled bytes use a normalized byte
 histogram, which is deterministic and engine-portable.
 
 Scale note: these parsers run inside Arrow-batched ``mapInPandas`` over
-the opaque ``binary`` column (see ``multimodal.py``); the per-sample arrays
+the opaque ``binary`` column (see ``multimodal.py``); the per-sample sizes
 are O(#samples) integers per row and never leave the executor.
 """
 
@@ -40,9 +39,8 @@ class Mp4Track:
     duration_ms: int
     width: int
     height: int
-    # per-sample arrays (same length):
+    # per-sample sizes (stsz)
     sizes: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
-    ts_ms: np.ndarray = field(default_factory=lambda: np.empty(0, np.int64))
 
     @property
     def n_samples(self) -> int:
@@ -87,21 +85,6 @@ def _fullbox(buf: bytes, pos: int) -> tuple[int, int]:
     return buf[pos], pos + 4
 
 
-def _parse_stts(buf: bytes, s: int) -> np.ndarray:
-    """Decompress time-to-sample runs into per-sample DECODE timestamps
-    (in track timescale units)."""
-    _, p = _fullbox(buf, s)
-    n = struct.unpack_from(">I", buf, p)[0]
-    runs = np.frombuffer(buf, dtype=">u4", count=2 * n, offset=p + 4).reshape(n, 2)
-    counts = runs[:, 0].astype(np.int64)
-    deltas = runs[:, 1].astype(np.int64)
-    per_sample_delta = np.repeat(deltas, counts)
-    ts = np.zeros(per_sample_delta.shape[0], dtype=np.int64)
-    if ts.shape[0] > 1:
-        ts[1:] = np.cumsum(per_sample_delta[:-1])
-    return ts
-
-
 def _parse_stsz(buf: bytes, s: int) -> np.ndarray:
     _, p = _fullbox(buf, s)
     fixed, n = struct.unpack_from(">II", buf, p)
@@ -115,7 +98,7 @@ def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
     timescale = 1
     duration = 0
     width = height = 0
-    stts = stsz = None
+    stsz = None
     for fourcc, bs, be in _iter_boxes(buf, s, e):
         if fourcc == b"tkhd":
             ver, p = _fullbox(buf, bs)
@@ -147,8 +130,6 @@ def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
                             if f4 == b"stsd":
                                 # first entry's fourcc
                                 codec = buf[b4s + 12: b4s + 16].decode("latin1")
-                            elif f4 == b"stts":
-                                stts = _parse_stts(buf, b4s)
                             elif f4 == b"stsz":
                                 stsz = _parse_stsz(buf, b4s)
     timescale = max(int(timescale), 1)
@@ -162,16 +143,12 @@ def _parse_trak(buf: bytes, s: int, e: int) -> Mp4Track:
     )
     if stsz is not None:
         track.sizes = stsz
-        if stts is not None:
-            track.ts_ms = stts * 1000 // timescale
-        else:
-            track.ts_ms = np.zeros_like(stsz)
     return track
 
 
 def parse_mp4(payload: bytes) -> Mp4Info:
     """Parse an ISO BMFF (MP4/MOV) byte string into track metadata plus
-    each track's per-sample sizes (stsz) and timestamps (stts).
+    each track's per-sample sizes (stsz).
 
     Raises ValueError on malformed boxes; fragmented files (moof) are not
     indexed (their samples live in per-fragment trun tables)."""

@@ -10,8 +10,8 @@ filters), JPEG — baseline AND progressive SOF2 (DCT, Huffman, gray + YCbCr wit
 REAL, dependency-free (zlib + struct + numpy; PNG/WAV golden-file
 tested, JPEG verified against a spec-independent test encoder plus
 real-world files). MP4 and MP3 are now parsed for REAL at the CONTAINER
-level (``media_containers.py``: ISO BMFF box walk + stts/stsz sample
-sizes and timestamps; MPEG audio frame index). Only the codec ENTROPY DECODE (H.264/AAC/MP3 Huffman) remains
+level (``media_containers.py``: ISO BMFF box walk + stsz sample
+sizes; MPEG audio frame index). Only the codec ENTROPY DECODE (H.264/AAC/MP3 Huffman) remains
 stubbed via NotImplementedError: it genuinely needs external libraries
 this container lacks. The deterministic ``fake=True`` digest stub
 remains for schema/batch-shape tests.

@@ -209,32 +209,47 @@ def canonical_links(
     the declaration lives in <head>,
     and an unbounded regex over multi-MB bodies is the classic
     scan-stage regression. Quoted and unquoted attribute values are
-    handled; entity-unescape of '&amp;' is applied (the one entity
-    legitimately common in URLs). Returns (url, canonical_url,
-    has_canonical); pages without html or without the tag report NULL /
-    false.
+    handled, and ``canonical`` may be any token of a quoted rel list
+    (``rel="alternate canonical"``); entity-unescape of '&amp;' is applied
+    (the one entity legitimately common in URLs). An href must end in a
+    quote, whitespace or '>', and the rel token in one of those or '/', so
+    a tag cut by the head bound gives NULL, not a truncated url. A
+    relative href resolves against ``url_col``: ``//h/p`` takes the page's
+    scheme, ``/p`` its scheme and authority; any other href without a
+    scheme gives NULL. Returns (url, canonical_url, has_canonical); pages
+    without html or without the tag report NULL / false.
     """
     # substring the BINARY first, decode second: decoding a multi-MB
     # body before truncation would defeat the head bound (at most one
     # trailing multi-byte char is mangled at the cut, harmless here)
     head = F.decode(F.substring(F.col(html_col), 1, head_bytes), "UTF-8")
     # rel token is boundary-anchored (a closing quote, whitespace, '/'
-    # or '>' must follow) so rel="canonicalized" never matches; '='
-    # tolerates surrounding whitespace; the unquoted value class
-    # excludes ALL whitespace (same class as linkgraph.HREF_PATTERN)
-    pat_rel_href = (
-        "(?i)<link[^>]*rel\\s*=\\s*[\"']?canonical(?=[\"'\\s/>])"
-        "[^>]*href\\s*=\\s*[\"']?([^\"'\\s>]+)"
-    )
-    pat_href_rel = (
-        "(?i)<link[^>]*href\\s*=\\s*[\"']?([^\"'\\s>]+)[\"']?[^>]*"
-        "rel\\s*=\\s*[\"']?canonical(?=[\"'\\s/>]|$)"
-    )
+    # or '>' must follow, also at the head bound) so rel="canonicalized"
+    # never matches, not even cut to "canonical"; a quoted value may list
+    # other tokens before it; '=' tolerates surrounding whitespace
+    rel = "rel\\s*=\\s*(?:[\"'](?:[^\"'>]*\\s)?)?canonical(?=[\"'\\s/>])"
+    # the unquoted value class excludes ALL whitespace (same class as
+    # linkgraph.HREF_PATTERN); the possessive run cannot back off to end
+    # at a '/' inside the url, so the delimiter lookahead rejects an href
+    # cut at the head bound
+    href = "href\\s*=\\s*[\"']?([^\"'\\s>]++)(?=[\"'\\s>])"
+    pat_rel_href = f"(?i)<link[^>]*{rel}[^>]*{href}"
+    pat_href_rel = f"(?i)<link[^>]*{href}[\"']?[^>]*{rel}"
     canon = F.coalesce(
         F.nullif(F.regexp_extract(head, pat_rel_href, 1), F.lit("")),
         F.nullif(F.regexp_extract(head, pat_href_rel, 1), F.lit("")),
     )
     canon = F.replace(canon, F.lit("&amp;"), F.lit("&"))
+    scheme = "[A-Za-z][A-Za-z0-9+.-]*:"
+
+    def page_prefix(pat):  # NULL when the page url has no such prefix
+        return F.nullif(F.regexp_extract(F.col(url_col), f"^({pat})", 1), F.lit(""))
+
+    canon = (
+        F.when(canon.rlike(f"^{scheme}"), canon)
+        .when(canon.startswith("//"), F.concat(page_prefix(scheme), canon))
+        .when(canon.startswith("/"), F.concat(page_prefix(f"{scheme}//[^/?#]*"), canon))
+    )
     return pages.select(
         F.col(url_col).alias("url"),
         canon.alias("canonical_url"),

@@ -70,7 +70,8 @@ def main() -> None:
     stats.sort_stats("cumulative").print_stats(30)
     print(buf.getvalue())
     print(
-        f"engine={engine} docs={n_docs} triples={n_triples} wall={wall:.2f}s "
+        f"engine={engine} matcher={matcher.engine} "
+        f"docs={n_docs} triples={n_triples} wall={wall:.2f}s "
         f"({n_triples / wall:.0f} triples/s single-core)"
     )
 

@@ -1,20 +1,34 @@
-"""Aho-Corasick alias-matcher engine: exact parity with the regex engine.
+"""The two alias-matcher engines give identical matches on any input.
 
-The two engines must produce identical mention tuples on any input — the
-AC path is the at-scale engine (O(text) scan regardless of dictionary
-size), the alternation regex is the reference semantics.
+``AliasMatcher`` picks its engine by dictionary size alone: the alternation
+``regex`` below ``_TOK_THRESHOLD`` aliases, the token-index ``tok`` at and
+above it. Each parity test pads one copy of its dictionary with aliases no
+test text contains, so ``tok`` runs through the same auto-selection as in
+production; ``regex`` is the reference semantics.
 """
 
 import random
+import re
 import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
-    _AC_THRESHOLD,
+    _TOK_THRESHOLD,
     AliasMatcher,
 )
+
+# no test text contains an upper-case P, so none of these ever matches
+PAD = [(f"PAD{i:04d}", "P", str(i), f"PAD{i}", 1.0) for i in range(_TOK_THRESHOLD)]
+
+
+def _engines(rows):
+    """(regex, tok) matchers over the same effective dictionary."""
+    rx, tok = AliasMatcher(rows), AliasMatcher(rows + PAD)
+    assert (rx.engine, tok.engine) == ("regex", "tok")
+    return rx, tok
+
 
 ROWS = [
     ("spark", "V", "1", "SPARK", 1.0),
@@ -38,6 +52,8 @@ TRICKY = [
     "",
     "no hits at all here",
     "spark sql engin",  # prefix of a long alias, shorter must win
+    "it ends with ab",  # "ab cd" must not be probed past the text end
+    "ab c",
 ]
 
 
@@ -46,20 +62,18 @@ def _pairs(m, texts):
 
 
 def test_engines_agree_on_tricky_corpus():
-    rx = AliasMatcher(ROWS, engine="regex")
-    ac = AliasMatcher(ROWS, engine="ac")
-    tok = AliasMatcher(ROWS, engine="tok")
-    assert _pairs(rx, TRICKY) == _pairs(ac, TRICKY) == _pairs(tok, TRICKY)
+    rx, tok = _engines(ROWS)
+    assert _pairs(rx, TRICKY) == _pairs(tok, TRICKY)
     # and they actually match things
-    assert any(any(f) for f in _pairs(ac, TRICKY))
+    assert any(any(f) for f in _pairs(tok, TRICKY))
+    assert tok.find("it ends with ab") == [(13, 15, "ab", "V", "10", "AB", 1.0)]
 
 
 def test_top1_disambiguation_identical():
-    rx = AliasMatcher(ROWS, engine="regex")
-    ac = AliasMatcher(ROWS, engine="ac")
+    rx, tok = _engines(ROWS)
     got_rx = rx.find("b")
-    got_ac = ac.find("b")
-    assert got_rx == got_ac
+    got_tok = tok.find("b")
+    assert got_rx == got_tok
     assert got_rx[0][5] == "B2"  # prior 0.9 beats 0.5
 
 
@@ -68,10 +82,8 @@ def test_top1_disambiguation_identical():
     st.text(alphabet=" abcdeé+-_,.()", min_size=0, max_size=60),
 )
 def test_engines_agree_property(text):
-    rx = AliasMatcher(ROWS, engine="regex")
-    ac = AliasMatcher(ROWS, engine="ac")
-    tok = AliasMatcher(ROWS, engine="tok")
-    assert rx.find(text) == ac.find(text) == tok.find(text)
+    rx, tok = _engines(ROWS)
+    assert rx.find(text) == tok.find(text)
 
 
 WEIRD_ROWS = ROWS + [
@@ -88,10 +100,8 @@ WEIRD_ROWS = ROWS + [
 def test_engines_agree_weird_alias_property(text):
     """Aliases that start with a non-word char exercise the token-index
     engine's lookahead sweep + merged greedy tail."""
-    rx = AliasMatcher(WEIRD_ROWS, engine="regex")
-    ac = AliasMatcher(WEIRD_ROWS, engine="ac")
-    tok = AliasMatcher(WEIRD_ROWS, engine="tok")
-    assert rx.find(text) == ac.find(text) == tok.find(text)
+    rx, tok = _engines(WEIRD_ROWS)
+    assert rx.find(text) == tok.find(text)
 
 
 def test_engines_agree_random_dictionary():
@@ -102,37 +112,56 @@ def test_engines_agree_random_dictionary():
         alias = "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6))).strip()
         if alias:
             rows.append((alias, "R", str(i), alias.upper(), rng.random()))
-    rx = AliasMatcher(rows, engine="regex")
-    ac = AliasMatcher(rows, engine="ac")
-    tok = AliasMatcher(rows, engine="tok")
+    rx, tok = _engines(rows)
     for _ in range(300):
         text = "".join(rng.choice(alphabet + "xyz,.") for _ in range(rng.randint(0, 80)))
-        assert rx.find(text) == ac.find(text) == tok.find(text), text
+        assert rx.find(text) == tok.find(text), text
+
+
+def _regex_over_hits(rows, text):
+    """The regex engine over the rows whose alias occurs in ``text``: the
+    reference matches of a dictionary too big for the regex engine."""
+    m = AliasMatcher([r for r in rows if r[0] in text])
+    assert m.engine == "regex"
+    return m.find(text)
 
 
 def test_auto_threshold_selects_tok():
-    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(_AC_THRESHOLD)]
+    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(_TOK_THRESHOLD)]
     assert AliasMatcher(rows).engine == "tok"
+    assert AliasMatcher(rows[:-1]).engine == "regex"
     assert AliasMatcher(rows[:10]).engine == "regex"
     # identical results any way
     text = "alias7 and alias1999 and alias2048x"
-    assert (
-        AliasMatcher(rows, engine="ac").find(text)
-        == AliasMatcher(rows, engine="regex").find(text)
-        == AliasMatcher(rows, engine="tok").find(text)
-    )
+    assert AliasMatcher(rows).find(text) == _regex_over_hits(rows, text)
+    assert [f[2] for f in AliasMatcher(rows).find(text)] == ["alias7", "alias1999"]
 
 
-def test_auto_falls_back_to_ac_on_pathological_sharing():
-    # > _TOK_MAX_CANDIDATES aliases share the first token "tnf": a text
-    # repeating "tnf" would probe the whole candidate list per token, so
-    # auto must keep the dictionary-invariant automaton
+class CountingLookup(dict):
+    """The alias -> entity dict, counting the probes the matcher makes."""
+
+    probes = 0
+
+    def get(self, key, default=None):
+        self.probes += 1
+        return super().get(key, default)
+
+
+def test_tok_probes_are_bounded_on_pathological_sharing():
+    """Every alias shares the first token "tnf": a text repeating "tnf"
+    costs at most one probe per distinct alias length per token, not one
+    per alias, and no second engine is needed to stay worst-case safe."""
     rows = [
         (f"tnf {'x' * (i % 7)} v{i}", "V", str(i), f"A{i}", 1.0)
-        for i in range(_AC_THRESHOLD + 300)
+        for i in range(_TOK_THRESHOLD + 300)
     ]
     m = AliasMatcher(rows)
-    assert m.engine == "ac"
-    # explicit tok still works and agrees
-    text = "tnf x v3 and tnf v0 and tnf xx v9001"
-    assert AliasMatcher(rows, engine="tok").find(text) == m.find(text)
+    assert m.engine == "tok"
+    text = "tnf " * 2000 + "tnf x v1 and tnf  v0 and tnf xx v2340 tnf"
+    m.lookup = CountingLookup(m.lookup)
+    got = m.find(text)
+    assert got == _regex_over_hits(rows, text)
+    assert [f[2] for f in got] == ["tnf x v1", "tnf  v0", "tnf xx v2340"]
+    n_tokens = len(re.findall(r"[\w-]+", text))
+    n_lengths = len({len(r[0]) for r in rows})
+    assert 0 < m.lookup.probes <= n_tokens * n_lengths

@@ -154,6 +154,67 @@ def test_canonical_links_review_hardening(spark):
     assert got["w4"] == "https://a.org/uq"
 
 
+def test_canonical_links_rel_lists_and_relative_hrefs(spark):
+    """canonical may be any token of a rel list; a "/p" href resolves
+    against the page url's scheme and authority, a "//h/p" href against
+    its scheme; any other scheme-less href is NULL."""
+    from llm_text_to_knowledge_graph_spark.operators.urls import (
+        canonical_links,
+    )
+
+    rows = [
+        ("https://a.org/1", b'<link rel="alternate canonical" href="https://a.org/c">'),
+        ("https://a.org/2", b"<link rel='canonical alternate' href=https://a.org/d>"),
+        ("https://a.org:8443/x/3?q=1", b'<link rel="canonical" href="/p?a=1&amp;b=2">'),
+        ("http://a.org/4", b'<link href="//cdn.a.org/p" rel="canonical">'),
+        ("https://a.org/x/5", b'<link rel="canonical" href="p/q">'),
+        ("https://a.org/x/6", b'<link rel="canonical" href="../p">'),
+        ("u7", b'<link rel="canonical" href="/p">'),
+        ("https://a.org/8", b'<link rel="alternate" href="https://a.org/alt">'),
+    ]
+    df = spark.createDataFrame(rows, "url string, html binary")
+    got = {r["url"]: (r["canonical_url"], r["has_canonical"])
+           for r in canonical_links(df).collect()}
+    assert got == {
+        "https://a.org/1": ("https://a.org/c", True),
+        "https://a.org/2": ("https://a.org/d", True),
+        "https://a.org:8443/x/3?q=1": ("https://a.org:8443/p?a=1&b=2", True),
+        "http://a.org/4": ("http://cdn.a.org/p", True),
+        "https://a.org/x/5": (None, False),
+        "https://a.org/x/6": (None, False),
+        "u7": (None, False),
+        "https://a.org/8": (None, False),
+    }
+
+
+def test_canonical_links_href_cut_by_head_bound_is_null(spark):
+    """An href, or a rel token, that straddles the head bound yields NULL,
+    not the url's first bytes; the same tag wholly inside the bound is
+    read."""
+    from llm_text_to_knowledge_graph_spark.operators.urls import (
+        canonical_links,
+    )
+
+    tag = b'<link rel="canonical" href="https://a.org/a/long/canonical/path">'
+    cut = 8192 - tag.index(b"/path")  # the bound falls inside "/path"
+    # rel="canonicalized" cut to "canonical" by the bound is not canonical
+    rel_tag = b'<link href="https://a.org/c" rel="canonicalized">'
+    rows = [
+        ("cut-quoted", b" " * cut + tag),
+        ("cut-unquoted", b" " * cut + tag.replace(b'"', b"")),
+        ("cut-rel", b" " * (8192 - rel_tag.index(b"ized")) + rel_tag),
+        ("whole", b" " * (cut - 100) + tag),
+    ]
+    df = spark.createDataFrame(rows, "url string, html binary")
+    got = {r["url"]: r["canonical_url"] for r in canonical_links(df).collect()}
+    assert got == {
+        "cut-quoted": None,
+        "cut-unquoted": None,
+        "cut-rel": None,
+        "whole": "https://a.org/a/long/canonical/path",
+    }
+
+
 def test_resolve_redirects_review_hardening(spark):
     """Third review pass: max_hops=1 is an exact 1-hop budget (no
     silent round-up to 2), and NULL dsts never produce resolved-to-NULL

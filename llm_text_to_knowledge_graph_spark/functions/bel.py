@@ -274,10 +274,16 @@ def split_statement(stmt: str) -> tuple[str | None, str | None, str | None]:
 # Label / type extraction (convert_to_cx2.py:11-47 semantics).
 # ---------------------------------------------------------------------------
 
-_NS_VALUE_RE = re.compile(r':["\']?([^"\')]+)["\']?')
-_PMOD_RE = re.compile(r"pmod\(([a-zA-Z]+)")
-_LOC_RE = re.compile(r"loc\([a-zA-Z]+:([^\)]+)\)")
-_TYPE_RE = re.compile(r"([a-zA-Z]+)\(")
+# Python's re and Java's regex read these four the same way: the native
+# column forms (operators/graph.py::label_col/type_col) use the strings.
+_NS_VALUE_PAT = r':["\']?([^"\')]+)["\']?'
+_PMOD_PAT = r"pmod\(([a-zA-Z]+)"
+_LOC_PAT = r"loc\([a-zA-Z]+:([^)]+)\)"
+_TYPE_PAT = r"^([a-zA-Z]+)\("
+_NS_VALUE_RE = re.compile(_NS_VALUE_PAT)
+_PMOD_RE = re.compile(_PMOD_PAT)
+_LOC_RE = re.compile(_LOC_PAT)
+_TYPE_RE = re.compile(_TYPE_PAT)
 
 
 def extract_label(bel_expression: str) -> str:

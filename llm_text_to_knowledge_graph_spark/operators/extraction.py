@@ -48,9 +48,9 @@ from bisect import bisect_left
 from functools import lru_cache
 
 from ..functions.bel import NS_FUNC, make_term
+from ..sources.html_extract import _SENT_SPLIT_RE
 from .statements import _statement_stage, extract_from_sentence
 
-_SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
 # tokens whose trailing period is an abbreviation, not a sentence end
 # ("(Fig. 5A), cellular migration" must stay one sentence); "g"/"e" are
 # the final letters of "e.g."/"i.e.", "al" of "et al."

@@ -23,20 +23,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.bel import identifiers_url
+from ..functions.bel import (
+    _LOC_PAT,
+    _NS_VALUE_PAT,
+    _PMOD_PAT,
+    _TYPE_PAT,
+    identifiers_url,
+)
 from ..plans.ids import dense_ids
 
 
 # --- native (JVM-side, codegen'd) forms of the label/type extraction -------
-# Same regexes as functions/bel.py:232-235 (reference semantics:
-# convert_to_cx2.py:135-149). Staying inside WholeStageCodegen removes the
-# Arrow crossing from the node build entirely; parity with the Python forms
-# is pinned by tests/test_graph_hash_ids.py.
-
-_NS_VALUE_PAT = ':["\']?([^"\')]+)["\']?'
-_PMOD_PAT = r"pmod\(([a-zA-Z]+)"
-_LOC_PAT = r"loc\([a-zA-Z]+:([^)]+)\)"
-_TYPE_PAT = r"^([a-zA-Z]+)\("
+# The regexes of functions/bel.py's extract_label/extract_type (reference
+# semantics: convert_to_cx2.py:135-149). Staying inside WholeStageCodegen
+# removes the Arrow crossing from the node build entirely; parity with the
+# Python forms is pinned by tests/test_graph_hash_ids.py.
 
 
 def label_col(bel) -> F.Column:

@@ -8,9 +8,11 @@ sandbox has no Iceberg runtime jar, so this shim gives the minimal surface
   <root>/<table>/data-<token>/...parquet     (written first)
   <root>/<table>/manifest.json               (os.replace'd last => atomic)
 
-A stage is "already done" iff its manifest exists and carries the same
-input fingerprint — that is the resume contract (north_rule: resumable from
-checkpoint with per-partition lineage + metrics).
+One resume rule serves both stores (``resume_or_compute``): a stage
+resumes iff its committed manifest carries the caller's fingerprint, and is
+recomputed and committed under it otherwise. The caller makes the
+fingerprint name everything the table depends on (``run_pipeline``: input,
+engine, lexicon and stage name).
 
 A commit is one Spark job: the write. The manifest's ``rows`` and its
 per-file lineage (``partitions``: rows, ``url_min``/``url_max``,
@@ -71,10 +73,6 @@ class TableStore:
                 return json.load(f)
         except (FileNotFoundError, json.JSONDecodeError):
             return None
-
-    def is_current(self, name: str, fingerprint: str) -> bool:
-        m = self.manifest(name)
-        return m is not None and m.get("fingerprint") == fingerprint
 
     def read(
         self, spark: SparkSession, name: str, snapshot_id: str | None = None
@@ -170,20 +168,6 @@ class TableStore:
         os.replace(tmp, self._manifest_path(name))  # atomic publish
         self._gc(name, keep={s["data_dir"] for s in manifest["snapshots"]})
         return committed
-
-    def resume_or_compute(
-        self,
-        spark: SparkSession,
-        name: str,
-        fingerprint: str,
-        run_id: str,
-        compute,
-    ) -> tuple[DataFrame, bool]:
-        """Return (df, resumed). ``compute`` is a thunk producing the stage
-        DataFrame; it is NOT invoked when the snapshot is current."""
-        if self.is_current(name, fingerprint):
-            return self.read(spark, name), True
-        return self.commit(compute(), name, fingerprint, run_id), False
 
     # -- internals ------------------------------------------------------------
     @staticmethod
@@ -333,10 +317,10 @@ class IcebergTableStore:
       (row counts + column bounds per data file, richer than the shim's
       manifest rows and free)
 
-    Untestable in this sandbox (no runtime jar) — constructor fails fast if
-    the catalog is absent; selection is covered by ``make_table_store``
-    tests, and every method body is exercised against the shim through the
-    shared contract."""
+    Without the Iceberg runtime jar the constructor fails fast; selection is
+    covered by ``make_table_store`` tests, and ``manifest``/``read``/
+    ``commit`` are driven through ``resume_or_compute`` over a fake session
+    (tests/test_snapshots.py)."""
 
     def __init__(self, spark: SparkSession, namespace: str = "kg", catalog: str | None = None):
         self.spark = spark
@@ -381,10 +365,6 @@ class IcebergTableStore:
             pass
         return self.spark.read.table(self._t(name)).count()
 
-    def is_current(self, name: str, fingerprint: str) -> bool:
-        m = self.manifest(name)
-        return m is not None and m.get("fingerprint") == fingerprint
-
     def read(self, spark: SparkSession, name: str, snapshot_id: str | None = None) -> DataFrame:
         reader = spark.read.format("iceberg")
         if snapshot_id is not None:
@@ -409,13 +389,6 @@ class IcebergTableStore:
         )
         return df.sparkSession.read.table(self._t(name))
 
-    def resume_or_compute(
-        self, spark: SparkSession, name: str, fingerprint: str, run_id: str, compute
-    ) -> tuple[DataFrame, bool]:
-        if self.is_current(name, fingerprint):
-            return self.read(spark, name), True
-        return self.commit(compute(), name, fingerprint, run_id), False
-
     def write_metrics(self, metrics: list[dict]) -> None:
         df = self.spark.createDataFrame(
             [tuple(m[k] for k in _METRICS.names) for m in metrics], schema=_METRICS_DDL
@@ -425,6 +398,20 @@ class IcebergTableStore:
             df.writeTo(t).append()
         else:
             df.writeTo(t).using("iceberg").create()
+
+
+def resume_or_compute(
+    store, spark: SparkSession, name: str, fingerprint: str, run_id: str, compute
+) -> tuple[DataFrame, bool]:
+    """The resume rule, for either store: return ``(store.read(name), True)``
+    when the committed manifest of ``name`` carries ``fingerprint``, else
+    commit ``compute()`` under it and return ``(committed, False)``.
+    ``compute`` is a thunk producing the stage DataFrame; it is not invoked
+    on resume."""
+    m = store.manifest(name)
+    if m is not None and m["fingerprint"] == fingerprint:
+        return store.read(spark, name), True
+    return store.commit(compute(), name, fingerprint, run_id), False
 
 
 def make_table_store(

@@ -15,13 +15,17 @@ the same views:
   * lazy (workdir=None): one Catalyst plan end to end, no materialization.
   * checkpointed (workdir set): the kernel output is persisted once and
     each view commits an atomic snapshot via the TableStore shim with
-    per-partition lineage + a metrics row; a rerun with the same input
-    fingerprint resumes past completed stages (reference analog:
-    per-stage JSON checkpoints, main.py:55-98).
+    per-partition lineage + a metrics row (reference analog: per-stage JSON
+    checkpoints, main.py:55-98).
+
+One resume rule: a stage resumes iff its committed snapshot carries the
+run key (``input_token``, extractor, lexicon digest) joined to the stage
+name (``checkpoint.resume_or_compute``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import time
 
 from pyspark import StorageLevel
@@ -31,37 +35,31 @@ from pyspark.sql import functions as F
 from ..operators.fused import extract_fused
 from ..operators.graph import annotation_map, build_edges, build_nodes
 from ..operators.mentions import explode_mentions
-from .checkpoint import make_table_store
+from .checkpoint import make_table_store, resume_or_compute
 
-# extraction stages in commit order per extractor: (output key, stage name,
-# fingerprint suffix). The block engine's statements are their own table,
-# and its statements/triples fingerprints carry ":block"; nodes and edges
-# follow either way (with ``GRAPH_TOKEN``).
+# extraction stages in commit order per extractor: (output key, stage name).
+# The block engine's statements are their own table; nodes and edges follow
+# either way.
 EXTRACT_STAGES = {
     "sentence": (
-        ("paragraphs", "paragraphs", ""),
-        ("sentences", "sentences", ""),
-        ("mentions", "mentions", ""),
-        ("statements", "statements", ""),
-        ("triples", "triples", ""),
-        ("flat_mentions", "flat_mentions", ""),
+        ("paragraphs", "paragraphs"),
+        ("sentences", "sentences"),
+        ("mentions", "mentions"),
+        ("statements", "statements"),
+        ("triples", "triples"),
+        ("flat_mentions", "flat_mentions"),
     ),
     "block": (
-        ("paragraphs", "paragraphs", ""),
-        ("sentences", "sentences", ""),
-        ("mentions", "mentions", ""),
-        ("flat_mentions", "flat_mentions", ""),
-        ("statements", "statements_block", ":block"),
-        ("triples", "triples", ":block"),
+        ("paragraphs", "paragraphs"),
+        ("sentences", "sentences"),
+        ("mentions", "mentions"),
+        ("flat_mentions", "flat_mentions"),
+        ("statements", "statements_block"),
+        ("triples", "triples"),
     ),
 }
 
 _KEYS = ("url", "warc_ts", "para_idx")
-
-# nodes/edges fingerprint suffix: names the id scheme of the committed
-# graph tables, so a snapshot committed under another scheme's suffix
-# (":dense" from dense-id runs) is recomputed on resume, never served
-GRAPH_TOKEN = ":hash"
 
 
 def run_pipeline(
@@ -98,8 +96,16 @@ def run_pipeline(
     ``persist=True`` caches the kernel output and the nodes MEMORY_AND_DISK
     in lazy mode — without it the graph build re-executes the extraction
     once per downstream reference. The checkpointed mode always persists
-    the kernel output while its stages commit (and unpersists it after),
-    and reads every later stage from the parquet snapshots.
+    the kernel output while its stages commit (and unpersists it after,
+    also when a commit fails), and reads every later stage from the parquet
+    snapshots.
+
+    Checkpointed stages resume by one rule: a stage's fingerprint is
+    ``<input_token>:<extractor>:<lexicon digest>:<stage>`` (the digest a
+    sha256 over ``alias_rows``; ``input_token`` must name the pages), and a
+    committed snapshot is served iff it carries exactly that fingerprint.
+    A rerun with identical arguments resumes every stage; another extractor
+    or lexicon over the same workdir recomputes every stage.
 
     Nodes and edges carry content-addressed ids (``node_id_col`` /
     ``edge_id_col``); the edges are built from the triples alone.
@@ -110,19 +116,23 @@ def run_pipeline(
     """
     if extractor not in EXTRACT_STAGES:
         raise ValueError(f"unknown extractor {extractor!r}")
+    alias_rows = list(alias_rows)  # the digest must not use up a generator
     # real Iceberg when a SparkCatalog is configured, parquet shim here
     store = make_table_store(spark, workdir) if workdir else None
+    if store is not None:
+        lexicon = hashlib.sha256(repr(alias_rows).encode()).hexdigest()[:16]
+        run_key = f"{input_token}:{extractor}:{lexicon}"
     metrics: list[dict] = []
 
-    def stage(name: str, thunk, token_extra: str = ""):
+    def stage(name: str, thunk):
         if store is None:
             df = thunk()
             if persist and name == "nodes":
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
             return df
         t0 = time.monotonic()
-        df, resumed = store.resume_or_compute(
-            spark, name, f"{input_token}:{name}{token_extra}", run_id, thunk
+        df, resumed = resume_or_compute(
+            store, spark, name, f"{run_key}:{name}", run_id, thunk
         )
         m = store.manifest(name)
         metrics.append(
@@ -160,28 +170,21 @@ def run_pipeline(
             & F.col("obj").isNotNull()
         ),
     }
-    for key, name, token_extra in EXTRACT_STAGES[extractor]:
-        out[key] = stage(name, views[key], token_extra=token_extra)
-
-    triples = out["triples"]
-    ann_map = annotation_map(out["flat_mentions"])
-    nodes = stage(
-        "nodes",
-        lambda: build_nodes(triples, ann_map),
-        token_extra=GRAPH_TOKEN,
-    )
-    edges = stage(
-        "edges",
-        lambda: build_edges(triples),
-        token_extra=GRAPH_TOKEN,
-    )
-    out.update(nodes=nodes, edges=edges, metrics=metrics)
-    if store is not None:
-        base.unpersist()
-        if metrics:
-            # each store knows its own metrics sink (a parquet file written
-            # on the driver for the shim, an Iceberg metrics_log table for
-            # the catalog store)
-            store.write_metrics(metrics)
+    try:
+        for key, name in EXTRACT_STAGES[extractor]:
+            out[key] = stage(name, views[key])
+        triples = out["triples"]
+        ann_map = annotation_map(out["flat_mentions"])
+        out["nodes"] = stage("nodes", lambda: build_nodes(triples, ann_map))
+        out["edges"] = stage("edges", lambda: build_edges(triples))
+    finally:
+        if store is not None:
+            base.unpersist()
+    out["metrics"] = metrics
+    if metrics:
+        # each store knows its own metrics sink (a parquet file written on
+        # the driver for the shim, an Iceberg metrics_log table for the
+        # catalog store)
+        store.write_metrics(metrics)
     return out
 

@@ -119,11 +119,11 @@ def test_renumber_for_export_dense_and_consistent(spark, triples):
     assert rendered == _name_level_edges(hn, he)
 
 
-def test_checkpoint_fingerprint_includes_id_strategy(spark, tmp_path):
-    """A workdir whose nodes/edges snapshots were committed under the
-    ":dense" fingerprint (dense-id graph tables) resumes the extraction
-    stages and recomputes nodes/edges as hash-addressed tables instead of
-    serving the dense snapshots."""
+def test_checkpoint_recomputes_graph_tables_of_another_fingerprint(spark, tmp_path):
+    """A workdir whose nodes/edges snapshots were committed as dense-id
+    tables under another fingerprint resumes the extraction stages and
+    recomputes nodes/edges as hash-addressed tables instead of serving the
+    dense snapshots: a stage resumes only under its own run's fingerprint."""
     from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows, pages_df
     from llm_text_to_knowledge_graph_spark.operators.graph import annotation_map
     from llm_text_to_knowledge_graph_spark.plans.checkpoint import make_table_store

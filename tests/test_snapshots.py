@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql.types import TimestampType
 
 from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows, pages_df
-from llm_text_to_knowledge_graph_spark.plans.checkpoint import TableStore
+from llm_text_to_knowledge_graph_spark.plans.checkpoint import TableStore, resume_or_compute
 from llm_text_to_knowledge_graph_spark.plans.pipeline import EXTRACT_STAGES, run_pipeline
 
 _RESCAN = TableStore._lineage  # the groupBy(input_file_name()) reference
@@ -67,7 +67,9 @@ def test_iceberg_store_manifest_contract(spark, tmp_path):
     """Both stores must return the manifest keys run_pipeline consumes
     ('rows' especially — pipeline.py reads m["rows"] after every stage) and
     expose write_metrics. Regression test for the contract break where the
-    Iceberg manifest lacked 'rows' and _write_metrics assumed store.root."""
+    Iceberg manifest lacked 'rows' and _write_metrics assumed store.root.
+    The shared resume rule drives the Iceberg store too: the committed
+    fingerprint reads the table without computing, another one commits."""
     from pyspark.sql import Row
 
     from llm_text_to_knowledge_graph_spark.plans.checkpoint import IcebergTableStore
@@ -79,7 +81,44 @@ def test_iceberg_store_manifest_contract(spark, tmp_path):
         def collect(self):
             return self.rows
 
+    calls = []
+
+    class FakeWriter:
+        """``df.writeTo(t)`` chain; records the properties it commits."""
+
+        def __init__(self, table):
+            self.table, self.props = table, {}
+
+        def using(self, fmt):
+            assert fmt == "iceberg"
+            return self
+
+        def tableProperty(self, k, v):
+            self.props[k] = v
+            return self
+
+        def createOrReplace(self):
+            calls.append(("commit", self.table, self.props))
+
+    class FakeReader:
+        def format(self, fmt):
+            assert fmt == "iceberg"
+            return self
+
+        def table(self, t):
+            calls.append(("read", t))
+            return f"table {t}"
+
+    class FakeFrame:
+        def __init__(self, session):
+            self.sparkSession = session
+
+        def writeTo(self, t):
+            return FakeWriter(t)
+
     class FakeSpark:
+        read = FakeReader()
+
         def sql(self, q):
             if q.startswith("SHOW TBLPROPERTIES"):
                 return FakeResult(
@@ -97,6 +136,22 @@ def test_iceberg_store_manifest_contract(spark, tmp_path):
     ice.catalog, ice.ns = "demo", "kg"
     m = ice.manifest("t")
     assert m == {"table": "t", "fingerprint": "f1", "run_id": "r1", "rows": 42}
+
+    def must_not_compute():
+        raise AssertionError("a current snapshot must not be recomputed")
+
+    df, resumed = resume_or_compute(ice, ice.spark, "t", "f1", "r2", must_not_compute)
+    assert (df, resumed) == ("table demo.kg.t", True)
+    assert calls == [("read", "demo.kg.t")]
+    calls.clear()
+    df, resumed = resume_or_compute(
+        ice, ice.spark, "t", "f2", "r2", lambda: FakeFrame(ice.spark)
+    )
+    assert (df, resumed) == ("table demo.kg.t", False)
+    assert calls == [
+        ("commit", "demo.kg.t", {"kg.fingerprint": "f2", "kg.run_id": "r2"}),
+        ("read", "demo.kg.t"),
+    ]
 
     shim = TableStore(str(tmp_path / "contract"))
     shim.commit(spark.range(0, 5).withColumnRenamed("id", "v"), "t", "f1", "r1")
@@ -335,6 +390,69 @@ def test_resumed_run_runs_no_job(spark, checkpointed_run, tmp_path):
     for key in tables:
         assert again[key].schema == fresh[key].schema, key
         assert _sorted_rows(again[key]) == _sorted_rows(fresh[key]), key
+
+
+def _run_t(spark, workdir, extractor="sentence", lexicon=None):
+    """A checkpointed run of the 20 seed-8 pages, always under input_token
+    "t": only the extractor and the lexicon vary."""
+    return run_pipeline(
+        spark, pages_df(spark, 20, seed=8),
+        build_alias_rows(8) if lexicon is None else lexicon,
+        workdir=workdir, input_token="t", run_id=extractor, extractor=extractor,
+    )
+
+
+def _assert_recomputed_as_fresh(again, fresh):
+    assert [m["stage"] for m in again["metrics"]] == [
+        m["stage"] for m in fresh["metrics"]
+    ]
+    assert not any(m["resumed"] for m in again["metrics"])
+    for key in [k for k in fresh if k != "metrics"]:
+        assert _sorted_rows(again[key]) == _sorted_rows(fresh[key]), key
+
+
+def test_other_extractor_over_one_workdir_recomputes_every_stage(spark, tmp_path):
+    """A block run over a sentence run's workdir, under the same
+    input_token, recomputes every stage and gives a fresh block run's
+    nodes and edges, not the sentence run's."""
+    wd = str(tmp_path / "wd")
+    first = _sorted_rows(_run_t(spark, wd, "sentence")["edges"])
+    again = _run_t(spark, wd, "block")
+    fresh = _run_t(spark, str(tmp_path / "fresh"), "block")
+    _assert_recomputed_as_fresh(again, fresh)
+    assert _sorted_rows(fresh["edges"]) != first
+
+
+def test_other_lexicon_recomputes_every_stage(spark, tmp_path):
+    """A rerun with half the lexicon (passed as a generator, which the run
+    reads once for its digest and once for the kernel) recomputes every
+    stage and equals a fresh run with that lexicon."""
+    lexicon = build_alias_rows(8)
+    half = lexicon[: len(lexicon) // 2]
+    wd = str(tmp_path / "wd")
+    first = _sorted_rows(_run_t(spark, wd, lexicon=lexicon)["edges"])
+    again = _run_t(spark, wd, lexicon=iter(half))
+    fresh = _run_t(spark, str(tmp_path / "fresh"), lexicon=half)
+    _assert_recomputed_as_fresh(again, fresh)
+    assert _sorted_rows(fresh["edges"]) != first
+
+
+def test_failed_commit_unpersists_kernel_output(spark, tmp_path, monkeypatch):
+    """A checkpointed run whose triples commit raises still unpersists the
+    kernel output it cached: the session's cache is left empty."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    commit = TableStore.commit
+
+    def failing(self, df, name, fingerprint, run_id):
+        if name == "triples":
+            raise RuntimeError("triples commit failed")
+        return commit(self, df, name, fingerprint, run_id)
+
+    monkeypatch.setattr(TableStore, "commit", failing)
+    with pytest.raises(RuntimeError, match="triples commit failed"):
+        _run_t(spark, str(tmp_path / "wd"))
+    assert cache.isEmpty()
 
 
 def test_metrics_log_appends(spark, tmp_path):

@@ -392,8 +392,8 @@ def gold_df(spark, n_docs: int, seed: int = SEED_DEFAULT, partitions: int | None
     return spark.range(0, n_docs, numPartitions=parts).mapInPandas(gen, schema=GOLD_TRIPLES)
 
 
-def alias_df(spark, seed: int = SEED_DEFAULT):
+def alias_df(spark):
     """The broadcast grounding dictionary as a DataFrame (FIXTURES.md F2)."""
     from .schemas import ALIAS_DICT
 
-    return spark.createDataFrame(build_alias_rows(seed), schema=ALIAS_DICT)
+    return spark.createDataFrame(build_alias_rows(SEED_DEFAULT), schema=ALIAS_DICT)

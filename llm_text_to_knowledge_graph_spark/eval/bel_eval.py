@@ -182,7 +182,6 @@ def match_score(p1: dict, p2: dict) -> float:
 def match_group(
     pred_statements: list[str],
     gold_statements: list[str],
-    threshold: float = 0.5,
     method: str = "greedy",
 ) -> list[dict]:
     """1:1 bipartite matching within one evidence group.
@@ -202,14 +201,14 @@ def match_group(
         from .hungarian import max_score_assignment
 
         for i, j in max_score_assignment(scores):
-            if scores[i][j] >= threshold:
+            if scores[i][j] >= 0.5:
                 assigned.append((scores[i][j], i, j))
     else:
         candidates = [
             (s, i, j)
             for i, row in enumerate(scores)
             for j, s in enumerate(row)
-            if s >= threshold
+            if s >= 0.5
         ]
         # sort desc by score; stable deterministic tie-break on (-score, i, j)
         candidates.sort(key=lambda t: (-t[0], t[1], t[2]))

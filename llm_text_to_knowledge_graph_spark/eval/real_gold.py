@@ -91,7 +91,7 @@ def extract_predictions(blocks: list[dict], lexicon: list | None = None) -> list
     ]
 
 
-def score_blocks(blocks: list[dict], threshold: float = 0.5) -> dict:
+def score_blocks(blocks: list[dict]) -> dict:
     """E3–E5 semantics per block; returns the overall P/R summary plus the
     per-block match rows (for the driver query / test table)."""
     from .bel_eval import match_group
@@ -99,7 +99,7 @@ def score_blocks(blocks: list[dict], threshold: float = 0.5) -> dict:
     rows = []
     matched = exact = pred_total = gold_total = 0
     for b in blocks:
-        for r in match_group(b["pred"], b["gold"], threshold=threshold):
+        for r in match_group(b["pred"], b["gold"]):
             rows.append({"key": b["key"], **r})
             if r["match_type"] in ("exact_match", "core_match"):
                 matched += 1

@@ -382,7 +382,7 @@ def categorize_miss(
     return "pattern_gap"
 
 
-def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
+def audit_misses(pmid: str) -> dict:
     """Run the paper eval and return every gold_only miss with its
     mechanical category: {"counts": {cat: n}, "misses": [{key, category,
     gold}]}. The audit is the machine-checkable form of the docstring
@@ -394,8 +394,7 @@ def audit_misses(pmid: str, lexicon: list | None = None) -> dict:
     from ..operators.mentions import AliasMatcher
     from .real_gold import score_blocks
 
-    if lexicon is None:
-        lexicon = PAPER_LEXICONS[pmid]
+    lexicon = PAPER_LEXICONS[pmid]
     matcher = AliasMatcher(lexicon)
     path = os.path.join(GOLD_BEL_DIR, f"pmid{pmid}.bel")
     blocks = parse_bel_file(path)

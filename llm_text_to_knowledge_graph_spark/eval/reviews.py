@@ -81,9 +81,7 @@ def _draw(idx: Column, reviewer: Column, criterion: Column, seed: int) -> Column
     )
 
 
-def synth_reviews(
-    ids: DataFrame, id_col: str = "doc_id", seed: int = 11
-) -> DataFrame:
+def synth_reviews(ids: DataFrame, seed: int = 11) -> DataFrame:
     """Expand an id table into a long (idx, reviewer, criterion, marked) table.
 
     One explode per axis — map-side only, no shuffle; the campaign table is
@@ -92,7 +90,7 @@ def synth_reviews(
     revs = F.array(*[F.lit(r) for r in REVIEWERS])
     crits = F.array(*[F.lit(c) for c in CRITERIA])
     long = (
-        ids.select(F.col(id_col).cast("long").alias("idx"))
+        ids.select(F.col("doc_id").cast("long").alias("idx"))
         .select("idx", F.explode(revs).alias("reviewer"))
         .select("idx", "reviewer", F.explode(crits).alias("criterion"))
     )

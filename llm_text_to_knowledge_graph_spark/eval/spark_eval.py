@@ -35,9 +35,7 @@ MATCH_SCHEMA = StructType(
 )
 
 
-def match_statements(
-    pred: DataFrame, gold: DataFrame, threshold: float = 0.5
-) -> DataFrame:
+def match_statements(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """pred/gold: DataFrames with (url, evidence, bel_statement).
     Returns one row per matched pair / unmatched statement.
 
@@ -77,7 +75,7 @@ def match_statements(
             stmt = grp["stmt"].to_numpy()
             preds = [s for s, sd in zip(stmt, side) if sd == "pred"]
             golds = [s for s, sd in zip(stmt, side) if sd == "gold"]
-            for r in match_group(preds, golds, threshold=threshold):
+            for r in match_group(preds, golds):
                 out["url"].append(url)
                 out["evidence"].append(evidence)
                 out["pred_statement"].append(r["pred_statement"])

@@ -46,12 +46,11 @@ def _network_attributes(
     name: str | None,
     description: str | None,
     reference: str | None,
-    now: _dt.datetime | None = None,
 ) -> dict:
     # P10 naming fallback chain (main.py:165-183): explicit name, else
     # timestamped default
     if not name:
-        stamp = (now or _dt.datetime.now(_dt.timezone.utc)).strftime("%Y%m%d_%H%M")
+        stamp = _dt.datetime.now(_dt.timezone.utc).strftime("%Y%m%d_%H%M")
         name = f"KG_network_{stamp}"
     attrs = {"name": name}
     if description:

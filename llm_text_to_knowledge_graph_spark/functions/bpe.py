@@ -39,31 +39,26 @@ def _word_syms(word: str) -> tuple[str, ...]:
     return tuple(word[:-1]) + (word[-1] + EOW,) if word else ()
 
 
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int = 200,
-    text_col: str = "text",
-    sample_rows: int = 2000,
-) -> list[tuple[str, str]]:
-    """Fit ``n_merges`` BPE merge rules on (at most ``sample_rows`` of)
+def bpe_train(docs: DataFrame, n_merges: int = 200) -> list[tuple[str, str]]:
+    """Fit ``n_merges`` BPE merge rules on (the 2000 most frequent words of)
     the corpus. Returns the ordered merge list — a plain, serializable
     value (store it next to the corpus; the tokenizer IS this list).
 
     The sample collects ``(word, count)`` AGGREGATES, not raw text: the
-    driver sees at most ``sample_rows`` distinct words regardless of
+    driver sees at most 2000 distinct words regardless of
     corpus size, and Spark does the heavy word counting as one
     explode + partial-agg groupBy."""
     words = (
         docs.select(
             F.explode(
-                F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
+                F.split(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " ")
             ).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), "w")
-        .limit(sample_rows)
+        .limit(2000)
         .collect()
     )
     vocab: dict[tuple[str, ...], int] = {
@@ -114,28 +109,20 @@ def bpe_encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return syms
 
 
-def bpe_encode_df(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_tokens: bool = False,
-) -> DataFrame:
+def bpe_encode_df(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenize the corpus with a frozen merge table: (doc_id, n_words,
-    n_tokens[, tokens]). ONE mapInPandas crossing; the merge table rides
+    n_tokens). ONE mapInPandas crossing; the merge table rides
     in the closure (KBs — broadcast-by-serialization is fine at this
     size), and per-word encodings are memoized per batch, so the Python
     cost is per DISTINCT word, not per occurrence."""
     ranks = {pair: i for i, pair in enumerate(merges)}
-    schema = f"{id_col} long, n_words long, n_tokens long" + (
-        ", tokens array<string>" if keep_tokens else ""
-    )
+    schema = "doc_id long, n_words long, n_tokens long"
 
     def enc(batches):
         cache: dict[str, list[str]] = {}
         for pdf in batches:
             rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 words = str(text).lower().split()
                 toks: list[str] = []
                 for w in words:
@@ -143,10 +130,7 @@ def bpe_encode_df(
                     if got is None:
                         got = cache[w] = bpe_encode_word(w, ranks)
                     toks.extend(got)
-                row = {id_col: did, "n_words": len(words), "n_tokens": len(toks)}
-                if keep_tokens:
-                    row["tokens"] = toks
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[c.split(" ")[0] for c in schema.split(", ")])
+                rows.append((did, len(words), len(toks)))
+            yield pd.DataFrame(rows, columns=["doc_id", "n_words", "n_tokens"])
 
-    return docs.select(id_col, text_col).mapInPandas(enc, schema=schema)
+    return docs.select("doc_id", "text").mapInPandas(enc, schema=schema)

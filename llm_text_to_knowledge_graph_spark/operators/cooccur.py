@@ -12,43 +12,26 @@ Plan shape: the item table is deduped per id (one partial-agg distinct),
 marginals are ONE groupBy, the pair counts are ONE within-id self-join +
 ONE partial-agg groupBy, and N rides as a 1-row broadcast crossJoin —
 no driver action. The self-join is the cost model: Σ m_id² over items
-per id, which is why ``max_items_per_id`` exists — at web scale a
-boilerplate-heavy page mentioning 10^3 entities contributes 10^6 pairs
-of near-zero PMI each; capping to the lexicographically-first items is
-deterministic and engine-replayable (the SQL oracle replays the same
-cap). The same Σm² bound as semantic_dedup's cell self-join, with the
-cap playing the role K plays there.
+per id — at web scale a boilerplate-heavy page mentioning 10^3 entities
+contributes 10^6 pairs of near-zero PMI each.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pmi_pairs(
-    items: DataFrame,
-    id_col: str = "doc_id",
-    item_col: str = "item",
-    min_pair_count: int = 1,
-    max_items_per_id: int | None = None,
-) -> DataFrame:
+def pmi_pairs(items: DataFrame) -> DataFrame:
     """(item_a, item_b, n_pair, df_a, df_b, pmi) for every unordered
     co-occurring pair; pmi = ln(n_pair * N / (df_a * df_b)) with N the
     number of distinct ids, df_* document frequencies. Duplicate
     (id, item) rows are collapsed first — presence, not multiplicity,
     is the PMI event."""
     it = items.select(
-        F.col(id_col).alias("_id"), F.col(item_col).alias("_item")
+        F.col("doc_id").alias("_id"), F.col("item").alias("_item")
     ).distinct()
-    if max_items_per_id is not None:
-        w = Window.partitionBy("_id").orderBy("_item")
-        it = (
-            it.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_items_per_id)
-            .drop("_rn")
-        )
-    # compute-once: `it` (the distinct + optional cap window) fans out to
+    # compute-once: `it` (the distinct) fans out to
     # FOUR consumers — n_ids, df_i, and both self-join sides. Without
     # the materialization each consumer's job re-executes the distinct
     # (and the broadcast build of n_ids is its own job — see
@@ -70,8 +53,6 @@ def pmi_pairs(
         .groupBy("item_a", "item_b")
         .agg(F.count(F.lit(1)).alias("n_pair"))
     )
-    if min_pair_count > 1:
-        pairs = pairs.filter(F.col("n_pair") >= min_pair_count)
     dfa = df_i.select(
         F.col("_item").alias("item_a"), F.col("_df").alias("df_a")
     )

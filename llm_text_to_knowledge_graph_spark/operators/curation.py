@@ -17,13 +17,7 @@ from pyspark.sql import functions as F
 from .dedup import _grams
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C recipe): flag every
     training document that shares at least one word ``n``-gram with an
     evaluation benchmark. Returns one row per doc with the count of
@@ -44,13 +38,13 @@ def decontaminate(
     DuckDB oracle counts string grams and stays value-identical.
     """
     bench_grams = (
-        benchmark.select(F.explode(_grams(F.col(text_col), n)).alias("g"))
+        benchmark.select(F.explode(_grams(F.col("text"), n)).alias("g"))
         .select(F.xxhash64("g").alias("gram"))
         .distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_grams(F.col(text_col), n)).alias("g"),
+        F.col("doc_id"),
+        F.explode(_grams(F.col("text"), n)).alias("g"),
     ).select("doc_id", F.xxhash64("g").alias("gram"))
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gram")
@@ -58,7 +52,7 @@ def decontaminate(
         .agg(F.count("*").alias("n_hit_grams"))
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id"))
         .join(hits, "doc_id", "left")
         .select(
             "doc_id",
@@ -72,15 +66,12 @@ def blocklist_filter(
     docs: DataFrame,
     blocked_keys: list[str] = (),
     blocked_terms: list[str] = (),
-    key_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """C4-style blocklist pass (Raffel et al. 2020 §2.2): drop documents
     whose source/domain key is on a blocked list OR whose text contains any
     blocked term as a whole lowercased word. Returns one audit row per doc
     (clean keeps positively certified, like :func:`decontaminate`):
-    ``(id_col, key_blocked, n_blocked_terms, blocked)``.
+    ``(doc_id, key_blocked, n_blocked_terms, blocked)``.
 
     Scale shape: blocklists are curation artifacts (10²-10⁴ entries), so
     both live as LITERAL arrays inside the scan stage — the whole pass is
@@ -92,7 +83,7 @@ def blocklist_filter(
     broadcast semi-join.
     """
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^a-z0-9]+"), lambda t: t != ""
+        F.split(F.lower(F.col("text")), r"[^a-z0-9]+"), lambda t: t != ""
     )
     blocked_lit = F.array(*[F.lit(t.lower()) for t in blocked_terms])
     n_terms = (
@@ -105,12 +96,12 @@ def blocklist_filter(
         else F.lit(0)
     )
     key_blocked = (
-        F.col(key_col).isin([k for k in blocked_keys])
+        F.col("source").isin([k for k in blocked_keys])
         if blocked_keys
         else F.lit(False)
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(key_blocked, F.lit(False)).alias("key_blocked"),
         n_terms.cast("long").alias("n_blocked_terms"),
         (
@@ -145,8 +136,6 @@ def stratified_hash_sample(
     rates: dict[str, float],
     default_rate: float = 0.0,
     seed: int = 42,
-    id_col: str = "doc_id",
-    group_col: str = "lang",
 ) -> DataFrame:
     """Per-group deterministic sampling — the corpus-balancing pass (e.g.
     downsample English to upsample the long tail by ratio). Same md5 draw
@@ -164,18 +153,12 @@ def stratified_hash_sample(
           for x in (F.lit(g), F.lit(format(int(r * (1 << 32)), "08x")))]
     )
     default = F.lit(format(int(default_rate * (1 << 32)), "08x"))
-    threshold = F.coalesce(mapping[F.col(group_col)], default)
-    key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}")))
+    threshold = F.coalesce(mapping[F.col("lang")], default)
+    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}")))
     return docs.filter(F.substring(key, 1, 8) < threshold)
 
 
-def chunk_docs(
-    docs: DataFrame,
-    size: int = 128,
-    overlap: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_docs(docs: DataFrame, size: int = 128, overlap: int = 32) -> DataFrame:
     """Split documents into overlapping token windows (the RAG/embedding
     chunking pass): chunk ``k`` covers tokens ``[k*stride+1, k*stride+size]``
     with ``stride = size - overlap``; a doc at or under ``size`` tokens is
@@ -187,7 +170,7 @@ def chunk_docs(
     if overlap >= size:
         raise ValueError("overlap must be < size")
     stride = size - overlap
-    toks = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
+    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
     n_tok = F.size(toks)
     n_chunks = F.when(n_tok <= size, F.lit(1)).otherwise(
         F.ceil((n_tok - size) / F.lit(float(stride))).cast("int") + 1
@@ -197,7 +180,7 @@ def chunk_docs(
         lambda k: F.concat_ws(" ", F.slice(toks, k * stride + 1, size)),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         n_tok.cast("long").alias("n_tokens"),
         F.posexplode(windows).alias("chunk_id", "chunk_text"),
     ).select(
@@ -211,20 +194,14 @@ def chunk_docs(
 _PACK_SCHEMA = "doc_id long, shard long, n_tokens long, seq_id long"
 
 
-def pack_greedy(
-    docs: DataFrame,
-    budget: int = 512,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_greedy(docs: DataFrame, budget: int = 512, n_shards: int = 8) -> DataFrame:
     """Greedy sequence packing: assign documents to training sequences of
     at most ``budget`` whitespace tokens. Docs are sharded by
     ``pmod(doc_id, n_shards)`` and packed greedily in doc_id order within
     each shard (a doc that would overflow closes the bin; docs longer than
     the budget get a bin alone). ``seq_id = shard * 1_000_000 + bin`` is
     globally unique and a pure function of the input — rerunnable.
-    ``id_col`` must be integral: it is the ``pmod`` shard key and the
+    ``doc_id`` must be integral: it is the ``pmod`` shard key and the
     ``long`` doc_id of the output, so a non-numeric string id fails the
     job under ANSI mode (``CAST_INVALID_INPUT``).
 
@@ -237,11 +214,11 @@ def pack_greedy(
     fill converges to the same ~budget utilization.
     """
     base = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.size(F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " "))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.size(F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " "))
         .cast("long")
         .alias("n_tokens"),
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("long").alias("shard"),
+        F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("long").alias("shard"),
     )
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -261,17 +238,12 @@ def pack_greedy(
     return base.groupBy("shard").applyInPandas(_pack, _PACK_SCHEMA)
 
 
-def line_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """C4-style cross-corpus line deduplication: every distinct line keeps
     exactly ONE occurrence across the whole corpus — the lexicographically
     first (min doc_id, then min position), a deterministic rule — and all
     other occurrences are removed. Returns the re-assembled cleaned text
-    plus kept/dropped line counts, keyed by the raw ``id_col`` value; docs
+    plus kept/dropped line counts, keyed by the raw ``doc_id`` value; docs
     whose every line was dropped disappear (callers union them back as
     empties if required).
 
@@ -284,9 +256,9 @@ def line_dedup(
     removed) and is absorbed by the partial agg, not a salted join.
     """
     lines = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), sep, -1)).cast("long").alias("n_lines"),
-        F.posexplode(F.split(F.col(text_col), sep, -1)).alias("pos", "line"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), "\n", -1)).cast("long").alias("n_lines"),
+        F.posexplode(F.split(F.col("text"), "\n", -1)).alias("pos", "line"),
     )
     keeper = lines.groupBy("line").agg(F.min(F.struct("doc_id", "pos")).alias("k"))
     kept = lines.join(keeper, "line").filter(
@@ -300,7 +272,7 @@ def line_dedup(
         )
         .select(
             "doc_id",
-            F.concat_ws(sep, F.transform("ls", lambda s: s["line"])).alias("text"),
+            F.concat_ws("\n", F.transform("ls", lambda s: s["line"])).alias("text"),
             F.size("ls").cast("long").alias("n_lines_kept"),
             (F.col("n_lines") - F.size("ls")).cast("long").alias("n_lines_dropped"),
         )
@@ -310,9 +282,6 @@ def line_dedup(
 def strip_host_boilerplate(
     docs: DataFrame,
     host_col: str = "host",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
     min_docs: int = 2,
     max_doc_frac: float = 0.5,
 ) -> DataFrame:
@@ -339,14 +308,14 @@ def strip_host_boilerplate(
     lines ARE the skew and are absorbed by the partial aggs.
     Deterministic; the SQL oracle replays the thresholds exactly.
 
-    Every document comes back, keyed by its raw ``id_col`` value: one
+    Every document comes back, keyed by its raw ``doc_id`` value: one
     whose every line is boilerplate as ``text = ''`` with
     ``n_lines_kept = 0``, and one whose text is NULL with NULL text and 0
     lines kept or dropped."""
-    split = F.split(F.col(text_col), sep, -1)
+    split = F.split(F.col("text"), "\n", -1)
     lines = docs.select(
         F.col(host_col).alias("host"),
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.when(split.isNull(), 0).otherwise(F.size(split)).cast("long").alias(
             "n_lines"
         ),
@@ -360,7 +329,7 @@ def strip_host_boilerplate(
         .agg(F.count(F.lit(1)).alias("_df"))
     )
     host_docs = docs.groupBy(F.col(host_col).alias("host")).agg(
-        F.countDistinct(F.col(id_col)).alias("_nd")
+        F.countDistinct(F.col("doc_id")).alias("_nd")
     )
     boiler = (
         df_line.join(host_docs, "host")
@@ -390,7 +359,7 @@ def strip_host_boilerplate(
             "doc_id",
             F.when(
                 F.col("n_lines") > 0,
-                F.concat_ws(sep, F.transform("ls", lambda s: s["line"])),
+                F.concat_ws("\n", F.transform("ls", lambda s: s["line"])),
             ).alias("text"),
             F.size("ls").cast("long").alias("n_lines_kept"),
             (F.col("n_lines") - F.size("ls")).cast("long").alias(
@@ -404,7 +373,6 @@ def cap_per_key(
     docs: DataFrame,
     n: int,
     key_col: str = "domain",
-    id_col: str = "doc_id",
     seed: int = 42,
     pre_salt: int = 0,
 ) -> DataFrame:
@@ -428,18 +396,18 @@ def cap_per_key(
     """
     from pyspark.sql import Window
 
-    draw = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}")))
+    draw = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}")))
     out = docs.withColumn("_draw", draw)
     if pre_salt:
-        salt = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(pre_salt))
-        w_pre = Window.partitionBy(key_col, "_salt").orderBy("_draw", id_col)
+        salt = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(pre_salt))
+        w_pre = Window.partitionBy(key_col, "_salt").orderBy("_draw", "doc_id")
         out = (
             out.withColumn("_salt", salt)
             .withColumn("_rn", F.row_number().over(w_pre))
             .filter(F.col("_rn") <= n)
             .drop("_rn", "_salt")
         )
-    w = Window.partitionBy(key_col).orderBy("_draw", id_col)
+    w = Window.partitionBy(key_col).orderBy("_draw", "doc_id")
     return (
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
@@ -458,12 +426,12 @@ REDACT_PATTERNS = (
 )
 
 
-def redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact(docs: DataFrame) -> DataFrame:
     """Replace urls / emails / IPv4 literals with typed placeholder tokens —
     the standard pre-training scrub pass. Pure chained ``regexp_replace``
     column expressions: JVM codegen, rides inside the scan stage, zero
     shuffles, zero Python."""
-    col = F.col(text_col)
+    col = F.col("text")
     for pat, rep in REDACT_PATTERNS:
         col = F.regexp_replace(col, pat, rep)
-    return docs.withColumn(text_col, col)
+    return docs.withColumn("text", col)

@@ -28,14 +28,14 @@ from pyspark.sql.types import LongType
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """One row per distinct text: canonical (min id) + duplicate count.
     Shuffles once on md5(text) — never on the raw text bytes."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("text_hash"))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
@@ -63,8 +63,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via an inverted n-gram index:
@@ -81,7 +79,7 @@ def ngram_jaccard_pairs(
     LOWER BOUND on the true similarity — the filter can only lose recall on
     pairs whose overlap is mostly stop-grams, never emit false positives."""
     grams = docs.select(
-        F.col(id_col).alias("id"), _grams(F.col(text_col), n).alias("grams")
+        F.col("doc_id").alias("id"), _grams(F.col("text"), n).alias("grams")
     ).withColumn("n_grams", F.size("grams"))
     exploded = grams.select("id", "n_grams", F.explode("grams").alias("gram"))
     if max_doc_freq is not None:
@@ -120,10 +118,7 @@ def ngram_jaccard_pairs(
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
-    num_hash_tables: int = 8,
     max_jaccard_distance: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Approximate near-dup pairs: shingle -> HashingTF (binary) -> MinHashLSH
     approxSimilarityJoin. Sub-quadratic banding; the scale path for fuzzy
@@ -131,11 +126,11 @@ def minhash_lsh_pairs(
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     grams = docs.select(
-        F.col(id_col).alias("id"), _grams(F.col(text_col), n).alias("grams")
+        F.col("doc_id").alias("id"), _grams(F.col("text"), n).alias("grams")
     ).filter(F.size("grams") > 0)
     tf = HashingTF(inputCol="grams", outputCol="features", numFeatures=1 << 18, binary=True)
     feats = tf.transform(grams)
-    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
+    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
     model = mh.fit(feats)
     joined = model.approxSimilarityJoin(feats, feats, max_jaccard_distance, distCol="jaccard_dist")
     return (
@@ -157,7 +152,6 @@ def minhash_det_signatures(
     docs: DataFrame,
     n: int = 1,
     num_hashes: int = 16,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """MinHash signatures with NO fitted model and NO engine-private seeds:
@@ -175,7 +169,7 @@ def minhash_det_signatures(
     ``num_hashes`` MIN aggregates (map-side partial agg applies, so the
     shuffle moves one 16-string row per doc per mapper, not the grams)."""
     grams = docs.select(
-        F.col(id_col).alias("id"), F.explode(_grams(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("id"), F.explode(_grams(F.col(text_col), n)).alias("gram")
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("gram")))).alias(f"h{j}")
@@ -190,8 +184,6 @@ def minhash_det_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     min_est: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Candidate near-dup pairs from deterministic MinHash signatures via
     classic banding: split the signature into ``bands`` bands of
@@ -204,7 +196,7 @@ def minhash_det_pairs(
     Self-join carries the signature array through the band join (≈0.5 KB/row
     at 16 hashes) rather than re-joining pairs back to the signature table —
     one shuffle instead of three at 100 TB."""
-    banded = minhash_det_banded(docs, n, num_hashes, bands, id_col, text_col)
+    banded = minhash_det_banded(docs, n, num_hashes, bands)
     a = banded.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "key")
     b = banded.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "key")
     return (
@@ -233,7 +225,6 @@ def minhash_det_banded(
     n: int = 1,
     num_hashes: int = 16,
     bands: int = 4,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Exploded banded signature rows ``(id, sig, band, key)`` — the
@@ -243,7 +234,7 @@ def minhash_det_banded(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sig = minhash_det_signatures(docs, n, num_hashes, id_col, text_col)
+    sig = minhash_det_signatures(docs, n, num_hashes, text_col)
     sig = sig.withColumn(
         "sig", F.array(*[F.col(f"h{j}") for j in range(num_hashes)])
     )
@@ -336,12 +327,12 @@ def _simhash64_np(text: str) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def with_simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def with_simhash(docs: DataFrame) -> DataFrame:
     @F.pandas_udf(LongType())
     def _simhash(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: _simhash64_np(t or ""))
 
-    return docs.select(F.col(id_col).alias("id"), _simhash(F.col(text_col)).alias("simhash"))
+    return docs.select(F.col("doc_id").alias("id"), _simhash(F.col("text")).alias("simhash"))
 
 
 def _simhash_band_pairs(
@@ -382,24 +373,16 @@ def _simhash_band_pairs(
     )
 
 
-def simhash_candidate_pairs(
-    docs: DataFrame,
-    bands: int = 4,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup candidates: split the 64-bit sketch into ``bands`` 16-bit
-    bands; pairs sharing any band are candidates (pigeonhole: hamming<=3
+def simhash_candidate_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup candidates: split the 64-bit sketch into 4 16-bit bands;
+    pairs sharing any band are candidates (pigeonhole: hamming<=3
     with 4 bands guarantees a shared band); verify with exact popcount."""
     return _simhash_band_pairs(
-        with_simhash(docs, id_col, text_col), bands, max_hamming
+        with_simhash(docs), 4, max_hamming
     )
 
 
-def with_simhash_native(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def with_simhash_native(docs: DataFrame) -> DataFrame:
     """64-bit SimHash with ZERO Python crossings: token hash = the first 64
     bits of md5(token) (big-endian), parsed JVM-side via ``conv`` into two
     32-bit halves; the 64 per-bit vote sums are ordinary partial-aggregating
@@ -413,9 +396,9 @@ def with_simhash_native(
     big-endian md5 prefix, i.e. hex char ``16 - k//4``, nibble bit
     ``k % 4``."""
     toks = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.explode(
-            F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
+            F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
         ).alias("tok"),
     )
     h = F.md5("tok")
@@ -441,24 +424,15 @@ def simhash_native_pairs(
     docs: DataFrame,
     bands: int = 4,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """``simhash_candidate_pairs`` over the JVM-native md5 sketch — same
     banding/verify plan, no Python anywhere, fully SQL-oracle-checkable."""
     return _simhash_band_pairs(
-        with_simhash_native(docs, id_col, text_col), bands, max_hamming
+        with_simhash_native(docs), bands, max_hamming
     )
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_doc_freq: int | None = None,
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, n: int = 3, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the n-gram-Jaccard
     pair graph, one row per document with its cluster id (= min doc_id in
     the cluster; singletons are their own cluster).
@@ -472,17 +446,14 @@ def dedup_clusters(
     """
     from .graph_query import connected_components
 
-    pairs = ngram_jaccard_pairs(
-        docs, n=n, threshold=threshold, id_col=id_col, text_col=text_col,
-        max_doc_freq=max_doc_freq,
-    )
+    pairs = ngram_jaccard_pairs(docs, n=n, threshold=threshold)
     edges = pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("t"))
     comp = connected_components(edges).withColumnRenamed("component", "cluster")
     return (
-        docs.select(F.col(id_col).alias("node_id"))
+        docs.select(F.col("doc_id").alias("node_id"))
         .join(comp, "node_id", "left")
         .select(
-            F.col("node_id").alias(id_col),
+            F.col("node_id").alias("doc_id"),
             F.coalesce("cluster", F.col("node_id")).alias("cluster"),
         )
     )
@@ -496,8 +467,6 @@ def dup_substring_stats(
     docs: DataFrame,
     length: int = 40,
     winnow: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document repeated-substring statistics — the corpus-level
     "memorization surface" signal of Lee et al. 2021 ("Deduplicating
@@ -552,7 +521,7 @@ def dup_substring_stats(
     map-side in both aggregations (min-struct / count partial aggs, the
     same absorption argument as ``line_dedup``).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     # sequence(1, 0) throws in Spark, so docs shorter than the window get
     # an explicit empty position list (they then vanish at the explode,
     # matching the "no grams" semantics)
@@ -584,7 +553,7 @@ def dup_substring_stats(
             ),
         )
         docs_k = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"), karr.alias("_karr")
+            F.col("doc_id").cast("long").alias("doc_id"), karr.alias("_karr")
         )
         starts = F.when(
             F.size("_karr") > 0,
@@ -611,7 +580,7 @@ def dup_substring_stats(
         )
     else:
         grams = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
             F.explode(
                 F.transform(idx, lambda i: F.struct(
                     i.alias("pos"), F.md5(F.substring(t, i, length)).alias("h")

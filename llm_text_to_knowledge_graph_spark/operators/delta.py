@@ -44,11 +44,11 @@ from .fused import extract_triples_fused
 from .graph import build_edges
 
 
-def page_fingerprint_col(text: str = "text", html: str = "html") -> Column:
+def page_fingerprint_col() -> Column:
     """Content identity of a page: md5 of the extracted text, falling back
     to the raw html bytes when extraction hasn't run. A pure projection —
     Catalyst evaluates it inside the snapshot scan."""
-    t, h = F.col(text), F.col(html)
+    t, h = F.col("text"), F.col("html")
     return F.when(t.isNotNull(), F.md5(t)).otherwise(F.md5(h))
 
 
@@ -56,7 +56,6 @@ def classify_delta(
     old_pages: DataFrame,
     new_pages: DataFrame,
     fingerprint: Column | None = None,
-    url_col: str = "url",
 ) -> DataFrame:
     """Per-url change classification between two crawl snapshots.
 
@@ -69,7 +68,7 @@ def classify_delta(
 
     def slim(df: DataFrame, name: str) -> DataFrame:
         return (
-            df.select(F.col(url_col).alias("url"), fp.alias(name))
+            df.select(F.col("url"), fp.alias(name))
             .groupBy("url")
             .agg(F.max(name).alias(name))
         )
@@ -92,9 +91,7 @@ def snapshot_delta(
     new_pages: DataFrame,
     alias_rows: list,
     old_edges: DataFrame,
-    extractor=extract_triples_fused,
     hash_seed: int = 0,
-    broadcast_urls: bool = True,
 ) -> dict:
     """Incrementally advance the edge store from the old snapshot's graph
     to the new snapshot's graph.
@@ -105,10 +102,9 @@ def snapshot_delta(
     row-identical to a from-scratch build over ``new_pages`` (pinned by
     test) because ids are content-addressed — union, not renumber.
 
-    ``broadcast_urls`` broadcasts the changed/added/removed url sets into
-    the big-side joins (map-only); disable when a crawl replaces most of
-    the web (then the sets aren't small and a shuffled join is right —
-    at that point a from-scratch rebuild is cheaper anyway).
+    The changed/added/removed url sets are broadcast into the big-side
+    joins (map-only): a crawl that replaces most of the web is cheaper to
+    rebuild from scratch anyway.
 
     The classification feeds two consumers (the re-extract set and the
     retraction set), so a long-running job should persist it —
@@ -119,11 +115,11 @@ def snapshot_delta(
 
     def urlset(*statuses: str) -> DataFrame:
         s = cls.filter(F.col("status").isin(*statuses)).select("url")
-        return F.broadcast(s) if broadcast_urls else s
+        return F.broadcast(s)
 
     todo_pages = new_pages.join(urlset("added", "changed"), "url", "left_semi")
     delta_edges = build_edges(
-        extractor(todo_pages, alias_rows),
+        extract_triples_fused(todo_pages, alias_rows),
         hash_seed=hash_seed,
         carry_names=True,
         carry_url=True,

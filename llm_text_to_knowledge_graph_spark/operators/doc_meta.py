@@ -71,11 +71,8 @@ def extract_doc_meta(pages: DataFrame) -> DataFrame:
     )
 
 
-def network_name(meta_row: dict | None, custom_name: str | None = None) -> str:
-    """P10 naming chain (main.py:165-183): custom name > title-derived >
-    timestamped default (the timestamp branch lives in export/cx2.py)."""
-    if custom_name:
-        return custom_name
+def network_name(meta_row: dict | None) -> str:
+    """P10 naming chain (main.py:165-183): title-derived > timestamped default (the timestamp branch lives in export/cx2.py)."""
     if meta_row and meta_row.get("title"):
         return f"KG: {meta_row['title']}"
     return ""

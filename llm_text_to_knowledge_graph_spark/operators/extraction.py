@@ -155,8 +155,9 @@ _ALL_CAUSAL_VERBS = (
     | _PASSIVE_REG
 )
 # hot-loop set unions, hoisted (the matchers below run per mention pair)
+# every _PASSIVE_UP/_PASSIVE_DOWN form is already in _ACT_UP/_ACT_DOWN, so
+# this set also covers the passive verbs
 _CAUSAL_CORE = _ACT_UP | _ACT_DOWN | _ACT_REG
-_VERBISH_PASSIVE = _CAUSAL_CORE | _PASSIVE_UP | _PASSIVE_DOWN
 # nominal subject qualifiers the active matcher skips before the verb:
 # "X function negatively regulates Y", "X expression enhances Y"
 _SUBJ_QUALIFIERS = {"function", "activity", "expression", "protein"}
@@ -259,11 +260,15 @@ _PASSIVE_APPOS = {
 _ABSENCE_TAIL = ("in", "the", "absence", "of")
 # prefix cue that flips an active verb's direction: "ablation of <X>
 # abolished <Y>" means X POSITIVELY regulates Y
-# canonical definition lives in operators/statements.py (the base
-# sentence engine applies the same flip, so the two engines can never
-# emit opposite signs for one sentence); re-exported here for the block
-# engine's branches
-from .statements import _ABLATION_PREFIX_RE  # noqa: E402,F401
+# canonical definitions live in operators/statements.py (the base
+# sentence engine applies the same flip and cues, so the two engines can
+# never emit opposite signs for one sentence); re-exported here for the
+# block engine's branches
+from .statements import (  # noqa: E402,F401
+    _ABLATION_PREFIX_RE,
+    _ACTIVITY_PREFIX_RE,
+    _REL_FLIP,
+)
 _SITE_TOKEN_RE = re.compile(r"^(ser|thr|tyr|lys|arg)(\d+)(?:/.*)?$")
 # --- genetic-perturbation (knockout) inference vocabulary ------------------
 # context: "<G>−/− cells", "<G> knockouts", "<G> null", "<G>-deficient" —
@@ -305,9 +310,6 @@ _KO_UNCHANGED_RE = re.compile(
 _KO_RISE_RE = re.compile(
     r"\b(increase|elevation|decrease|reduction)\s+in\b", re.I
 )
-_FLIP = {"increases": "decreases", "decreases": "increases",
-         "directlyIncreases": "directlyDecreases",
-         "directlyDecreases": "directlyIncreases"}
 # site lists like "Ser939 and Thr1462", "Thr37/46", "Thr24/Thr32"
 _SITE_LIST_ITEM_RE = re.compile(r"(Ser|Thr|Tyr|Lys|Arg)?\s*(\d+)", re.I)
 _TARGET_SITE_TAIL_RE = re.compile(
@@ -817,7 +819,6 @@ _AGENTLESS_PASSIVE_RE = re.compile(
     r"^\s*(?:is|are|was|were)\s+(?:\w+ly\s+)?([a-z\-]+)[\s.,;]*$"
 )
 _COMPOUND_SUFFIX_RE = re.compile(r"[-−–‐]\s*([a-z\-]+)")
-_ACTIVITY_OF_RE = re.compile(r"\b[a-z]+ activity of $")
 _OF_SEP_RE = re.compile(r"\s*of\s+")
 _AND_SEP_RE = re.compile(r"[\s)]*and[\s(]*")
 _WILDTYPE_RE = re.compile(r"wild-?\s?type\s+")
@@ -928,7 +929,7 @@ def _is_coord_sep(sep: str) -> bool:
     if not letters:
         return True  # appositive / list comma
     toks = letters.split()
-    verbish = _VERBISH_PASSIVE
+    verbish = _CAUSAL_CORE
     # the conjunction must LEAD the letter content ("and the shorter") —
     # a trailing/mid conjunction ("cells upon serum and") is clause text,
     # not list coordination
@@ -1133,7 +1134,7 @@ def _match_active(inter: str, abbrev_tail: bool = False):
             return None
         k += 1
     if flip:
-        rel = _FLIP.get(rel, rel)
+        rel = _REL_FLIP.get(rel, rel)
     return rel, trail
 
 
@@ -1215,7 +1216,7 @@ def _match_passive(inter: str):
         return None
     rest = toks[i + 1:]
     if absence:
-        return _FLIP.get(rel, rel), "absence_of", pmod
+        return _REL_FLIP.get(rel, rel), "absence_of", pmod
     # strip trailing "<n> h of"-style qualifiers after the marker
     while rest and (rest[-1] in {"of", "h", "min", "treatment", "pretreatment"}
                     or _is_num(rest[-1])):
@@ -1343,7 +1344,7 @@ _OBSERVED_VERBS = {
     "demonstrated", "observed", "found", "detected", "reported",
     "identified", "described", "seen",
 }
-_VERBISH_OBS = _VERBISH_PASSIVE | _OBSERVED_VERBS
+_VERBISH_OBS = _CAUSAL_CORE | _OBSERVED_VERBS
 _PREVALENCE_PREFIX_RE = re.compile(r"\b([a-z\-]+)\s+of\s+(?:the\s+)?$", re.I)
 _PREV_QUANT = {
     "of", "all", "most", "many", "the", "a", "an", "approximately",
@@ -1781,15 +1782,16 @@ def extract_from_block(text: str, mentions: list) -> list[tuple[str, str]]:
         out.append((stmt, text))
         return idx
 
-    def emit_pair(subj_m, rel, obj_m, wrap=None, subj_pmod=None, obj_pmod=None,
+    def emit_pair(subj_m, rel, obj_m, wrap=None, obj_pmod=None,
                   subj_override: str | None = None):
-        if subj_override is None and subj_pmod is None:
+        subj_pmod = None
+        if subj_override is None:
             # subject-context cues before the subject mention (same cues as
             # the base engine: "Phosphorylated X ...", "the ... activity of X")
             b = subj_m["begin"]
             if text.endswith("Phosphorylated ", 0, b):
                 subj_pmod = ("Ph", None, None)
-            elif _ACTIVITY_OF_RE.search(text, b - 64 if b > 64 else 0, b):
+            elif _ACTIVITY_PREFIX_RE.search(text, b - 64 if b > 64 else 0, b):
                 subj_override = f"act({_render(subj_m, text)})"
         if subj_pmod is not None and subj_override is None:
             subj_override = make_term(
@@ -1927,7 +1929,7 @@ def extract_from_block(text: str, mentions: list) -> list[tuple[str, str]]:
                 if _ABLATION_PREFIX_RE.search(pref) or (
                     npref is not None and npref.group(1) in _NOMINAL_DOWN
                 ):
-                    rel5 = _FLIP.get(rel5, rel5)
+                    rel5 = _REL_FLIP.get(rel5, rel5)
                 pm5 = ("Ph", None, None)
                 for mem in members.values():
                     emit(
@@ -3047,7 +3049,7 @@ def extract_from_block(text: str, mentions: list) -> list[tuple[str, str]]:
                     text, left["begin"] - 72 if left["begin"] > 72 else 0,
                     left["begin"],
                 ):
-                    rel = _FLIP.get(rel, rel)
+                    rel = _REL_FLIP.get(rel, rel)
                 wrap, obj_pmod = _active_flags(trail, after_right)
                 site = _SITE_RE.match(after_right) if obj_pmod else None
                 if site and obj_pmod:

@@ -156,11 +156,3 @@ def extract_fused(
 def extract_triples_fused(pages: DataFrame, alias_rows: list) -> DataFrame:
     """pages -> TRIPLES with the sentence engine."""
     return extract_fused(pages, alias_rows, engine="sentence")
-
-
-def extract_triples_fused_block(pages: DataFrame, alias_rows: list) -> DataFrame:
-    """pages -> TRIPLES with the extended block engine
-    (``extraction.extract_from_block``: coordination, displaced-agent
-    passives, nominalizations, fold continuation, knockout inference) — the
-    engine that earns the real-gold recall."""
-    return extract_fused(pages, alias_rows, engine="block")

@@ -97,7 +97,7 @@ def k_hop_neighborhood(
     return visited
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Undirected connected components by iterative min-label propagation:
     every node's component id converges to the minimum node id reachable
     from it. Returns (node_id, component).
@@ -118,7 +118,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         .withColumn("component", F.col("node_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         # candidate label for each node: min over self and neighbor labels
         neighbor_min = (
             und.join(labels.withColumnRenamed("node_id", "t")
@@ -160,7 +160,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     return labels
 
 
-def k_core(edges: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
+def k_core(edges: DataFrame, k: int = 2) -> DataFrame:
     """Undirected k-core: iteratively peel vertices with degree < ``k``
     until fixpoint — the standard KG summarization / noise-trim pass
     (the k-core is the maximal subgraph where every vertex keeps >= k
@@ -174,11 +174,11 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
     scalar per round (same instrument as connected_components); edge
     tables are ``localCheckpoint``ed each round to truncate the
     iterative-plan lineage. Rounds needed = peeling depth, typically
-    O(log n) on web-ish degree distributions; ``max_iter`` bounds
+    O(log n) on web-ish degree distributions; 30 rounds bound
     pathological chains (a path graph peels 1 layer per round).
     """
     und = undirected_edges(edges).distinct().localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(30):
         deg = und.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
         low = deg.filter(F.col("degree") < k).select("s").localCheckpoint(
             eager=True
@@ -312,7 +312,6 @@ def _rank_graph(
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
-    damping: float = 0.85,
     undirected: bool = True,
     weight_col: str | None = None,
     seeds: list[int] | None = None,
@@ -343,14 +342,14 @@ def pagerank(
     if seeds is None:
         n = nodes.count()
         start = F.lit(1.0 / n)
-        teleport = F.lit((1.0 - damping) / n)
+        teleport = F.lit((1.0 - 0.85) / n)
         dangling = (F.lit(1.0) - F.col("_total")) / F.lit(float(n))
     else:
         seeds = [int(s) for s in seeds]
         start = F.when(
             F.col("node_id").isin(seeds), F.lit(1.0 / len(seeds))
         ).otherwise(F.lit(0.0))
-        teleport = F.lit(1.0 - damping) * start
+        teleport = F.lit(1.0 - 0.85) * start
         dangling = (F.lit(1.0) - F.col("_total")) * start
     ranks = nodes.withColumn("rank", start)
     contrib_expr = (
@@ -373,7 +372,7 @@ def pagerank(
                 "node_id",
                 (
                     teleport
-                    + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
+                    + F.lit(0.85) * F.coalesce("in_rank", F.lit(0.0))
                 ).alias("rank"),
             )
         )
@@ -395,7 +394,7 @@ def pagerank(
     return ranks
 
 
-def triangle_count(edges: DataFrame, per_vertex: bool = True) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Triangle counting via degree-ordered orientation.
 
     The naive three-way self-join enumerates every WEDGE (2-path) in the
@@ -414,8 +413,7 @@ def triangle_count(edges: DataFrame, per_vertex: bool = True) -> DataFrame:
     semi-join against oriented edges. No driver actions, no iteration.
 
     Returns (node_id, n_triangles) counting each triangle at all three
-    corners when ``per_vertex`` (vertices in no triangle are omitted), else
-    a single row (n_triangles) with the global count.
+    corners (vertices in no triangle are omitted).
     """
     # canonical undirected edge set: (u < v), self-loops dropped, deduped
     und = (
@@ -455,8 +453,6 @@ def triangle_count(edges: DataFrame, per_vertex: bool = True) -> DataFrame:
     tris = wedges.join(closure, ["a", "b"]).select(
         F.col("src").alias("x"), "a", "b"
     )
-    if not per_vertex:
-        return tris.agg(F.count(F.lit(1)).alias("n_triangles"))
     corners = (
         tris.select(F.col("x").alias("node_id"))
         .unionByName(tris.select(F.col("a").alias("node_id")))
@@ -467,12 +463,7 @@ def triangle_count(edges: DataFrame, per_vertex: bool = True) -> DataFrame:
     )
 
 
-def link_prediction_scores(
-    edges: DataFrame,
-    min_common: int = 1,
-    top_per_node: int | None = None,
-    max_center_degree: int | None = None,
-) -> DataFrame:
+def link_prediction_scores(edges: DataFrame, min_common: int = 1) -> DataFrame:
     """Common-neighbor / Adamic-Adar link prediction over the undirected
     edge table — the KG-completion pass: score NON-adjacent vertex pairs
     by their shared neighborhood, weighting each shared neighbor x by
@@ -486,16 +477,9 @@ def link_prediction_scores(
     enumeration is irreducibly Σ deg(x)² — UNLIKE triangle_count, no
     orientation trick applies (a triangle is witnessed once by its
     one two-out-edge vertex; a common-neighbor score needs every witness).
-    The skew guard is therefore ``max_center_degree``: drop wedge CENTERS
-    above a degree cap. That is not just pragmatic — it is principled
-    for this scoring function, because a 10^6-degree hub contributes
-    1/ln(10^6) ≈ 0.07 per pair to adamic_adar while generating 10^12
-    wedges: the centers that blow up the join are exactly the ones whose
-    evidence is worthless. Remaining shape: one degree agg, one self-join
-    on the center, one anti-join against the canonical edges, one
-    partial-agg groupBy(pair); ln(deg) is computed once per center row,
-    map-side. ``top_per_node`` caps results per left vertex with a window
-    over already-aggregated pair rows.
+    Shape: one degree agg, one self-join on the center, one anti-join
+    against the canonical edges, one partial-agg groupBy(pair); ln(deg) is
+    computed once per center row, map-side.
     """
     und = (
         edges.select(
@@ -511,8 +495,6 @@ def link_prediction_scores(
     centers = adj.join(deg, "s").select(
         F.col("s").alias("ctr"), F.col("deg").alias("dctr"), F.col("t").alias("nb")
     )
-    if max_center_degree is not None:
-        centers = centers.filter(F.col("dctr") <= max_center_degree)
     o1 = centers.select("ctr", "dctr", F.col("nb").alias("a"))
     o2 = centers.select("ctr", F.col("nb").alias("b"))
     wedges = (
@@ -529,37 +511,21 @@ def link_prediction_scores(
         ["a", "b"],
         "left_anti",
     )
-    scored = open_pairs.groupBy("a", "b").agg(
+    return open_pairs.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("common_neighbors"),
         F.round(F.sum("w"), 6).alias("adamic_adar"),
     ).filter(F.col("common_neighbors") >= min_common)
-    if top_per_node is None:
-        return scored
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a").orderBy(
-        F.desc("adamic_adar"), F.col("b")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= top_per_node)
-        .drop("_rn")
-    )
 
 
 def personalized_pagerank_scaled(
     edges: DataFrame,
     seeds: list[int],
     iterations: int = 5,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    undirected: bool = True,
-    scale: int = 10**12,
 ) -> DataFrame:
-    """Engine-exact personalized PageRank: the entire fixpoint runs in
-    int64 units of ``1/scale`` — integer division for the per-neighbor
-    contribution, integer sums for the in-mass, integer damping
-    (``damping_num/damping_den``) — so every iterate is a pure function
+    """Engine-exact personalized PageRank over the undirected graph: the
+    entire fixpoint runs in int64 units of 1e-12 — integer division for
+    the per-neighbor contribution, integer sums for the in-mass, integer
+    damping 85/100 — so every iterate is a pure function
     of the graph with NO floating-point summation anywhere. Two engines
     replaying the same recurrence produce bit-identical longs, which is
     what a downstream 6dp cut needs: double PPR values are often exact
@@ -571,17 +537,17 @@ def personalized_pagerank_scaled(
     Semantics match :func:`pagerank` with ``seeds`` up to ≤ ``iterations``
     floor-division units (1e-12) per node — far below any consumer's 6dp
     lattice — and the floor is applied identically on both engines.
-    Returns (node_id, rank_s), a long; ``rank_s/scale`` is the rank. Same
+    Returns (node_id, rank_s), a long; ``rank_s / 1e12`` is the rank. Same
     input tables and plan shape as :func:`pagerank`.
     """
     if not seeds:
         raise ValueError("personalized_pagerank_scaled needs >= 1 seed")
     seeds = [int(s) for s in seeds]
-    g_deg, nodes = _rank_graph(edges, undirected)
-    p0_s = int(scale) // len(seeds)  # exact integer teleport share
+    g_deg, nodes = _rank_graph(edges, undirected=True)
+    p0_s = 10**12 // len(seeds)  # exact integer teleport share
     teleport = F.when(
         F.col("node_id").isin(seeds),
-        F.lit((damping_den - damping_num) * p0_s // damping_den),
+        F.lit((100 - 85) * p0_s // 100),
     ).otherwise(F.lit(0))
     ranks = nodes.withColumn(
         "rank_s",
@@ -604,31 +570,9 @@ def personalized_pagerank_scaled(
             "node_id",
             (
                 teleport
-                + F.expr(
-                    f"coalesce(in_s, 0L) * {damping_num} "
-                    f"div {damping_den}"
-                )
+                + F.expr("coalesce(in_s, 0L) * 85 div 100")
             ).cast("long").alias("rank_s"),
         )
-        if not undirected:
-            # dangling mass re-teleports to the seeds, mirroring the
-            # double variant — in exact integer units: the residual
-            # scale - sum(rank_s) is a long, its per-seed share a floor
-            # division, so the replay stays bit-identical. Same 1-row
-            # broadcast crossJoin + lazy-checkpoint discipline.
-            ranks = ranks.localCheckpoint(eager=False)
-            total = ranks.agg(F.sum("rank_s").alias("_total_s"))
-            ranks = ranks.crossJoin(F.broadcast(total)).select(
-                "node_id",
-                F.when(
-                    F.col("node_id").isin(seeds),
-                    F.col("rank_s")
-                    + F.expr(f"({scale} - _total_s) div {len(seeds)}"),
-                )
-                .otherwise(F.col("rank_s"))
-                .cast("long")
-                .alias("rank_s"),
-            )
         ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -704,7 +648,6 @@ def hits_scores(edges: DataFrame, iterations: int = 5) -> DataFrame:
 
 def strongly_connected_components(
     edges: DataFrame,
-    max_rounds: int = 50,
     max_prop_iter: int = 30,
     edges_canonical: bool = False,
 ) -> DataFrame:
@@ -756,7 +699,7 @@ def strongly_connected_components(
     done: DataFrame = active.select(
         "node_id", F.col("node_id").alias("component")
     ).limit(0)
-    for _ in range(max_rounds):
+    for _ in range(50):
         if active.isEmpty():
             break
         # --- joint F/B min-label fixpoint over the active subgraph ----
@@ -878,11 +821,11 @@ def strongly_connected_components(
         )
     else:
         if not active.isEmpty():
-            raise ValueError(f"SCC did not converge in {max_rounds} rounds")
+            raise ValueError("SCC did not converge in 50 rounds")
     return done
 
 
-def bowtie_classify(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def bowtie_classify(edges: DataFrame) -> DataFrame:
     """Broder bow-tie decomposition of the DIRECTED graph: returns
     (node_id, component, region) with region in {'SCC', 'IN', 'OUT',
     'TENDRIL'} — the classic structural census of a web crawl (which
@@ -935,7 +878,7 @@ def bowtie_classify(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
         visited = core
         frontier = core
-        for _ in range(max_iter):
+        for _ in range(50):
             nxt = expand(frontier, visited)
             if nxt.isEmpty():
                 break
@@ -943,12 +886,11 @@ def bowtie_classify(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             frontier = nxt
         else:
             # budget spent, but the LAST expansion may already have
-            # covered everything (eccentricity exactly max_iter) —
+            # covered everything (eccentricity exactly 50) —
             # one extra probe decides exhausted-vs-truncated
             if not expand(frontier, visited).isEmpty():
                 raise ValueError(
-                    f"bow-tie reachability did not exhaust in "
-                    f"{max_iter} hops"
+                    "bow-tie reachability did not exhaust in 50 hops"
                 )
         return visited
 

@@ -41,39 +41,27 @@ def _nibble01(col):
     return F.conv(F.substring(F.md5(col), 1, 1), 16, 10).cast("double") / 15.0
 
 
-def pseudo_embeddings(
-    ids: DataFrame,
-    dim: int = 4,
-    seed: int = 11,
-    id_col: str = "node_id",
-    out_col: str = "vec",
-) -> DataFrame:
-    """(id_col, ``out_col``: array<double>) — deterministic per-id vectors,
+def pseudo_embeddings(ids: DataFrame, dim: int = 4, seed: int = 11) -> DataFrame:
+    """(node_id, vec: array<double>) — deterministic per-id vectors,
     component j = nibble(md5("{id}:{j}:{seed}"))/15 - 0.5. Map-only."""
     comps = [
         (
             _nibble01(
                 F.concat(
-                    F.col(id_col).cast("string"), F.lit(f":{j}:{seed}")
+                    F.col("node_id").cast("string"), F.lit(f":{j}:{seed}")
                 )
             )
             - F.lit(0.5)
         )
         for j in range(dim)
     ]
-    return ids.select(id_col, F.array(*comps).alias(out_col))
+    return ids.select("node_id", F.array(*comps).alias("vec"))
 
 
 def transe_energy(
     triples: DataFrame,
     ent_emb: DataFrame,
     rel_emb: DataFrame,
-    s_col: str = "s",
-    p_col: str = "p",
-    t_col: str = "t",
-    id_col: str = "node_id",
-    vec_col: str = "vec",
-    rel_col: str = "rel",
     norm: str = "l1",
 ) -> DataFrame:
     """Input triples + ``energy``: ``||h + r - t||_1`` (or squared L2 with
@@ -81,16 +69,16 @@ def transe_energy(
     if norm not in ("l1", "l2sq"):
         raise ValueError("norm must be 'l1' or 'l2sq'")
     h = ent_emb.select(
-        F.col(id_col).alias(s_col), F.col(vec_col).alias("_h")
+        F.col("node_id").alias("s"), F.col("vec").alias("_h")
     )
     t = ent_emb.select(
-        F.col(id_col).alias(t_col), F.col(vec_col).alias("_t")
+        F.col("node_id").alias("t"), F.col("vec").alias("_t")
     )
     r = rel_emb.select(
-        F.col(rel_col).alias(p_col), F.col(vec_col).alias("_r")
+        F.col("rel").alias("p"), F.col("vec").alias("_r")
     )
     joined = (
-        triples.join(h, s_col).join(t, t_col).join(F.broadcast(r), p_col)
+        triples.join(h, "s").join(t, "t").join(F.broadcast(r), "p")
     )
     diff = F.zip_with(
         F.zip_with(F.col("_h"), F.col("_r"), lambda a, b: a + b),

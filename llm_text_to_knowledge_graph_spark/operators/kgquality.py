@@ -39,47 +39,35 @@ INCREASE_PREDS = ("increases", "directlyIncreases", "rateLimitingStepOf")
 DECREASE_PREDS = ("decreases", "directlyDecreases")
 
 
-def edge_rollup(
-    statements: DataFrame,
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    url_col: str = "url",
-    stmt_col: str = "bel_statement",
-) -> DataFrame:
+def edge_rollup(statements: DataFrame) -> DataFrame:
     """One row per distinct (subj, pred, obj) edge with its support:
     ``n_evidence`` (statement occurrences), ``n_docs`` (distinct source
     documents), ``first_url`` and a deterministic representative
     ``bel_statement`` (both ``min`` — stable under repartitioning)."""
     return (
-        statements.groupBy(subj_col, pred_col, obj_col)
+        statements.groupBy("subj", "pred", "obj")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_evidence"),
-            F.count_distinct(F.col(url_col)).cast("long").alias("n_docs"),
-            F.min(url_col).alias("first_url"),
-            F.min(stmt_col).alias(stmt_col),
+            F.count_distinct(F.col("url")).cast("long").alias("n_docs"),
+            F.min("url").alias("first_url"),
+            F.min("bel_statement").alias("bel_statement"),
         )
     )
 
 
-def contradictions(
-    statements: DataFrame,
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-) -> DataFrame:
+def contradictions(statements: DataFrame) -> DataFrame:
     """(subj, obj) pairs asserted with BOTH an increasing and a decreasing
     predicate, with per-sign support counts and ``conflict_ratio`` =
     min/max of the two counts (1.0 = perfectly split evidence)."""
     sign = (
-        F.when(F.col(pred_col).isin(*INCREASE_PREDS), F.lit(1))
-        .when(F.col(pred_col).isin(*DECREASE_PREDS), F.lit(-1))
+        F.when(F.col("pred").isin(*INCREASE_PREDS), F.lit(1))
+        .when(F.col("pred").isin(*DECREASE_PREDS), F.lit(-1))
         .otherwise(F.lit(0))
     )
     signed = statements.select(
-        subj_col, obj_col, sign.alias("sign")
+        "subj", "obj", sign.alias("sign")
     ).filter(F.col("sign") != 0)
-    g = signed.groupBy(subj_col, obj_col).agg(
+    g = signed.groupBy("subj", "obj").agg(
         F.sum(F.when(F.col("sign") == 1, 1).otherwise(0))
         .cast("long")
         .alias("n_pos"),
@@ -88,8 +76,8 @@ def contradictions(
         .alias("n_neg"),
     )
     return g.filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0)).select(
-        subj_col,
-        obj_col,
+        "subj",
+        "obj",
         "n_pos",
         "n_neg",
         F.round(

@@ -42,43 +42,35 @@ def host_of(url):
     return F.lower(F.regexp_extract(url, _HOST_PATTERN, 1))
 
 
-def extract_links(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """(url, link): one row per absolute http(s) href in each page.
 
     Map-only: decode + regexp_extract_all + explode, all JVM-side.
     Pages with no matching hrefs emit no rows (explode, not
     explode_outer — a link table, not a page audit).
     """
-    html_str = F.col(html_col).cast("string")
+    html_str = F.col("html").cast("string")
     return pages.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         F.explode(
             F.regexp_extract_all(html_str, F.lit(HREF_PATTERN), 1)
         ).alias("link"),
     )
 
 
-def host_graph(
-    links: DataFrame,
-    src_col: str = "url",
-    dst_col: str = "link",
-    drop_self: bool = True,
-) -> DataFrame:
+def host_graph(links: DataFrame) -> DataFrame:
     """(src_host, dst_host, n_links): the host-level outlink graph.
 
-    ONE partial-agg groupBy; ``drop_self`` removes intra-host navigation
-    edges (the overwhelming majority of raw links and noise for every
+    ONE partial-agg groupBy; intra-host navigation edges are dropped
+    (the overwhelming majority of raw links and noise for every
     authority/community consumer) BEFORE the shuffle, where the filter
     is a free map-side predicate.
     """
     g = links.select(
-        host_of(F.col(src_col)).alias("src_host"),
-        host_of(F.col(dst_col)).alias("dst_host"),
+        host_of(F.col("url")).alias("src_host"),
+        host_of(F.col("link")).alias("dst_host"),
     ).filter((F.col("src_host") != "") & (F.col("dst_host") != ""))
-    if drop_self:
-        g = g.filter(F.col("src_host") != F.col("dst_host"))
+    g = g.filter(F.col("src_host") != F.col("dst_host"))
     return g.groupBy("src_host", "dst_host").agg(
         F.count(F.lit(1)).alias("n_links")
     )
@@ -92,9 +84,7 @@ ANCHOR_PATTERN = (
 )
 
 
-def extract_anchors(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """(url, link, anchor): absolute-href links WITH their anchor text.
 
     Anchor text is the highest-precision alias signal on the web — the
@@ -103,7 +93,7 @@ def extract_anchors(
     extract_links: two aligned regexp_extract_all passes (same pattern,
     groups 1 and 2) zipped and exploded, all JVM-side.
     """
-    html_str = F.col(html_col).cast("string")
+    html_str = F.col("html").cast("string")
     z = F.explode(
         F.arrays_zip(
             F.regexp_extract_all(html_str, F.lit(ANCHOR_PATTERN), 1).alias(
@@ -115,15 +105,13 @@ def extract_anchors(
         )
     )
     return (
-        pages.select(F.col(url_col).alias("url"), z.alias("_z"))
+        pages.select(F.col("url"), z.alias("_z"))
         .select("url", F.col("_z.link").alias("link"), F.col("_z.anchor").alias("anchor"))
         .filter(F.trim(F.col("anchor")) != "")
     )
 
 
-def anchor_alias_counts(
-    anchors: DataFrame, min_count: int = 1
-) -> DataFrame:
+def anchor_alias_counts(anchors: DataFrame) -> DataFrame:
     """(alias, dst_host, n_refs): how often each normalized anchor text
     points at each host — the raw material for the entity-linking alias
     dictionary (an alias that consistently hits one host is a
@@ -139,6 +127,4 @@ def anchor_alias_counts(
         .groupBy("alias", "dst_host")
         .agg(F.count(F.lit(1)).alias("n_refs"))
     )
-    if min_count > 1:
-        out = out.filter(F.col("n_refs") >= min_count)
     return out

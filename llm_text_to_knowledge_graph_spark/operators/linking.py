@@ -72,36 +72,30 @@ def candidate_spans(sentences: DataFrame, known_aliases: list[str]) -> DataFrame
     )
 
 
-def _shingles(col, n: int = 2):
+def _shingles(col):
     # 2-char shingles: entity surface forms are short (3-10 chars); 3-shingles
     # make single-char typos fail the Jaccard floor (TPp53 vs TP53 = 0.25)
     """Distinct character n-shingles of a lowercased string, built-ins only."""
     low = F.lower(col)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(low) - n, F.lit(0))),
-            lambda i: low.substr(i + F.lit(1), F.lit(n)),
+            F.sequence(F.lit(0), F.greatest(F.length(low) - 2, F.lit(0))),
+            lambda i: low.substr(i + F.lit(1), F.lit(2)),
         )
     )
 
 
-def link_fuzzy(
-    spans: DataFrame,
-    alias_df: DataFrame,
-    max_jaccard_distance: float = 0.5,
-    min_score: float = 0.3,
-    num_hash_tables: int = 16,
-) -> DataFrame:
+def link_fuzzy(spans: DataFrame, alias_df: DataFrame) -> DataFrame:
     """spans (from candidate_spans) x alias_df (ALIAS_DICT schema) ->
     top-1 fuzzy grounding per span.
 
-    ``num_hash_tables`` is the OR-amplification depth: a true pair at
+    16 hash tables set the OR-amplification depth: a true pair at
     jaccard j survives blocking with P = 1-(1-j)^t, so t=16 keeps blocking
     recall >=0.98 down to j=0.25 (measured >=0.9 end-to-end on single-edit
     typos vs the blocking-free exact-Jaccard oracle —
     tests/test_linking.py). Each table costs one minhash per row; at scale
-    prefer raising this over widening max_jaccard_distance, which grows
-    candidate volume instead."""
+    prefer more tables over a wider Jaccard distance (0.5), which grows
+    candidate volume instead. Links scoring below 0.3 are dropped."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     sp = spans.withColumn("shingles", _shingles(F.col("token"))).filter(
@@ -116,11 +110,11 @@ def link_fuzzy(
     spf = tf.transform(sp)
     alf = tf.transform(al)
     mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+        inputCol="features", outputCol="hashes", numHashTables=16, seed=42
     )
     model = mh.fit(alf)
     pairs = model.approxSimilarityJoin(
-        spf, alf, max_jaccard_distance, distCol="jdist"
+        spf, alf, 0.5, distCol="jdist"
     )
     scored = pairs.select(
         F.col("datasetA.url").alias("url"),
@@ -133,7 +127,7 @@ def link_fuzzy(
         F.col("datasetB.id").alias("id"),
         F.col("datasetB.entry_name").alias("entry_name"),
         ((F.lit(1.0) - F.col("jdist")) * F.col("datasetB.prior")).alias("score"),
-    ).filter(F.col("score") >= min_score)
+    ).filter(F.col("score") >= 0.3)
     w = Window.partitionBy("url", "para_idx", "sent_idx", "begin").orderBy(
         F.desc("score"), F.asc("db"), F.asc("id")
     )

@@ -363,10 +363,10 @@ def probe_container(payload: bytes) -> dict:
 import zlib
 
 
-def _synth_png(seed: int, w: int = 16, h: int = 12) -> bytes:
+def _synth_png(seed: int) -> bytes:
     rng = np.random.default_rng(seed)
-    raster = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    raw = b"".join(b"\x00" + raster[y].tobytes() for y in range(h))
+    raster = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
+    raw = b"".join(b"\x00" + raster[y].tobytes() for y in range(12))
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         return (
@@ -374,37 +374,37 @@ def _synth_png(seed: int, w: int = 16, h: int = 12) -> bytes:
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
         )
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    ihdr = struct.pack(">IIBBBBB", 16, 12, 8, 2, 0, 0, 0)
     return (
         b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
     )
 
 
-def _synth_wav(seed: int, rate: int = 8000, ms: int = 250) -> bytes:
-    n = rate * ms // 1000
+def _synth_wav(seed: int) -> bytes:
+    n = 8000 * 250 // 1000
     t = np.arange(n, dtype=np.float64)
     freq = 200 + (seed % 17) * 40
-    samples = (np.sin(2 * np.pi * freq * t / rate) * 12000).astype("<i2")
+    samples = (np.sin(2 * np.pi * freq * t / 8000) * 12000).astype("<i2")
     data = samples.tobytes()
     return (
         b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000 * 2, 2, 16)
         + b"data" + struct.pack("<I", len(data)) + data
     )
 
 
-def _synth_mp3(seed: int, n_frames: int = 6) -> bytes:
+def _synth_mp3(seed: int) -> bytes:
     out = bytearray()
     size0 = 144 * 128000 // 44100  # MPEG1 L3 @128kbps/44100
-    for i in range(n_frames):
+    for i in range(6):
         padding = (seed + i) % 2
         out += bytes([0xFF, 0xFB, (9 << 4) | (0 << 2) | (padding << 1), 0xC4])
         out += bytes((seed + i + j) % 251 for j in range(size0 + padding - 4))
     return bytes(out)
 
 
-def _synth_mp4(seed: int, n_frames: int = 8, fps: int = 4) -> bytes:
+def _synth_mp4(seed: int) -> bytes:
     def box(fourcc: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", 8 + len(payload)) + fourcc + payload
 
@@ -413,18 +413,18 @@ def _synth_mp4(seed: int, n_frames: int = 8, fps: int = 4) -> bytes:
 
     rng = np.random.default_rng(seed)
     frames = [rng.integers(0, 256, size=60 + 5 * i, dtype=np.uint8).tobytes()
-              for i in range(n_frames)]
+              for i in range(8)]
     timescale = 1000
-    delta = timescale // fps
-    duration = n_frames * delta
+    delta = timescale // 4
+    duration = 8 * delta
     mvhd = full(b"mvhd", struct.pack(">IIII", 0, 0, timescale, duration) + b"\x00" * 80)
     tkhd = full(b"tkhd", b"\x00" * 72 + struct.pack(">II", 32 << 16, 24 << 16))
     mdhd = full(b"mdhd", struct.pack(">IIII", 0, 0, timescale, duration) + b"\x00" * 4)
     hdlr = full(b"hdlr", b"\x00" * 4 + b"vide" + b"\x00" * 13)
     stsd = full(b"stsd", struct.pack(">I", 1) + box(b"avc1", b"\x00" * 78))
-    stts = full(b"stts", struct.pack(">III", 1, n_frames, delta))
-    stsc = full(b"stsc", struct.pack(">I", 1) + struct.pack(">III", 1, n_frames, 1))
-    stsz = full(b"stsz", struct.pack(">II", 0, n_frames)
+    stts = full(b"stts", struct.pack(">III", 1, 8, delta))
+    stsc = full(b"stsc", struct.pack(">I", 1) + struct.pack(">III", 1, 8, 1))
+    stsz = full(b"stsz", struct.pack(">II", 0, 8)
                 + b"".join(struct.pack(">I", len(f)) for f in frames))
     stss = full(b"stss", struct.pack(">II", 1, 1))  # first frame is the keyframe
     ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 512))
@@ -443,13 +443,13 @@ def _synth_mp4(seed: int, n_frames: int = 8, fps: int = 4) -> bytes:
     return ftyp + moov(mdat_start) + box(b"mdat", b"".join(frames))
 
 
-def synthesize_media(n: int, seed: int = 7):
+def synthesize_media(n: int):
     """n deterministic MEDIA-schema rows cycling over the four real
     containers: [(media_id, media_type, payload, width, height,
     duration_ms)]."""
     rows = []
     for i in range(n):
-        s = seed * 100003 + i
+        s = 7 * 100003 + i
         kind = i % 4
         if kind == 0:
             rows.append((i, "image", bytearray(_synth_png(s)), 16, 12, None))

@@ -10,7 +10,7 @@ this fingerprint" gate.
 
 Spark-first design — the filter IS a DataFrame:
 
-  * ``bloom_build`` hashes every key to ``k`` deterministic bit positions
+  * ``bloom_build`` hashes every ``url`` to 3 deterministic bit positions
     (md5-derived, so the filter is a pure function of the key set —
     reproducible across runs AND engines, unlike Spark's built-in
     ``bloomFilter`` whose layout is JVM-private) and bit_or-aggregates
@@ -18,17 +18,16 @@ Spark-first design — the filter IS a DataFrame:
     The result is (block, bits) rows — storable as a parquet/Iceberg
     table, unionable across snapshots (bit_or is associative), and
     incrementally maintainable (bit_or the new month's blocks in).
-  * ``bloom_probe`` joins each key's k probes against the block table and
-    requires ALL k bits set. With default sizing the filter is KBs-to-MBs
+  * ``bloom_probe`` joins each key's 3 probes against the block table and
+    requires ALL 3 bits set. With default sizing the filter is KBs-to-MBs
     and BROADCAST, so probing is map-only on the corpus side; at 10^12
     keys the block table outgrows broadcast and the same plan degrades
     gracefully to a shuffled join on ``block`` — which is still narrow
-    (k rows per key) and never moves the corpus payload.
+    (3 rows per key) and never moves the corpus payload.
 
-Sizing: ``nibbles`` hex digits give ``16^nibbles`` bits (4 -> 65,536 bits
-= 1,024 blocks; 7 -> 268M bits = 4M blocks ~ 32 MB, still broadcastable).
-False-positive rate ~ (1 - e^(-k*n/m))^k; pick m ~ 10 bits/key for ~1%
-at k=3. All constants are part of the model contract — the SQL oracle
+Sizing: 4 hex digits give 16^4 = 65,536 bits = 1,024 blocks.
+False-positive rate ~ (1 - e^(-k*n/m))^k with k = 3; m ~ 10 bits/key
+gives ~1%. All constants are part of the model contract — the SQL oracle
 reproduces the identical filter bit-for-bit.
 """
 
@@ -61,16 +60,14 @@ def _mask_col():
     return F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))")
 
 
-def bloom_build(
-    df: DataFrame, key_col: str = "url", k: int = 3, nibbles: int = 4
-) -> DataFrame:
+def bloom_build(df: DataFrame) -> DataFrame:
     """Aggregate the key set into Bloom blocks: (block long, bits long)
     where ``bits`` ORs a 1<<(pos % 64) mask for every key hash landing in
-    the block. One explode (k small ints per key — the payload never
+    the block. One explode (3 small ints per key — the payload never
     widens) + one partial-agg groupBy: duplicate keys and co-partition
     collisions collapse map-side before the shuffle."""
-    key = F.col(key_col).cast("string")
-    probes = df.select(F.explode(F.array(*_positions(key, k, nibbles))).alias("p"))
+    key = F.col("url").cast("string")
+    probes = df.select(F.explode(F.array(*_positions(key, 3, 4))).alias("p"))
     return (
         probes.select(_block_col().alias("block"), _mask_col().alias("mask"))
         .groupBy("block")
@@ -78,38 +75,31 @@ def bloom_build(
     )
 
 
-def bloom_probe(
-    df: DataFrame,
-    bloom: DataFrame,
-    key_col: str = "url",
-    k: int = 3,
-    nibbles: int = 4,
-    broadcast: bool = True,
-) -> DataFrame:
+def bloom_probe(df: DataFrame, bloom: DataFrame) -> DataFrame:
     """Test every row's key against a :func:`bloom_build` table: returns
     the input columns plus ``maybe_seen`` (false -> GUARANTEED unseen;
-    true -> seen or false positive). k and nibbles must match the build.
+    true -> seen or false positive).
 
-    Plan: explode to k probe rows per key, (broadcast) left join on
+    Plan: explode to 3 probe rows per key, broadcast left join on
     ``block``, then groupBy the key requiring all k bits present. The
     corpus payload stays on the build side of the final semi-join —
     callers typically follow with ``df.join(probe.filter(...), key)`` or
     use the returned frame directly."""
-    key = F.col(key_col).cast("string")
-    pos = _positions(key, k, nibbles)
+    key = F.col("url").cast("string")
+    pos = _positions(key, 3, 4)
     probes = df.select(
-        F.col(key_col),
+        F.col("url"),
         F.explode(F.array(*pos)).alias("p"),
-    ).select(F.col(key_col), _block_col().alias("block"), _mask_col().alias("mask"))
-    b = F.broadcast(bloom) if broadcast else bloom
+    ).select(F.col("url"), _block_col().alias("block"), _mask_col().alias("mask"))
+    b = F.broadcast(bloom)
     joined = probes.join(b, "block", "left")
     hit = (
         F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(F.col("mask")) == F.col("mask")
     ).cast("int")
     return (
-        joined.groupBy(key_col)
+        joined.groupBy("url")
         .agg(F.min(hit).alias("_all_hit"))
-        .select(F.col(key_col), (F.col("_all_hit") == 1).alias("maybe_seen"))
+        .select(F.col("url"), (F.col("_all_hit") == 1).alias("maybe_seen"))
     )
 
 

@@ -40,17 +40,14 @@ def negative_samples(
     n_entities: int,
     k: int = 1,
     seed: int = 42,
-    filter_true: bool = True,
-    s_col: str = "s",
-    t_col: str = "t",
 ) -> DataFrame:
     """``k`` corrupted triples per edge: (s, t, copy, corrupt_head,
-    neg_s, neg_t), with true-edge collisions anti-joined away when
-    ``filter_true`` (so output rows per edge may be < k — the filtered
-    protocol; deterministic, not resampled)."""
+    neg_s, neg_t), with true-edge collisions anti-joined away (so output
+    rows per edge may be < k — the filtered protocol; deterministic, not
+    resampled)."""
     if n_entities <= 0:
         raise ValueError("n_entities must be positive")
-    s, t = F.col(s_col).cast("long"), F.col(t_col).cast("long")
+    s, t = F.col("s").cast("long"), F.col("t").cast("long")
     copies = edges.select(
         s.alias("s"),
         t.alias("t"),
@@ -93,8 +90,6 @@ def negative_samples(
         .otherwise(F.col("_repl"))
         .alias("neg_t"),
     )
-    if not filter_true:
-        return neg
     true_edges = edges.select(
         s.alias("neg_s"), t.alias("neg_t")
     ).distinct()

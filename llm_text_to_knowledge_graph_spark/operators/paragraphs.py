@@ -39,13 +39,12 @@ def _split_sentences_udf(text: pd.Series) -> pd.Series:
     return pd.Series([split_sentences(t) for t in text])
 
 
-def extract_paragraphs(
-    pages: DataFrame, lang: str | None = "en", charset: str = "auto"
-) -> DataFrame:
+def extract_paragraphs(pages: DataFrame, charset: str = "auto") -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> paragraphs(url, warc_ts, para_idx, text).
 
-    ``lang`` predicate is applied before the UDF so Catalyst pushes it to the
-    scan (partition pruning on a lang-partitioned table at scale).
+    The ``lang = 'en'`` predicate is applied before the UDF so Catalyst
+    pushes it to the scan (partition pruning on a lang-partitioned table at
+    scale).
     ``charset="auto"`` (DEFAULT since round 5 — at 100 TB the non-UTF-8
     tail is real and the sniff is ~free, see extract_paragraphs_text)
     sniffs each page's encoding (BOM / meta / content,
@@ -54,8 +53,7 @@ def extract_paragraphs(
     latin-1/UTF-16 crawl pages. Pass ``charset="utf-8"`` for the
     reference's blind-decode bit-parity mode.
     """
-    if lang is not None:
-        pages = pages.filter(F.col("lang") == lang)
+    pages = pages.filter(F.col("lang") == "en")
     udf = (
         _extract_paragraphs_auto_udf
         if charset == "auto"

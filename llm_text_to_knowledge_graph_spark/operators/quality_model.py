@@ -59,8 +59,8 @@ DEFAULT_QUALITY_WEIGHTS = (-11.1824, -9.768, 79.1157, -0.0741)
 DEFAULT_QUALITY_BIAS = -7.7508
 
 
-def ngram_lm(docs: DataFrame, text_col: str = "text", k: float = LM_K) -> dict:
-    """Train an add-``k`` bigram LM: returns ``{"bigrams": (w1, w2, logp),
+def ngram_lm(docs: DataFrame) -> dict:
+    """Train an add-k bigram LM (k = ``LM_K``): returns ``{"bigrams": (w1, w2, logp),
     "unigrams": (w1, logp_unk), "vocab_size": int}``.
 
     ``logp(w2|w1) = ln((c(w1,w2) + k) / (c(w1) + k*V))`` for seen bigrams;
@@ -72,7 +72,7 @@ def ngram_lm(docs: DataFrame, text_col: str = "text", k: float = LM_K) -> dict:
     ``vocab_size`` is the one scalar driver action (model metadata, not a
     per-row dependency).
     """
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     pairs = docs.select(
         F.posexplode(F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))))
         .alias("pos", "w1"),
@@ -93,29 +93,24 @@ def ngram_lm(docs: DataFrame, text_col: str = "text", k: float = LM_K) -> dict:
     big = big.localCheckpoint(eager=False)
     uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab_size = docs.select(
-        F.explode(_tokens(F.col(text_col))).alias("w")
+        F.explode(_tokens(F.col("text"))).alias("w")
     ).agg(F.countDistinct("w")).first()[0]
-    denom = F.col("c1") + F.lit(k) * F.lit(float(vocab_size))
+    denom = F.col("c1") + F.lit(LM_K) * F.lit(float(vocab_size))
     bigrams = (
         big.join(uni, "w1")
         .select(
             "w1",
             "w2",
-            F.round(F.log((F.col("c12") + F.lit(k)) / denom), 9).alias("logp"),
+            F.round(F.log((F.col("c12") + F.lit(LM_K)) / denom), 9).alias("logp"),
         )
     )
     unigrams = uni.select(
-        "w1", F.round(F.log(F.lit(k) / denom), 9).alias("logp_unk")
+        "w1", F.round(F.log(F.lit(LM_K) / denom), 9).alias("logp_unk")
     )
     return {"bigrams": bigrams, "unigrams": unigrams, "vocab_size": vocab_size}
 
 
-def lm_perplexity(
-    docs: DataFrame,
-    lm: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lm_perplexity(docs: DataFrame, lm: dict) -> DataFrame:
     """Score every document against a trained :func:`ngram_lm`: returns
     (doc_id, n_bigrams, avg_logp, perplexity) with
     ``perplexity = exp(-avg_logp)``; docs with fewer than two tokens have
@@ -129,9 +124,9 @@ def lm_perplexity(
     to per-doc partial sums.
     """
     floor = F.lit(round(-__import__("math").log(lm["vocab_size"]), 9))
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     pairs = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))))
         .alias("pos", "w1"),
         toks.alias("_toks"),
@@ -162,12 +157,12 @@ def lm_perplexity(
     )
 
 
-def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """The frozen 4-feature vector both training and scoring use:
     [len_score, punct_ratio, stop_ratio, mean_wlen]. Same signal
     definitions as textstats.quality_score (shared provenance documented
     there); pure column expressions."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = _tokens(t)
     n_tok = F.size(toks)
     n_chars = F.length(t)
@@ -175,7 +170,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     stop_arr = F.array(*[F.lit(s) for s in _EN_STOPWORDS])
     n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
     return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.round(F.least(n_chars / F.lit(500.0), F.lit(1.0)), 9).alias("len_score"),
         F.round(
             F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0)), 9
@@ -195,9 +190,7 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 _FEATURES = ("len_score", "punct_ratio", "stop_ratio", "mean_wlen")
 
 
-def train_quality_model(
-    labeled: DataFrame, label_col: str = "label", max_iter: int = 50
-) -> tuple[tuple[float, ...], float]:
+def train_quality_model(labeled: DataFrame) -> tuple[tuple[float, ...], float]:
     """Fit the logistic quality classifier on (quality_features ⨝ labels):
     returns ``(weights, bias)`` ready for :func:`score_quality_model`.
     pyspark.ml LogisticRegression (L-BFGS) is deterministic for a fixed
@@ -208,27 +201,21 @@ def train_quality_model(
     from pyspark.ml.feature import VectorAssembler
 
     vec = VectorAssembler(inputCols=list(_FEATURES), outputCol="features")
-    ds = vec.transform(labeled).select("features", F.col(label_col).alias("label"))
-    model = LogisticRegression(maxIter=max_iter, regParam=0.0).fit(ds)
+    ds = vec.transform(labeled).select("features", F.col("label"))
+    model = LogisticRegression(maxIter=50, regParam=0.0).fit(ds)
     return tuple(round(float(w), 4) for w in model.coefficients), round(
         float(model.intercept), 4
     )
 
 
-def score_quality_model(
-    docs: DataFrame,
-    weights: tuple[float, ...] = DEFAULT_QUALITY_WEIGHTS,
-    bias: float = DEFAULT_QUALITY_BIAS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def score_quality_model(docs: DataFrame) -> DataFrame:
     """Score documents with a frozen linear model: (doc_id, <features>,
     quality_prob) where ``quality_prob = sigmoid(w.x + b)``. Pure column
     math over :func:`quality_features` — map-only, rides in the scan, and
     the SQL oracle evaluates the identical literals."""
-    feats = quality_features(docs, id_col=id_col, text_col=text_col)
-    z = F.lit(float(bias))
-    for w, c in zip(weights, _FEATURES):
+    feats = quality_features(docs)
+    z = F.lit(float(DEFAULT_QUALITY_BIAS))
+    for w, c in zip(DEFAULT_QUALITY_WEIGHTS, _FEATURES):
         z = z + F.lit(float(w)) * F.col(c)
     return feats.select(
         "doc_id",
@@ -237,13 +224,7 @@ def score_quality_model(
     )
 
 
-def dsir_logratio(
-    docs: DataFrame,
-    target_lm: dict,
-    base_lm: dict,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_logratio(docs: DataFrame, target_lm: dict, base_lm: dict) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every document
     by ``logratio = avg_logp_target - avg_logp_base`` under two
@@ -263,9 +244,9 @@ def dsir_logratio(
 
     floor_t = F.lit(round(-math.log(target_lm["vocab_size"]), 9))
     floor_b = F.lit(round(-math.log(base_lm["vocab_size"]), 9))
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     pairs = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))))
         .alias("pos", "w1"),
         toks.alias("_toks"),
@@ -301,12 +282,7 @@ def dsir_logratio(
     )
 
 
-def dsir_resample(
-    logratios: DataFrame,
-    k: int,
-    seed: int = 42,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_resample(logratios: DataFrame, k: int, seed: int = 42) -> DataFrame:
     """Deterministic Gumbel-top-k importance resampling over
     :func:`dsir_logratio` output: sampling WITHOUT replacement where a
     document's inclusion probability is proportional to its importance
@@ -321,7 +297,7 @@ def dsir_resample(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))),
+                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}"))),
                 1,
                 8,
             ),
@@ -333,7 +309,7 @@ def dsir_resample(
     gumbel = -F.log(-F.log(u))
     key = F.round(F.col("logratio") + gumbel, 6)
     return (
-        logratios.select(id_col, "logratio", key.alias("sample_key"))
-        .orderBy(F.desc("sample_key"), id_col)
+        logratios.select("doc_id", "logratio", key.alias("sample_key"))
+        .orderBy(F.desc("sample_key"), "doc_id")
         .limit(k)
     )

@@ -61,29 +61,23 @@ def rag_context(
     top_entities: int = 8,
     k: int | None = None,
     iterations: int = 3,
-    damping: float = 0.85,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Rank documents as RAG context for a query expressed as KG seed
     entities + lexical terms.
 
     ``entity_edges``: (s, t) entity-id graph (KG edges or co-mention
-    pairs). ``entity_docs``: (node_id, ``id_col``) mention map — which
-    documents mention which entity. ``docs``: (``id_col``, ``text_col``)
-    corpus. Returns one row per document that mentions at least one
-    top-``top_entities`` entity: (``id_col``, n_entities, graph_mass,
-    bm25, score), optionally cut to the global top ``k`` by score.
+    pairs). ``entity_docs``: (node_id, doc_id) mention map — which
+    documents mention which entity. ``docs``: (doc_id, text) corpus.
+    Returns one row per document that mentions at least one
+    top-``top_entities`` entity: (doc_id, n_entities, graph_mass, bm25,
+    score), optionally cut to the global top ``k`` by score.
     """
     # integer PPR: the whole fixpoint runs in int64 units of 1e-12, so
     # the ranks below are exact longs, never engine-dependent double sums
     # (round-3 lesson: PPR hub values are exact 7-decimal numbers, and
     # ROUND(double, 6) at the x.xxx_xxx5 boundary disagrees between
     # Spark's shortest-repr HALF_UP and DuckDB's scaled-double round)
-    damping_num = int(round(damping * 100))
-    ppr = personalized_pagerank_scaled(
-        entity_edges, seeds, iterations=iterations, damping_num=damping_num
-    )
+    ppr = personalized_pagerank_scaled(entity_edges, seeds, iterations=iterations)
     # snap to the 6dp lattice IN INTEGER SPACE (half-up on longs), then
     # cut: order is a pure function of the lattice + node_id
     top = (
@@ -95,10 +89,10 @@ def rag_context(
         .limit(top_entities)
     )
     mass = (
-        entity_docs.select("node_id", id_col)
+        entity_docs.select("node_id", "doc_id")
         .distinct()
         .join(F.broadcast(top), "node_id")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_entities"),
             # exact long sum; ONE division to double at the end — both
@@ -106,13 +100,11 @@ def rag_context(
             (F.sum("rank6") / F.lit(1e6)).alias("graph_mass"),
         )
     )
-    bm = bm25_scores(
-        docs, query_terms, id_col=id_col, text_col=text_col
-    ).withColumnRenamed("score", "bm25")
+    bm = bm25_scores(docs, query_terms).withColumnRenamed("score", "bm25")
     out = (
-        mass.join(bm, id_col, "left")
+        mass.join(bm, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_entities",
             "graph_mass",
             F.coalesce(F.col("bm25"), F.lit(0.0)).alias("bm25"),
@@ -123,5 +115,5 @@ def rag_context(
         )
     )
     if k is not None:
-        out = out.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+        out = out.orderBy(F.desc("score"), F.col("doc_id")).limit(k)
     return out

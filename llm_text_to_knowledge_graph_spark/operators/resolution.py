@@ -10,7 +10,7 @@ downstream grounding/canonicalization join keys on the cluster.
 
 Spark-first shape (everything relational, no model objects):
 
-  * pairs: char-``n``-shingle exact Jaccard over the DISTINCT alias table
+  * pairs: char-2-shingle exact Jaccard over the DISTINCT alias table
     via an inverted shingle index — same relational skeleton as
     ``dedup.ngram_jaccard_pairs`` but character shingles (entity surface
     forms are short; word grams are useless at length 1-3). The alias
@@ -42,17 +42,15 @@ from .linking import _shingles
 
 def alias_pairs(
     aliases: DataFrame,
-    alias_col: str = "alias",
-    n: int = 2,
     threshold: float = 0.6,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """(alias_a, alias_b, jaccard) for distinct alias pairs whose char-``n``
+    """(alias_a, alias_b, jaccard) for distinct alias pairs whose char-2
     shingle Jaccard is >= ``threshold`` (alias_a < alias_b)."""
     sh = (
-        aliases.select(F.col(alias_col).alias("alias"))
+        aliases.select("alias")
         .distinct()
-        .withColumn("shingles", _shingles(F.col("alias"), n))
+        .withColumn("shingles", _shingles(F.col("alias")))
         .filter(F.size("shingles") > 0)
         .withColumn("n_sh", F.size("shingles"))
         .select("alias", "n_sh", F.explode("shingles").alias("g"))
@@ -85,24 +83,16 @@ def alias_pairs(
     )
 
 
-def resolve_entities(
-    aliases: DataFrame,
-    alias_col: str = "alias",
-    n: int = 2,
-    threshold: float = 0.6,
-    max_shingle_freq: int | None = None,
-    max_iter: int = 25,
-) -> DataFrame:
+def resolve_entities(aliases: DataFrame, threshold: float = 0.6) -> DataFrame:
     """One row per distinct alias: (alias, canonical) where ``canonical``
     is the lexicographic minimum alias of its similarity cluster (the
     alias itself if nothing similar exists)."""
-    pairs = alias_pairs(aliases, alias_col, n, threshold, max_shingle_freq)
+    pairs = alias_pairs(aliases, threshold)
     comp = connected_components(
         pairs.select(F.col("alias_a").alias("s"), F.col("alias_b").alias("t")),
-        max_iter=max_iter,
     )
     return (
-        aliases.select(F.col(alias_col).alias("alias"))
+        aliases.select("alias")
         .distinct()
         .join(comp.withColumnRenamed("node_id", "alias"), "alias", "left")
         .select(

@@ -44,14 +44,7 @@ from pyspark.sql import functions as F
 TOKEN_SPLIT = r"\s+"
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """(id_col, score) for every document matching >= 1 query term,
     BM25-scored against the whole corpus' statistics.
 
@@ -63,9 +56,9 @@ def bm25_scores(
     terms = sorted(set(t.lower() for t in query_terms))
     # null-text documents produce no tokens under explode, so the original
     # plan excluded them from n_docs/avgdl — keep that contract explicit
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT).alias("_toks"),
+    base = docs.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
+        F.split(F.trim(F.lower(F.col("text"))), TOKEN_SPLIT).alias("_toks"),
     )
 
     # pass 1 — corpus stats, map-only: size(tokens) == the count explode
@@ -78,14 +71,14 @@ def bm25_scores(
     # matches of matching documents; dl rides along (per-doc constant)
     matched = (
         base.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("_toks").alias("dl"),
             F.filter("_toks", lambda t: t.isin(*terms)).alias("_m"),
         )
         .filter(F.size("_m") > 0)
-        .select(id_col, "dl", F.explode("_m").alias("term"))
+        .select("doc_id", "dl", F.explode("_m").alias("term"))
     )
-    tf = matched.groupBy(id_col, "term").agg(
+    tf = matched.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")
     )
     # compute-once: df derives from tf (one row per (doc, term), so rows
@@ -105,14 +98,14 @@ def bm25_scores(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    sat = (F.col("tf") * F.lit(k1 + 1.0)) / (
+    sat = (F.col("tf") * F.lit(1.2 + 1.0)) / (
         F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        + F.lit(1.2)
+        * (F.lit(1.0 - 0.75) + F.lit(0.75) * F.col("dl") / F.col("avgdl"))
     )
     return (
-        scored.select(id_col, (idf * sat).alias("s"))
-        .groupBy(id_col)
+        scored.select("doc_id", (idf * sat).alias("s"))
+        .groupBy("doc_id")
         .agg(F.round(F.sum("s"), 6).alias("score"))
     )
 
@@ -120,8 +113,6 @@ def bm25_scores(
 def rrf_fuse(
     rankings: list[DataFrame],
     k: int = 60,
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     weights: list[float] | None = None,
     top: int | None = None,
 ) -> DataFrame:
@@ -130,7 +121,7 @@ def rrf_fuse(
     hybrid-retrieval combiner (lexical BM25 + dense ANN) because it needs
     no score calibration between the legs, only ranks.
 
-    Each input is (``id_col``, ``rank_col``) with rank starting at 1.
+    Each input is (doc_id, rank) with rank starting at 1.
     Plan: tag + unionByName (no shuffle), ONE partial-agg groupBy on the
     id — each leg is already top-k-sized, so the fusion input is
     O(N*k*|queries|) regardless of corpus size. Scores are rounded to 6dp
@@ -143,18 +134,18 @@ def rrf_fuse(
     tagged = None
     for w, r in zip(weights, rankings):
         leg = r.select(
-            F.col(id_col),
-            (F.lit(float(w)) / (F.lit(float(k)) + F.col(rank_col))).alias(
+            F.col("doc_id"),
+            (F.lit(float(w)) / (F.lit(float(k)) + F.col("rank"))).alias(
                 "contrib"
             ),
         )
         tagged = leg if tagged is None else tagged.unionByName(leg)
-    fused = tagged.groupBy(id_col).agg(
+    fused = tagged.groupBy("doc_id").agg(
         F.round(F.sum("contrib"), 6).alias("rrf_score"),
         F.count(F.lit(1)).cast("long").alias("n_lists"),
     )
     if top is not None:
-        fused = fused.orderBy(F.desc("rrf_score"), id_col).limit(top)
+        fused = fused.orderBy(F.desc("rrf_score"), "doc_id").limit(top)
     return fused
 
 

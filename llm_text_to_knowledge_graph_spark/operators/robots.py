@@ -204,14 +204,7 @@ def robots_allowed(path: str, rules: tuple) -> bool:
     return True
 
 
-def robots_filter(
-    urls: DataFrame,
-    robots: DataFrame,
-    agent: str = "*",
-    host_col: str = "host",
-    path_col: str = "path",
-    body_col: str = "robots_body",
-) -> DataFrame:
+def robots_filter(urls: DataFrame, robots: DataFrame) -> DataFrame:
     """Adds ``crawl_allowed`` to ``urls(host, path, ...)`` by joining
     ``robots(host, robots_body)`` and evaluating RFC 9309 rules.
 
@@ -224,15 +217,15 @@ def robots_filter(
     def _allowed(path: pd.Series, body: pd.Series) -> pd.Series:
         return pd.Series(
             [
-                robots_allowed(p or "/", _rules_cached(b, agent))
+                robots_allowed(p or "/", _rules_cached(b, "*"))
                 for p, b in zip(path, body)
             ]
         )
 
-    joined = urls.join(robots, host_col, "left")
+    joined = urls.join(robots, "host", "left")
     return joined.withColumn(
-        "crawl_allowed", _allowed(F.col(path_col), F.col(body_col))
-    ).drop(body_col)
+        "crawl_allowed", _allowed(F.col("path"), F.col("robots_body"))
+    ).drop("robots_body")
 
 
 def politeness_schedule(
@@ -240,14 +233,11 @@ def politeness_schedule(
     robots: DataFrame,
     agent: str = "*",
     default_delay: float = 1.0,
-    host_col: str = "host",
-    path_col: str = "path",
-    body_col: str = "robots_body",
 ) -> DataFrame:
     """Per-host fetch schedule honoring Crawl-delay: adds ``crawl_delay``
     (the host's declared delay via :func:`parse_crawl_delay`, else
     ``default_delay``), ``fetch_seq`` (0-based deterministic per-host
-    order by ``path_col``) and ``fetch_at_s`` (= fetch_seq * delay,
+    order by ``path``) and ``fetch_at_s`` (= fetch_seq * delay,
     seconds after the host's crawl start) to ``urls``.
 
     Plan: one host-keyed join (broadcast-able robots side), one pandas
@@ -276,12 +266,12 @@ def politeness_schedule(
             ]
         )
 
-    w = Window.partitionBy(host_col).orderBy(path_col)
-    robots = robots.groupBy(host_col).agg(F.min(body_col).alias(body_col))
+    w = Window.partitionBy("host").orderBy("path")
+    robots = robots.groupBy("host").agg(F.min("robots_body").alias("robots_body"))
     return (
-        urls.join(robots, host_col, "left")
-        .withColumn("crawl_delay", _delay(F.col(body_col)))
-        .drop(body_col)
+        urls.join(robots, "host", "left")
+        .withColumn("crawl_delay", _delay(F.col("robots_body")))
+        .drop("robots_body")
         .withColumn(
             "fetch_seq", (F.row_number().over(w) - 1).cast("long")
         )
@@ -326,9 +316,7 @@ def parse_sitemap(body: str | None) -> list[tuple[str, str | None, bool]]:
     return out
 
 
-def sitemap_urls(
-    sitemaps: DataFrame, host_col: str = "host", body_col: str = "body"
-) -> DataFrame:
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
     """sitemaps(host, body) -> (host, loc, lastmod, is_index): one
     Arrow crossing parses, posexplode flattens — the frontier-seed
     source that joins against the robots gate and the URL canonicalizer
@@ -352,10 +340,10 @@ def sitemap_urls(
 
     return (
         sitemaps.select(
-            host_col, F.explode(_parse(F.col(body_col))).alias("u")
+            "host", F.explode(_parse(F.col("body"))).alias("u")
         )
         .select(
-            host_col,
+            "host",
             F.col("u.loc").alias("loc"),
             F.col("u.lastmod").alias("lastmod"),
             F.col("u.is_index").alias("is_index"),

@@ -38,24 +38,22 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors for each query id (excluding self).
 
     The query side is a broadcast hash join (tiny), the corpus side is a
     full scan — the right baseline shape: no shuffle of the corpus, one
     final shuffle of Q*N candidate rows bounded by the rank filter."""
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     joined = embeddings.alias("c").crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_col(F.col("qvec"), F.col(vec_col)), 6).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(F.col("qvec"), F.col("embedding")), 6).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -93,8 +91,6 @@ def lsh_topk(
     k: int = 10,
     bits: int = 8,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
     """Approximate top-k: corpus bucketed by hyperplane signature; each
@@ -108,21 +104,21 @@ def lsh_topk(
     Pass ``dim`` explicitly in pipelines — the ``.first()`` fallback is a
     driver action (acceptable interactively, a plan break mid-pipeline)."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     planes = _hyperplanes(dim, bits)
-    bucketed = embeddings.withColumn("bucket", lsh_bucket_col(F.col(vec_col), planes))
-    q = bucketed.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
+    bucketed = embeddings.withColumn("bucket", lsh_bucket_col(F.col("embedding"), planes))
+    q = bucketed.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
         F.col("bucket").alias("qbucket"),
     )
     joined = bucketed.join(
         F.broadcast(q), F.col("bucket") == F.col("qbucket")
-    ).filter(F.col(id_col) != F.col("query_id"))
+    ).filter(F.col("vec_id") != F.col("query_id"))
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_col(F.col("qvec"), F.col(vec_col)), round_digits).alias(
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(F.col("qvec"), F.col("embedding")), round_digits).alias(
             "cosine"
         ),
     )
@@ -141,11 +137,7 @@ def lsh_topk(
 def ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "kmeans",
-    seed: int = 42,
-    max_iter: int = 10,
     fit_sample: float | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Coarse quantizer centroids.
@@ -172,8 +164,8 @@ def ivf_centroids(
     """
     if method == "lowest_id":
         rows = (
-            embeddings.select(id_col, vec_col)
-            .orderBy(id_col)
+            embeddings.select("vec_id", "embedding")
+            .orderBy("vec_id")
             .limit(n_centroids)
             .collect()
         )
@@ -186,21 +178,21 @@ def ivf_centroids(
     if fit_sample is not None:
         from .curation import hash_sample
 
-        fit_src = hash_sample(embeddings, rate=fit_sample, seed=seed, id_col=id_col)
+        fit_src = hash_sample(embeddings, rate=fit_sample, seed=42, id_col="vec_id")
     # spherical k-means: normalize first so euclidean centroids align with
     # the cosine cell assignment used at query time. ml.Normalizer is the
     # O(dim)-per-row plan (a transform-lambda dividing by a norm expression
     # re-evaluates the norm per ELEMENT — O(dim^2)) and passes all-zero
     # vectors through unscaled instead of emitting NaN features.
     raw = fit_src.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("raw")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("raw")
     )
     feats = (
         Normalizer(inputCol="raw", outputCol="features", p=2.0)
         .transform(raw)
         .select("features")
     )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n_centroids, seed=42, maxIter=10).fit(feats)
     return [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
@@ -273,10 +265,7 @@ def nearest_cells_col(vec_col, centroids, nprobe: int):
 def ivf_index(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "kmeans",
-    seed: int = 42,
     fit_sample: float | None = None,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Build the IVF index once: (corpus + ``cell`` column, centroids).
@@ -287,12 +276,9 @@ def ivf_index(
     brute force (see bench: ivf_query vs embedding_topk). ``fit_sample``
     bounds the quantizer FIT to a deterministic corpus fraction (see
     :func:`ivf_centroids`) — the assignment pass still covers everything."""
-    cents = ivf_centroids(
-        embeddings, n_centroids, id_col, vec_col, method, seed,
-        fit_sample=fit_sample,
-    )
+    cents = ivf_centroids(embeddings, n_centroids, method, fit_sample=fit_sample)
     corpus = embeddings.withColumn(
-        "cell", nearest_cells_col(F.col(vec_col), cents, 1)[0]
+        "cell", nearest_cells_col(F.col("embedding"), cents, 1)[0]
     )
     return corpus, cents
 
@@ -303,25 +289,22 @@ def ivf_topk_indexed(
     query_ids: list[int],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 3,
 ) -> DataFrame:
     """Query a prebuilt IVF index: each query scores only the vectors in
     its ``nprobe`` nearest cells (~nprobe/K of the corpus); the query side
     is broadcast, the only shuffle is the per-query top-k window."""
-    q = corpus.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(nearest_cells_col(F.col(vec_col), cents, nprobe)).alias("cell"),
+    q = corpus.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.explode(nearest_cells_col(F.col("embedding"), cents, nprobe)).alias("cell"),
     )
     joined = corpus.join(F.broadcast(q), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_col(F.col("qvec"), F.col(vec_col)), round_digits).alias(
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(F.col("qvec"), F.col("embedding")), 3).alias(
             "cosine"
         ),
     )
@@ -333,12 +316,7 @@ def ivf_topk_indexed(
     )
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-vector symmetric int8 quantization — the storage/bandwidth plan
     for a 100-TB embedding table: float32 -> 1 byte/dim + one scale (4×
     smaller at rest, 4× fewer bytes through every scan and shuffle, and
@@ -347,15 +325,15 @@ def quantize_int8(
 
     Map-only column math (two array folds + one transform, whole-stage
     codegen, zero Python); all-zero vectors take scale=1 so they stay
-    exactly representable. Returns ``(id_col, qvec array<tinyint>,
+    exactly representable. Returns ``(vec_id, qvec array<tinyint>,
     scale double)``. Dequantization is ``qvec[i] * scale`` — see
     :func:`quantized_topk`; the reconstruction error is bounded by
     scale/2 per component (pinned in tests along with top-k recall).
     ``extra_cols`` carries index columns (e.g. the IVF ``cell``) through
     unchanged — see :func:`ivf_topk_quantized`."""
     staged = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col("vec_id"),
+        F.col("embedding").cast("array<double>").alias("_v"),
         *[F.col(c) for c in extra_cols],
     )
     amax = F.aggregate(
@@ -368,7 +346,7 @@ def quantize_int8(
         "scale", F.when(amax > 0, amax / F.lit(127.0)).otherwise(F.lit(1.0))
     )
     return staged.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.transform(
             F.col("_v"), lambda x: F.round(x / F.col("scale"), 0).cast("tinyint")
         ).alias("qvec"),
@@ -381,8 +359,6 @@ def quantized_topk(
     quantized: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    id_col: str = "vec_id",
-    round_digits: int = 3,
 ) -> DataFrame:
     """Exact top-k over the int8-quantized table: cosine on the
     dequantized values ``qvec[i] * scale``. Cosine is scale-invariant per
@@ -392,18 +368,18 @@ def quantized_topk(
     window-rank shape as :func:`brute_force_topk`; recall vs float32
     brute force is pinned in tests (int8 is a rank-stable encoding at
     embedding-typical dynamic ranges)."""
-    q = quantized.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("qvec").alias("q_qvec")
+    q = quantized.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
     )
     joined = quantized.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     dq = F.transform(F.col("qvec"), lambda x: x.cast("double"))
     dqq = F.transform(F.col("q_qvec"), lambda x: x.cast("double"))
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_col(dqq, dq), round_digits).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(dqq, dq), 3).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -419,8 +395,6 @@ def ivf_topk_quantized(
     query_ids: list[int],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    round_digits: int = 3,
 ) -> DataFrame:
     """IVF over the int8 corpus — the FAISS IVF-SQ8 analog and the actual
     100-TB ANN plan: cell pruning cuts the scan to ~nprobe/K of the corpus
@@ -436,20 +410,20 @@ def ivf_topk_quantized(
     (scale/2 per component); overlap vs the float IVF probe is pinned in
     tests/test_quantize.py."""
     dq = F.transform(F.col("qvec"), lambda x: x.cast("double"))
-    q = corpus_q.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
+    q = corpus_q.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"),
         F.col("qvec").alias("q_qvec"),
         F.explode(nearest_cells_col(dq, cents, nprobe)).alias("cell"),
     )
     joined = corpus_q.join(F.broadcast(q), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     dqc = F.transform(F.col("qvec"), lambda x: x.cast("double"))
     dqq = F.transform(F.col("q_qvec"), lambda x: x.cast("double"))
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine_col(dqq, dqc), round_digits).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(dqq, dqc), 3).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -473,23 +447,21 @@ def brute_force_l2_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact L2 top-k — the correctness reference for the PQ path (product
     quantization approximates EUCLIDEAN distance, FAISS IndexPQ's metric;
     :func:`brute_force_topk` is its cosine sibling). Same plan shape:
     broadcast queries, one corpus scan, rank-bounded output."""
-    vd = F.col(vec_col).cast("array<double>")
-    q = embeddings.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), vd.alias("qvec")
+    vd = F.col("embedding").cast("array<double>")
+    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), vd.alias("qvec")
     )
     joined = embeddings.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.round(_l2sq(F.col("qvec"), vd), 6).alias("l2sq"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("l2sq"), F.asc("neighbor_id"))
@@ -500,9 +472,7 @@ def brute_force_l2_topk(
     )
 
 
-def _lloyd_kmeans(
-    X: "np.ndarray", k: int, seed: int, max_iter: int = 25
-) -> "np.ndarray":
+def _lloyd_kmeans(X: "np.ndarray", k: int, seed: int) -> "np.ndarray":
     """Deterministic in-memory Lloyd KMeans (kmeans++ seeding, fixed RNG)
     for BOUNDED fit samples: one (n,k) distance matrix per iteration via
     the expanded-square identity, empty clusters keep their centroid."""
@@ -519,7 +489,7 @@ def _lloyd_kmeans(
         d2 = np.minimum(d2, ((X - cents[-1]) ** 2).sum(axis=1))
     C = np.asarray(cents, dtype=np.float64)
     xsq = (X**2).sum(axis=1)[:, None]
-    for _ in range(max_iter):
+    for _ in range(25):
         d = xsq + (C**2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
         a = d.argmin(axis=1)
         newC = np.vstack(
@@ -535,13 +505,9 @@ def pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     ksub: int = 16,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     method: str = "kmeans",
-    seed: int = 42,
-    max_iter: int = 10,
     fit_sample: float | None = None,
-    fit_backend: str | None = None,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks: the vector space is split into ``m``
     contiguous subspaces and each gets its own ``ksub``-entry codebook —
@@ -555,16 +521,14 @@ def pq_codebooks(
     split as :func:`ivf_centroids` (FAISS trains PQ codebooks on
     ~max(10k, 50*ksub) vectors, never the collection).
 
-    ``fit_backend``: with a bounded ``fit_sample``, the m fits default to
-    ``"driver"`` — ONE collect of the sampled vectors, then m in-memory
-    deterministic Lloyd fits (:func:`_lloyd_kmeans`): m sequential
-    pyspark.ml jobs over a few thousand rows are pure scheduler overhead
-    (measured ~6× slower at sf0.1), and FAISS likewise trains
-    subquantizers in memory. ``"ml"`` keeps the fully distributed
-    pyspark.ml fits — the right backend when ``fit_sample`` is None and
-    the fit set is corpus-sized (also the auto default there). Size
-    ``fit_sample`` so the sample fits the driver (~100k rows is plenty
-    for ksub=16..256).
+    With a bounded ``fit_sample`` the m fits run on the driver — ONE
+    collect of the sampled vectors, then m in-memory deterministic Lloyd
+    fits (:func:`_lloyd_kmeans`): m sequential pyspark.ml jobs over a few
+    thousand rows are pure scheduler overhead (measured ~6× slower at
+    sf0.1), and FAISS likewise trains subquantizers in memory. Without
+    ``fit_sample`` the fit set is corpus-sized and the fits are the fully
+    distributed pyspark.ml ones. Size ``fit_sample`` so the sample fits
+    the driver (~100k rows is plenty for ksub=16..256).
 
     ``method="lowest_id"``: codebook j = the j-th subvector slice of the
     ``ksub`` lowest-id vectors — fully deterministic, reproducible by a
@@ -580,8 +544,8 @@ def pq_codebooks(
     subdim = dim // m
     if method == "lowest_id":
         rows = (
-            embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
-            .orderBy(id_col)
+            embeddings.select("vec_id", F.col(vec_col).cast("array<double>"))
+            .orderBy("vec_id")
             .limit(ksub)
             .collect()
         )
@@ -593,11 +557,9 @@ def pq_codebooks(
     if fit_sample is not None:
         from .curation import hash_sample
 
-        fit_src = hash_sample(embeddings, rate=fit_sample, seed=seed, id_col=id_col)
+        fit_src = hash_sample(embeddings, rate=fit_sample, seed=42, id_col="vec_id")
     vd = F.col(vec_col).cast("array<double>")
-    if fit_backend is None:
-        fit_backend = "driver" if fit_sample is not None else "ml"
-    if fit_backend == "driver":
+    if fit_sample is not None:
         X = np.asarray(
             [r[0] for r in fit_src.select(vd.alias("_v")).collect()],
             dtype=np.float64,
@@ -606,7 +568,7 @@ def pq_codebooks(
             [
                 [float(x) for x in c]
                 for c in _lloyd_kmeans(
-                    X[:, j * subdim : (j + 1) * subdim], ksub, seed + j
+                    X[:, j * subdim : (j + 1) * subdim], ksub, 42 + j
                 )
             ]
             for j in range(m)
@@ -624,7 +586,7 @@ def pq_codebooks(
     try:
         for j in range(m):
             model = KMeans(
-                k=ksub, seed=seed + j, maxIter=max_iter, featuresCol=f"s{j}"
+                k=ksub, seed=42 + j, maxIter=10, featuresCol=f"s{j}"
             ).fit(slices)
             books.append(
                 [[float(x) for x in c] for c in model.clusterCenters()]
@@ -637,7 +599,6 @@ def pq_codebooks(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -647,7 +608,7 @@ def pq_encode(
     256 B -> 8 B per vector at rest (32x); the decode table is the
     codebook, kilobytes, shipped as plan literals.
 
-    Returns ``(id_col, codes array<tinyint>)``. Distances are rounded to
+    Returns ``(vec_id, codes array<tinyint>)``. Distances are rounded to
     9 digits before the argmin so the tie classes match the SQL oracle
     exactly (same convention as the IVF cell assignment). ``extra_cols``
     carries index columns (e.g. the IVF ``cell``) through unchanged —
@@ -676,7 +637,7 @@ def pq_encode(
         )
         code_cols.append(_argmin_code(sub, lit_book))
     return embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*code_cols).cast("array<tinyint>").alias("codes"),
         *extra_cols,
     )
@@ -688,9 +649,6 @@ def pq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     rerank: int | None = None,
 ) -> DataFrame:
     """ADC (asymmetric distance) top-k over the PQ-encoded corpus — the
@@ -719,8 +677,8 @@ def pq_topk(
     m = len(codebooks)
     spark = codes.sparkSession
     qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+        embeddings.filter(F.col("vec_id").isin(query_ids))
+        .select(F.col("vec_id"), F.col("embedding").cast("array<double>"))
         .collect()
     )
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
@@ -740,12 +698,12 @@ def pq_topk(
         lut_rows, "query_id long, luts array<array<double>>"
     )
     joined = codes.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(_adc_sum(m), round_digits).alias("adc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(_adc_sum(m), 6).alias("adc"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     shortlist = (
@@ -755,9 +713,7 @@ def pq_topk(
     )
     if not rerank:
         return shortlist
-    return _exact_l2_rerank(
-        shortlist, embeddings, qrows, k, id_col, vec_col, round_digits
-    )
+    return _exact_l2_rerank(shortlist, embeddings, qrows, k)
 
 
 def _adc_sum(m: int):
@@ -781,9 +737,6 @@ def _exact_l2_rerank(
     embeddings: DataFrame,
     qrows,
     k: int,
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
 ) -> DataFrame:
     """FAISS-IndexRefineFlat tail shared by the PQ searchers: only the Q*R
     shortlist rows fetch their float vectors (broadcast candidate join —
@@ -795,8 +748,8 @@ def _exact_l2_rerank(
     )
     cand = (
         embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("nvec"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").cast("array<double>").alias("nvec"),
         )
         # candidates are Q*R rows — broadcast them so the float table is
         # probed by a map-side join, never shuffled
@@ -806,7 +759,7 @@ def _exact_l2_rerank(
     exact = cand.select(
         "query_id",
         "neighbor_id",
-        F.round(_l2sq(F.col("qvec"), F.col("nvec")), round_digits).alias("adc"),
+        F.round(_l2sq(F.col("qvec"), F.col("nvec")), 6).alias("adc"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     return (
@@ -819,13 +772,8 @@ def _exact_l2_rerank(
 def ivf_pq_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "kmeans",
-    seed: int = 42,
-    max_iter: int = 10,
     fit_sample: float | None = None,
-    fit_backend: str | None = None,
 ) -> list[list[float]]:
     """L2 coarse centroids for the IVF-PQ index, cell ids = slot 0..K-1.
 
@@ -835,12 +783,12 @@ def ivf_pq_centroids(
     same metric as the codebooks or the residuals stop being small.
     ``method="lowest_id"`` (the ``n_cells`` lowest-id vectors, slot order)
     is kept for the DuckDB oracle, like every other index builder here.
-    ``fit_backend`` follows the :func:`pq_codebooks` rule: bounded sample
-    -> ONE collect + in-memory deterministic Lloyd; unbounded -> ml."""
+    The fit follows the :func:`pq_codebooks` rule: bounded sample -> ONE
+    collect + in-memory deterministic Lloyd; unbounded -> ml."""
     if method == "lowest_id":
         rows = (
-            embeddings.select(id_col, F.col(vec_col).cast("array<double>"))
-            .orderBy(id_col)
+            embeddings.select("vec_id", F.col("embedding").cast("array<double>"))
+            .orderBy("vec_id")
             .limit(n_cells)
             .collect()
         )
@@ -849,24 +797,22 @@ def ivf_pq_centroids(
     if fit_sample is not None:
         from .curation import hash_sample
 
-        fit_src = hash_sample(embeddings, rate=fit_sample, seed=seed, id_col=id_col)
-    if fit_backend is None:
-        fit_backend = "driver" if fit_sample is not None else "ml"
-    if fit_backend == "driver":
+        fit_src = hash_sample(embeddings, rate=fit_sample, seed=42, id_col="vec_id")
+    if fit_sample is not None:
         X = [
             r[0]
             for r in fit_src.select(
-                F.col(vec_col).cast("array<double>").alias("_v")
+                F.col("embedding").cast("array<double>").alias("_v")
             ).collect()
         ]
-        return [[float(x) for x in c] for c in _lloyd_kmeans(X, n_cells, seed)]
+        return [[float(x) for x in c] for c in _lloyd_kmeans(X, n_cells, 42)]
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     feats = fit_src.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n_cells, seed=42, maxIter=10).fit(feats)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -921,10 +867,7 @@ def ivf_pq_index(
     n_cells: int = 16,
     m: int = 8,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "kmeans",
-    seed: int = 42,
     fit_sample: float | None = None,
 ) -> tuple[DataFrame, list[list[float]], list[list[list[float]]]]:
     """Build the composed IVF-PQ index — the FAISS IVFPQ / billion-scale
@@ -941,19 +884,17 @@ def ivf_pq_index(
     whole corpus crosses once and lands as ``(id, cell, codes)``: 8 bytes
     of payload per vector, written PARTITIONED BY (cell) at rest so probes
     prune at file level. Returns ``(codes_df, centroids, codebooks)``."""
-    cents = ivf_pq_centroids(
-        embeddings, n_cells, id_col, vec_col, method, seed, fit_sample=fit_sample
-    )
+    cents = ivf_pq_centroids(embeddings, n_cells, method, fit_sample=fit_sample)
     cents_lit = F.array(
         *[F.array(*[F.lit(float(x)) for x in c]) for c in cents]
     )
-    vd = F.col(vec_col).cast("array<double>")
+    vd = F.col("embedding").cast("array<double>")
     resid = embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         nearest_cells_l2_col(vd, cents, 1)[0].alias("cell"),
         vd.alias("_v"),
     ).select(
-        id_col,
+        "vec_id",
         "cell",
         F.zip_with(
             F.col("_v"),
@@ -965,14 +906,12 @@ def ivf_pq_index(
         resid,
         m=m,
         ksub=ksub,
-        id_col=id_col,
         vec_col="resid",
         method=method if method == "lowest_id" else "kmeans",
-        seed=seed,
         fit_sample=fit_sample,
     )
     codes = pq_encode(
-        resid, books, id_col=id_col, vec_col="resid", extra_cols=("cell",)
+        resid, books, vec_col="resid", extra_cols=("cell",)
     )
     return codes, cents, books
 
@@ -985,9 +924,6 @@ def ivf_pq_topk(
     query_ids: list[int],
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
     rerank: int | None = None,
 ) -> DataFrame:
     """Search the IVF-PQ index: per query, pick the ``nprobe`` nearest
@@ -1007,8 +943,8 @@ def ivf_pq_topk(
     m = len(codebooks)
     spark = codes.sparkSession
     qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+        embeddings.filter(F.col("vec_id").isin(query_ids))
+        .select(F.col("vec_id"), F.col("embedding").cast("array<double>"))
         .collect()
     )
     cmat = np.asarray(cents, dtype=np.float64)
@@ -1033,12 +969,12 @@ def ivf_pq_topk(
         lut_rows, "query_id long, cell int, luts array<array<double>>"
     )
     joined = codes.join(F.broadcast(q), "cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = joined.select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(_adc_sum(m), round_digits).alias("adc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(_adc_sum(m), 6).alias("adc"),
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     shortlist = (
@@ -1048,18 +984,13 @@ def ivf_pq_topk(
     )
     if not rerank:
         return shortlist
-    return _exact_l2_rerank(
-        shortlist, embeddings, qrows, k, id_col, vec_col, round_digits
-    )
+    return _exact_l2_rerank(shortlist, embeddings, qrows, k)
 
 
 def semantic_dedup(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate removal via
     cluster-bounded pairwise cosine. This is the published kmeans-cluster
@@ -1085,10 +1016,10 @@ def semantic_dedup(
 
     Returns one row per input vector — clean keeps are positively
     certified, like :func:`~..curation.decontaminate`:
-    ``(id_col, cell, centroid_sim, dup_of, keep)`` where ``dup_of`` is the
+    ``(vec_id, cell, centroid_sim, dup_of, keep)`` where ``dup_of`` is the
     lowest-id earlier-ranked witness within threshold (null for keeps).
     """
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     cids_lit = F.array(*[F.lit(int(cid)) for cid, _ in centroids])
     cvecs_lit = F.array(
         *[F.array(*[F.lit(float(x)) for x in cvec]) for _, cvec in centroids]
@@ -1096,7 +1027,7 @@ def semantic_dedup(
     pos = F.array_position(cids_lit, F.col("cell")).cast("int")
     assigned = (
         embeddings.select(
-            F.col(id_col),
+            F.col("vec_id"),
             vec.alias("_v"),
             nearest_cells_col(vec, centroids, 1)[0].alias("cell"),
         )
@@ -1106,11 +1037,11 @@ def semantic_dedup(
         )
     )
     a = assigned.select(
-        F.col(id_col).alias("_ida"), F.col("_v").alias("_va"),
+        F.col("vec_id").alias("_ida"), F.col("_v").alias("_va"),
         "cell", F.col("centroid_sim").alias("_csa"),
     )
     b = assigned.select(
-        F.col(id_col).alias("_idb"), F.col("_v").alias("_vb"),
+        F.col("vec_id").alias("_idb"), F.col("_v").alias("_vb"),
         "cell", F.col("centroid_sim").alias("_csb"),
     )
     earlier = (F.col("_csb") < F.col("_csa")) | (
@@ -1120,16 +1051,16 @@ def semantic_dedup(
         a.join(b, "cell")
         .filter(earlier)
         .filter(
-            F.round(cosine_col(F.col("_va"), F.col("_vb")), round_digits)
+            F.round(cosine_col(F.col("_va"), F.col("_vb")), 6)
             >= F.lit(threshold)
         )
         .groupBy("_ida")
         .agg(F.min("_idb").alias("dup_of"))
     )
     return (
-        assigned.join(dropped, assigned[id_col] == dropped["_ida"], "left")
+        assigned.join(dropped, assigned["vec_id"] == dropped["_ida"], "left")
         .select(
-            F.col(id_col).cast("long").alias(id_col),
+            F.col("vec_id").cast("long").alias("vec_id"),
             F.col("cell").cast("int").alias("cell"),
             "centroid_sim",
             F.col("dup_of").cast("long").alias("dup_of"),
@@ -1144,22 +1075,17 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "lowest_id",
 ) -> DataFrame:
-    """One-shot IVF top-k (index built inline; ``method`` as in
-    ``ivf_centroids`` — the driver's SQL-oracle query keeps ``lowest_id``).
+    """One-shot IVF top-k (index built inline with ``ivf_centroids``'
+    ``lowest_id`` method, which the driver's SQL-oracle query replays).
 
     Note the cost model: building the index scores K centroids per corpus
     vector, so a ONE-SHOT IVF query only beats ``brute_force_topk`` when
     |queries| > K. The scale path is ``ivf_index`` once + ``ivf_topk_indexed``
     per query batch, where the per-query cost is ~nprobe/K of brute force.
     """
-    corpus, cents = ivf_index(embeddings, n_centroids, id_col, vec_col, method)
-    return ivf_topk_indexed(
-        corpus, cents, query_ids, k, nprobe, id_col, vec_col
-    )
+    corpus, cents = ivf_index(embeddings, n_centroids, "lowest_id")
+    return ivf_topk_indexed(corpus, cents, query_ids, k, nprobe)
 
 
 def random_projection(
@@ -1167,8 +1093,6 @@ def random_projection(
     out_dim: int,
     dim: int,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int | None = None,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection: (id, proj array<double>
@@ -1194,10 +1118,10 @@ def random_projection(
     comps = []
     for plane in planes:
         lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        c = _dot(F.col(vec_col), lit_plane) * F.lit(inv)
+        c = _dot(F.col("embedding"), lit_plane) * F.lit(inv)
         if round_digits is not None:
             c = F.round(c, round_digits)
         comps.append(c)
     return embeddings.select(
-        F.col(id_col), F.array(*comps).alias("proj")
+        F.col("vec_id"), F.array(*comps).alias("proj")
     )

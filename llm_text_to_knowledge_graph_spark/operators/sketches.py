@@ -38,8 +38,8 @@ Estimate (Flajolet et al. 2007): alpha_m * m^2 / Σ 2^-M_j with the
 small-range linear-counting correction E <= 2.5m, V zero registers ->
 m * ln(m / V).
 
-CMS layout (depth k, width 16^nibbles):
-  cell(key, row i) = int(md5(key || ':' || i)[0:nibbles], 16)
+CMS layout (4 rows, width 16^3):
+  cell(key, row i) = int(md5(key || ':' || i)[0:3], 16)
 Point estimate = min over rows of cell counts (Cormode & Muthukrishnan
 2005): never an underestimate, overestimate bounded by collisions.
 """
@@ -149,22 +149,16 @@ def hll_distinct(
 # ---------------------------------------------------------------------------
 
 
-def _cms_cell(key: Column, row: int, nibbles: int) -> Column:
+def _cms_cell(key: Column, row: int) -> Column:
     return F.conv(
-        F.substring(F.md5(F.concat(key, F.lit(f":{row}"))), 1, nibbles), 16, 10
+        F.substring(F.md5(F.concat(key, F.lit(f":{row}"))), 1, 3), 16, 10
     ).cast("int")
 
 
-def cms_build(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    nibbles: int = 3,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Count-Min sketch as (row int, col int, n bigint): ``depth`` rows of
-    width 16^nibbles. One explode (depth small ints per occurrence) + ONE
-    partial-agg groupBy — at most depth * 16^nibbles rows out regardless of
+def cms_build(df: DataFrame, key_col: str, weight_col: str | None = None) -> DataFrame:
+    """Count-Min sketch as (row int, col int, n bigint): 4 rows of width
+    16^3. One explode (4 small ints per occurrence) + ONE partial-agg
+    groupBy — at most 4 * 16^3 rows out regardless of
     key cardinality, so a trillion-distinct-token frequency table becomes
     ~16k rows. SUM-mergeable across snapshot sketches."""
     key = F.col(key_col).cast("string")
@@ -177,9 +171,9 @@ def cms_build(
                 *[
                     F.struct(
                         F.lit(i).alias("row"),
-                        _cms_cell(key, i, nibbles).alias("col"),
+                        _cms_cell(key, i).alias("col"),
                     )
-                    for i in range(depth)
+                    for i in range(4)
                 ]
             )
         ).alias("c"),
@@ -192,20 +186,11 @@ def cms_build(
     )
 
 
-def cms_estimate(
-    items: DataFrame,
-    cms: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    nibbles: int = 3,
-    broadcast: bool = True,
-) -> DataFrame:
+def cms_estimate(items: DataFrame, cms: DataFrame, key_col: str) -> DataFrame:
     """Point-estimate every row's key against a :func:`cms_build` table:
-    input columns + ``est_n`` (min over the key's depth cells — >= true
-    count always, with bounded overestimate). The sketch is <= 16^nibbles *
-    depth rows and broadcast by default, so probing is map-only on the
-    items side; past broadcast size the same plan degrades to a narrow
-    shuffled join on (row, col)."""
+    input columns + ``est_n`` (min over the key's 4 cells — >= true
+    count always, with bounded overestimate). The sketch is <= 4 * 16^3
+    rows and broadcast, so probing is map-only on the items side."""
     key = F.col(key_col).cast("string")
     probes = items.select(
         F.col(key_col),
@@ -214,14 +199,14 @@ def cms_estimate(
                 *[
                     F.struct(
                         F.lit(i).alias("row"),
-                        _cms_cell(key, i, nibbles).alias("col"),
+                        _cms_cell(key, i).alias("col"),
                     )
-                    for i in range(depth)
+                    for i in range(4)
                 ]
             )
         ).alias("c"),
     ).select(key_col, "c.row", "c.col")
-    sk = F.broadcast(cms) if broadcast else cms
+    sk = F.broadcast(cms)
     return (
         probes.join(sk, ["row", "col"], "left")
         .groupBy(key_col)

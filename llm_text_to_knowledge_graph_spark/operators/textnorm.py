@@ -273,10 +273,8 @@ def decode_page_bytes(raw: bytes) -> tuple[str, str]:
     return _decode_w1252(raw), "cp1252"
 
 
-def decode_pages(
-    df: DataFrame, col: str = "html", text_col: str = "text"
-) -> DataFrame:
-    """Adds ``text_col`` + ``charset`` decoded from the binary ``col``
+def decode_pages(df: DataFrame) -> DataFrame:
+    """Adds ``text`` + ``charset`` decoded from the binary ``html``
     — the charset-aware replacement for a blind utf-8 decode at crawl
     ingest. One Arrow crossing computes both outputs."""
     from pyspark.sql.types import StructField, StructType
@@ -294,9 +292,9 @@ def decode_pages(
         ]
         return pd.DataFrame(rows, columns=["t", "c"])
 
-    tmp = df.withColumn("__dec", _dec(F.col(col)))
+    tmp = df.withColumn("__dec", _dec(F.col("html")))
     return (
-        tmp.withColumn(text_col, F.col("__dec.t"))
+        tmp.withColumn("text", F.col("__dec.t"))
         .withColumn("charset", F.col("__dec.c"))
         .drop("__dec")
     )

@@ -22,24 +22,24 @@ def _tokens(text_col):
     return F.split(F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " ")), " ")
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate
     (chars/3.3 heuristic floor-capped by whitespace count)."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.greatest(
             F.size(toks),
-            F.floor(F.length(F.col(text_col)) / F.lit(3.3)).cast("int"),
+            F.floor(F.length(F.col("text")) / F.lit(3.3)).cast("int"),
         ).cast("long").alias("n_subwords_est"),
     )
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality: length, punctuation ratio, stopword
     ratio, mean word length — combined into [0,1]. Pure column math."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = _tokens(t)
     n_tok = F.size(toks)
     n_chars = F.length(t)
@@ -57,7 +57,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         6,
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_tok.alias("n_tokens"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
@@ -66,10 +66,10 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-vote language id (en/de/fr/unknown) — argmax of distinct
     stopword hits per language, built-ins only."""
-    toks = F.array_distinct(_tokens(F.col(text_col)))
+    toks = F.array_distinct(_tokens(F.col("text")))
 
     def hits(words):
         return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
@@ -83,12 +83,12 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         .otherwise(F.lit("fr"))
     )
     return docs.select(
-        F.col(id_col), en.alias("en_hits"), de.alias("de_hits"), fr.alias("fr_hits"),
+        F.col("doc_id"), en.alias("en_hits"), de.alias("de_hits"), fr.alias("fr_hits"),
         lang.alias("lang_pred"),
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprints: md5 (portable, oracle-checkable) plus a
     64-bit polynomial rolling hash of the normalized text (UDF — winnowing
     building block)."""
@@ -103,11 +103,11 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
         return texts.map(roll)
 
-    norm = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("md5_fp"),
-        _rolling(F.col(text_col)).alias("rolling_fp"),
+        _rolling(F.col("text")).alias("rolling_fp"),
     )
 
 
@@ -119,18 +119,12 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 _GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def gopher_quality(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher rule-based quality filter (Rae et al. 2021, §A.1.1) — the
     standard web-scale pretraining-corpus cleaning pass, as pure column
     expressions (zero Python, one map-only stage):
 
-    * word count within [min_words, max_words]
+    * word count within [50, 100000]
     * mean word length within [3, 10]
     * symbol-to-word ratio (# or ellipsis) <= 0.1
     * >= 80% of words contain at least one alphabetic character
@@ -139,7 +133,7 @@ def gopher_quality(
     Returns one row per doc with each rule's boolean and the overall
     ``pass`` conjunction; filter-pushdown-friendly (callers filter on
     ``pass`` and Catalyst prunes the rule columns they don't read)."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = _tokens(t)
     n_tok = F.size(toks)
     word_chars = F.length(F.regexp_replace(t, r"\s+", ""))
@@ -152,13 +146,13 @@ def gopher_quality(
     stop_arr = F.array(*[F.lit(s) for s in _GOPHER_STOPWORDS])
     n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
 
-    ok_words = (n_tok >= min_words) & (n_tok <= max_words)
+    ok_words = (n_tok >= 50) & (n_tok <= 100_000)
     ok_wlen = (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
     ok_sym = sym_ratio <= 0.1
     ok_alpha = alpha_frac >= 0.8
     ok_stop = n_stop >= 2
     return docs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         n_tok.cast("long").alias("n_words"),
         F.round(mean_wlen, 6).alias("mean_word_len"),
         ok_words.alias("ok_words"),
@@ -170,12 +164,7 @@ def gopher_quality(
     )
 
 
-def repetition_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, n: int = 2) -> DataFrame:
     """Within-document n-gram repetition (the Gopher/C4 repetition-removal
     signal): per doc, the total n-gram count, the occurrence count of the
     most frequent n-gram, its fraction, and the fraction of n-gram
@@ -185,27 +174,27 @@ def repetition_stats(
     (doc_id, gram) -> ONE groupBy(doc_id). Both aggregations map-side
     combine; no joins, no windows. Docs are the natural partition key so
     skew equals the longest document, not a hot token."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
     grams = F.expr(
-        f"transform(sequence(0, size({'`tk`'}) - {n}),"
+        f"transform(sequence(0, size(`tk`) - {n}),"
         f" i -> concat_ws(' ', slice(`tk`, i + 1, {n})))"
     )
     per_gram = (
-        docs.select(F.col(id_col), toks.alias("tk"))
+        docs.select(F.col("doc_id"), toks.alias("tk"))
         .filter(F.size(F.col("tk")) >= n)
-        .select(F.col(id_col), F.explode(grams).alias("gram"))
-        .groupBy(id_col, "gram")
+        .select(F.col("doc_id"), F.explode(grams).alias("gram"))
+        .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("cnt"))
     )
     return (
-        per_gram.groupBy(id_col)
+        per_gram.groupBy("doc_id")
         .agg(
             F.sum("cnt").alias("n_grams"),
             F.max("cnt").alias("top_gram_count"),
             F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0)).alias("dup_occurrences"),
         )
         .select(
-            F.col(id_col).cast("long").alias(id_col),
+            F.col("doc_id").cast("long").alias("doc_id"),
             F.col("n_grams").cast("long").alias("n_grams"),
             F.col("top_gram_count").cast("long").alias("top_gram_count"),
             F.round(F.col("top_gram_count") / F.col("n_grams"), 6).alias("top_gram_frac"),

@@ -22,14 +22,10 @@ def asof_join(
     on: str,
     ts: str,
     right_cols: list[str],
-    tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """Left as-of join: every ``left`` row gains the ``right_cols`` of the
     latest ``right`` row with the same ``on`` key and ``right.ts <=
     left.ts`` (inclusive; right wins ties). No match -> nulls.
-
-    ``tolerance_seconds`` bounds staleness: matches older than
-    ``left.ts - tolerance`` are nulled out (join still one pass).
 
     Right rows should be unique per (key, ts); pre-aggregate if not —
     which row "the" match is would otherwise be undefined in any engine.
@@ -53,15 +49,6 @@ def asof_join(
             f"_m_{c}", F.last(f"_r_{c}", ignorenulls=True).over(w)
         )
     res = filled.filter(F.col("_tag") == 1)
-    if tolerance_seconds is not None:
-        stale = F.col("_m_ts") < F.col(ts) - F.expr(
-            f"INTERVAL {int(tolerance_seconds)} SECONDS"
-        )
-        for c in right_cols:
-            res = res.withColumn(
-                f"_m_{c}", F.when(stale, F.lit(None)).otherwise(F.col(f"_m_{c}"))
-            )
-        res = res.withColumn("_m_ts", F.when(stale, F.lit(None)).otherwise(F.col("_m_ts")))
     keep = [c for c in left.columns]
     renames = [F.col(f"_m_{c}").alias(f"right_{c}") for c in right_cols]
     return res.select(*keep, F.col("_m_ts").alias("right_ts"), *renames)

@@ -83,16 +83,14 @@ def normalize_url(url) -> Column:
     return F.when(scheme == "", url).otherwise(norm)
 
 
-def url_dedup_groups(
-    pages: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def url_dedup_groups(pages: DataFrame) -> DataFrame:
     """(norm_url, n_variants, first_url): one row per canonical URL with
     how many raw spellings collapsed into it and the lexicographic-min
     raw form — ONE partial-agg groupBy on the normalized key."""
     return (
         pages.select(
-            F.col(url_col).alias("url"),
-            normalize_url(url_col).alias("norm_url"),
+            F.col("url"),
+            normalize_url("url").alias("norm_url"),
         )
         .groupBy("norm_url")
         .agg(
@@ -102,12 +100,7 @@ def url_dedup_groups(
     )
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    max_hops: int = 16,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_hops: int = 16) -> DataFrame:
     """Resolve redirect CHAINS to their final targets — the crawl-graph
     pass that turns per-fetch ``301/302 (src, dst)`` observations into a
     canonical-location map (chains are endemic: http->https->www->path
@@ -150,7 +143,7 @@ def resolve_redirects(
     # resolved-to-NULL row.
     g = (
         redirects.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+            F.col("src"), F.col("dst")
         )
         .filter(F.col("dst").isNotNull())
         .groupBy("src")
@@ -189,12 +182,7 @@ def resolve_redirects(
     )
 
 
-def canonical_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    head_bytes: int = 8192,
-) -> DataFrame:
+def canonical_links(pages: DataFrame) -> DataFrame:
     """Extract the ``<link rel="canonical" href=...>`` declaration — the
     page's OWN statement of its canonical identity, the third leg of the
     URL-identity family (normalize_url fixes spelling, resolve_redirects
@@ -205,7 +193,7 @@ def canonical_links(
     ``regexp_extract`` (the two attribute orders — href-then-rel and
     rel-then-href — are both idiomatic HTML) inside whole-stage codegen,
     riding the same scan that feeds paragraph extraction. Only the first
-    ``head_bytes`` BYTES are scanned (binary substring before decode):
+    8192 BYTES are scanned (binary substring before decode):
     the declaration lives in <head>,
     and an unbounded regex over multi-MB bodies is the classic
     scan-stage regression. Quoted and unquoted attribute values are
@@ -214,7 +202,7 @@ def canonical_links(
     (the one entity legitimately common in URLs). An href must end in a
     quote, whitespace or '>', and the rel token in one of those or '/', so
     a tag cut by the head bound gives NULL, not a truncated url. A
-    relative href resolves against ``url_col``: ``//h/p`` takes the page's
+    relative href resolves against ``url``: ``//h/p`` takes the page's
     scheme, ``/p`` its scheme and authority; any other href without a
     scheme gives NULL. Returns (url, canonical_url, has_canonical); pages
     without html or without the tag report NULL / false.
@@ -222,7 +210,7 @@ def canonical_links(
     # substring the BINARY first, decode second: decoding a multi-MB
     # body before truncation would defeat the head bound (at most one
     # trailing multi-byte char is mangled at the cut, harmless here)
-    head = F.decode(F.substring(F.col(html_col), 1, head_bytes), "UTF-8")
+    head = F.decode(F.substring(F.col("html"), 1, 8192), "UTF-8")
     # rel token is boundary-anchored (a closing quote, whitespace, '/'
     # or '>' must follow, also at the head bound) so rel="canonicalized"
     # never matches, not even cut to "canonical"; a quoted value may list
@@ -243,7 +231,7 @@ def canonical_links(
     scheme = "[A-Za-z][A-Za-z0-9+.-]*:"
 
     def page_prefix(pat):  # NULL when the page url has no such prefix
-        return F.nullif(F.regexp_extract(F.col(url_col), f"^({pat})", 1), F.lit(""))
+        return F.nullif(F.regexp_extract(F.col("url"), f"^({pat})", 1), F.lit(""))
 
     canon = (
         F.when(canon.rlike(f"^{scheme}"), canon)
@@ -251,7 +239,7 @@ def canonical_links(
         .when(canon.startswith("/"), F.concat(page_prefix(f"{scheme}//[^/?#]*"), canon))
     )
     return pages.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         canon.alias("canonical_url"),
         canon.isNotNull().alias("has_canonical"),
     )

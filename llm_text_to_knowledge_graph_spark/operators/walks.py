@@ -22,7 +22,7 @@ Scale/plan decisions:
   on (node, idx) — work per step is |frontier| + |frontier| matches,
   never |frontier| x avg_degree candidate rows. Both joins are plain
   hash joins AQE can broadcast when the graph side is small.
-- **Lineage is truncated** every ``checkpoint_every`` steps
+- **Lineage is truncated** every 5 steps
   (localCheckpoint, same pattern as pagerank/LPA) so long walks don't
   accumulate a 2-joins-per-step plan tree.
 - Walks on the undirected view never die (every visited node has >= 1
@@ -90,7 +90,6 @@ def random_walks(
     walks_per_node: int = 1,
     seed: int = 42,
     directed: bool = False,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """``walks_per_node`` uniform random walks of ``walk_len`` steps from
     every node with at least one neighbor.
@@ -159,16 +158,14 @@ def random_walks(
             F.lit(step).alias("step"),
             F.col("_at").alias("node"),
         )
-        if step % checkpoint_every == 0 and step < walk_len:
+        if step % 5 == 0 and step < walk_len:
             nxt = nxt.localCheckpoint(eager=False)
         frontier = nxt
         out = out.unionByName(nxt)
     return out
 
 
-def skipgram_pairs(
-    walks: DataFrame, window: int = 2, drop_self: bool = True
-) -> DataFrame:
+def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     """(center, context) pairs: every ordered pair of nodes within
     ``window`` steps of each other on the same walk (both directions,
     word2vec-style). Self-join keyed on walk_id — walk rows are 3
@@ -182,6 +179,5 @@ def skipgram_pairs(
     )
     d = F.abs(F.col("_sa") - F.col("_sb"))
     pairs = a.join(b, "walk_id").filter((d >= 1) & (d <= window))
-    if drop_self:
-        pairs = pairs.filter(F.col("center") != F.col("context"))
+    pairs = pairs.filter(F.col("center") != F.col("context"))
     return pairs.select("walk_id", F.col("_sa").alias("step"), "center", "context")

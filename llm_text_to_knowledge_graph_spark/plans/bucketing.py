@@ -30,20 +30,21 @@ def write_bucketed(
     table: str,
     key: str | list[str],
     buckets: int = 64,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
-    """Persist ``df`` as a parquet table bucketed (and by default sorted)
-    by ``key``. Sorting within buckets lets a later sort-merge join skip
-    its sort stages too — the join becomes a pure linear zip of the two
+    """Persist ``df`` as a parquet table bucketed and sorted by ``key``.
+    Sorting within buckets lets a later sort-merge join skip its sort
+    stages too — the join becomes a pure linear zip of the two
     bucket files. ``path`` makes it an external table (catalog keeps only
     metadata); omit it to store under spark.sql.warehouse.dir."""
     keys = [key] if isinstance(key, str) else list(key)
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
+    w = (
+        df.write.mode("overwrite").format("parquet")
+        .bucketBy(buckets, *keys)
+        .sortBy(*keys)
+    )
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)

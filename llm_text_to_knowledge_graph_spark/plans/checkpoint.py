@@ -50,7 +50,10 @@ import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+from ..schemas import METRICS
 
 
 class TableStore:
@@ -237,7 +240,8 @@ class TableStore:
         out = os.path.join(self.root, "metrics_log")
         os.makedirs(out, exist_ok=True)
         table = pa.Table.from_pylist(
-            [{k: m[k] for k in _METRICS.names} for m in metrics], schema=_METRICS
+            [{k: m[k] for k in METRICS.names} for m in metrics],
+            schema=to_arrow_schema(METRICS),
         )
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(out, f".{name}")  # dot files are hidden from readers
@@ -249,14 +253,6 @@ class TableStore:
         for entry in os.listdir(tdir):
             if entry.startswith("data-") and entry not in keep:
                 shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
-
-
-# metrics_log rows: one per committed stage of a run
-_METRICS = pa.schema(
-    [("run_id", pa.string()), ("stage", pa.string()),
-     ("rows", pa.int64()), ("wall_ms", pa.int64())]
-)
-_METRICS_DDL = "run_id string, stage string, rows long, wall_ms long"
 
 
 def _is_micros(t: pa.DataType) -> bool:
@@ -391,7 +387,7 @@ class IcebergTableStore:
 
     def write_metrics(self, metrics: list[dict]) -> None:
         df = self.spark.createDataFrame(
-            [tuple(m[k] for k in _METRICS.names) for m in metrics], schema=_METRICS_DDL
+            [tuple(m[k] for k in METRICS.names) for m in metrics], schema=METRICS
         )
         t = self._t("metrics_log")
         if self.spark.catalog.tableExists(t):

@@ -71,22 +71,15 @@ def dense_ids(
     )
 
 
-def salted_join(
-    skewed: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "inner",
-    salt: int = 16,
-) -> DataFrame:
+def salted_join(skewed: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     """Join a Zipf-skewed fact side to a dimension on ``on`` with explicit
-    key salting: fact rows get salt = hash(row)%K, dim rows are replicated
-    K ways, and the join key becomes (on, salt) — splitting each hot key
-    across K reducers."""
+    key salting: fact rows get salt = hash(row)%16, dim rows are replicated
+    16 ways, and the join key becomes (on, salt) — splitting each hot key
+    across 16 reducers (an inner join)."""
     fact = skewed.withColumn(
-        "_salt", F.pmod(F.hash(*skewed.columns), F.lit(salt)).cast("int")
+        "_salt", F.pmod(F.hash(*skewed.columns), F.lit(16)).cast("int")
     )
     replicated = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(15)))
     )
-    joined = fact.join(replicated, on=[on, "_salt"], how=how)
-    return joined.drop("_salt")
+    return fact.join(replicated, on=[on, "_salt"]).drop("_salt")

@@ -69,7 +69,6 @@ def run_pipeline(
     workdir: str | None = None,
     input_token: str = "adhoc",
     run_id: str = "run-0",
-    persist: bool = False,
     extractor: str = "sentence",
 ) -> dict:
     """Run the full pipeline; returns dict of stage-name -> DataFrame plus
@@ -93,12 +92,11 @@ def run_pipeline(
     (tests/test_real_gold.py); both engines are benched every round
     (``kg_extract_fused`` vs ``kg_extract_fused_block``).
 
-    ``persist=True`` caches the kernel output and the nodes MEMORY_AND_DISK
-    in lazy mode — without it the graph build re-executes the extraction
-    once per downstream reference. The checkpointed mode always persists
-    the kernel output while its stages commit (and unpersists it after,
-    also when a commit fails), and reads every later stage from the parquet
-    snapshots.
+    Lazy mode caches nothing: a caller that reads several outputs caches
+    what it reuses (the graph is built from the triples). The checkpointed
+    mode persists the kernel output while its stages commit (and
+    unpersists it after, also when a commit fails), and reads every later
+    stage from the parquet snapshots.
 
     Checkpointed stages resume by one rule: a stage's fingerprint is
     ``<input_token>:<extractor>:<lexicon digest>:<stage>`` (the digest a
@@ -126,10 +124,7 @@ def run_pipeline(
 
     def stage(name: str, thunk):
         if store is None:
-            df = thunk()
-            if persist and name == "nodes":
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            return df
+            return thunk()
         t0 = time.monotonic()
         df, resumed = resume_or_compute(
             store, spark, name, f"{run_key}:{name}", run_id, thunk
@@ -151,7 +146,7 @@ def run_pipeline(
         # explicit partitioning)
         pages = pages.repartition(spark.sparkContext.defaultParallelism * 2, "url")
     base = extract_fused(pages, alias_rows, engine=extractor, shape="paragraphs")
-    if persist or store is not None:
+    if store is not None:
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
     sents = base.select(*_KEYS, F.explode("sentences").alias("s"))
     results = base.select(*_KEYS, F.explode("results").alias("r"))

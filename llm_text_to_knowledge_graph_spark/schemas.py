@@ -155,15 +155,3 @@ METRICS = StructType(
         StructField("wall_ms", LongType(), False),
     ]
 )
-
-LINEAGE = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("url_min", StringType(), True),
-        StructField("url_max", StringType(), True),
-        StructField("warc_ts_max", TimestampType(), True),
-        StructField("rows", LongType(), False),
-    ]
-)

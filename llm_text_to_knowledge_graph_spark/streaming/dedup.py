@@ -24,7 +24,7 @@ future doc similar to a dropped doc is (with LSH probability) similar to
 the survivor it duplicated.
 
 At 100 TB the signature store is the bottleneck surface, not the corpus:
-it is ~(num_hashes x 32 B + overhead) per surviving doc, written
+it is ~(16 hashes x 32 B + overhead) per surviving doc, written
 partitioned by ``sig_bucket = pmod(xxhash64(key), buckets)`` so the
 per-batch band-join reads ONLY the batch's own buckets instead of scanning
 the full store. The pruning is lossless: the join key is (band, key), any
@@ -122,11 +122,8 @@ def incremental_dedup(
     out_root: str,
     checkpoint_dir: str,
     n: int = 1,
-    num_hashes: int = 16,
     bands: int = 4,
     min_est: float = 0.5,
-    id_col: str = "doc_id",
-    available_now: bool = True,
 ):
     """Streaming near-dup filter: new page files -> survivors appended to
     ``{out_root}/docs``, their banded signatures to
@@ -159,8 +156,8 @@ def incremental_dedup(
             "_sketch_text", _page_text(F.col("html"), F.col("text"))
         )
         banded = minhash_det_banded(
-            docs, n=n, num_hashes=num_hashes, bands=bands,
-            id_col=id_col, text_col="_sketch_text",
+            docs, n=n, num_hashes=16, bands=bands,
+            text_col="_sketch_text",
         ).withColumn("sig_bucket", _bucket_col(SIG_BUCKETS)).persist()
         try:
             # the batch's bucket footprint (<= SIG_BUCKETS ints) prunes the
@@ -170,10 +167,10 @@ def incremental_dedup(
             )
             store = read_signature_store(spark, out_root, bucket_ids)
             dups = _dup_ids(
-                banded.drop("sig_bucket"), store, num_hashes, min_est
+                banded.drop("sig_bucket"), store, 16, min_est
             )
             survivors = docs.drop("_sketch_text").join(
-                dups.withColumnRenamed("new_id", id_col), id_col, "left_anti"
+                dups.withColumnRenamed("new_id", "doc_id"), "doc_id", "left_anti"
             )
             _write_batch_idempotent(survivors, f"{out_root}/docs", batch_id)
             surviving_sigs = banded.join(
@@ -191,9 +188,7 @@ def incremental_dedup(
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def read_deduped_docs(spark: SparkSession, out_root: str) -> DataFrame:

@@ -22,11 +22,11 @@ from ..operators.fused import extract_triples_fused
 from ..schemas import PAGES
 
 
-def stream_pages(spark: SparkSession, pages_dir: str, max_files: int = 64) -> DataFrame:
+def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
     """File-source stream of newly landed page files."""
     return (
         spark.readStream.schema(PAGES)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 64)
         .parquet(pages_dir)
     )
 
@@ -64,7 +64,6 @@ def incremental_triples(
     out_dir: str,
     checkpoint_dir: str,
     alias_rows: list,
-    available_now: bool = True,
 ):
     """Run extraction incrementally: each micro-batch of new pages ->
     fused extraction -> idempotent per-batch partition write to the triples
@@ -79,9 +78,7 @@ def incremental_triples(
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def incremental_graph(
@@ -90,7 +87,6 @@ def incremental_graph(
     out_root: str,
     checkpoint_dir: str,
     alias_rows: list,
-    available_now: bool = True,
 ):
     """Incremental graph construction: each micro-batch of new pages appends
     hash-id edges and (batch-distinct) nodes.
@@ -124,9 +120,7 @@ def incremental_graph(
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def read_incremental_nodes(spark: SparkSession, out_root: str) -> DataFrame:

@@ -28,32 +28,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def session_stats(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def session_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """(user, session_start, session_end, n_events) per gap-session.
 
     ``session_end`` is Spark's convention: last event + gap (the time the
-    session provably closed). Streaming inputs get ``watermark`` bound on
-    ``ts_col`` so session state is evictable; batch inputs ignore it.
+    session provably closed). Streaming inputs get a 2-hour watermark on
+    ``ts`` so session state is evictable; batch inputs ignore it.
     """
     e = (
-        events.withWatermark(ts_col, watermark)
+        events.withWatermark("ts", "2 hours")
         if events.isStreaming
         else events
     )
     return (
         e.groupBy(
-            F.col(user_col),
-            F.session_window(F.col(ts_col), gap).alias("_w"),
+            F.col("user_id"),
+            F.session_window(F.col("ts"), gap).alias("_w"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            F.col(user_col),
+            F.col("user_id"),
             F.col("_w.start").alias("session_start"),
             F.col("_w.end").alias("session_end"),
             "n_events",

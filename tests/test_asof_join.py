@@ -35,18 +35,6 @@ def test_asof_semantics(spark):
     assert got[4] == (None, None)        # key with no right rows at all
 
 
-def test_asof_tolerance(spark):
-    left, right = _frames(spark)
-    got = {
-        r.id: r.right_v
-        for r in asof_join(
-            left, right, on="key", ts="ts", right_cols=["v"], tolerance_seconds=60
-        ).collect()
-    }
-    assert got[1] is None  # match was 2 minutes stale
-    assert got[2] == 100.0  # zero staleness survives
-
-
 def test_asof_single_shuffle(spark):
     left, right = _frames(spark)
     plan = (

@@ -213,7 +213,7 @@ def test_stratified_hash_sample(spark):
         "doc_id long, lang string",
     )
     got = stratified_hash_sample(
-        docs, rates={"en": 0.5}, default_rate=0.05, seed=42, group_col="lang"
+        docs, rates={"en": 0.5}, default_rate=0.05, seed=42
     ).collect()
     en = [r for r in got if r["lang"] == "en"]
     xx = [r for r in got if r["lang"] == "xx"]

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from llm_text_to_knowledge_graph_spark.corpus import build_alias_rows, pages_df
+from llm_text_to_knowledge_graph_spark.operators import delta
 from llm_text_to_knowledge_graph_spark.operators.delta import (
     classify_delta,
     snapshot_delta,
@@ -92,7 +93,7 @@ def test_snapshot_delta_equals_batch_rebuild(spark, snapshots):
     assert merged == expect and len(merged) > 0
 
 
-def test_snapshot_delta_reextracts_only_the_delta(spark, snapshots):
+def test_snapshot_delta_reextracts_only_the_delta(spark, snapshots, monkeypatch):
     """The pages handed to the extractor are exactly changed+added — the
     >90% unchanged web is never re-extracted (the whole point)."""
     old, new = snapshots
@@ -109,9 +110,8 @@ def test_snapshot_delta_reextracts_only_the_delta(spark, snapshots):
         carry_names=True,
         carry_url=True,
     )
-    out = snapshot_delta(
-        old, new, alias_rows, old_edges, extractor=counting_extractor
-    )
+    monkeypatch.setattr(delta, "extract_triples_fused", counting_extractor)
+    out = snapshot_delta(old, new, alias_rows, old_edges)
     cls = {
         r["status"]: r["n_urls"]
         for r in out["classification"].groupBy("status").agg(

@@ -13,8 +13,6 @@ from llm_text_to_knowledge_graph_spark.operators.extraction import (
 from llm_text_to_knowledge_graph_spark.operators.fused import (
     PARA_EXTRACT,
     extract_fused,
-    extract_triples_fused,
-    extract_triples_fused_block,
 )
 from llm_text_to_knowledge_graph_spark.operators.graph import (
     annotation_map,
@@ -51,7 +49,6 @@ CHECKPOINT_STAGES = {
     "block": ["paragraphs", "sentences", "mentions", "flat_mentions",
               "statements_block", "triples", "nodes", "edges"],
 }
-FUSED = {"sentence": extract_triples_fused, "block": extract_triples_fused_block}
 ALIAS_ROWS = build_alias_rows(5)
 
 
@@ -100,7 +97,7 @@ def reference(pages):
 
 
 def _assert_fused_equals_modular(pages, reference, extractor):
-    fused = FUSED[extractor](pages, ALIAS_ROWS)
+    fused = extract_fused(pages, ALIAS_ROWS, engine=extractor)
     assert fused.schema == TRIPLES
     got = rows(fused, TRIPLE_COLS)
     assert got == reference(extractor)["triples"]
@@ -119,9 +116,7 @@ def test_fused_lazy_pipeline_stages_equal_modular(spark, pages, reference):
     """Lazy run_pipeline derives every stage from one crossing; for both
     extractors each must match the modular composition row-for-row."""
     for extractor in ("sentence", "block"):
-        fast = run_pipeline(
-            spark, pages, ALIAS_ROWS, persist=True, extractor=extractor
-        )
+        fast = run_pipeline(spark, pages, ALIAS_ROWS, extractor=extractor)
         ref = reference(extractor)
         for name, cols in STAGE_COLS.items():
             assert rows(fast[name], cols) == ref[name], (extractor, name)
@@ -173,8 +168,8 @@ def test_fused_lazy_single_python_crossing(spark, pages):
 
 
 def test_fused_block_single_python_crossing(pages):
-    for fused in FUSED.values():
-        _assert_single_crossing(fused(pages, ALIAS_ROWS))
+    for engine in ("sentence", "block"):
+        _assert_single_crossing(extract_fused(pages, ALIAS_ROWS, engine=engine))
 
 
 def _empty_pages(spark, kind):

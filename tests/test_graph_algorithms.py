@@ -50,7 +50,7 @@ def test_connected_components_match_union_find(spark):
 
 def test_connected_components_long_chain_converges(spark):
     chain = [(i, i + 1) for i in range(30)]
-    got = connected_components(_edges(spark, chain), max_iter=40).collect()
+    got = connected_components(_edges(spark, chain)).collect()
     assert {r.component for r in got} == {0}
     assert len(got) == 31
 

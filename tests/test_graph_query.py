@@ -154,22 +154,19 @@ def test_personalized_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[node] - r[idx[node]]) < 1e-9, node
 
 
-def test_personalized_pagerank_scaled_directed_matches_double(spark):
-    """Directed mode with a dangling sink: the scaled variant must apply
-    the same seed re-teleport of dangling mass as the double variant
-    (the documented ≤ iterations*1e-12 divergence bound). Regression
-    test for the scaled path silently dropping that step — on this
-    graph the un-reteleported ranks diverge by O(0.1)."""
+def test_personalized_pagerank_scaled_matches_double(spark):
+    """The integer-scaled variant replays the double variant with the same
+    seeds within the documented ≤ iterations*1e-12 divergence bound."""
     from llm_text_to_knowledge_graph_spark.operators.graph_query import (
         pagerank,
         personalized_pagerank_scaled,
     )
 
-    # 1->2->3, 3 dangling; extra branch 1->4 (also dangling)
+    # a path 1-2-3 with a branch 1-4
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 4)], "s long, t long"
     )
-    kwargs = dict(seeds=[1, 2], iterations=6, undirected=False)
+    kwargs = dict(seeds=[1, 2], iterations=6)
     want = {
         r["node_id"]: r["rank"]
         for r in pagerank(df, **kwargs).collect()
@@ -181,7 +178,7 @@ def test_personalized_pagerank_scaled_directed_matches_double(spark):
     assert set(got) == set(want)
     for node, rank in want.items():
         assert abs(got[node] - rank) < 1e-10, (node, got[node], rank)
-    # mass is conserved (the point of the re-teleport)
+    # mass is conserved: the undirected graph has no dangling node
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 

@@ -103,7 +103,7 @@ def test_fuzzy_linking_near_misses(spark):
     toks = {r["token"] for r in spans.collect()}
     assert "TPp53" in toks and "MAPKK14" in toks
 
-    linked = link_fuzzy(spans, adf, max_jaccard_distance=0.7, min_score=0.3)
+    linked = link_fuzzy(spans, adf)
     got = {r["alias"]: r["entry_name"] for r in linked.collect()}
     assert got.get("TPp53") == "TP53"
     assert got.get("MAPKK14") == "MAPK14"

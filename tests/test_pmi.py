@@ -1,5 +1,5 @@
 """PMI co-occurrence scoring (operators/cooccur.py) vs an independent
-Python computation, plus cap and dedup semantics."""
+Python computation, plus dedup semantics."""
 
 import math
 from itertools import combinations
@@ -15,11 +15,8 @@ DOCS = {
 }
 
 
-def _py_pmi(docs, cap=None):
-    sets = {}
-    for i, its in docs.items():
-        s = sorted(set(its))
-        sets[i] = s[:cap] if cap else s
+def _py_pmi(docs):
+    sets = {i: sorted(set(its)) for i, its in docs.items()}
     n = len(sets)
     df = {}
     for s in sets.values():
@@ -48,17 +45,11 @@ def test_pmi_matches_python(spark):
     assert got == _py_pmi(DOCS)
 
 
-def test_duplicates_collapse_and_cap(spark):
+def test_duplicates_collapse(spark):
     docs = {1: ["a", "a", "b", "c"], 2: ["b", "c"], 3: ["a", "b"]}
     got = {
         (r.item_a, r.item_b): r.n_pair
         for r in pmi_pairs(_df(spark, docs)).collect()
     }
     assert got[("a", "b")] == 2  # duplicate 'a' in doc 1 counted once
-    capped = {
-        (r.item_a, r.item_b): r.n_pair
-        for r in pmi_pairs(_df(spark, docs), max_items_per_id=2).collect()
-    }
-    # doc 1 keeps only {a, b} under the lexicographic cap
-    assert ("a", "c") not in capped
-    assert capped == {k: v[0] for k, v in _py_pmi(docs, cap=2).items()}
+    assert got == {k: v[0] for k, v in _py_pmi(docs).items()}

@@ -14,8 +14,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from llm_text_to_knowledge_graph_spark.operators.quality_model import (
-    DEFAULT_QUALITY_BIAS,
-    DEFAULT_QUALITY_WEIGHTS,
     LM_K,
     lm_perplexity,
     ngram_lm,
@@ -131,14 +129,10 @@ def _labeled_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, label double")
 
 
-def _accuracy(spark, docs, weights, bias):
-    scored = score_quality_model(docs, weights, bias).join(
-        docs.select("doc_id", "label"), "doc_id"
-    )
+def _accuracy(scored, positive):
+    """Share of rows where ``positive`` agrees with the 0/1 label."""
     return scored.select(
-        F.avg(
-            ((F.col("quality_prob") > 0.5).cast("double") == F.col("label")).cast("double")
-        )
+        F.avg((positive.cast("double") == F.col("label")).cast("double"))
     ).first()[0]
 
 
@@ -146,9 +140,13 @@ def test_train_recovers_and_default_weights_pinned(spark):
     docs = _labeled_corpus(spark)
     feats = quality_features(docs).join(docs.select("doc_id", "label"), "doc_id")
     w, b = train_quality_model(feats)
-    assert _accuracy(spark, docs, w, b) == 1.0
+    z = F.lit(b)
+    for wi, c in zip(w, ("len_score", "punct_ratio", "stop_ratio", "mean_wlen")):
+        z = z + F.lit(wi) * F.col(c)
+    assert _accuracy(feats, z > 0) == 1.0  # sigmoid(z) > 0.5
     # the frozen defaults must keep separating the corpus they were trained on
-    assert _accuracy(spark, docs, DEFAULT_QUALITY_WEIGHTS, DEFAULT_QUALITY_BIAS) == 1.0
+    scored = score_quality_model(docs).join(docs.select("doc_id", "label"), "doc_id")
+    assert _accuracy(scored, F.col("quality_prob") > 0.5) == 1.0
 
 
 def test_score_is_map_only_jvm(spark):

@@ -111,7 +111,7 @@ def test_exact_dup_tie_breaks_by_id(spark):
 
 def test_kmeans_centroids_work_and_threshold_1_drops_only_exact(spark, clustered):
     df, vecs = clustered
-    cents = ivf_centroids(df, n_centroids=3, method="kmeans", seed=1)
+    cents = ivf_centroids(df, n_centroids=3, method="kmeans")
     rows = semantic_dedup(df, cents, threshold=1.0).collect()
     dropped = [r for r in rows if not r["keep"]]
     # only the exact duplicate of id 0 reaches cos == 1.0

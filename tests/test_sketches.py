@@ -134,7 +134,7 @@ def test_cms_weighted(spark):
 
 def test_cms_sketch_bounded(spark):
     df = spark.range(200_000).select(F.col("id").cast("string").alias("k"))
-    assert cms_build(df, "k", depth=4, nibbles=3).count() <= 4 * 16**3
+    assert cms_build(df, "k").count() <= 4 * 16**3
 
 
 # ---------------------------------------------------------------------------
@@ -171,8 +171,6 @@ def test_triangles_match_bruteforce_random_graph(spark):
     df = spark.createDataFrame(edges, "s long, t long")
     n_true, per_true = _py_triangles(edges)
     assert n_true > 0  # dense enough to be a real test
-    got_global = triangle_count(df, per_vertex=False).collect()[0]["n_triangles"]
-    assert got_global == n_true
     got_per = {
         r["node_id"]: r["n_triangles"] for r in triangle_count(df).collect()
     }
@@ -184,13 +182,9 @@ def test_triangles_match_bruteforce_random_graph(spark):
 def test_triangles_direction_and_dup_invariant(spark):
     base = [(1, 2), (2, 3), (3, 1), (3, 4)]
     noisy = base + [(2, 1), (1, 3), (2, 3), (4, 4)]  # reversals, dups, loop
-    a = triangle_count(
-        spark.createDataFrame(base, "s long, t long"), per_vertex=False
-    ).collect()[0][0]
-    b = triangle_count(
-        spark.createDataFrame(noisy, "s long, t long"), per_vertex=False
-    ).collect()[0][0]
-    assert a == b == 1
+    a = triangle_count(spark.createDataFrame(base, "s long, t long")).collect()
+    b = triangle_count(spark.createDataFrame(noisy, "s long, t long")).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b)) == [(1, 1), (2, 1), (3, 1)]
 
 
 def test_triangles_star_hub_has_none(spark):
@@ -198,7 +192,7 @@ def test_triangles_star_hub_has_none(spark):
     # and must not generate quadratic wedges from the hub side
     edges = [(0, i) for i in range(1, 200)]
     df = spark.createDataFrame(edges, "s long, t long")
-    assert triangle_count(df, per_vertex=False).collect()[0][0] == 0
+    assert triangle_count(df).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -246,7 +240,7 @@ def test_sketch_plans_zero_python_and_bounded_shuffles(spark):
 # link prediction (Adamic-Adar)
 # ---------------------------------------------------------------------------
 
-def _py_adamic_adar(edge_list, max_center_degree=None):
+def _py_adamic_adar(edge_list):
     adj = {}
     es = set()
     for u, v in edge_list:
@@ -260,8 +254,6 @@ def _py_adamic_adar(edge_list, max_center_degree=None):
         adj.setdefault(b, set()).add(a)
     out = {}
     for x, nbrs in adj.items():
-        if max_center_degree is not None and len(nbrs) > max_center_degree:
-            continue
         w = 1.0 / math.log(len(nbrs))
         ns = sorted(nbrs)
         for i in range(len(ns)):
@@ -295,35 +287,6 @@ def test_link_prediction_matches_independent_python(spark):
     es = {(min(u, v), max(u, v)) for u, v in edges if u != v}
     assert not (set(got) & es)
 
-
-def test_link_prediction_degree_cap_and_topk(spark):
-    from llm_text_to_knowledge_graph_spark.operators.graph_query import (
-        link_prediction_scores,
-    )
-
-    random.seed(22)
-    edges = [(random.randint(0, 25), random.randint(0, 25)) for _ in range(120)]
-    # add a hub touching everything: with the cap it must not certify
-    edges += [(99, i) for i in range(26)]
-    df = spark.createDataFrame(edges, "s long, t long")
-    got = {
-        (r["a"], r["b"]): (r["common_neighbors"], r["adamic_adar"])
-        for r in link_prediction_scores(df, max_center_degree=10).collect()
-    }
-    want = _py_adamic_adar(edges, max_center_degree=10)
-    assert set(got) == set(want)
-    for k in got:
-        assert got[k][1] == pytest.approx(want[k][1], abs=2e-6)
-    top = link_prediction_scores(df, top_per_node=2).collect()
-    from collections import Counter
-
-    per_a = Counter(r["a"] for r in top)
-    assert max(per_a.values()) <= 2
-
-
-# ---------------------------------------------------------------------------
-# negative sampling
-# ---------------------------------------------------------------------------
 
 def test_negative_samples_match_independent_python(spark):
     from llm_text_to_knowledge_graph_spark.operators.negatives import (
@@ -375,7 +338,7 @@ def test_negative_samples_draws_near_uniform(spark):
     # one edge, many copies: the replacement draw must spread over the
     # entity space (chi-square-free sanity: every decile hit)
     df = spark.createDataFrame([(0, 1)], "s long, t long")
-    neg = negative_samples(df, n_entities=10, k=400, filter_true=False)
+    neg = negative_samples(df, n_entities=10, k=400)
     repl = [
         r["neg_s"] if r["corrupt_head"] else r["neg_t"] for r in neg.collect()
     ]

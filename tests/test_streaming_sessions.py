@@ -56,7 +56,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     d = str(tmp_path / "events")
     df.write.parquet(d)
     stream = spark.readStream.schema(SCHEMA).parquet(d)
-    out = session_stats(stream, gap="30 minutes", watermark="10 minutes")
+    out = session_stats(stream, gap="30 minutes")
     q = (
         out.writeStream.format("memory")
         .queryName("sess_stream")

@@ -25,7 +25,6 @@ name (``checkpoint.resume_or_compute``).
 
 from __future__ import annotations
 
-import hashlib
 import time
 
 from pyspark import StorageLevel
@@ -34,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.fused import extract_fused
 from ..operators.graph import annotation_map, build_edges, build_nodes
-from ..operators.mentions import explode_mentions
+from ..operators.mentions import explode_mentions, lexicon_digest
 from .checkpoint import make_table_store, resume_or_compute
 
 # extraction stages in commit order per extractor: (output key, stage name).
@@ -99,8 +98,9 @@ def run_pipeline(
     stage from the parquet snapshots.
 
     Checkpointed stages resume by one rule: a stage's fingerprint is
-    ``<input_token>:<extractor>:<lexicon digest>:<stage>`` (the digest a
-    sha256 over ``alias_rows``; ``input_token`` must name the pages), and a
+    ``<input_token>:<extractor>:<lexicon digest>:<stage>`` (the digest
+    ``mentions.lexicon_digest`` of ``alias_rows``, the key the workers' matcher
+    cache uses too; ``input_token`` must name the pages), and a
     committed snapshot is served iff it carries exactly that fingerprint.
     A rerun with identical arguments resumes every stage; another extractor
     or lexicon over the same workdir recomputes every stage.
@@ -118,8 +118,7 @@ def run_pipeline(
     # real Iceberg when a SparkCatalog is configured, parquet shim here
     store = make_table_store(spark, workdir) if workdir else None
     if store is not None:
-        lexicon = hashlib.sha256(repr(alias_rows).encode()).hexdigest()[:16]
-        run_key = f"{input_token}:{extractor}:{lexicon}"
+        run_key = f"{input_token}:{extractor}:{lexicon_digest(alias_rows)}"
     metrics: list[dict] = []
 
     def stage(name: str, thunk):

@@ -1,33 +1,50 @@
-"""The two alias-matcher engines give identical matches on any input.
+"""The trie-compiled alias matcher gives exactly the matches of a flat
+alternation sorted by alias length, on any input.
 
-``AliasMatcher`` picks its engine by dictionary size alone: the alternation
-``regex`` below ``_TOK_THRESHOLD`` aliases, the token-index ``tok`` at and
-above it. Each parity test pads one copy of its dictionary with aliases no
-test text contains, so ``tok`` runs through the same auto-selection as in
-production; ``regex`` is the reference semantics.
+``FlatAlternation`` below is the reference semantics: every top-1 alias in
+one ``|`` alternation, longest first, inside the same word-boundary frame
+(the matcher's former small-dictionary engine, kept here verbatim). Each
+matcher and reference is built once per module, not per example.
 """
 
 import random
 import re
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
-    _TOK_THRESHOLD,
     AliasMatcher,
+    WorkerMatcher,
+    _top1,
 )
 
-# no test text contains an upper-case P, so none of these ever matches
-PAD = [(f"PAD{i:04d}", "P", str(i), f"PAD{i}", 1.0) for i in range(_TOK_THRESHOLD)]
+
+class FlatAlternation:
+    """Leftmost-longest by a length-desc flat alternation of the aliases."""
+
+    def __init__(self, rows):
+        self.lookup = _top1(rows)
+        ordered = sorted(self.lookup, key=len, reverse=True)
+        pattern = "|".join(re.escape(a) for a in ordered)
+        self.rx = re.compile(rf"(?<![\w-])({pattern})(?![\w-])") if ordered else None
+
+    def find(self, text):
+        if self.rx is None:
+            return []
+        return [
+            (m.start(), m.end(), m.group(1), *self.lookup[m.group(1)])
+            for m in self.rx.finditer(text)
+        ]
 
 
-def _engines(rows):
-    """(regex, tok) matchers over the same effective dictionary."""
-    rx, tok = AliasMatcher(rows), AliasMatcher(rows + PAD)
-    assert (rx.engine, tok.engine) == ("regex", "tok")
-    return rx, tok
+def _pair(rows):
+    """(matcher, reference) over the same rows."""
+    m = AliasMatcher(rows)
+    assert m.engine == "regex"
+    return m, FlatAlternation(rows)
 
 
 ROWS = [
@@ -43,6 +60,12 @@ ROWS = [
     ("ab", "V", "10", "AB", 1.0),
 ]
 
+WEIRD_ROWS = ROWS + [
+    ("(+)-cat", "V", "11", "PCAT", 1.0),  # starts with a non-[\w-] char
+    ("+b", "V", "12", "PLUSB", 1.0),
+    ("(ab", "V", "13", "PAB", 1.0),
+]
+
 TRICKY = [
     "spark sql engine beats spark sql beats spark beats sql",
     "sparky is not spark, but spark-sql has hyphens",
@@ -52,9 +75,12 @@ TRICKY = [
     "",
     "no hits at all here",
     "spark sql engin",  # prefix of a long alias, shorter must win
-    "it ends with ab",  # "ab cd" must not be probed past the text end
+    "it ends with ab",  # "ab cd" must not be matched past the text end
     "ab c",
 ]
+
+TRIE, REF = _pair(ROWS)
+WEIRD_TRIE, WEIRD_REF = _pair(WEIRD_ROWS)
 
 
 def _pairs(m, texts):
@@ -62,19 +88,19 @@ def _pairs(m, texts):
 
 
 def test_engines_agree_on_tricky_corpus():
-    rx, tok = _engines(ROWS)
-    assert _pairs(rx, TRICKY) == _pairs(tok, TRICKY)
+    assert _pairs(TRIE, TRICKY) == _pairs(REF, TRICKY)
     # and they actually match things
-    assert any(any(f) for f in _pairs(tok, TRICKY))
-    assert tok.find("it ends with ab") == [(13, 15, "ab", "V", "10", "AB", 1.0)]
+    assert any(any(f) for f in _pairs(TRIE, TRICKY))
+    assert TRIE.find("it ends with ab") == [(13, 15, "ab", "V", "10", "AB", 1.0)]
+    assert [f[2] for f in TRIE.find(TRICKY[0])] == [
+        "spark sql engine", "spark sql", "spark", "sql",
+    ]
 
 
 def test_top1_disambiguation_identical():
-    rx, tok = _engines(ROWS)
-    got_rx = rx.find("b")
-    got_tok = tok.find("b")
-    assert got_rx == got_tok
-    assert got_rx[0][5] == "B2"  # prior 0.9 beats 0.5
+    got = TRIE.find("b")
+    assert got == REF.find("b")
+    assert got[0][5] == "B2"  # prior 0.9 beats 0.5
 
 
 @settings(max_examples=300, deadline=None)
@@ -82,15 +108,7 @@ def test_top1_disambiguation_identical():
     st.text(alphabet=" abcdeé+-_,.()", min_size=0, max_size=60),
 )
 def test_engines_agree_property(text):
-    rx, tok = _engines(ROWS)
-    assert rx.find(text) == tok.find(text)
-
-
-WEIRD_ROWS = ROWS + [
-    ("(+)-cat", "V", "11", "PCAT", 1.0),  # starts with a non-[\w-] char
-    ("+b", "V", "12", "PLUSB", 1.0),
-    ("(ab", "V", "13", "PAB", 1.0),
-]
+    assert TRIE.find(text) == REF.find(text)
 
 
 @settings(max_examples=300, deadline=None)
@@ -98,10 +116,9 @@ WEIRD_ROWS = ROWS + [
     st.text(alphabet=" abcdeé+-_,.()t", min_size=0, max_size=60),
 )
 def test_engines_agree_weird_alias_property(text):
-    """Aliases that start with a non-word char exercise the token-index
-    engine's lookahead sweep + merged greedy tail."""
-    rx, tok = _engines(WEIRD_ROWS)
-    assert rx.find(text) == tok.find(text)
+    """Aliases that start with a non-word char sit in the trie like any
+    other: the lookbehind frame, not the first char, anchors them."""
+    assert WEIRD_TRIE.find(text) == WEIRD_REF.find(text)
 
 
 def test_engines_agree_random_dictionary():
@@ -112,56 +129,69 @@ def test_engines_agree_random_dictionary():
         alias = "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6))).strip()
         if alias:
             rows.append((alias, "R", str(i), alias.upper(), rng.random()))
-    rx, tok = _engines(rows)
+    m, ref = _pair(rows)
     for _ in range(300):
         text = "".join(rng.choice(alphabet + "xyz,.") for _ in range(rng.randint(0, 80)))
-        assert rx.find(text) == tok.find(text), text
+        assert m.find(text) == ref.find(text), text
 
 
-def _regex_over_hits(rows, text):
-    """The regex engine over the rows whose alias occurs in ``text``: the
-    reference matches of a dictionary too big for the regex engine."""
-    m = AliasMatcher([r for r in rows if r[0] in text])
-    assert m.engine == "regex"
-    return m.find(text)
+def test_every_dictionary_size_builds_the_trie():
+    """One engine at every size: no threshold switches the matcher."""
+    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(3000)]
+    text = "alias7 and alias1999 and alias2048x and alias2999"
+    for n in (10, 2047, 2048, 3000):
+        m, ref = _pair(rows[:n])
+        assert m.find(text) == ref.find(text)
+    assert [f[2] for f in m.find(text)] == ["alias7", "alias1999", "alias2999"]
 
 
-def test_auto_threshold_selects_tok():
-    rows = [(f"alias{i}", "V", str(i), f"A{i}", 1.0) for i in range(_TOK_THRESHOLD)]
-    assert AliasMatcher(rows).engine == "tok"
-    assert AliasMatcher(rows[:-1]).engine == "regex"
-    assert AliasMatcher(rows[:10]).engine == "regex"
-    # identical results any way
-    text = "alias7 and alias1999 and alias2048x"
-    assert AliasMatcher(rows).find(text) == _regex_over_hits(rows, text)
-    assert [f[2] for f in AliasMatcher(rows).find(text)] == ["alias7", "alias1999"]
-
-
-class CountingLookup(dict):
-    """The alias -> entity dict, counting the probes the matcher makes."""
-
-    probes = 0
-
-    def get(self, key, default=None):
-        self.probes += 1
-        return super().get(key, default)
-
-
-def test_tok_probes_are_bounded_on_pathological_sharing():
-    """Every alias shares the first token "tnf": a text repeating "tnf"
-    costs at most one probe per distinct alias length per token, not one
-    per alias, and no second engine is needed to stay worst-case safe."""
+def test_trie_matches_reference_on_pathological_sharing():
+    """Every alias shares the first token "tnf" (2,348 aliases): the trie
+    factors the shared prefix once and still matches the reference."""
     rows = [
         (f"tnf {'x' * (i % 7)} v{i}", "V", str(i), f"A{i}", 1.0)
-        for i in range(_TOK_THRESHOLD + 300)
+        for i in range(2348)
     ]
-    m = AliasMatcher(rows)
-    assert m.engine == "tok"
+    m, ref = _pair(rows)
     text = "tnf " * 2000 + "tnf x v1 and tnf  v0 and tnf xx v2340 tnf"
-    m.lookup = CountingLookup(m.lookup)
     got = m.find(text)
-    assert got == _regex_over_hits(rows, text)
+    assert got == ref.find(text)
     assert [f[2] for f in got] == ["tnf x v1", "tnf  v0", "tnf xx v2340"]
-    n_tokens = len(re.findall(r"[\w-]+", text))
-    n_lengths = len({len(r[0]) for r in rows})
-    assert 0 < m.lookup.probes <= n_tokens * n_lengths
+
+
+def test_prefix_chain_400_deep_matches_reference():
+    """a, aa, ..., a*400: each alias a prefix of the next nests the trie
+    400 groups deep; it compiles and keeps the longest valid alias."""
+    rows = [("a" * i, "V", str(i), f"A{i}", 1.0) for i in range(1, 401)]
+    m, ref = _pair(rows)
+    for text in ("a" * 400, "a" * 401, "a" * 399 + " a-" + " aaa." + " " + "a" * 400):
+        assert m.find(text) == ref.find(text)
+    assert [f[1] - f[0] for f in m.find("a" * 400 + " aa")] == [400, 2]
+
+
+def test_empty_lexicon_finds_nothing():
+    m = AliasMatcher([])
+    assert m.engine == "regex"
+    assert m.find("") == [] and m.find("anything at all, even  spaces ") == []
+
+
+def test_chain_past_the_nesting_limit_raises_value_error():
+    """A chain deeper than the regex parser's recursion limit fails at
+    build with a ValueError naming that limit, not a RecursionError."""
+    rows = [("a" * i, "V", str(i), f"A{i}", 1.0) for i in range(1, 601)]
+    with pytest.raises(ValueError, match="recursion limit"):
+        AliasMatcher(rows)
+
+
+def test_worker_cache_is_keyed_by_lexicon_content(spark):
+    """Equal rows share one cache key and one built matcher; rows that
+    differ, even in one prior, get their own."""
+    rows = list(ROWS)
+    a, b = WorkerMatcher(spark, rows), WorkerMatcher(spark, list(ROWS))
+    assert a.key == b.key
+    assert a() is b()
+    changed = rows[:-1] + [rows[-1][:4] + (0.5,)]
+    c = WorkerMatcher(spark, changed)
+    assert c.key != a.key
+    assert c() is not a()
+    assert c().lookup["ab"][3] == 0.5 and a().lookup["ab"][3] == 1.0

@@ -4,6 +4,7 @@ normalised paragraph, with mention offsets mapped back to the extracted
 text."""
 
 import datetime as dt
+import re
 
 import pytest
 from hypothesis import given, settings
@@ -19,8 +20,8 @@ from llm_text_to_knowledge_graph_spark.operators.fused import (
     ground_block,
 )
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
-    _TOK_THRESHOLD,
     AliasMatcher,
+    _top1,
     mention_structs,
 )
 from llm_text_to_knowledge_graph_spark.plans.pipeline import run_pipeline
@@ -127,10 +128,24 @@ LEX = _entities(
     ("Prolactin", "PRL"), ("prolactin receptor", "PRLR"), ("IGF-I", "IGF1"),
 )
 WORDS = [a for a, *_ in LEX] + ["activates", "binds", "cells", "of", "in", "the"]
-# LEX alone selects the regex engine; padded with aliases no paragraph
-# contains, the same dictionary selects tok
-PAD = [(f"PAD{i:04d}", "P", str(i), f"PAD{i}", 1.0) for i in range(_TOK_THRESHOLD)]
-ENGINES = {"regex": LEX, "tok": LEX + PAD}
+MATCHER = AliasMatcher(LEX)
+# the aliases of LEX as a flat alternation sorted by length: the
+# leftmost-longest reference the trie-compiled matcher must equal
+REF_LOOKUP = _top1(LEX)
+REF_RX = re.compile(
+    r"(?<![\w-])("
+    + "|".join(re.escape(a) for a in sorted(REF_LOOKUP, key=len, reverse=True))
+    + r")(?![\w-])"
+)
+
+
+def _reference_find(text):
+    return [
+        (m.start(), m.end(), m.group(1), *REF_LOOKUP[m.group(1)])
+        for m in REF_RX.finditer(text)
+    ]
+
+
 SUFFIXES = ["-induced", "-mediated", "- induced", "−dependent", "-/-", "-GFP", "–HA"]
 
 
@@ -146,21 +161,21 @@ PART = st.tuples(
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.lists(PART, min_size=5, max_size=25), st.sampled_from(sorted(ENGINES)))
-def test_block_mentions_sit_at_their_alias(parts, engine):
+@given(st.lists(PART, min_size=5, max_size=25))
+def test_block_mentions_sit_at_their_alias(parts):
     """With compound suffixes, knockout markers and tags injected, every
     block mention row spells its alias at its offsets in its sentence, and
-    the statements are those of the one normalised pass."""
-    matcher = AliasMatcher(ENGINES[engine])
-    assert matcher.engine == engine
+    the statements are those of the one normalised pass, whose matches
+    equal the reference's."""
     text = _paragraph(parts)
-    sents, stmts = _block_rows(text, matcher)
+    sents, stmts = _block_rows(text, MATCHER)
     assert [s for _i, s, _ms in sents] == split_sentences(text)
     for _i, sentence, ms in sents:
         for begin, end, alias in ms:
             assert sentence[begin:end] == alias
-    norm, found, pairs = ground_block(text, matcher)
+    norm, found, pairs = ground_block(text, MATCHER)
     assert norm == normalize_block_text(text)
+    assert found == _reference_find(norm)
     assert pairs == extract_from_block(norm, mention_structs(found))
     assert stmts == [stmt for stmt, _ev in pairs]
 
@@ -171,17 +186,15 @@ def test_block_mentions_sit_at_their_alias(parts, engine):
         st.tuples(st.sampled_from(WORDS), st.just(""), st.sampled_from(["", ",", "."])),
         min_size=5, max_size=25,
     ),
-    st.sampled_from(sorted(ENGINES)),
 )
-def test_block_mentions_equal_per_sentence_grounding(parts, engine):
+def test_block_mentions_equal_per_sentence_grounding(parts):
     """Where normalisation changes nothing and no alias spans a sentence
     end, the one paragraph pass gives each sentence exactly the mentions a
     per-sentence ``find`` gives (the modular reference's rule)."""
-    matcher = AliasMatcher(ENGINES[engine])
-    assert matcher.engine == engine
     text = _paragraph(parts)
     assert normalize_block_text(text) == text
-    sents, _stmts = _block_rows(text, matcher)
+    sents, _stmts = _block_rows(text, MATCHER)
     assert sents == [
-        (i, s, [f[:3] for f in matcher.find(s)]) for i, s in enumerate(split_sentences(text))
+        (i, s, [f[:3] for f in _reference_find(s)])
+        for i, s in enumerate(split_sentences(text))
     ]

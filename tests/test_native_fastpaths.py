@@ -5,10 +5,13 @@ WholeStageCodegen and bound the worst-case shuffle of the inverted-index
 self-join.
 """
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from llm_text_to_knowledge_graph_spark.operators.dedup import ngram_jaccard_pairs
 from llm_text_to_knowledge_graph_spark.operators.mentions import (
+    AliasMatcher,
     count_mentions_native,
     detect_mentions,
     explode_mentions,
@@ -101,6 +104,39 @@ def test_native_mention_counts_match_python_matcher(spark):
     assert py == native
     assert native["SPARK_SQL"] == 1  # leftmost-longest beat the bare 'spark'
     assert native["APLUSB"] == 2  # metachars escaped, boundary respected
+
+
+TRIE_ROWS = ALIAS_ROWS + [
+    ("spark sql engine", "VOCAB", "5", "SSE", 1.0),
+    ("(+)-catechin", "VOCAB", "6", "CATECHIN", 1.0),  # non-word first char
+    ("+b", "VOCAB", "7", "PLUSB", 1.0),
+    ("été", "VOCAB", "8", "ETE", 1.0),
+    ("row row", "VOCAB", "9", "ROWROW", 1.0),
+]
+
+TRIE_SENTS = SENTS + [
+    "spark sql engine, spark sql engin and (+)-catechin beat (+)-catechins",
+    "a+b and +b and x+b; été vs étéx",
+    "row row row your boat, rowrow",
+]
+
+
+def test_native_mention_counts_match_python_matcher_on_trie_dictionary(spark):
+    """Multi-token aliases, shared prefixes and aliases that start with a
+    non-word char: the JVM regexp plan runs the same trie pattern and
+    counts what ``AliasMatcher`` finds."""
+    sents = spark.createDataFrame(
+        [("u%d" % i, None, 0, i, s) for i, s in enumerate(TRIE_SENTS)],
+        "url string, warc_ts timestamp, para_idx int, sent_idx int, sentence string",
+    )
+    matcher = AliasMatcher(TRIE_ROWS)
+    py = Counter(f[5] for s in TRIE_SENTS for f in matcher.find(s))
+    native = {
+        r.entry_name: r.n_mentions
+        for r in count_mentions_native(sents, TRIE_ROWS).collect()
+    }
+    assert native == dict(py)
+    assert native["CATECHIN"] == 1 and native["SSE"] == 1 and native["ROWROW"] == 1
 
 
 def test_native_mention_counts_plan_is_jvm_only(spark):

@@ -15,8 +15,18 @@ behavior only) as an idiomatic Spark pipeline:
 
 Everything is DataFrame-first; Python only runs inside Arrow-batched pandas
 UDFs. See SURVEY.md for the operator-by-operator mapping to the reference.
+
+``get_spark`` resolves on first use (PEP 562): Spark runs this package's
+``worker_daemon`` with ``-m``, which imports this file before the daemon may
+import pyspark (see ``worker_daemon``).
 """
 
-from .session import get_spark  # noqa: F401
-
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name == "get_spark":
+        from .session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
